@@ -143,16 +143,7 @@ def q_kg_e2e_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-overlapping surfaces (conflict-resolution is the identity here, so
     the result is exactly the doc-level rule closure — SQL-derivable)."""
     pipe = _kg_pipeline(spark)
-    # "checkpoint" (eager cut per stage) re-measured faster AND far more
-    # stable than "smart" in round 6 — the fused scan + pinned
-    # multi-consumer frames removed the recompute "smart" was avoiding,
-    # so the shallower per-stage plans win at both bench scales
-    # (sf0.1: 5.1s vs 5.9s best-of-2, sf1: 8.0s vs 9.1s; cold-run spread
-    # 5.3/13.7s — the lazy pins inside one big action race on first run)
-    out = pipe.run(
-        _transcripts_view(_t(spark, sf_dir, "documents")),
-        resolve=True, cut_lineage="checkpoint",
-    )
+    out = pipe.run(_transcripts_view(_t(spark, sf_dir, "documents")))
     return out["triples"].select("conv_id", "subj_url", "pred_url", "obj_url")
 
 

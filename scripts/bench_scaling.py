@@ -103,7 +103,7 @@ def worker(
         # SINGLE timed full-corpus run measures steady-state throughput
         # (pairs mode trades best-of-2 for shorter same-window pairs)
         wt = spark.read.parquet(f"{input_dir}/warmup")
-        wout = pipe.run(wt, resolve=True, cut_lineage="smart")
+        wout = pipe.run(wt)
         wout["triples"].count()
         wout["final_entities"].count()
         for df in wout.values():
@@ -117,7 +117,7 @@ def worker(
     n_triples = n_entities = 0
     for _ in range(in_jvm_runs):
         t0 = time.time()
-        out = pipe.run(transcripts, resolve=True, cut_lineage="smart")
+        out = pipe.run(transcripts)
         n_triples = out["triples"].count()
         n_entities = out["final_entities"].count()
         elapsed = time.time() - t0

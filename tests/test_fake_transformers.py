@@ -109,10 +109,11 @@ def test_sbert_scorer_swaps_into_rerank(spark):
 
 
 def _fused_pair(spark, scorer):
-    """Run the bauhaus pipeline stages up to fusion twice: baseline
-    (no extra scorer) and with ``scorer`` wired, doc_text attached."""
+    """Run the bauhaus pipeline stages over the in-repo sample text up to
+    fusion twice: baseline (no extra scorer) and with ``scorer`` wired,
+    doc_text attached."""
     base_pipe = bauhaus_pipeline(spark)
-    tr = fx.bauhaus_transcripts(spark)
+    tr = fx.bauhaus_transcripts(spark, text=fx.sample_text())
     docs = base_pipe.documents(tr)
     mentions = base_pipe.mentions(docs)
     cands = base_pipe.candidates(docs, mentions)
@@ -137,7 +138,7 @@ def test_nli_scorer_wired_through_fusion(spark):
     base = {(r.conv_id, r.ts_id): r.score for r in baseline.collect()}
     got = {(r.conv_id, r.ts_id): r.score for r in scored.collect()}
 
-    assert base, "bauhaus fixture produced no fused triples"
+    assert base, "sample text produced no fused triples"
     # survivors = baseline triples still above best_threshold after halving
     assert set(got) == {k for k, v in base.items() if v * 0.5 >= 0.1}
     assert got, "constant-0.5 entailment killed every triple"
@@ -158,7 +159,7 @@ def test_nli_scorer_requires_doc_text(spark):
     from waka_spark.operators.fusion import fuse_triples
 
     pipe = bauhaus_pipeline(spark)
-    tr = fx.bauhaus_transcripts(spark)
+    tr = fx.bauhaus_transcripts(spark, text=fx.sample_text())
     docs = pipe.documents(tr)
     ents = pipe.entities(pipe.candidates(docs, pipe.mentions(docs)))
     linked = pipe.linked_triples(pipe.raw_triples(docs))
@@ -193,14 +194,16 @@ def test_transformer_re_fake_generate(spark):
 
 def test_aho_rule_extraction_matches_contains_join(spark):
     """aho_relation_extraction == rule_relation_extraction output on the
-    bauhaus fixture and on a doc set with overlapping/repeated surfaces."""
+    in-repo sample text and on a doc set with overlapping/repeated
+    surfaces."""
     from waka_spark.operators.relations import (
         aho_relation_extraction,
         rule_relation_extraction,
     )
 
     pipe = bauhaus_pipeline(spark)
-    docs = pipe.documents(fx.bauhaus_transcripts(spark))
+    docs = pipe.documents(
+        fx.bauhaus_transcripts(spark, text=fx.sample_text()))
     rules = fx.rules_df(spark)
 
     key = lambda r: (r.conv_id, r.subj_text, r.pred_text, r.obj_text)  # noqa: E731

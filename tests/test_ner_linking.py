@@ -176,7 +176,7 @@ def test_fused_ner_identical_to_union_composition(spark):
     from waka_spark.sources import fixtures as fx
 
     docs = _docs(spark, [
-        ("c1", fx.load_bauhaus_text()),
+        ("c1", fx.sample_text()),
         ("c2", "In 1919 it had 4000 students and 27% growth."),
         ("c3", "Weimar and Weimarer and xWeimar in 1919."),
         ("c4", ""),

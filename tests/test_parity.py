@@ -13,6 +13,12 @@ from waka_spark.operators.evals import (
 from waka_spark.plans.pipeline import bauhaus_pipeline
 from waka_spark.sources import fixtures as fx
 
+needs_fixture = pytest.mark.skipif(
+    not fx.bauhaus_available(),
+    reason="reference parity fixture (data/bauhaus-university-weimar."
+           "{txt,nt}) is not present",
+)
+
 
 @pytest.fixture(scope="module")
 def bauhaus_out(spark):
@@ -20,6 +26,7 @@ def bauhaus_out(spark):
     return pipe.run(fx.bauhaus_transcripts(spark))
 
 
+@needs_fixture
 def test_triple_parity_with_scorers(spark, bauhaus_out):
     gold = fx.bauhaus_gold_triples(spark)
     micro = prf_dict(eval_triples(bauhaus_out["triples"], gold))
@@ -27,6 +34,7 @@ def test_triple_parity_with_scorers(spark, bauhaus_out):
     assert micro["recall"] >= 0.95
 
 
+@needs_fixture
 def test_triple_parity_fusion_only(spark):
     # KGConstructor([]) mode (evaluate_kg_creation.py:17): no scorers
     pipe = bauhaus_pipeline(spark, use_scorers=False)
@@ -36,6 +44,7 @@ def test_triple_parity_fusion_only(spark):
     assert micro["precision"] >= 0.95 and micro["recall"] >= 0.95
 
 
+@needs_fixture
 def test_macro_micro_eval_shapes(spark, bauhaus_out):
     gold = fx.bauhaus_gold_triples(spark)
     macro = prf_dict(eval_triples(bauhaus_out["triples"], gold, macro=True))
@@ -65,6 +74,7 @@ def test_eval_predicates_bag(spark):
     assert m["tp"] == 1 and m["fp"] == 1 and m["fn"] == 0
 
 
+@needs_fixture
 def test_entity_mentions_flattened(bauhaus_out):
     # P25: every surviving entity contributes its mentions
     ments = bauhaus_out["entity_mentions"].collect()
@@ -72,9 +82,30 @@ def test_entity_mentions_flattened(bauhaus_out):
     assert all(m.url is not None for m in ments)
 
 
+@needs_fixture
 def test_ntriples_roundtrip(spark, bauhaus_out):
     from waka_spark.sources.sinks import to_ntriples
 
     lines = [r.value for r in to_ntriples(bauhaus_out["triples"]).collect()]
     assert all(l.endswith(" .") for l in lines)
     assert any('"Bauhaus"' in l for l in lines)  # quoted literal verbatim
+
+
+def test_parse_ntriples_gold_conventions(tmp_path):
+    """The gold parser reads any path and applies the URL-space
+    conventions of fixtures.py: entity URLs bare, quoted literals
+    verbatim, bare numbers as decimal literals, comments skipped."""
+    from waka_spark.config import XSD_DECIMAL
+
+    gold = tmp_path / "gold.nt"
+    gold.write_text(
+        "# a comment line\n"
+        "<http://e/S> <http://p/P1> <http://e/O> .\n"
+        '<http://e/S> <http://p/P2> "Bauhaus" .\n'
+        "<http://e/S> <http://p/P3> 4000 .\n"
+    )
+    assert fx.parse_ntriples_gold(gold) == [
+        ("http://e/S", "http://p/P1", "http://e/O"),
+        ("http://e/S", "http://p/P2", '"Bauhaus"'),
+        ("http://e/S", "http://p/P3", f"+4000^^{XSD_DECIMAL}"),
+    ]

@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from waka_spark import schemas
+from waka_spark.plans.pipeline import KGPipeline
 
 
 def test_assortativity_accumulates_in_decimal_past_long_range(spark):
@@ -29,11 +30,13 @@ def test_assortativity_accumulates_in_decimal_past_long_range(spark):
     assert r["assortativity"] == pytest.approx(-1.0)
 
 
-class _StubPipeline:
-    """Minimal pipeline whose stages return prebuilt frames, so the
+class _StubPipeline(KGPipeline):
+    """A KGPipeline whose stages return prebuilt frames, so the
     checkpointed-run test controls exactly which conversations conflict."""
 
     def __init__(self, docs, fused, ents):
+        super().__init__(aliases=None, properties=None, gazetteer=(),
+                         rules=None)
         self._docs, self._fused, self._ents = docs, fused, ents
 
     def documents(self, transcripts):
@@ -54,7 +57,7 @@ class _StubPipeline:
     def linked_triples(self, raw):
         return raw
 
-    def fused(self, linked, ents):
+    def fused(self, linked, ents, documents=None):
         return self._fused
 
 

@@ -10,7 +10,7 @@ import urllib.request
 def test_kg_service_http_roundtrip(spark):
     from waka_spark.plans.pipeline import bauhaus_pipeline
     from waka_spark.serve import KGService, start_server
-    from waka_spark.sources.fixtures import load_bauhaus_text
+    from waka_spark.sources.fixtures import sample_text
 
     server = start_server(KGService(spark, bauhaus_pipeline(spark)))
     port = server.server_address[1]
@@ -20,7 +20,7 @@ def test_kg_service_http_roundtrip(spark):
             assert json.load(r) == {"status": "ok"}
 
         body = json.dumps(
-            {"text": load_bauhaus_text(), "conv_id": "bh"}).encode()
+            {"text": sample_text(), "conv_id": "bh"}).encode()
         req = urllib.request.Request(
             f"{base}/kg", data=body,
             headers={"Content-Type": "application/json"})

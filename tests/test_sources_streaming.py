@@ -114,7 +114,8 @@ def test_stream_to_graph_bridge(spark, tmp_path):
     from waka_spark.streaming.ingest import run_stream_to_graph
 
     in_dir = tmp_path / "turns3"
-    fx.bauhaus_transcripts(spark).write.parquet(str(in_dir))
+    fx.bauhaus_transcripts(spark, text=fx.sample_text()).write.parquet(
+        str(in_dir))
     pipe = bauhaus_pipeline(spark, use_scorers=False)
     q = run_stream_to_graph(
         spark, str(in_dir), pipe,
@@ -123,7 +124,7 @@ def test_stream_to_graph_bridge(spark, tmp_path):
     )
     q.awaitTermination(300)
     edges = spark.read.parquet(str(tmp_path / "graph" / "edges"))
-    assert edges.count() == 10  # the bauhaus gold triples
+    assert edges.count() == len(fx.BAUHAUS_RULES)  # one per sample sentence
 
 
 def test_streaming_exact_dedup(spark, tmp_path):
@@ -168,7 +169,8 @@ def test_stream_merge_edges_bridge(spark, tmp_path):
 
     in_dir = tmp_path / "turns_me"
     edges_dir = tmp_path / "edges_me"
-    fx.bauhaus_transcripts(spark).write.parquet(str(in_dir))
+    fx.bauhaus_transcripts(spark, text=fx.sample_text()).write.parquet(
+        str(in_dir))
     pipe = bauhaus_pipeline(spark, use_scorers=False)
 
     q = run_stream_merge_edges(
@@ -180,8 +182,9 @@ def test_stream_merge_edges_bridge(spark, tmp_path):
     with open(edges_dir / "_CURRENT") as fh:
         v1 = fh.read().strip()
     first = spark.read.parquet(str(edges_dir / v1))
-    assert first.count() == 10
-    assert first.agg({"support": "sum"}).collect()[0][0] == 10
+    n_edges = len(fx.BAUHAUS_RULES)  # one per sample sentence
+    assert first.count() == n_edges
+    assert first.agg({"support": "sum"}).collect()[0][0] == n_edges
 
     # replay the same input as a NEW stream (fresh checkpoint): merge, not
     # append — row count stays, support doubles
@@ -194,8 +197,8 @@ def test_stream_merge_edges_bridge(spark, tmp_path):
     with open(edges_dir / "_CURRENT") as fh:
         v2 = fh.read().strip()
     second = spark.read.parquet(str(edges_dir / v2))
-    assert second.count() == 10
-    assert second.agg({"support": "sum"}).collect()[0][0] == 20
+    assert second.count() == n_edges
+    assert second.agg({"support": "sum"}).collect()[0][0] == 2 * n_edges
 
 
 def test_streaming_interval_join(spark, tmp_path):
@@ -395,7 +398,8 @@ def test_stream_merge_edges_replay_same_checkpoint_is_idempotent(
     in_dir = tmp_path / "turns_rp"
     edges_dir = tmp_path / "edges_rp"
     ckpt = tmp_path / "ckpt_rp"
-    fx.bauhaus_transcripts(spark).write.parquet(str(in_dir))
+    fx.bauhaus_transcripts(spark, text=fx.sample_text()).write.parquet(
+        str(in_dir))
     pipe = bauhaus_pipeline(spark, use_scorers=False)
 
     q = run_stream_merge_edges(
@@ -405,7 +409,8 @@ def test_stream_merge_edges_replay_same_checkpoint_is_idempotent(
     table = VersionedTable(str(edges_dir))
     v1 = table.current_version()
     first = table.read(spark, v1)
-    assert first.agg({"support": "sum"}).collect()[0][0] == 10
+    n_edges = len(fx.BAUHAUS_RULES)  # one per sample sentence
+    assert first.agg({"support": "sum"}).collect()[0][0] == n_edges
     assert table.manifest(v1)["batch_id"] == 0
 
     # same checkpoint PATH, lost checkpoint STATE -> batch 0 re-delivered
@@ -416,7 +421,7 @@ def test_stream_merge_edges_replay_same_checkpoint_is_idempotent(
     q2.awaitTermination(300)
     assert table.current_version() == v1  # no new snapshot committed
     again = table.read(spark)
-    assert again.agg({"support": "sum"}).collect()[0][0] == 10
+    assert again.agg({"support": "sum"}).collect()[0][0] == n_edges
 
 
 def test_stream_fact_history_matches_batch_and_merges_batches(

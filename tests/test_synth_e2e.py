@@ -28,7 +28,7 @@ def test_synth_pipeline_closed_loop(spark, kb):
         rules=synth.rules_df(spark, kb),
         use_scorers=False,
     )
-    out = pipe.run(transcripts, resolve=True)
+    out = pipe.run(transcripts)
     micro = prf_dict(eval_triples(out["triples"], gold))
     assert micro["recall"] >= 0.99, micro
     assert micro["precision"] >= 0.99, micro

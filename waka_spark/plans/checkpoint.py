@@ -2,6 +2,11 @@
 (north rule: "every stage checkpoints per-partition lineage + counters so
 the pipeline resumes mid-run").
 
+This is the durable of the two ways ``KGPipeline.run`` materializes its
+stage graph (plans/pipeline.py): the same stages, in the same order, each
+written through :meth:`CheckpointManager.stage` instead of cut with an
+eager ``localCheckpoint``.
+
 Layout under ``base_path/run_id/``:
 
     <stage>/data/...            stage output parquet (written via temp+rename)
@@ -106,58 +111,7 @@ class CheckpointManager:
 
 
 def run_checkpointed(
-    pipeline,
-    transcripts: DataFrame,
-    manager: CheckpointManager,
-    resolve: bool = True,
+    pipeline, transcripts: DataFrame, manager: CheckpointManager,
 ) -> dict[str, DataFrame]:
-    """The KG pipeline with a checkpoint barrier after each stage — the
-    spark-submit production shape (plans/pipeline.py is the lazy one-DAG
-    variant for interactive/bench use)."""
-    docs = manager.stage("documents", lambda: pipeline.documents(transcripts))
-    mentions = manager.stage("mentions", lambda: pipeline.mentions(docs))
-    cands = manager.stage("candidates", lambda: pipeline.candidates(docs, mentions))
-    ents = manager.stage("entities", lambda: pipeline.entities(cands))
-    raw = manager.stage("raw_triples", lambda: pipeline.raw_triples(docs))
-    linked = manager.stage("linked_triples", lambda: pipeline.linked_triples(raw))
-    fused = manager.stage("fused", lambda: pipeline.fused(linked, ents))
-
-    if resolve:
-        from waka_spark.operators.conflicts import apply_conflict_resolution
-
-        # Resolve ONCE and commit both outputs from the single pair (the
-        # reference's fusion likewise emits triples and entities from one
-        # pass, kg_construction.py:102-109). The pair shares the pinned
-        # per-conv fixpoint inside apply_conflict_resolution, so
-        # materializing "triples" runs the applyInPandas once and
-        # "final_entities" reuses the cache. Calling the resolver per
-        # stage (the round-3 shape) built two independent DAGs and
-        # executed the pipeline's most expensive stage twice per fresh
-        # run in the spark-submit path.
-        _pair: list[DataFrame] = []
-
-        def _resolved(idx: int) -> Callable[[], DataFrame]:
-            def thunk() -> DataFrame:
-                if not _pair:
-                    _pair.extend(apply_conflict_resolution(fused, ents))
-                return _pair[idx]
-
-            return thunk
-
-        triples = manager.stage("triples", _resolved(0))
-        final_entities = manager.stage("final_entities", _resolved(1))
-    else:
-        triples = fused
-        final_entities = ents
-
-    return {
-        "documents": docs,
-        "mentions": mentions,
-        "candidates": cands,
-        "entities": ents,
-        "raw_triples": raw,
-        "linked_triples": linked,
-        "fused": fused,
-        "triples": triples,
-        "final_entities": final_entities,
-    }
+    """``pipeline.run`` with every stage committed through ``manager``."""
+    return pipeline.run(transcripts, checkpoints=manager)

@@ -11,35 +11,58 @@ independent branches that Spark schedules concurrently:
                                  fusion (P16-P22) ─► conflicts (P23-P24) ─►
                                  nodes / edges (+ optional union-find pass)
 
-Everything below is lazy — one action at the end materializes the graph.
+``KGPipeline.run`` is the one composition of the nine named stages. Each
+stage boundary is materialized one of two ways: an eager
+``localCheckpoint`` (interactive, bench and streaming runs), or, when a
+``CheckpointManager`` is passed, a committed parquet checkpoint that a
+later run with the same run id resumes from (the spark-submit path,
+plans/checkpoint.py).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Callable, Sequence
+from typing import TYPE_CHECKING, Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from waka_spark.config import DEFAULT, EngineConfig
+from waka_spark.operators import conflicts
+# re-exported: kgbench's tracer wraps this name alongside the conflicts one
+from waka_spark.operators.conflicts import apply_conflict_resolution  # noqa: F401
 from waka_spark.operators.assembly import assemble_documents
 from waka_spark.operators.clustering import cluster_entities
-from waka_spark.operators.conflicts import apply_conflict_resolution
 from waka_spark.operators.fusion import fuse_triples
 from waka_spark.operators.linking import link_entities
-from waka_spark.operators.ner import (
-    deterministic_ner_fused,
-    gazetteer_ner,
-    regex_literal_ner,
-    union_mentions,
-)
+from waka_spark.operators.ner import deterministic_ner_fused
 from waka_spark.operators.rel_linking import link_predicates
-from waka_spark.operators.relations import (
-    aho_relation_extraction,
-    rule_relation_extraction,
-)
+from waka_spark.operators.relations import aho_relation_extraction
 from waka_spark.operators.rerank import rerank_candidates, split_sentences
+
+if TYPE_CHECKING:
+    from waka_spark.plans.checkpoint import CheckpointManager
+
+# stages a local run leaves uncut: raw_triples is a filter of the pinned
+# fused scan, and the conflict pair shares one pinned per-conv fixpoint
+_LOCAL_UNCUT = frozenset({"raw_triples", "triples", "final_entities"})
+
+
+def _memo_pair(make: Callable[[], tuple[DataFrame, DataFrame]]):
+    """Two stage thunks over one pair built on first use: the stage that
+    runs first builds it and the other reuses it, and a run that loads
+    both stages from checkpoints never builds it."""
+    pair: list[DataFrame] = []
+
+    def part(i: int) -> Callable[[], DataFrame]:
+        def thunk() -> DataFrame:
+            if not pair:
+                pair.extend(make())
+            return pair[i]
+
+        return thunk
+
+    return part(0), part(1)
 
 
 @dataclass
@@ -57,14 +80,6 @@ class KGPipeline:
     extra_scorer: Callable[[DataFrame], DataFrame] | None = None
     use_scorers: bool = True
     use_rerank: bool = True
-    # rule-RE backend: Aho-Corasick by DEFAULT (round-3) — one O(text)
-    # automaton pass per document regardless of rule count, vs the
-    # double-`contains` broadcast theta join whose per-document work is
-    # O(len(text) * n_rules). Output is identical (equivalence-pinned in
-    # tests/test_decoders.py); set False to get the pure-DataFrame theta
-    # join, which can win only for a handful of rules where the Arrow
-    # hop costs more than the extra scans.
-    use_aho_rules: bool = True
     cfg: EngineConfig = field(default_factory=lambda: DEFAULT)
 
     # ---- stages (each returns a DataFrame; all lazy) -----------------------
@@ -80,13 +95,6 @@ class KGPipeline:
         # ensembles (transformer backends) override this method with
         # union_mentions(...); priority order = arg order (P6).
         return deterministic_ner_fused(documents, self.gazetteer)
-
-    def mentions_unfused(self, documents: DataFrame) -> DataFrame:
-        # the generic composition the fused pass is pinned against
-        return union_mentions(
-            gazetteer_ner(documents, self.gazetteer),
-            regex_literal_ner(documents),
-        )
 
     def candidates(self, documents: DataFrame, mentions: DataFrame) -> DataFrame:
         cands = link_entities(
@@ -112,9 +120,10 @@ class KGPipeline:
         return cluster_entities(candidates)
 
     def raw_triples(self, documents: DataFrame) -> DataFrame:
-        if self.use_aho_rules:
-            return aho_relation_extraction(documents, self.rules)
-        return rule_relation_extraction(documents, self.rules)
+        # Aho-Corasick: one O(text) automaton pass per document regardless
+        # of rule count; identical to the rule_relation_extraction theta
+        # join (equivalence-pinned in tests/test_decoders.py)
+        return aho_relation_extraction(documents, self.rules)
 
     def scan_products(
         self, documents: DataFrame
@@ -123,12 +132,11 @@ class KGPipeline:
         both stages are the deterministic defaults (document text crosses
         the JVM→Python boundary once instead of twice; identical per-stage
         output, pinned by tests/test_round6_scan_fusion.py). Subclassed
-        backends and the theta-join rule path keep the separate stages.
+        backends keep the separate stages.
         """
         uses_default_scans = (
             type(self).mentions is KGPipeline.mentions
             and type(self).raw_triples is KGPipeline.raw_triples
-            and self.use_aho_rules
         )
         if not uses_default_scans:
             return self.mentions(documents), self.raw_triples(documents)
@@ -176,53 +184,34 @@ class KGPipeline:
     # ---- whole graph -------------------------------------------------------
 
     def run(
-        self, transcripts: DataFrame, resolve: bool = True,
-        cut_lineage: bool | str = True,
+        self, transcripts: DataFrame,
+        checkpoints: CheckpointManager | None = None,
     ) -> dict[str, DataFrame]:
         """transcripts → {documents, mentions, candidates, entities,
-        raw_triples, triples, final_entities, entity_mentions}.
+        raw_triples, linked_triples, fused, triples, final_entities,
+        entity_mentions}.
 
-        ``cut_lineage`` controls stage-boundary materialization:
+        Every named stage goes through one ``stage(name, thunk)`` call, in
+        a fixed order:
 
-        - ``"checkpoint"`` / ``True`` — eager ``localCheckpoint`` per stage.
-          Shallow plans (Catalyst re-analyzes the whole logical plan at every
-          action; with ten chained stages planning alone is material) and no
-          recompute for multi-consumer stages — but every boundary is a hard
-          scheduling barrier, so stage latencies *add* and short stages
-          can't overlap. Best for interactive/debug runs.
-        - ``"smart"`` — eager ``localCheckpoint`` only at *multi-consumer*
-          boundaries (documents ×3, entities ×2, fused ×2+); single-consumer
-          stages (mentions, candidates, linked) stay fused into their
-          consumer's job. Roughly halves the number of actions/barriers —
-          the throughput mode used by bench/submit paths. (A pure
-          ``persist()`` mode was measured and rejected: lazy caches fill
-          only after the first materialization finishes, so concurrent plan
-          branches race and recompute whole stages.)
-        - ``"none"`` / ``False`` — raw lineage (recompute per consumer).
-
-        The production checkpointed runner (plans/checkpoint.py) gets the
-        same cut via per-stage parquet materialization, which additionally
-        survives executor loss — use that on a real cluster.
+        - ``checkpoints=None``: an eager ``localCheckpoint`` cuts the
+          lineage after each stage except those in ``_LOCAL_UNCUT``.
+          Shallow plans (Catalyst re-analyzes the whole logical plan at
+          every action) and no recompute for multi-consumer stages.
+        - a ``CheckpointManager``: each stage is written to parquet and
+          committed with a manifest; a run with the same
+          (base_path, run_id) loads committed stages instead of computing
+          them, which survives driver and executor loss.
         """
-        if cut_lineage is True:
-            mode = "checkpoint"
-        elif cut_lineage is False:
-            mode = "none"
+        if checkpoints is not None:
+            stage = checkpoints.stage
         else:
-            mode = cut_lineage
-        if mode not in ("checkpoint", "smart", "none"):
-            raise ValueError(
-                f"cut_lineage must be one of 'checkpoint'/'smart'/'none' "
-                f"(or True/False), got {cut_lineage!r}"
-            )
-        ident = lambda df: df  # noqa: E731
-        lc = lambda df: df.localCheckpoint(eager=True)  # noqa: E731
-        if mode == "checkpoint":
-            cut = cut_shared = lc
-        elif mode == "smart":
-            cut, cut_shared = ident, lc
-        else:
-            cut = cut_shared = ident
+            def stage(name: str, thunk: Callable[[], DataFrame]) -> DataFrame:
+                df = thunk()
+                if name in _LOCAL_UNCUT:
+                    return df
+                return df.localCheckpoint(eager=True)
+
         # Fan-out point: every per-document UDF stage (NER, sentence split,
         # extraction) is a narrow map over `docs`, so its partition count
         # caps their parallelism. AQE coalesces the small assembly shuffle
@@ -232,29 +221,25 @@ class KGPipeline:
         # (one row each) spread and deterministic.
         sc = transcripts.sparkSession.sparkContext
         n_doc_parts = max(2 * sc.defaultParallelism, 8)
-        docs = cut_shared(
-            self.documents(transcripts).repartition(n_doc_parts, "conv_id")
-        )
-        mentions_raw, raw_scan = self.scan_products(docs)
-        mentions = cut(mentions_raw)
-        cands = cut(self.candidates(docs, mentions))
-        ents = cut_shared(self.entities(cands))
-
-        raw = raw_scan
-        linked = cut(self.linked_triples(raw))
-
-        fused = cut_shared(self.fused(linked, ents, docs))
-
-        if resolve:
-            triples, final_entities = apply_conflict_resolution(fused, ents)
-        else:
-            triples = fused
-            used = (
-                fused.select("conv_id", F.col("subj_url").alias("url"))
-                .unionByName(fused.select("conv_id", F.col("obj_url").alias("url")))
-                .distinct()
-            )
-            final_entities = ents.join(used, on=["conv_id", "url"], how="left_semi")
+        docs = stage("documents", lambda: self.documents(transcripts)
+                     .repartition(n_doc_parts, "conv_id"))
+        # mentions and raw_triples come from one fused corpus scan, built
+        # by whichever of the two stages is not yet committed
+        scan_mentions, scan_raw = _memo_pair(lambda: self.scan_products(docs))
+        mentions = stage("mentions", scan_mentions)
+        cands = stage("candidates", lambda: self.candidates(docs, mentions))
+        ents = stage("entities", lambda: self.entities(cands))
+        raw = stage("raw_triples", scan_raw)
+        linked = stage("linked_triples", lambda: self.linked_triples(raw))
+        fused = stage("fused", lambda: self.fused(linked, ents, docs))
+        # Resolve ONCE for both outputs (the reference's fusion likewise
+        # emits triples and entities from one pass, kg_construction.py:
+        # 102-109): the pair shares the pinned per-conv fixpoint, so the
+        # grouped applyInPandas executes once per fresh run.
+        resolved_triples, resolved_entities = _memo_pair(
+            lambda: conflicts.apply_conflict_resolution(fused, ents))
+        triples = stage("triples", resolved_triples)
+        final_entities = stage("final_entities", resolved_entities)
 
         entity_mentions = final_entities.select(
             "conv_id", "url", F.explode("mentions").alias("m")

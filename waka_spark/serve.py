@@ -37,12 +37,7 @@ class KGService:
     """Runs the batch pipeline on one request-supplied conversation.
 
     The per-request frame is a single transcript row, so every stage runs
-    a handful of tasks — but the response still collects TWO outputs
-    (triples and final_entities) from a DAG whose stages have multiple
-    consumers, so ``cut_lineage="smart"`` (materialize at multi-consumer
-    boundaries) is load-bearing here too: with "none" the whole fusion DAG
-    re-executes once per consumer and a single request costs minutes, not
-    seconds.
+    a handful of tasks.
     """
 
     def __init__(self, spark: SparkSession, pipeline: KGPipeline):
@@ -74,13 +69,12 @@ class KGService:
         #    removes those driver-side entries, so the operators register
         #    their pins with this scope and the scope releases them —
         #    blocks AND CacheManager entries.
-        # 2. RDD-set snapshot: localCheckpoint blocks (cut_lineage) are
+        # 2. RDD-set snapshot: the run's localCheckpoint blocks are
         #    RDD-level pins with no DataFrame handle surviving the run;
         #    release exactly the ids this run added.
         persisted_before = self._persistent_rdd_ids()
         with pin_scope():
-            out = self.pipeline.run(
-                transcripts, resolve=True, cut_lineage="smart")
+            out = self.pipeline.run(transcripts)
             triples = [
                 {
                     "subject": {"url": r["subj_url"],

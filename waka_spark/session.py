@@ -35,7 +35,7 @@ def get_spark(
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
     master = master or f"local[{cpus}]"
-    n_shuffle = shuffle_partitions or int(cpus) if str(cpus).isdigit() else 32
+    n_shuffle = shuffle_partitions or (int(cpus) if cpus.isdigit() else 32)
 
     # local-mode shuffle + localCheckpoint blocks go through spark.local.dir;
     # on this sandbox the root disk (~200 MB/s) throttles 32 concurrent

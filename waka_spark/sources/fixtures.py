@@ -38,8 +38,24 @@ WD = "http://www.wikidata.org/entity/"
 WDP = "http://www.wikidata.org/prop/direct/"
 
 
+def bauhaus_available() -> bool:
+    """Whether the reference's parity fixture (text and gold) is present."""
+    return all(
+        (REFERENCE_DATA / f"bauhaus-university-weimar.{ext}").exists()
+        for ext in ("txt", "nt")
+    )
+
+
 def load_bauhaus_text() -> str:
     return (REFERENCE_DATA / "bauhaus-university-weimar.txt").read_text().strip()
+
+
+def sample_text() -> str:
+    """In-repo sample input: one sentence per ``BAUHAUS_RULES`` fact, so
+    every gazetteer surface occurs and the pipeline builds one edge per
+    rule. For tests that need sample input, not parity with the
+    reference's paragraph."""
+    return " ".join(f"{s} {p} {o}." for s, p, o in BAUHAUS_RULES)
 
 
 def parse_ntriples_gold(path: Path | None = None) -> list[tuple[str, str, str]]:
@@ -201,13 +217,14 @@ def nationalities_df(spark: SparkSession) -> DataFrame:
 
 
 def bauhaus_transcripts(spark: SparkSession, conv_id: str = "bauhaus",
-                        n_turns: int = 3) -> DataFrame:
-    """The fixture text split across conversation turns (sentence groups), so
-    document assembly has real work to do; per-turn text equality and stable
-    (conv_id, turn_idx) ordering are asserted by tests over this table."""
+                        n_turns: int = 3, text: str | None = None) -> DataFrame:
+    """``text`` (default: the fixture text) split across conversation turns
+    (sentence groups), so document assembly has real work to do; per-turn
+    text equality and stable (conv_id, turn_idx) ordering are asserted by
+    tests over this table."""
     import datetime as dt
 
-    text = load_bauhaus_text()
+    text = text or load_bauhaus_text()
     sentences = re.split(r"(?<=[.!?])\s+", text)
     per_turn = max(1, (len(sentences) + n_turns - 1) // n_turns)
     rows = []

@@ -291,7 +291,7 @@ def run_stream_merge_edges(
             if (m.get("batch_id") == batch_id
                     and m.get("checkpoint") == checkpoint_path):
                 return  # at-least-once replay of an already-committed batch
-        out = pipeline.run(batch_df, resolve=True)
+        out = pipeline.run(batch_df)
         delta = edges_from_triples(out["triples"])
         merged = (
             delta if cur is None
@@ -324,7 +324,7 @@ def run_stream_to_graph(
     parity by construction."""
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        out = pipeline.run(batch_df, resolve=True)
+        out = pipeline.run(batch_df)
         (
             out["triples"]
             .withColumn("batch_id", F.lit(batch_id))
