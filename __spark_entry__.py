@@ -240,6 +240,7 @@ def q_kg_clustering_argmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     # asc, orderkey asc, linenumber asc) rank-1 row, aggregates with
     # map-side partials, and shares its single exchange with the count —
     # 2 Exchanges + full sort -> 1 Exchange, no sort, no join.
+    # min sorts a NULL field first: every key here is TPC-H NOT NULL.
     top = F.min(F.struct(
         (-F.col("l_extendedprice")).alias("_negp"),
         F.col("l_suppkey").alias("s"),
@@ -273,7 +274,8 @@ def q_kg_fusion_pairing(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-nation argmax as min(struct(...)) — same rank-1 row as the
     # former (score desc, custkey asc, suppkey asc) window, but a
     # hash-agg with map-side partials instead of a per-nation sort
-    # (round 6, same rewrite as kg_clustering_argmax)
+    # (round 6, same rewrite as kg_clustering_argmax). min sorts a NULL
+    # field first: acctbal, custkey and suppkey are TPC-H NOT NULL.
     return (
         pairs.groupBy("c_nationkey")
         .agg(F.min(F.struct(
@@ -300,7 +302,8 @@ def q_kg_containment_fallback(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     hits = docs.join(F.broadcast(queries), F.col("text").contains(F.col("q")))
     # per-doc argmax as min(struct(-len, q)) — identical to the former
-    # (length desc, q asc) rank-1 window, no per-doc sort (round 6)
+    # (length desc, q asc) rank-1 window, no per-doc sort (round 6).
+    # min sorts a NULL field first: q comes from a non-NULL literal list.
     return (
         hits.groupBy("doc_id")
         .agg(F.min(F.struct(
@@ -1275,10 +1278,12 @@ def q_kg_nodes_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_graph_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """5-round synchronous label-propagation communities
-    (operators/graph.py) over the SimHash similarity graph — deterministic
-    (count desc → label asc tie-break), one join + agg + per-node argmax
-    per round, localCheckpoint cutting lineage between rounds."""
+    """Synchronous label-propagation communities, at most 5 rounds
+    (operators/graph.py), over the SimHash similarity graph — deterministic
+    (count desc → label asc tie-break), one join + agg + per-node
+    ``min(struct(-cnt, label))`` argmax per round, localCheckpoint cutting
+    lineage between rounds; stops early on the first round that changes
+    no label, which the 5 chained CTEs of the oracle reproduce."""
     from waka_spark.operators.graph import label_propagation
 
     return label_propagation(_simhash_graph(spark, sf_dir), n_iter=5).select(
@@ -1502,7 +1507,8 @@ def q_kg_entity_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the argmax predicate (ties -> lexicographically first) — the
     attribute-enriched nodes materialization a KG serving layer reads.
     Single scan of the triples plan (endpoint explode), one hash-agg per
-    (node, pred), one per-node argmax window."""
+    (node, pred), one per-node ``min(struct(-count, pred))`` argmax
+    hash-agg."""
     t = _rule_triples(spark, sf_dir)
     ends = t.select(
         F.explode(
@@ -1528,7 +1534,8 @@ def q_kg_entity_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # per-node top predicate as min(struct(-count, pred)) — same row as
     # the former (pred_count desc, pred asc) rank-1 window without the
-    # per-node sort (round 6)
+    # per-node sort (round 6). min sorts a NULL field first: pred is a
+    # concat over a rule's predicate text, never NULL.
     top = (
         per_pred.groupBy("node")
         .agg(F.min(F.struct(

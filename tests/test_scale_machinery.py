@@ -213,11 +213,14 @@ def test_iterative_ops_release_superseded_round_state(spark):
     after each returns, executor storage may hold ONLY the returned
     frame's blocks (plus any caller-owned persists from other tests) —
     at 10^9-node scale a 25-round leak evicts the rest of the job's
-    cached state. plans/iterate.py is the mechanism."""
+    cached state. plans/iterate.fixpoint and the plans/pins scopes are
+    the mechanism."""
     from pyspark.sql import functions as F
 
+    from waka_spark.operators.ann import mmr_topk
     from waka_spark.operators.graph import (
-        bfs_distances, k_core, label_propagation, pagerank)
+        bfs_distances, hits, k_core, k_truss, label_propagation, pagerank,
+        personalized_pagerank)
     from waka_spark.plans.unionfind import connected_components
 
     def n_persistent():
@@ -229,15 +232,30 @@ def test_iterative_ops_release_superseded_round_state(spark):
         + [(f"n{i}", f"n{(i + 7) % 40}") for i in range(40)],
         "src string, dst string",
     )
+    seeds = spark.createDataFrame([("n0",)], "node string")
+    # a triangle plus a pendant edge: one k=3 round peels the pendant and
+    # the budget ends before convergence, so k_truss recomputes support
+    tri = spark.createDataFrame(
+        [("t0", "t1"), ("t1", "t2"), ("t0", "t2"), ("t2", "t3")],
+        "src string, dst string")
+    emb = spark.createDataFrame(
+        [(i, [float(i % 3), float(i % 5 + 1)]) for i in range(12)],
+        "vec_id long, embedding array<double>")
+    queries = spark.createDataFrame(
+        [(100, [1.0, 0.0]), (101, [0.0, 1.0])],
+        "q_id long, q_vec array<double>")
 
     for fn in (
         lambda: connected_components(edges),
         lambda: pagerank(edges, n_iter=5),
-        lambda: bfs_distances(
-            edges, spark.createDataFrame([("n0",)], "node string"),
-            n_iter=4),
+        lambda: bfs_distances(edges, seeds, n_iter=4),
         lambda: label_propagation(edges, n_iter=4),
         lambda: k_core(edges, k=2, n_iter=4),
+        lambda: hits(edges, n_iter=3),
+        lambda: personalized_pagerank(edges, seeds, n_iter=3),
+        lambda: k_truss(edges, k=2, n_iter=2),   # converges in round 1
+        lambda: k_truss(tri, k=3, n_iter=1),     # budget runs out
+        lambda: mmr_topk(emb, queries, k=3, n_candidates=5),
     ):
         before = n_persistent()
         result = fn()
@@ -245,3 +263,107 @@ def test_iterative_ops_release_superseded_round_state(spark):
         assert rows > 0
         # exactly the returned frame's checkpoint may remain
         assert n_persistent() <= before + 1
+
+
+def _cliques(spark, n_cliques=3, size=5, tail=0):
+    """Disjoint ``size``-cliques, symmetrized; ``tail`` > 0 hangs a path
+    of that many extra nodes off the first clique's last node."""
+    pairs = [(f"c{c}_{i}", f"c{c}_{j}") for c in range(n_cliques)
+             for i in range(size) for j in range(size) if i != j]
+    path = [f"c0_{size - 1}"] + [f"p{i}" for i in range(1, tail + 1)]
+    for a, b in zip(path, path[1:]):
+        pairs += [(a, b), (b, a)]
+    return spark.createDataFrame(pairs, "src string, dst string")
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_iterative_ops_stop_early_exactly(spark, monkeypatch):
+    """label_propagation, k_core and bfs_distances stop on the first
+    round that changes nothing, and the result equals the full budget's.
+    On 5-cliques LPA converges after round 2 (round 3 changes nothing)."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from waka_spark.operators.graph import (
+        bfs_distances, k_core, label_propagation)
+
+    cliques = _cliques(spark)
+    lpa = _rows(label_propagation(cliques, n_iter=50))
+    assert lpa == _rows(label_propagation(cliques, n_iter=2))
+    assert {c for _, c in lpa} == {"c0_0", "c1_0", "c2_0"}
+
+    cuts = {"n": 0}
+    orig = DataFrame.localCheckpoint
+
+    def counting(self, *args, **kwargs):
+        cuts["n"] += 1
+        return orig(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", counting)
+    label_propagation(cliques, n_iter=50).count()
+    monkeypatch.setattr(DataFrame, "localCheckpoint", orig)
+    assert cuts["n"] == 2 + 3  # edges + initial labels, then 3 rounds
+
+    # the tail peels one node per round (k=2): converged after round 3
+    tailed = _cliques(spark, tail=3)
+    core = _rows(k_core(tailed, k=2, n_iter=50))
+    assert core == _rows(k_core(tailed, k=2, n_iter=3))
+    assert {n for n, _ in core} == {
+        f"c{c}_{i}" for c in range(3) for i in range(5)}
+    assert core != _rows(k_core(tailed, k=2, n_iter=2))  # p1 survives
+
+    # the tail's far end is 4 hops from c0_0: converged after round 4
+    seeds = spark.createDataFrame([("c0_0",)], "node string")
+    dist = _rows(bfs_distances(tailed, seeds, n_iter=50))
+    assert dist == _rows(bfs_distances(tailed, seeds, n_iter=4))
+    assert max(d for _, d in dist) == 4
+    assert dist != _rows(bfs_distances(tailed, seeds, n_iter=3))
+
+
+def test_label_propagation_runs_full_budget_when_labels_swap(spark):
+    """On a single edge a–b synchronous LPA swaps the two labels every
+    round, so no round repeats its input: odd and even budgets differ."""
+    from waka_spark.operators.graph import label_propagation
+
+    ab = spark.createDataFrame(
+        [("a", "b"), ("b", "a")], "src string, dst string")
+    assert _rows(label_propagation(ab, n_iter=5)) == [("a", "b"), ("b", "a")]
+    assert _rows(label_propagation(ab, n_iter=6)) == [("a", "a"), ("b", "b")]
+
+
+class _NoStatsFrame:
+    """Stand-in for a DataFrame whose optimizer-stats probe throws; only
+    the attributes parallel_floor reads."""
+
+    def __init__(self, spark, n_parts):
+        self.sparkSession = spark
+        self.rdd = type("R", (), {"getNumPartitions": lambda _: n_parts})()
+        self.repartitioned = False
+
+    @property
+    def _jdf(self):
+        raise RuntimeError("stats probe failed")
+
+    def repartition(self, *args):
+        self.repartitioned = True
+        return self
+
+
+def test_parallel_floor_fails_safe_when_stats_probe_throws(spark):
+    """A failed stats probe must not be read as "small": the partition
+    count decides, exactly as for unknown stats, so an input that already
+    spans the cores is never shuffled. And the probe itself must work: an
+    input the optimizer sizes far above cores x 128 MB is left alone."""
+    from waka_spark.plans.parallel import parallel_floor
+
+    huge = spark.range(10**13)  # 80 TB by the optimizer's estimate
+    assert parallel_floor(huge, "id") is huge
+    cores = spark.sparkContext.defaultParallelism
+    wide = _NoStatsFrame(spark, n_parts=cores)
+    assert parallel_floor(wide, "k") is wide
+    assert not wide.repartitioned
+    narrow = _NoStatsFrame(spark, n_parts=1)
+    parallel_floor(narrow, "k")
+    assert narrow.repartitioned

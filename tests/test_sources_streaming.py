@@ -127,6 +127,36 @@ def test_stream_to_graph_bridge(spark, tmp_path):
     assert edges.count() == len(fx.BAUHAUS_RULES)  # one per sample sentence
 
 
+def test_stream_bridge_releases_its_rdds(spark, tmp_path):
+    """Each micro-batch runs inside one pin_scope: none of the persistent
+    RDDs a trigger-once stream creates (the pipeline's pins and stage
+    cuts) survive it. Same shape as test_serve's release test: ids that
+    vanish meanwhile (ContextCleaner collecting earlier tests' caches)
+    are not asserted on."""
+    from waka_spark.plans.pipeline import bauhaus_pipeline
+    from waka_spark.sources import fixtures as fx
+    from waka_spark.streaming.ingest import run_stream_to_graph
+
+    def persistent_ids():
+        jmap = spark.sparkContext._jsc.getPersistentRDDs()
+        return {int(k) for k in jmap.keySet().toArray()}
+
+    in_dir = tmp_path / "turns"
+    fx.bauhaus_transcripts(spark, text=fx.sample_text()).write.parquet(
+        str(in_dir))
+    pipe = bauhaus_pipeline(spark, use_scorers=False)
+    before = persistent_ids()
+    q = run_stream_to_graph(
+        spark, str(in_dir), pipe,
+        output_path=str(tmp_path / "graph"),
+        checkpoint_path=str(tmp_path / "ckpt"),
+    )
+    q.awaitTermination(300)
+    edges = spark.read.parquet(str(tmp_path / "graph" / "edges"))
+    assert edges.count() == len(fx.BAUHAUS_RULES)  # the batch did run
+    assert not (persistent_ids() - before)
+
+
 def test_streaming_exact_dedup(spark, tmp_path):
     """Watermarked content dedup: repeated texts within the horizon drop,
     state is evictable (dropDuplicatesWithinWatermark)."""

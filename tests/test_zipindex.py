@@ -64,17 +64,32 @@ def test_no_single_partition_window(spark):
 
 
 def test_pin_scope_releases_only_scope_pins(spark):
-    from waka_spark.plans.pins import pin, pin_scope
+    """A scope frees the pins AND the cuts made inside it; a pin or cut
+    made outside it stays readable."""
+    from waka_spark.plans.pins import cut, pin, pin_scope, release
+
+    def persistent_ids():
+        jmap = spark.sparkContext._jsc.getPersistentRDDs()
+        return {int(k) for k in jmap.keySet().toArray()}
 
     outside = pin(spark.range(10))
     outside.count()
+    cut_outside = cut(spark.range(30))
+    before = persistent_ids()
     with pin_scope():
         inside = pin(spark.range(20))
         inside.count()
+        cut_inside = cut(spark.range(40))
+        assert cut_inside.count() == 40
         assert inside.storageLevel.useMemory
+        made_inside = persistent_ids() - before
+    assert made_inside                        # the pin's and the cut's
     assert not inside.storageLevel.useMemory  # released on exit
+    assert not (made_inside & persistent_ids())
     assert outside.storageLevel.useMemory     # untouched
+    assert cut_outside.count() == 30          # its blocks are still there
     outside.unpersist()
+    release(cut_outside)
 
 
 def test_global_order_stats_releases_in_pin_scope(spark):

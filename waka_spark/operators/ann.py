@@ -1401,8 +1401,9 @@ def mmr_topk(
     independent — each round one anti-join (drop selected), one equi-join
     on q_id against the ≤ r-row-per-query selected set with an in-row
     cosine, one (q_id, vec_id) max-agg, one per-query argmax window.
-    Candidate and selected frames are eagerly checkpointed per round
-    (plans/iterate.py) so round r never replays rounds 1..r-1.
+    Candidate and selected frames are cut per round, the superseded
+    selection released (plans/pins.py), so round r never replays rounds
+    1..r-1.
 
     Determinism: relevance and pairwise sims are rounded to 6; the MMR
     combination then runs in exact INTEGER micro-units — ``λ`` snaps to
@@ -1416,10 +1417,9 @@ def mmr_topk(
 
     Output: (q_id, vec_id, mmr_rank, relevance, mmr_score).
     """
-    from waka_spark.plans.iterate import TrackedCheckpoints
+    from waka_spark.plans.pins import cut, keep, pin_scope, release
 
     lam_num = int(round(lam * 10))
-    ck = TrackedCheckpoints(embeddings.sparkSession)
     joined = embeddings.select(
         F.col(id_col).alias("vec_id"), F.col(vec_col).alias("_v"),
     ).crossJoin(
@@ -1428,58 +1428,58 @@ def mmr_topk(
     ).filter(F.col("vec_id") != F.col("q_id"))
     w_rel = Window.partitionBy("q_id").orderBy(
         F.col("relevance").desc(), F.col("vec_id").asc())
-    cand = ck.checkpoint(
-        joined.withColumn(
-            "relevance", F.round(cosine(F.col("_v"), F.col("_qv")), 6))
-        .withColumn("_rn", F.row_number().over(w_rel))
-        .filter(F.col("_rn") <= n_candidates)
-        .select("q_id", "vec_id", "_v", "relevance")
-    )
-
-    rel_u = F.round(F.col("relevance") * 1e6, 0).cast("long")
-    w_pick = Window.partitionBy("q_id").orderBy(
-        F.col("_score_u").desc(), F.col("vec_id").asc())
-    selected = None
-    for r in range(1, k + 1):
-        if selected is None:
-            scored = cand.withColumn("_score_u", F.lit(lam_num) * rel_u)
-        else:
-            remaining = cand.join(
-                selected.select("q_id", "vec_id"),
-                ["q_id", "vec_id"], "left_anti")
-            pen = (
-                remaining.join(
-                    selected.select(
-                        "q_id", F.col("_v").alias("_sv")), "q_id")
-                .withColumn(
-                    "_p",
-                    F.round(
-                        F.round(cosine(F.col("_v"), F.col("_sv")), 6)
-                        * 1e6, 0).cast("long"))
-                .groupBy("q_id", "vec_id")
-                .agg(
-                    F.max("_p").alias("_pen_u"),
-                    F.first("relevance").alias("relevance"),
-                    F.first("_v").alias("_v"),
-                )
-            )
-            scored = pen.withColumn(
-                "_score_u",
-                F.lit(lam_num) * rel_u
-                - F.lit(10 - lam_num) * F.col("_pen_u"))
-        win = (
-            scored.withColumn("_pick", F.row_number().over(w_pick))
-            .filter(F.col("_pick") == 1)
-            .select("q_id", "vec_id", "_v", "relevance",
-                    (F.col("_score_u") / F.lit(1e7)).alias("mmr_score"),
-                    F.lit(r).alias("mmr_rank"))
+    with pin_scope():
+        cand = cut(
+            joined.withColumn(
+                "relevance", F.round(cosine(F.col("_v"), F.col("_qv")), 6))
+            .withColumn("_rn", F.row_number().over(w_rel))
+            .filter(F.col("_rn") <= n_candidates)
+            .select("q_id", "vec_id", "_v", "relevance")
         )
-        new_sel = (
-            win if selected is None else selected.unionByName(win))
-        new_sel = ck.checkpoint(new_sel)
-        if selected is not None:
-            ck.release(selected)
-        selected = new_sel
-    ck.release_all_except(selected)
+
+        rel_u = F.round(F.col("relevance") * 1e6, 0).cast("long")
+        w_pick = Window.partitionBy("q_id").orderBy(
+            F.col("_score_u").desc(), F.col("vec_id").asc())
+        selected = None
+        for r in range(1, k + 1):
+            if selected is None:
+                scored = cand.withColumn("_score_u", F.lit(lam_num) * rel_u)
+            else:
+                remaining = cand.join(
+                    selected.select("q_id", "vec_id"),
+                    ["q_id", "vec_id"], "left_anti")
+                pen = (
+                    remaining.join(
+                        selected.select(
+                            "q_id", F.col("_v").alias("_sv")), "q_id")
+                    .withColumn(
+                        "_p",
+                        F.round(
+                            F.round(cosine(F.col("_v"), F.col("_sv")), 6)
+                            * 1e6, 0).cast("long"))
+                    .groupBy("q_id", "vec_id")
+                    .agg(
+                        F.max("_p").alias("_pen_u"),
+                        F.first("relevance").alias("relevance"),
+                        F.first("_v").alias("_v"),
+                    )
+                )
+                scored = pen.withColumn(
+                    "_score_u",
+                    F.lit(lam_num) * rel_u
+                    - F.lit(10 - lam_num) * F.col("_pen_u"))
+            win = (
+                scored.withColumn("_pick", F.row_number().over(w_pick))
+                .filter(F.col("_pick") == 1)
+                .select("q_id", "vec_id", "_v", "relevance",
+                        (F.col("_score_u") / F.lit(1e7)).alias("mmr_score"),
+                        F.lit(r).alias("mmr_rank"))
+            )
+            new_sel = cut(
+                win if selected is None else selected.unionByName(win))
+            if selected is not None:
+                release(selected)
+            selected = new_sel
+        keep(selected)
     return selected.select(
         "q_id", "vec_id", "mmr_rank", "relevance", "mmr_score")

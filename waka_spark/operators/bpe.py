@@ -16,7 +16,7 @@ Scale design (the part that matters at 100 TB):
 - **One O(1) driver action per merge round** (the argmax pair — a single
   row), the same budget class as unionfind's convergence probe. Round
   state is the vocab table; lineage is cut every ``checkpoint_every``
-  rounds and superseded round state is RELEASED (plans/iterate.py), so
+  rounds and superseded round state is RELEASED (plans/pins.py), so
   executor storage holds two vocab tables regardless of merge count.
 - **Application is a broadcast-join, not a corpus UDF.** The learned
   merges tokenize the DISTINCT word table (chained literal ``replace``
@@ -104,41 +104,39 @@ def bpe_learn(
     run persists; swap in a longer corpus or more rounds and the plan
     shape is unchanged.
     """
-    from waka_spark.plans.iterate import TrackedCheckpoints
+    from waka_spark.plans.pins import cut, pin_scope, release
 
     spark = df.sparkSession
-    ck = TrackedCheckpoints(spark)
-    vocab = ck.checkpoint(
-        word_counts(df, id_col, text_col)
-        .select(_bracketed(F.col("word")).alias("sym"), "cnt")
-    )
-
     merges: list[tuple[int, str, str, int]] = []
-    for i in range(n_merges):
-        top = (
-            _pair_counts(vocab)
-            .orderBy(F.col("pair_count").desc(), "lhs", "rhs")
-            .limit(1)
-            .collect()
+    with pin_scope():
+        vocab = last_cut = cut(
+            word_counts(df, id_col, text_col)
+            .select(_bracketed(F.col("word")).alias("sym"), "cnt")
         )
-        if not top:
-            break
-        l, r, c = top[0]["lhs"], top[0]["rhs"], top[0]["pair_count"]
-        merges.append((i, l, r, int(c)))
-        new_vocab = vocab.select(
-            F.replace(
-                F.col("sym"),
-                F.lit(f"[{l}][{r}]"),
-                F.lit(f"[{l}{r}]"),
-            ).alias("sym"),
-            "cnt",
-        )
-        if (i + 1) % _CHECKPOINT_EVERY == 0:
-            new_vocab = ck.checkpoint(new_vocab)
-            ck.release_all_except(new_vocab)
-        vocab = new_vocab
+        for i in range(n_merges):
+            top = (
+                _pair_counts(vocab)
+                .orderBy(F.col("pair_count").desc(), "lhs", "rhs")
+                .limit(1)
+                .collect()
+            )
+            if not top:
+                break
+            l, r, c = top[0]["lhs"], top[0]["rhs"], top[0]["pair_count"]
+            merges.append((i, l, r, int(c)))
+            vocab = vocab.select(
+                F.replace(
+                    F.col("sym"),
+                    F.lit(f"[{l}][{r}]"),
+                    F.lit(f"[{l}{r}]"),
+                ).alias("sym"),
+                "cnt",
+            )
+            if (i + 1) % _CHECKPOINT_EVERY == 0:
+                vocab = cut(vocab)
+                release(last_cut)
+                last_cut = vocab
 
-    ck.release_all_except()
     return spark.createDataFrame(
         merges, "merge_idx int, lhs string, rhs string, pair_count long"
     )

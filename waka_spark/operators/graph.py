@@ -7,30 +7,32 @@ materialized nodes/edges tables (sinks.py, plans/unionfind.py) invite the
 standard graph passes — centrality for entity importance ranking, triangle
 count for clustering-coefficient quality checks on the resolved graph.
 
-Scale shapes (both pure DataFrame ops, no UDFs):
+Scale shapes (pure DataFrame ops, no UDFs):
 
 - ``pagerank``: the Pregel iteration as join+agg. Per round: ranks ⋈
   edges on src (hash join co-partitioned with the edge shuffle), groupBy
-  dst (map-side partial sums), one ``localCheckpoint`` to cut lineage
-  (same round discipline as plans/unionfind.py), and the superseded
-  round's checkpoint blocks RELEASED so executor storage holds two
-  rounds of state, never n_iter (plans/iterate.py). Edges and degrees
-  are computed once and persisted (unpersisted on return); each round
-  shuffles only (node, rank) pairs — the minimum possible state. Convergence is a fixed iteration
-  budget (deterministic, oracle-portable) rather than an epsilon test,
-  which would add a driver-side action per round.
-- ``triangle_count``: the two-path join with the canonical a<b<c
-  ordering, so every triangle is generated exactly once and the join
-  never enumerates a pair twice. Input edges are deduped + symmetrized
-  first; skew guard is the standard one — high-degree nodes dominate the
-  two-path fan-out, so callers cap degree upstream if the graph has hubs.
+  dst (map-side partial sums). The iterative operators run their rounds
+  through ``plans/iterate.fixpoint`` (each round cut, the superseded one
+  released, so executor storage holds two rounds of state, never
+  n_iter) and own their helper frames through one ``plans/pins``
+  scope. Each round shuffles only (node, rank) pairs — the minimum
+  possible state. Convergence is a fixed iteration budget
+  (deterministic, oracle-portable) rather than an epsilon test, which
+  would add a driver-side action per round.
+- ``triangle_count``: degree-ordered enumeration (each undirected edge
+  oriented from its lower-(degree, id) endpoint), closed by intersecting
+  per-node out-neighbor arrays, so every triangle is generated exactly
+  once and hub degree never makes the work quadratic
+  (:func:`_oriented_intersections`).
 - ``label_propagation``: SYNCHRONOUS LPA (all nodes update from the
   previous round's labels simultaneously) with a total-order tie-break
   (count desc → label asc), so the result is deterministic under any
   partitioning — unlike classic asynchronous LPA, whose output depends
   on visit order. Per round: one join (edges ⋈ labels on src, the same
   co-partitioned shuffle as pagerank), one count agg, one per-node
-  argmax window; ``localCheckpoint`` cuts lineage per round.
+  argmax as a ``min(struct(-cnt, label))`` hash-agg. The loop stops
+  early on the first round that changes no label (the next round would
+  repeat it forever).
 """
 
 from __future__ import annotations
@@ -38,30 +40,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from waka_spark.plans.iterate import fixpoint
 from waka_spark.plans.parallel import maybe_broadcast, parallel_floor
-
-
-def _maybe_broadcast(df: DataFrame, n_rows: int | None) -> DataFrame:
-    """Broadcast-hint an iteration-state frame (ranks, labels, frontier,
-    dist) when its known row count proves it fits comfortably (round 6).
-    The per-round state is a checkpointed ExistingRDD whose stats report
-    unknown, so the planner falls back to sort-merge and RE-SHUFFLES AND
-    RE-SORTS THE FULL EDGE TABLE EVERY ROUND — 10 edge-table exchanges
-    for a 10-round PageRank. The iterative operators all count their
-    node set anyway, so the decision is exact: under ~64 MB framed
-    (the session's autoBroadcastJoinThreshold), broadcast; a large graph
-    keeps the shuffle join. (Shared impl: plans/parallel.py.)"""
-    return maybe_broadcast(df, n_rows)
-
-
-def _floor_edges(edges: DataFrame, src: str) -> DataFrame:
-    """Scan-parallelism floor applied at every operator's edge ingest
-    (round 6): the shared similarity-graph parquet is one ~36 MB file →
-    ONE scan partition, so without this every per-edge compute pass
-    (frontier joins, md5 walk hashing, contribution products) runs on a
-    single core while the cluster idles. Size-guarded: a genuinely large
-    edge table is left alone (plans/parallel.py)."""
-    return parallel_floor(edges, src)
+from waka_spark.plans.pins import cut, keep, pin, pin_scope, release
 
 
 def symmetrize(
@@ -109,74 +90,68 @@ def pagerank(
     proportionally to edge weight. Edges with non-positive weight should
     be filtered by the caller (a zero-weight-only node would divide by
     zero; this operator treats presence of an edge as w > 0). One join +
-    one agg per round over (node, rank) pairs only; ``localCheckpoint``
-    flattens lineage so round t+1's plan does not replay rounds 1..t.
+    one agg per round over (node, rank) pairs only, run by
+    ``plans/iterate.fixpoint``.
     """
-    from waka_spark.plans.iterate import TrackedCheckpoints
-
-    ck = TrackedCheckpoints(edges.sparkSession)
     w_expr = (
         F.lit(1.0) if weight_col is None
         else F.col(weight_col).cast("double")
     )
-    # EAGER: nodes below scans e twice (union branches) in one job; a lazy
-    # persist makes those sibling stages race to populate the cold cache
-    # and each recompute the upstream edge build (see random_walks)
-    e = ck.checkpoint(
-        _floor_edges(edges, src).select(
-            F.col(src).alias("src"), F.col(dst).alias("dst"),
-            w_expr.alias("_w")))
-    deg = e.groupBy("src").agg(
-        F.count("*").cast("double").alias("outdeg")
-        if weight_col is None else F.sum("_w").alias("outdeg"))
-    out_edges = e.join(deg, "src").persist()
-
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()
-    )
-    n = nodes.count()
-    if n == 0:
-        # empty edge list (e.g. an upstream similarity threshold left no
-        # edges): return an empty (node, rank) frame with the right
-        # schema instead of a driver-side ZeroDivisionError
-        for helper in (out_edges, nodes):
-            helper.unpersist(False)
-        return nodes.select("node", F.lit(0.0).alias("rank"))
-
-    ranks = ck.checkpoint(nodes.withColumn("rank", F.lit(1.0 / n)))
-    base = (1.0 - damping) / n
-    for _ in range(n_iter):
-        contribs = (
-            out_edges.join(
-                _maybe_broadcast(ranks, n),
-                out_edges["src"] == ranks["node"])
-            .select(
-                F.col("dst").alias("node"),
-                (F.col("rank") * F.col("_w") / F.col("outdeg")).alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("contrib"))
+    with pin_scope():
+        # EAGER: nodes below scans e twice (union branches) in one job; a
+        # lazy persist makes those sibling stages race to populate the
+        # cold cache and each recompute the upstream edge build (see
+        # random_walks)
+        e = cut(
+            parallel_floor(edges, src).select(
+                F.col(src).alias("src"), F.col(dst).alias("dst"),
+                w_expr.alias("_w")))
+        deg = e.groupBy("src").agg(
+            F.count("*").cast("double").alias("outdeg")
+            if weight_col is None else F.sum("_w").alias("outdeg"))
+        out_edges = pin(e.join(deg, "src"))
+        nodes = pin(
+            e.select(F.col("src").alias("node"))
+            .unionByName(e.select(F.col("dst").alias("node")))
+            .distinct()
         )
-        new_ranks = ck.checkpoint(
-            nodes.join(_maybe_broadcast(contribs, n), "node", "left")
-            .select(
-                "node",
-                (
-                    F.lit(base)
-                    + F.lit(damping) * F.coalesce("contrib", F.lit(0.0))
-                ).alias("rank"),
+        n = nodes.count()
+        if n == 0:
+            # empty edge list (e.g. an upstream similarity threshold left
+            # no edges): return an empty (node, rank) frame with the right
+            # schema instead of a driver-side ZeroDivisionError
+            keep(e)
+            return nodes.select("node", F.lit(0.0).alias("rank"))
+
+        base = (1.0 - damping) / n
+
+        def step(ranks: DataFrame) -> DataFrame:
+            contribs = (
+                out_edges.join(
+                    maybe_broadcast(ranks, n),
+                    out_edges["src"] == ranks["node"])
+                .select(
+                    F.col("dst").alias("node"),
+                    (F.col("rank") * F.col("_w") / F.col("outdeg"))
+                    .alias("c"),
+                )
+                .groupBy("node")
+                .agg(F.sum("c").alias("contrib"))
             )
-        )
-        # round t's ranks are dead once round t+1 is materialized: keep
-        # storage at two rank tables, not n_iter (plans/iterate.py)
-        ck.release(ranks)
-        ranks = new_ranks
-    ck.release_all_except(ranks)
-    for helper in (out_edges, nodes):
-        helper.unpersist(False)
+            return (
+                nodes.join(maybe_broadcast(contribs, n), "node", "left")
+                .select(
+                    "node",
+                    (
+                        F.lit(base)
+                        + F.lit(damping) * F.coalesce("contrib", F.lit(0.0))
+                    ).alias("rank"),
+                )
+            )
+
+        ranks = fixpoint(
+            cut(nodes.withColumn("rank", F.lit(1.0 / n))), step, n_iter)
+        keep(ranks)
     return ranks
 
 
@@ -200,65 +175,62 @@ def hits(
     single-row barrier per round without changing the answer; 5 rounds of
     unnormalized sums stay far inside double range (growth ≤ max-degree
     per half-step). One join + one agg per half-step over (node, score)
-    pairs; ``localCheckpoint`` flattens lineage so round t+1 does not
-    replay rounds 1..t (plans/iterate.py). The final norm is a scalar agg
-    broadcast back — never an unpartitioned window. Dangling nodes (no
-    out- or in-edges on one side) keep score 0 from that side's update,
-    matching the adjacency-matrix formulation.
+    pairs, run by ``plans/iterate.fixpoint``. The final norm is a scalar
+    agg broadcast back — never an unpartitioned window. Dangling nodes
+    (no out- or in-edges on one side) keep score 0 from that side's
+    update, matching the adjacency-matrix formulation.
     """
-    from waka_spark.plans.iterate import TrackedCheckpoints
-
-    ck = TrackedCheckpoints(edges.sparkSession)
-    # EAGER: nodes below scans e twice (union branches) in one job — same
-    # lazy-persist race as pagerank's edge build
-    e = ck.checkpoint(
-        _floor_edges(edges, src).select(
-        F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .distinct())
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()
-    )
-    n = nodes.count()
-    if n == 0:
-        nodes.unpersist(False)
-        return nodes.select(
-            "node", F.lit(0.0).alias("hub"), F.lit(0.0).alias("authority"))
-
-    scores = ck.checkpoint(nodes.select(
-        "node",
-        F.lit(1.0 / n).alias("hub"),
-        F.lit(1.0 / n).alias("authority"),
-    ))
-    for _ in range(n_iter):
-        auth = (
-            e.join(_maybe_broadcast(
-                scores.select(F.col("node").alias("src"), "hub"), n), "src")
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum("hub").alias("authority"))
+    with pin_scope():
+        # EAGER: nodes below scans e twice (union branches) in one job —
+        # same lazy-persist race as pagerank's edge build
+        e = cut(
+            parallel_floor(edges, src).select(
+                F.col(src).alias("src"), F.col(dst).alias("dst"))
+            .distinct())
+        nodes = pin(
+            e.select(F.col("src").alias("node"))
+            .unionByName(e.select(F.col("dst").alias("node")))
+            .distinct()
         )
-        hub = (
-            e.join(_maybe_broadcast(
-                auth.select(F.col("node").alias("dst"),
-                            F.col("authority").alias("_av")), n), "dst")
-            .groupBy(F.col("src").alias("node"))
-            .agg(F.sum("_av").alias("hub"))
-        )
-        new_scores = ck.checkpoint(
-            nodes.join(_maybe_broadcast(hub, n), "node", "left")
-            .join(_maybe_broadcast(auth, n), "node", "left")
-            .select(
-                "node",
-                F.coalesce("hub", F.lit(0.0)).alias("hub"),
-                F.coalesce("authority", F.lit(0.0)).alias("authority"),
+        n = nodes.count()
+        if n == 0:
+            keep(e)
+            return nodes.select(
+                "node", F.lit(0.0).alias("hub"),
+                F.lit(0.0).alias("authority"))
+
+        def step(scores: DataFrame) -> DataFrame:
+            auth = (
+                e.join(maybe_broadcast(
+                    scores.select(F.col("node").alias("src"), "hub"), n),
+                    "src")
+                .groupBy(F.col("dst").alias("node"))
+                .agg(F.sum("hub").alias("authority"))
             )
-        )
-        ck.release(scores)
-        scores = new_scores
-    ck.release_all_except(scores)
-    nodes.unpersist(False)
+            hub = (
+                e.join(maybe_broadcast(
+                    auth.select(F.col("node").alias("dst"),
+                                F.col("authority").alias("_av")), n), "dst")
+                .groupBy(F.col("src").alias("node"))
+                .agg(F.sum("_av").alias("hub"))
+            )
+            return (
+                nodes.join(maybe_broadcast(hub, n), "node", "left")
+                .join(maybe_broadcast(auth, n), "node", "left")
+                .select(
+                    "node",
+                    F.coalesce("hub", F.lit(0.0)).alias("hub"),
+                    F.coalesce("authority", F.lit(0.0)).alias("authority"),
+                )
+            )
+
+        scores = fixpoint(
+            cut(nodes.select(
+                "node",
+                F.lit(1.0 / n).alias("hub"),
+                F.lit(1.0 / n).alias("authority"),
+            )), step, n_iter)
+        keep(scores)
     norms = scores.agg(
         F.sum("hub").alias("_hn"), F.sum("authority").alias("_an"))
     return scores.crossJoin(F.broadcast(norms)).select(
@@ -281,54 +253,59 @@ def bfs_distances(
     left-joins if it wants nulls).
 
     Bellman-Ford-style relaxation as join+agg: each round expands the
-    current distance table along edges (+1) and folds with ``min`` — a
-    node's distance only ever decreases, so ``n_iter`` rounds yield exact
-    distances ≤ ``n_iter``. Per-round shuffle state is the (node, dist)
-    pair table only; ``localCheckpoint`` flattens lineage per round
-    (same Pregel-as-join shape as :func:`pagerank`). Frontier-only
-    expansion (joining just the rows that improved last round) would
-    shrink the join input on high-diameter graphs; on the dense low-
-    diameter similarity graphs this targets, the bounded (node, dist)
-    table is already the small side and the simple fold keeps every round
-    a two-stage job.
+    current distance table along edges (+1) and folds with ``min``. After
+    round r the table holds exactly the nodes within r hops, at their true
+    distances, so ``n_iter`` rounds yield exact distances ≤ ``n_iter``, and
+    a round that adds no row adds none later: the loop stops there. Per-
+    round shuffle state is the (node, dist) pair table only (same
+    Pregel-as-join shape as :func:`pagerank`). Frontier-only expansion
+    (joining just the rows that improved last round) would shrink the join
+    input on high-diameter graphs; on the dense low-diameter similarity
+    graphs this targets, the bounded (node, dist) table is already the
+    small side and the simple fold keeps every round a two-stage job.
     """
-    from waka_spark.plans.iterate import TrackedCheckpoints
-
-    ck = TrackedCheckpoints(edges.sparkSession)
-    e = _floor_edges(edges, src).select(
-        F.col(src).alias("src"), F.col(dst).alias("dst")).persist()
-    # seeds are deduped and intersected with the graph's node set
-    # (round-3 fix): stale/foreign seed ids (entities resolved away by a
-    # merge pass) must not surface as phantom dist-0 rows in a result
-    # whose contract is "reached GRAPH nodes", and duplicate seeds must
-    # not duplicate output rows. Semi join needs no distinct on the
-    # endpoint union. Same guard personalized_pagerank applies.
-    graph_nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-    )
-    dist = ck.checkpoint(
-        seeds.select(F.col(node).alias("node")).distinct()
-        .join(graph_nodes, "node", "left_semi")
-        .select("node", F.lit(0).cast("long").alias("dist"))
-    )
-    for _ in range(n_iter):
+    with pin_scope():
+        e = pin(parallel_floor(edges, src).select(
+            F.col(src).alias("src"), F.col(dst).alias("dst")))
+        # seeds are deduped and intersected with the graph's node set:
+        # stale/foreign seed ids (entities resolved away by a merge pass)
+        # must not surface as phantom dist-0 rows in a result whose
+        # contract is "reached GRAPH nodes", and duplicate seeds must not
+        # duplicate output rows. Semi join needs no distinct on the
+        # endpoint union. Same guard personalized_pagerank applies.
+        graph_nodes = (
+            e.select(F.col("src").alias("node"))
+            .unionByName(e.select(F.col("dst").alias("node")))
+        )
+        dist = cut(
+            seeds.select(F.col(node).alias("node")).distinct()
+            .join(graph_nodes, "node", "left_semi")
+            .select("node", F.lit(0).cast("long").alias("dist"))
+        )
         # per-round count is exact and near-free (dist is materialized);
-        # it drives the broadcast-vs-shuffle choice (_maybe_broadcast)
-        expanded = (
-            e.join(_maybe_broadcast(dist, dist.count()),
-                   e["src"] == dist["node"])
-            .select(F.col("dst").alias("node"), (F.col("dist") + 1).alias("dist"))
-        )
-        new_dist = ck.checkpoint(
-            dist.unionByName(expanded)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-        )
-        ck.release(dist)
-        dist = new_dist
-    ck.release_all_except(dist)
-    e.unpersist(False)
+        # it drives the broadcast-vs-shuffle choice AND the early stop
+        n_dist = dist.count()
+
+        def step(dist: DataFrame) -> DataFrame:
+            expanded = (
+                e.join(maybe_broadcast(dist, n_dist),
+                       e["src"] == dist["node"])
+                .select(F.col("dst").alias("node"),
+                        (F.col("dist") + 1).alias("dist"))
+            )
+            return (
+                dist.unionByName(expanded)
+                .groupBy("node")
+                .agg(F.min("dist").alias("dist"))
+            )
+
+        def reached_none(new: DataFrame, _old: DataFrame) -> bool:
+            nonlocal n_dist
+            n_old, n_dist = n_dist, new.count()
+            return n_dist == n_old
+
+        dist = fixpoint(dist, step, n_iter, reached_none)
+        keep(dist)
     return dist
 
 
@@ -338,7 +315,8 @@ def label_propagation(
     src: str = "src",
     dst: str = "dst",
 ) -> DataFrame:
-    """Fixed-round synchronous label propagation → (node, community).
+    """Synchronous label propagation, at most ``n_iter`` rounds →
+    (node, community).
 
     Initialization: every node is its own label. Each round, a node
     adopts the most frequent label among its in-neighbors' *previous*
@@ -351,64 +329,69 @@ def label_propagation(
     the left join.
 
     Scale shape per round: labels ⋈ edges on src (hash join, the edge
-    side persisted once), groupBy (dst, label) with map-side partial
-    counts, then a per-node argmax via min(struct(-cnt, label)) — a
-    hash-agg with map-side partials, never a sort or a global window.
-    State shuffled per round is (node, label) only.
-    Fixed iteration budget keeps it oracle-portable (the SQL mirror
-    chains one CTE per round).
+    side cut once), groupBy (dst, label) with map-side partial counts,
+    then a per-node argmax via min(struct(-cnt, label)) — a hash-agg with
+    map-side partials, never a sort or a global window. State shuffled
+    per round is (node, label) only. A synchronous round is a pure
+    function of the previous labels, so a round that changes no label
+    repeats forever: each round carries a ``_chg`` flag into its cut and
+    the loop stops on the first unchanged round — the result equals the
+    full ``n_iter`` budget's, which the SQL mirror chains one CTE per
+    round.
     """
-    from waka_spark.plans.iterate import TrackedCheckpoints
-
-    ck = TrackedCheckpoints(edges.sparkSession)
-    # EAGER e: the nodes union scans it twice in one job (race — see
-    # random_walks / pagerank)
-    e = ck.checkpoint(
-        _floor_edges(edges, src).select(
-        F.col(src).alias("src"), F.col(dst).alias("dst")))
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()
-    )
-
-    labels = ck.checkpoint(nodes.withColumn("community", F.col("node")))
-    # node count (cheap — labels just materialized) drives the broadcast-
-    # vs-shuffle choice for every round's state join (_maybe_broadcast)
-    n = labels.count()
-    for _ in range(n_iter):
-        # per-node argmax as min(struct(-cnt, community)) instead of a
-        # row_number window (round 6): struct ordering is field-wise, so
-        # the min picks (largest cnt, then smallest community) — the same
-        # row the (cnt desc, community asc) window rank 1 picked — but a
-        # hash-agg does map-side partials and never sorts the per-node
-        # candidate lists the window had to materialize.
-        neigh = (
-            e.join(_maybe_broadcast(labels, n), e["src"] == labels["node"])
-            .groupBy(F.col("dst").alias("node"), "community")
-            .agg(F.count("*").alias("cnt"))
-            .groupBy("node")
-            .agg(F.min(F.struct(
-                (-F.col("cnt")).alias("_neg"),
-                F.col("community").alias("community"),
-            )).alias("_top"))
-            .select("node", F.col("_top.community").alias("community"))
+    with pin_scope():
+        # EAGER e: the nodes union scans it twice in one job (race — see
+        # random_walks / pagerank)
+        e = cut(
+            parallel_floor(edges, src).select(
+                F.col(src).alias("src"), F.col(dst).alias("dst")))
+        labels = cut(
+            e.select(F.col("src").alias("node"))
+            .unionByName(e.select(F.col("dst").alias("node")))
+            .distinct()
+            .withColumn("community", F.col("node"))
         )
-        new_labels = ck.checkpoint(
-            labels.join(_maybe_broadcast(
-                neigh.withColumnRenamed("community", "_new"), n),
-                "node", "left")
-            .select(
-                "node",
-                F.coalesce("_new", "community").alias("community"),
+        # node count (cheap — labels just materialized) drives the
+        # broadcast-vs-shuffle choice for every round's state join
+        n = labels.count()
+
+        def step(state: DataFrame) -> DataFrame:
+            labels = state.select("node", "community")
+            # per-node argmax as min(struct(-cnt, community)) instead of a
+            # row_number window: struct ordering is field-wise, so the min
+            # picks (largest cnt, then smallest community) — the same row
+            # the (cnt desc, community asc) window rank 1 picked — but a
+            # hash-agg does map-side partials and never sorts the per-node
+            # candidate lists the window had to materialize. Precondition:
+            # neither key is NULL (cnt is a count; community is a joined,
+            # hence non-NULL, node id) — min sorts a NULL field first.
+            neigh = (
+                e.join(maybe_broadcast(labels, n),
+                       e["src"] == labels["node"])
+                .groupBy(F.col("dst").alias("node"), "community")
+                .agg(F.count("*").alias("cnt"))
+                .groupBy("node")
+                .agg(F.min(F.struct(
+                    (-F.col("cnt")).alias("_neg"),
+                    F.col("community").alias("community"),
+                )).alias("_top"))
+                .select("node", F.col("_top.community").alias("_new"))
             )
-        )
-        ck.release(labels)
-        labels = new_labels
-    ck.release_all_except(labels)
-    nodes.unpersist(False)
-    return labels
+            new = F.coalesce("_new", "community")
+            return (
+                labels.join(maybe_broadcast(neigh, n), "node", "left")
+                .select(
+                    "node",
+                    new.alias("community"),
+                    (new != F.col("community")).alias("_chg"),
+                )
+            )
+
+        labels = fixpoint(
+            labels, step, n_iter,
+            lambda new, _old: new.filter(F.col("_chg")).limit(1).count() == 0)
+        keep(labels)
+    return labels.select("node", "community")
 
 
 def k_core(
@@ -418,84 +401,74 @@ def k_core(
     src: str = "src",
     dst: str = "dst",
 ) -> DataFrame:
-    """Nodes surviving ``n_iter`` rounds of k-core peeling → (node, degree).
+    """Nodes surviving at most ``n_iter`` rounds of k-core peeling →
+    (node, degree).
 
     Classic iterative peeling: drop every node whose degree (within the
-    surviving subgraph) is < k, recompute degrees, repeat. A fixed round
-    budget keeps it deterministic and oracle-portable; peeling converges
-    monotonically (the survivor set only shrinks), so ``n_iter`` rounds
-    give the exact k-core whenever convergence happens earlier, and a
-    documented over-approximation otherwise (callers bump ``n_iter``).
-    Degrees are over the symmetrized edge list (out-degree == degree).
+    surviving subgraph) is < k, recompute degrees, repeat. Peeling is
+    monotone (the survivor set only shrinks), so an unchanged survivor
+    COUNT means an unchanged set and every later round is the identity:
+    the loop stops there with the exact k-core. A round budget that runs
+    out first gives a documented over-approximation (callers bump
+    ``n_iter``); the fixed budget keeps it deterministic and
+    oracle-portable. Degrees are over the symmetrized edge list
+    (out-degree == degree).
 
     Scale shape per round: one semi-join of edges against survivors per
     endpoint (hash joins on the node key) + one count agg — survivor
-    state is (node) only; ``localCheckpoint`` cuts lineage each round.
+    state is (node) only, run by ``plans/iterate.fixpoint``.
     """
-    from waka_spark.plans.iterate import TrackedCheckpoints
+    with pin_scope():
+        e = pin(parallel_floor(edges, src).select(
+            F.col(src).alias("src"), F.col(dst).alias("dst")))
 
-    ck = TrackedCheckpoints(edges.sparkSession)
-    e = _floor_edges(edges, src).select(
-        F.col(src).alias("src"), F.col(dst).alias("dst")).persist()
-    alive = ck.checkpoint(e.select(F.col("src").alias("node")).distinct())
-    deg = None
-    prev_alive = None
-    for _ in range(n_iter):
+        def live_edges(alive: DataFrame, n_alive: int) -> DataFrame:
+            # broadcast the survivor set into both semi joins when it fits
+            # instead of shuffling the edge table twice
+            return (
+                e.join(maybe_broadcast(
+                    alive.withColumnRenamed("node", "src"), n_alive),
+                    "src", "left_semi")
+                .join(maybe_broadcast(
+                    alive.withColumnRenamed("node", "dst"), n_alive),
+                    "dst", "left_semi")
+            )
+
+        alive = cut(e.select(F.col("src").alias("node")).distinct())
         # per-round count is exact and near-free (alive is materialized);
-        # broadcast the survivor set into both semi joins when it fits
-        # (_maybe_broadcast) instead of shuffling the edge table twice
+        # it drives the broadcast choice AND the early stop
         n_alive = alive.count()
-        live_edges = (
-            e.join(_maybe_broadcast(
-                alive.withColumnRenamed("node", "src"), n_alive),
-                "src", "left_semi")
-            .join(_maybe_broadcast(
-                alive.withColumnRenamed("node", "dst"), n_alive),
-                "dst", "left_semi")
-        )
-        deg = (
-            live_edges.groupBy(F.col("src").alias("node"))
+
+        def step(alive: DataFrame) -> DataFrame:
+            return (
+                live_edges(alive, n_alive)
+                .groupBy(F.col("src").alias("node"))
+                .agg(F.count("*").cast("long").alias("degree"))
+                .filter(F.col("degree") >= k)
+                .select("node")
+            )
+
+        def peeled_none(new: DataFrame, _old: DataFrame) -> bool:
+            nonlocal n_alive
+            n_old, n_alive = n_alive, new.count()
+            return n_alive == n_old
+
+        alive = fixpoint(alive, step, n_iter, peeled_none)
+        # degrees RECOMPUTED over the FINAL survivor set: the last round's
+        # degrees were measured against the set entering that round, so on
+        # non-converged runs they included neighbors that round peeled.
+        # Left-joined onto the survivor set: on non-converged runs a
+        # survivor whose last-round neighbors were all peeled has zero
+        # surviving edges and is reported with degree 0, not dropped.
+        final_deg = (
+            live_edges(alive, n_alive).groupBy(F.col("src").alias("node"))
             .agg(F.count("*").cast("long").alias("degree"))
-            .filter(F.col("degree") >= k)
         )
-        new_alive = ck.checkpoint(deg.select("node"))
-        # release lags ONE round: the lazy `deg` kept for the final
-        # re-evaluation below still reads this round's INPUT survivor set,
-        # so only the round-before-last's alive is provably dead here
-        if prev_alive is not None:
-            ck.release(prev_alive)
-        prev_alive, alive = alive, new_alive
-    # degrees RECOMPUTED over the FINAL survivor set (round-3 fix): the
-    # last round's `deg` measured degrees against the set entering that
-    # round, so on non-converged runs the reported counts included
-    # neighbors that round peeled — wrong even within the returned
-    # subgraph. Same final-recompute discipline as k_truss's support.
-    # Converged runs are unchanged (nothing peeled ⇒ same degrees).
-    n_alive = alive.count()
-    final_edges = (
-        e.join(_maybe_broadcast(
-            alive.withColumnRenamed("node", "src"), n_alive),
-            "src", "left_semi")
-        .join(_maybe_broadcast(
-            alive.withColumnRenamed("node", "dst"), n_alive),
-            "dst", "left_semi")
-    )
-    # left-join the recomputed degrees onto the survivor set (round-4,
-    # ADVICE): on NON-converged runs a survivor whose last-round
-    # neighbors were all peeled has zero surviving edges — a groupBy
-    # over final_edges alone silently dropped it from the output, i.e.
-    # the survivor set shrank beyond the documented semantics. Every
-    # surviving node is reported, zero-degree ones with degree 0.
-    final_deg = (
-        final_edges.groupBy(F.col("src").alias("node"))
-        .agg(F.count("*").cast("long").alias("degree"))
-    )
-    result = ck.checkpoint(
-        alive.join(final_deg, "node", "left").select(
-            "node", F.coalesce("degree", F.lit(0)).alias("degree"))
-    )
-    ck.release_all_except(result)
-    e.unpersist(False)
+        result = cut(
+            alive.join(final_deg, "node", "left").select(
+                "node", F.coalesce("degree", F.lit(0)).alias("degree"))
+        )
+        keep(result)
     return result
 
 
@@ -526,13 +499,11 @@ def common_neighbors(
     ``min_common`` prunes the long tail of 1-wedge pairs before the
     anti-join.
     """
-    from waka_spark.plans.iterate import TrackedCheckpoints
-
     # EAGER: e feeds the wedge self-join's two sides plus the adjacency
     # anti-join — sibling branches of one action (lazy-persist race, see
     # random_walks)
-    e = TrackedCheckpoints(edges.sparkSession).checkpoint(
-        _floor_edges(edges, src).select(
+    e = cut(
+        parallel_floor(edges, src).select(
         F.col(src).alias("src"), F.col(dst).alias("dst"))
         .filter(F.col("src") != F.col("dst"))
         .distinct()
@@ -569,7 +540,7 @@ def common_neighbors(
 
 def _oriented_intersections(
     edges: DataFrame, src: str, dst: str,
-    ck=None, assume_canonical: bool = False,
+    assume_canonical: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """Shared degree-ordered triangle enumeration (Suri & Vassilvitskii,
     "Counting Triangles and the Curse of the Last Reducer", WWW'11):
@@ -595,13 +566,10 @@ def _oriented_intersections(
     ``_w`` is the (possibly empty) array of triangle-closing third
     corners.
 
-    ``ck``: pass a caller-owned :class:`TrackedCheckpoints` so the
-    internal eager checkpoints register with IT — an iterative caller
-    (k_truss) then releases them once its per-round result materializes,
-    instead of leaking ~an edge-table copy per round into a discarded
-    tracker until session end. With the default (own tracker), a one-shot
-    caller's internals live until the session drops them — the same
-    lifetime its own result has.
+    The internal cuts register with the caller's scope (plans/pins.py):
+    an iterative caller (k_truss) opens one scope per round and so frees
+    them once the round's result materializes; a one-shot caller's
+    internals live as long as its own result does.
 
     ``assume_canonical``: skip the least/greatest + self-loop + distinct
     canonicalization (and its checkpoint) when the input is ALREADY a
@@ -609,20 +577,16 @@ def _oriented_intersections(
     its checkpointed round state every round, and re-canonicalizing it
     paid a provably redundant edge-wide dedup shuffle per round.
     """
-    from waka_spark.plans.iterate import TrackedCheckpoints
-
     # EAGER checkpoints: canon feeds the degree union (2 branches) and the
     # join; oriented feeds e1/e2/closing (3 branches) — all siblings of
     # ONE action, which with a lazy persist race to populate the cold
     # cache and recompute the upstream edge build per branch (see
     # random_walks)
-    if ck is None:
-        ck = TrackedCheckpoints(edges.sparkSession)
     if assume_canonical:
         canon = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     else:
-        canon = ck.checkpoint(
-            _floor_edges(edges, src).select(
+        canon = cut(
+            parallel_floor(edges, src).select(
                 F.least(F.col(src), F.col(dst)).alias("a"),
                 F.greatest(F.col(src), F.col(dst)).alias("b"),
             )
@@ -634,7 +598,7 @@ def _oriented_intersections(
     # with unknown ExistingRDD stats the planner otherwise sort-merges,
     # shuffling AND sorting the full edge list twice per enumeration
     # (k_truss pays that per round) (round 6)
-    deg = ck.checkpoint(
+    deg = cut(
         canon.select(F.col("a").alias("node"))
         .unionByName(canon.select(F.col("b").alias("node")))
         .groupBy("node")
@@ -642,10 +606,10 @@ def _oriented_intersections(
     )
     n_deg = deg.count()
     with_deg = (
-        canon.join(_maybe_broadcast(
+        canon.join(maybe_broadcast(
             deg.withColumnRenamed("node", "a")
             .withColumnRenamed("deg", "da"), n_deg), "a")
-        .join(_maybe_broadcast(
+        .join(maybe_broadcast(
             deg.withColumnRenamed("node", "b")
             .withColumnRenamed("deg", "db"), n_deg), "b")
     )
@@ -674,7 +638,7 @@ def _oriented_intersections(
     )
     if canon.rdd.getNumPartitions() < sc.defaultParallelism:
         pre = pre.repartition(2 * sc.defaultParallelism, "u")
-    oriented = ck.checkpoint(pre)
+    oriented = cut(pre)
     # Close triangles by adjacency-array intersection instead of a wedge
     # self-join (round 6): the wedge formulation materialized every
     # ordered out-neighbor pair through an exchange — O(Σ d_out²) rows,
@@ -699,8 +663,8 @@ def _oriented_intersections(
     adj_u = adj.select(F.col("u"), F.col("_nbrs").alias("_nu"))
     adj_v = adj.select(F.col("u").alias("v"), F.col("_nbrs").alias("_nv"))
     closed = (
-        oriented.join(_maybe_broadcast(adj_u, adj_rows), "u")
-        .join(_maybe_broadcast(adj_v, adj_rows), "v")
+        oriented.join(maybe_broadcast(adj_u, adj_rows), "u")
+        .join(maybe_broadcast(adj_v, adj_rows), "v")
         .select("u", "v", F.array_intersect("_nu", "_nv").alias("_w"))
     )
     return deg, closed
@@ -708,7 +672,7 @@ def _oriented_intersections(
 
 def _oriented_triangles(
     edges: DataFrame, src: str, dst: str,
-    ck=None, assume_canonical: bool = False,
+    assume_canonical: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """(deg, triangles): one (u, x, y) row per triangle — apex u, out-
     neighbors x before y in the (deg, id) order. Thin explode over
@@ -718,7 +682,7 @@ def _oriented_triangles(
     a non-materialized triangle list out to several union branches
     re-runs the whole intersection pass once per branch."""
     deg, closed = _oriented_intersections(
-        edges, src, dst, ck=ck, assume_canonical=assume_canonical)
+        edges, src, dst, assume_canonical=assume_canonical)
     triangles = closed.select(
         "u", F.col("v").alias("x"), F.explode("_w").alias("y"))
     return deg, triangles
@@ -822,13 +786,10 @@ def random_walks(
 
     Output: (walk_id, step, node) — step 0 is the start node itself.
     """
-    from waka_spark.plans.iterate import TrackedCheckpoints
-
-    ck = TrackedCheckpoints(edges.sparkSession)
-    e = ck.checkpoint(
-        _floor_edges(edges, src).select(
+    e = cut(
+        parallel_floor(edges, src).select(
         F.col(src).alias("src"), F.col(dst).alias("dst")))
-    frontier = ck.checkpoint(
+    frontier = cut(
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
         .distinct()
@@ -836,7 +797,7 @@ def random_walks(
     )
     # walk count, exact and cheap (frontier just materialized): the
     # frontier only shrinks (sink walks end), so one count bounds every
-    # step's broadcast decision (_maybe_broadcast — without it the
+    # step's broadcast decision (maybe_broadcast — without it the
     # planner sort-merges, re-shuffling and re-sorting the full edge
     # table once per step)
     n_walks = frontier.count()
@@ -844,7 +805,7 @@ def random_walks(
         "walk_id", F.lit(0).alias("step"), F.col("cur").alias("node"))
     for s in range(1, length + 1):
         hop = (
-            _maybe_broadcast(frontier, n_walks)
+            maybe_broadcast(frontier, n_walks)
             .join(e, frontier["cur"] == e["src"])
             .select(
                 "walk_id",
@@ -854,10 +815,11 @@ def random_walks(
                 )).alias("_h"),
             )
             .groupBy("walk_id")
+            # min sorts a NULL field first: _h is an md5, never NULL
             .agg(F.min(F.struct(F.col("_h"), F.col("dst"))).alias("_m"))
             .select("walk_id", F.col("_m.dst").alias("cur"))
         )
-        frontier = ck.checkpoint(hop)
+        frontier = cut(hop)
         out = out.unionByName(frontier.select(
             "walk_id", F.lit(s).alias("step"), F.col("cur").alias("node")))
     return out
@@ -887,11 +849,9 @@ def cooccurrence_pmi(
 
     Output: (item_a, item_b, n_ab, pmi), pairs with n_ab ≥ ``min_pairs``.
     """
-    from waka_spark.plans.iterate import TrackedCheckpoints
-
     # EAGER: occ feeds n_groups, marginals, and both pair-join sides —
     # sibling branches of one action (lazy-persist race, see random_walks)
-    occ = TrackedCheckpoints(occurrences.sparkSession).checkpoint(
+    occ = cut(
         occurrences.select(
             F.col(group_col).alias("grp"), F.col(item_col).alias("item"))
         .distinct()
@@ -963,27 +923,24 @@ def modularity(
     a pruned/partial assignment.
 
     """
-    from waka_spark.plans.iterate import TrackedCheckpoints
-
-    ck = TrackedCheckpoints(edges.sparkSession)
-    e = _floor_edges(edges, src).select(
+    e = parallel_floor(edges, src).select(
         F.col(src).alias("src"), F.col(dst).alias("dst"))
     # labels usually arrive as label_propagation's checkpointed output —
     # unknown stats, so the two attach joins would sort-merge (and
     # re-shuffle) the edge table. The label table is node-sized:
     # materialize it once, count it (near-free), broadcast when it fits
-    # (round 6, _maybe_broadcast).
-    lab = ck.checkpoint(labels.select(
+    # (round 6, maybe_broadcast).
+    lab = cut(labels.select(
         F.col(node_col).alias("_n"), F.col(community_col).alias("_c")))
     n_lab = lab.count()
-    la = _maybe_broadcast(lab.select(
+    la = maybe_broadcast(lab.select(
         F.col("_n").alias("src"), F.col("_c").alias("_ca")), n_lab)
-    lb = _maybe_broadcast(lab.select(
+    lb = maybe_broadcast(lab.select(
         F.col("_n").alias("dst"), F.col("_c").alias("_cb")), n_lab)
 
     # EAGER: tagged feeds deg / within / m — three sibling branches of one
     # action (lazy-persist race, see random_walks)
-    tagged = ck.checkpoint(
+    tagged = cut(
         e.join(la, "src").join(lb, "dst"))
 
     deg = tagged.groupBy("_ca").agg(F.count("*").alias("d_c"))
@@ -1038,12 +995,10 @@ def adamic_adar(
     Output: (node_a, node_b, n_common, aa_score), node_a < node_b,
     pairs with ≥ ``min_common`` shared neighbors, score rounded 6.
     """
-    from waka_spark.plans.iterate import TrackedCheckpoints
-
     # EAGER: e feeds wedge sides, the degree agg, and the adjacency
     # anti-join — sibling branches of one action (see random_walks)
-    e = TrackedCheckpoints(edges.sparkSession).checkpoint(
-        _floor_edges(edges, src).select(
+    e = cut(
+        parallel_floor(edges, src).select(
         F.col(src).alias("src"), F.col(dst).alias("dst"))
         .filter(F.col("src") != F.col("dst"))
         .distinct()
@@ -1100,79 +1055,76 @@ def personalized_pagerank(
     convergence from the restart distribution.
 
     Scale shape per round: identical to :func:`pagerank` — one
-    co-partitioned join + one hash agg over (node, rank) pairs, eager
-    round checkpoints with release (plans/iterate.py); the seed vector is
-    one extra (node, s) column carried on the persisted nodes frame. The
+    co-partitioned join + one hash agg over (node, rank) pairs, run by
+    ``plans/iterate.fixpoint``; the seed vector is one extra (node, s)
+    column carried on the pinned nodes frame. The
     seed count is a single O(1) driver action.
 
     Output: (node, rank).
     """
-    from waka_spark.plans.iterate import TrackedCheckpoints
-
-    ck = TrackedCheckpoints(edges.sparkSession)
     w_expr = (
         F.lit(1.0) if weight_col is None
         else F.col(weight_col).cast("double")
     )
-    e = ck.checkpoint(
-        _floor_edges(edges, src).select(
-            F.col(src).alias("src"), F.col(dst).alias("dst"),
-            w_expr.alias("_w")))
-    deg = e.groupBy("src").agg(
-        F.count("*").cast("double").alias("outdeg")
-        if weight_col is None else F.sum("_w").alias("outdeg"))
-    out_edges = e.join(deg, "src").persist()
+    with pin_scope():
+        e = cut(
+            parallel_floor(edges, src).select(
+                F.col(src).alias("src"), F.col(dst).alias("dst"),
+                w_expr.alias("_w")))
+        deg = e.groupBy("src").agg(
+            F.count("*").cast("double").alias("outdeg")
+            if weight_col is None else F.sum("_w").alias("outdeg"))
+        out_edges = pin(e.join(deg, "src"))
 
-    all_nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    seed_nodes = all_nodes.join(
-        seeds.select(F.col(seed_col).alias("node")), "node", "left_semi"
-    ).persist()
-    n_s = seed_nodes.count()
-    if n_s == 0:
-        raise ValueError("personalized_pagerank: no seed is a graph node")
-    nodes = (
-        all_nodes.join(
-            seed_nodes.withColumn("_sv", F.lit(1.0 / n_s)), "node", "left")
-        .select("node", F.coalesce("_sv", F.lit(0.0)).alias("_sv"))
-        .persist()
-    )
+        all_nodes = (
+            e.select(F.col("src").alias("node"))
+            .unionByName(e.select(F.col("dst").alias("node")))
+            .distinct()
+        )
+        seed_nodes = pin(all_nodes.join(
+            seeds.select(F.col(seed_col).alias("node")), "node", "left_semi"
+        ))
+        n_s = seed_nodes.count()
+        if n_s == 0:
+            raise ValueError("personalized_pagerank: no seed is a graph node")
+        nodes = pin(
+            all_nodes.join(
+                seed_nodes.withColumn("_sv", F.lit(1.0 / n_s)), "node", "left")
+            .select("node", F.coalesce("_sv", F.lit(0.0)).alias("_sv"))
+        )
 
-    ranks = ck.checkpoint(nodes.select("node", F.col("_sv").alias("rank")))
-    # exact node count (cheap — ranks is already materialized): drives
-    # the broadcast-vs-shuffle choice for every round's state join
-    n = ranks.count()
-    restart = F.lit(1.0 - damping) * F.col("_sv")
-    for _ in range(n_iter):
-        contribs = (
-            out_edges.join(
-                _maybe_broadcast(ranks, n),
-                out_edges["src"] == ranks["node"])
-            .select(
-                F.col("dst").alias("node"),
-                (F.col("rank") * F.col("_w") / F.col("outdeg")).alias("c"),
+        ranks = cut(nodes.select("node", F.col("_sv").alias("rank")))
+        # exact node count (cheap — ranks is already materialized): drives
+        # the broadcast-vs-shuffle choice for every round's state join
+        n = ranks.count()
+        restart = F.lit(1.0 - damping) * F.col("_sv")
+
+        def step(ranks: DataFrame) -> DataFrame:
+            contribs = (
+                out_edges.join(
+                    maybe_broadcast(ranks, n),
+                    out_edges["src"] == ranks["node"])
+                .select(
+                    F.col("dst").alias("node"),
+                    (F.col("rank") * F.col("_w") / F.col("outdeg"))
+                    .alias("c"),
+                )
+                .groupBy("node")
+                .agg(F.sum("c").alias("contrib"))
             )
-            .groupBy("node")
-            .agg(F.sum("c").alias("contrib"))
-        )
-        new_ranks = ck.checkpoint(
-            nodes.join(_maybe_broadcast(contribs, n), "node", "left")
-            .select(
-                "node",
-                (
-                    restart
-                    + F.lit(damping) * F.coalesce("contrib", F.lit(0.0))
-                ).alias("rank"),
+            return (
+                nodes.join(maybe_broadcast(contribs, n), "node", "left")
+                .select(
+                    "node",
+                    (
+                        restart
+                        + F.lit(damping) * F.coalesce("contrib", F.lit(0.0))
+                    ).alias("rank"),
+                )
             )
-        )
-        ck.release(ranks)
-        ranks = new_ranks
-    ck.release_all_except(ranks)
-    for helper in (out_edges, nodes, seed_nodes):
-        helper.unpersist(False)
+
+        ranks = fixpoint(ranks, step, n_iter)
+        keep(ranks)
     return ranks
 
 
@@ -1199,38 +1151,23 @@ def k_truss(
     degree), a 3-corner fan-out to per-edge support counts (one
     hash-agg), and an inner join + filter back onto the canonical edge
     list (edges in no triangle have support 0 and drop via the join).
-    Round state is the canonical edge list only, eagerly checkpointed
-    and released (plans/iterate.py).
+    Round state is the canonical edge list only, cut and released per
+    round (plans/pins.py); the result is one cut.
 
     Output: (node_a, node_b, support) for surviving edges, with support
     recomputed on the FINAL subgraph.
     """
-    from waka_spark.plans.iterate import TrackedCheckpoints
-
-    ck = TrackedCheckpoints(edges.sparkSession)
-    canon = ck.checkpoint(
-        _floor_edges(edges, src).select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-
-    def edge_support(e: DataFrame, sub=None) -> DataFrame:
-        # sub: per-round tracker — the enumeration's internal checkpoint
-        # registers there so the loop can free it once the round's
-        # support table is materialized (it leaked per-round before);
-        # assume_canonical: e is the checkpointed canonical round state,
+    def edge_support(e: DataFrame) -> DataFrame:
+        # assume_canonical: e is the cut canonical round state,
         # re-canonicalizing it was a redundant dedup shuffle per round.
-        # Support is summed in ONE pass over the intersection rows
-        # (round 6): each (u, v, W) row supports edge (u,v) |W| times and
-        # edges (u,w), (v,w) once per w ∈ W — a single built array +
-        # explode + sum, instead of a 3-way union over a non-materialized
-        # triangle list that re-ran the whole intersection pass per
-        # branch (no exchange to reuse under the array formulation).
+        # Support is summed in ONE pass over the intersection rows: each
+        # (u, v, W) row supports edge (u,v) |W| times and edges (u,w),
+        # (v,w) once per w ∈ W — a single built array + explode + sum,
+        # instead of a 3-way union over a non-materialized triangle list
+        # that re-ran the whole intersection pass per branch (no exchange
+        # to reuse under the array formulation).
         _, closed = _oriented_intersections(
-            e, "a", "b", ck=sub, assume_canonical=True)
+            e, "a", "b", assume_canonical=True)
         nt = F.size("_w").cast("long")
         corners = closed.select(F.explode(F.concat(
             F.array(F.struct(F.least("u", "v").alias("a"),
@@ -1248,46 +1185,49 @@ def k_truss(
         return corners.groupBy("a", "b").agg(
             F.sum("c").cast("long").alias("support"))
 
-    # Peeling joins LEFT with coalesce(support, 0) (round-3 fix): an edge
-    # in no triangle has support 0, which still satisfies k-2 <= 0 — the
-    # old inner join silently dropped triangle-free edges even for k <= 2.
-    # Each round's support table is checkpointed BEFORE the filter so a
-    # converged round (no edges dropped) can reuse it as the final
-    # support verbatim — skipping the last O(m^1.5) triangle enumeration
-    # entirely (support over an unchanged edge set is unchanged).
-    n_edges = canon.count()
-    converged_supp = None
-    for _ in range(n_iter):
-        sub = TrackedCheckpoints(edges.sparkSession)
-        supp = ck.checkpoint(edge_support(canon, sub))
-        sub.release_all_except()  # enumeration internals now dead
-        new_canon = ck.checkpoint(
-            canon.join(supp, ["a", "b"], "left")
-            .filter(F.coalesce(F.col("support"), F.lit(0)) >= k - 2)
-            .select("a", "b")
+    with pin_scope():
+        canon = cut(
+            parallel_floor(edges, src).select(
+                F.least(F.col(src), F.col(dst)).alias("a"),
+                F.greatest(F.col(src), F.col(dst)).alias("b"),
+            )
+            .filter(F.col("a") != F.col("b"))
+            .distinct()
         )
-        n_new = new_canon.count()
-        if n_new == n_edges:
-            ck.release(new_canon)
-            converged_supp = supp
-            break
-        ck.release(canon)
-        ck.release(supp)
-        canon = new_canon
-        n_edges = n_new
-
-    # non-converged: the final enumeration is consumed lazily by the
-    # returned frame, so its (single) internal checkpoint lives until
-    # the caller's action completes — one frame, not one per round
-    final_supp = (
-        converged_supp if converged_supp is not None
-        else edge_support(canon, ck)
-    )
-    final = canon.join(final_supp, ["a", "b"], "left").select(
-        F.col("a").alias("node_a"), F.col("b").alias("node_b"),
-        F.coalesce("support", F.lit(0)).cast("long").alias("support"),
-    )
-    return final
+        # Peeling joins LEFT with coalesce(support, 0): an edge in no
+        # triangle has support 0, which still satisfies k-2 <= 0 — an
+        # inner join would drop triangle-free edges even for k <= 2.
+        # Each round's support table is cut BEFORE the filter so a
+        # converged round (no edges dropped) can reuse it as the final
+        # support verbatim — skipping the last O(m^1.5) triangle
+        # enumeration entirely (support over an unchanged edge set is
+        # unchanged).
+        n_edges = canon.count()
+        supp = None
+        for _ in range(n_iter):
+            with pin_scope():  # the enumeration's internal cuts die here
+                round_supp = cut(edge_support(canon))
+                keep(round_supp)
+            new_canon = cut(
+                canon.join(round_supp, ["a", "b"], "left")
+                .filter(F.coalesce(F.col("support"), F.lit(0)) >= k - 2)
+                .select("a", "b")
+            )
+            n_new = new_canon.count()
+            if n_new == n_edges:
+                supp = round_supp
+                break
+            release(canon)
+            release(round_supp)
+            canon, n_edges = new_canon, n_new
+        if supp is None:
+            supp = edge_support(canon)
+        result = cut(canon.join(supp, ["a", "b"], "left").select(
+            F.col("a").alias("node_a"), F.col("b").alias("node_b"),
+            F.coalesce("support", F.lit(0)).cast("long").alias("support"),
+        ))
+        keep(result)
+    return result
 
 
 def extract_subgraph(
@@ -1315,7 +1255,7 @@ def extract_subgraph(
     """
     dist = bfs_distances(edges, seeds, n_iter=n_hops, src=src, dst=dst,
                          node=node)
-    e = _floor_edges(edges, src).select(
+    e = parallel_floor(edges, src).select(
         F.col(src).alias("src"), F.col(dst).alias("dst"))
     return (
         e.join(
@@ -1346,7 +1286,7 @@ def degree_distribution(
     floor(log2(degree)) and min_degree = 2^bin.
     """
     canon = (
-        _floor_edges(edges, src).select(
+        parallel_floor(edges, src).select(
             F.least(F.col(src), F.col(dst)).alias("a"),
             F.greatest(F.col(src), F.col(dst)).alias("b"),
         )
@@ -1395,7 +1335,7 @@ def degree_assortativity(
     either side is 0 (regular graphs — correlation undefined).
     """
     canon = (
-        _floor_edges(edges, src).select(
+        parallel_floor(edges, src).select(
             F.least(F.col(src), F.col(dst)).alias("a"),
             F.greatest(F.col(src), F.col(dst)).alias("b"),
         )
@@ -1474,7 +1414,7 @@ def reciprocity(
     Output: one row (n_edges, n_reciprocal, reciprocity).
     """
     e = (
-        _floor_edges(edges, src).select(
+        parallel_floor(edges, src).select(
         F.col(src).alias("src"), F.col(dst).alias("dst"))
         .filter(F.col("src") != F.col("dst"))
         .distinct()

@@ -238,12 +238,12 @@ def bigram_logprob(
             ),
         ),
     ).otherwise(F.lit(None).cast(pair_t))
-    from waka_spark.plans.iterate import TrackedCheckpoints
+    from waka_spark.plans.pins import cut
 
     # EAGER (not lazy persist): doc_bg feeds the model agg AND the scoring
     # join — sibling branches of one action would race to populate a cold
     # cache and each replay the explode+agg (see graph.random_walks)
-    doc_bg = TrackedCheckpoints(df.sparkSession).checkpoint(
+    doc_bg = cut(
         df.select(F.col(id_col).alias("doc_id"), F.explode(pairs).alias("p"))
         .groupBy("doc_id", F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
         .agg(F.count("*").alias("n"))
@@ -418,6 +418,7 @@ def winnowing_fingerprints(
         tagged.select(
             "doc_id", "pos", "fp_hash", F.explode(starts).alias("_w"))
         .groupBy("doc_id", "_w")
+        # min sorts a NULL field first: fp_hash is an md5 prefix, never NULL
         .agg(F.min(F.struct(
             F.col("fp_hash"), (-F.col("pos")).alias("_negpos"))).alias("_m"))
         .select(
@@ -523,12 +524,12 @@ def slice_kl_divergence(
         ).cast("int").alias("bucket"),
     ).groupBy("slice", "bucket").agg(
         F.count("*").cast("long").alias("c_sb"))
-    from waka_spark.plans.iterate import TrackedCheckpoints
+    from waka_spark.plans.pins import cut
 
     # EAGER: sb feeds the corpus marginal and the per-slice fold —
     # sibling branches of one action (lazy-persist race, see
     # graph.random_walks)
-    sb = TrackedCheckpoints(df.sparkSession).checkpoint(sb)
+    sb = cut(sb)
 
     corpus = sb.groupBy("bucket").agg(F.sum("c_sb").alias("c_b"))
     n_total = corpus.agg(F.sum("c_b").alias("n_corpus"))

@@ -451,10 +451,9 @@ def conv_near_dups(
     # the corpus): the consumers are sibling branches of ONE action, and a
     # lazy persist makes them race to populate the cold cache, each
     # replaying the corpus scan + md5 pass (see graph.random_walks).
-    from waka_spark.plans.iterate import TrackedCheckpoints
+    from waka_spark.plans.pins import cut
 
-    ck = TrackedCheckpoints(transcripts.sparkSession)
-    turns = ck.checkpoint(
+    turns = cut(
         transcripts.select(
             F.col(conv_col).alias("conv_id"),
             F.concat(
@@ -463,7 +462,7 @@ def conv_near_dups(
         )
         .distinct()
     )
-    sizes_and_sigs = ck.checkpoint(turns.groupBy("conv_id").agg(
+    sizes_and_sigs = cut(turns.groupBy("conv_id").agg(
         F.count("*").cast("long").alias("n_turns"),
         *[
             F.min(F.substring("_hex", b * 8 + 1, 8)).alias(f"_s{b}")

@@ -1,89 +1,47 @@
-"""Round-state hygiene for iterative DataFrame algorithms.
+"""The round loop every iterative DataFrame pass in the engine runs:
+PageRank, HITS, personalized PageRank, BFS, label propagation, k-core
+peeling and union-find canonicalization.
 
-Every iterative pass in this engine (union-find canonicalization,
-PageRank, label propagation, k-core peeling, BFS) follows the same
-discipline: eagerly ``localCheckpoint`` each round's state so round t+1's
-plan does not replay rounds 1..t (Catalyst re-analysis of a deep plan
-measurably dominates small-round runtime — plans/pipeline.py).
-
-The checkpoint blocks, however, live in executor storage until the
-session ends: Spark offers no public DataFrame API to drop a
-localCheckpoint, so a 25-round run over a 10^9-node label table keeps 25
-full copies of that table cached. On a 10^12-turn production job that is
-the difference between "storage memory holds two rounds" and "storage
-memory evicts the shuffle/broadcast blocks the rest of the pipeline
-needs". GraphFrames' connected components unpersists superseded
+Each round's state is cut (``plans/pins.cut``: an eager
+``localCheckpoint``) so round t+1's plan does not replay rounds 1..t, and
+the superseded round is released as soon as it is provably dead, so
+executor storage holds two rounds of state, never ``n_iter`` (25 rounds
+over a 10^9-node label table would otherwise evict the rest of the job's
+cached state). GraphFrames' connected components unpersists superseded
 iterations for the same reason (org.graphframes.lib.ConnectedComponents).
 
-:class:`TrackedCheckpoints` closes the gap: ``checkpoint(df)`` wraps
-``df.localCheckpoint(eager=True)`` and records which persistent-RDD ids
-the call created (the eager checkpoint is the only job running on this
-session thread, so an id diff around it is exact); ``release(df)``
-unpersists those blocks.
-
-THE INVARIANT: ``release`` destroys the frame — a locally-checkpointed
-RDD's lineage is truncated, so after unpersist the data is neither
-present nor recomputable (Spark logs exactly this warning). Only release
-round state that is provably dead: the previous round's labels after the
-new round is materialized AND any convergence check against the old
-frame has run. Never release the frame you return to the caller.
+Early stops must be exact: pass ``converged`` only where a round whose
+test passes provably repeats forever (a synchronous round that changed
+nothing, a monotone set whose size did not move). Fixed-budget passes
+(PageRank, HITS, PPR) leave it out, and their SQL mirrors chain one CTE
+per round.
 """
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import DataFrame
 
+from waka_spark.plans.pins import cut, release
 
-class TrackedCheckpoints:
-    """Eager localCheckpoints whose storage can be released per-frame.
 
-    Usage (the canonical round loop)::
+def fixpoint(
+    state: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    n_iter: int,
+    converged: Callable[[DataFrame, DataFrame], bool] | None = None,
+) -> DataFrame:
+    """Run up to ``n_iter`` rounds of ``state = cut(step(state))``.
 
-        ck = TrackedCheckpoints(edges.sparkSession)
-        state = ck.checkpoint(initial_plan)
-        for _ in range(max_iter):
-            new_state = ck.checkpoint(step(state))
-            done = converged(new_state, state)   # old frame still alive
-            ck.release(state)                    # now provably dead
-            state = new_state
-            if done:
-                break
-        ck.release_all_except(state)             # drop helper frames
-        return state                             # caller owns this one
-    """
-
-    def __init__(self, spark) -> None:
-        self._jsc = spark.sparkContext._jsc
-        # id(frame) -> persistent RDD ids backing its checkpoint
-        self._rdds: dict[int, list[int]] = {}
-
-    def _persistent_ids(self) -> set[int]:
-        return set(self._jsc.getPersistentRDDs().keySet().toArray())
-
-    def checkpoint(self, df: DataFrame) -> DataFrame:
-        before = self._persistent_ids()
-        ck = df.localCheckpoint(eager=True)
-        self._rdds[id(ck)] = sorted(self._persistent_ids() - before)
-        return ck
-
-    def release(self, df: DataFrame) -> None:
-        """Drop the checkpoint blocks behind ``df``. The frame must be
-        dead (see module invariant) — its data cannot be recomputed."""
-        jmap = self._jsc.getPersistentRDDs()
-        for rid in self._rdds.pop(id(df), []):
-            rdd = jmap.get(rid)
-            if rdd is not None:
-                rdd.unpersist(False)
-
-    def release_all_except(self, *keep: DataFrame) -> None:
-        """Release every tracked checkpoint except the given frames —
-        the end-of-loop cleanup for helper frames (symmetrized edges,
-        degree tables) that the returned, checkpointed result no longer
-        references."""
-        keep_ids = {id(df) for df in keep}
-        for fid in [f for f in self._rdds if f not in keep_ids]:
-            jmap = self._jsc.getPersistentRDDs()
-            for rid in self._rdds.pop(fid):
-                rdd = jmap.get(rid)
-                if rdd is not None:
-                    rdd.unpersist(False)
+    ``state`` must be a cut. ``converged(new, old)`` runs while ``old`` is
+    still alive; ``old`` is then released, and the loop stops once the test
+    passes. Returns the last round's cut, owned by the caller's scope."""
+    for _ in range(n_iter):
+        new = cut(step(state))
+        done = converged is not None and converged(new, state)
+        release(state)
+        state = new
+        if done:
+            break
+    return state

@@ -38,16 +38,24 @@ def maybe_broadcast(df: DataFrame, n_rows: int | None,
 
 def parallel_floor(df: DataFrame, key_col: str) -> DataFrame:
     """Repartition ``df`` to 2× cores hashed on ``key_col`` iff its
-    optimizer size estimate is below cores × 128 MB; identity otherwise."""
+    optimizer size estimate is below cores × 128 MB; identity otherwise.
+    When the estimate is unknown or the probe fails, the concrete
+    partition count decides instead (below). Every graph operator applies
+    this at edge ingest: a shared similarity-graph parquet of one ~36 MB
+    file scans as ONE partition, and every per-edge pass would then run on
+    a single core."""
     sc = df.sparkSession.sparkContext
     floor = 2 * sc.defaultParallelism
     try:
-        size_bytes = int(
-            df._jdf.queryExecution().optimizedPlan().stats()
-            .sizeInBytes().toString()
-        )
-    except Exception:  # stats unavailable -> assume small (safe default)
-        size_bytes = 0
+        # sizeInBytes is a Scala BigInt: py4j hands it over as a Python
+        # int (no .toString()); str() also accepts a JavaObject
+        size_bytes = int(str(
+            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        ))
+    except Exception:
+        # stats unavailable: decide as for unknown stats below — assuming
+        # "small" would shuffle an input of any size
+        size_bytes = 1 << 62
     if size_bytes >= sc.defaultParallelism * 128 * 1024 * 1024:
         if size_bytes < (1 << 62):
             return df

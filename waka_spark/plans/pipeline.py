@@ -13,7 +13,8 @@ independent branches that Spark schedules concurrently:
 
 ``KGPipeline.run`` is the one composition of the nine named stages. Each
 stage boundary is materialized one of two ways: an eager
-``localCheckpoint`` (interactive, bench and streaming runs), or, when a
+``localCheckpoint`` through ``plans/pins.cut`` (interactive, bench and
+streaming runs; a caller's ``pin_scope`` frees it), or, when a
 ``CheckpointManager`` is passed, a committed parquet checkpoint that a
 later run with the same run id resumes from (the spark-submit path,
 plans/checkpoint.py).
@@ -39,6 +40,7 @@ from waka_spark.operators.ner import deterministic_ner_fused
 from waka_spark.operators.rel_linking import link_predicates
 from waka_spark.operators.relations import aho_relation_extraction
 from waka_spark.operators.rerank import rerank_candidates, split_sentences
+from waka_spark.plans.pins import cut, pin
 
 if TYPE_CHECKING:
     from waka_spark.plans.checkpoint import CheckpointManager
@@ -142,7 +144,6 @@ class KGPipeline:
             return self.mentions(documents), self.raw_triples(documents)
 
         from waka_spark.operators.ner import deterministic_ner_and_rules
-        from waka_spark.plans.pins import pin
 
         rule_list = [
             (r["subj_surface"], r["pred_text"], r["obj_surface"])
@@ -194,8 +195,9 @@ class KGPipeline:
         Every named stage goes through one ``stage(name, thunk)`` call, in
         a fixed order:
 
-        - ``checkpoints=None``: an eager ``localCheckpoint`` cuts the
-          lineage after each stage except those in ``_LOCAL_UNCUT``.
+        - ``checkpoints=None``: ``plans/pins.cut`` (an eager
+          ``localCheckpoint``, owned by the caller's ``pin_scope``) cuts
+          the lineage after each stage except those in ``_LOCAL_UNCUT``.
           Shallow plans (Catalyst re-analyzes the whole logical plan at
           every action) and no recompute for multi-consumer stages.
         - a ``CheckpointManager``: each stage is written to parquet and
@@ -210,7 +212,7 @@ class KGPipeline:
                 df = thunk()
                 if name in _LOCAL_UNCUT:
                     return df
-                return df.localCheckpoint(eager=True)
+                return cut(df)
 
         # Fan-out point: every per-document UDF stage (NER, sentence split,
         # extraction) is a narrow map over `docs`, so its partition count

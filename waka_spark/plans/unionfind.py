@@ -40,106 +40,100 @@ def connected_components(
     Isolated nodes absent from ``edges`` are their own components (callers
     left-join and coalesce to the node id).
     """
-    from waka_spark.plans.iterate import TrackedCheckpoints
+    from waka_spark.plans.iterate import fixpoint
     from waka_spark.plans.parallel import maybe_broadcast
+    from waka_spark.plans.pins import cut, keep, pin_scope, release
 
-    ck = TrackedCheckpoints(edges.sparkSession)
-    sym = ck.checkpoint(
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        # materialize ONCE before iterating: sym is joined every round, and
-        # without the cut each round would replay the whole upstream edge
-        # plan (for dedup clustering that's the full shingle-join pair
-        # generation — measured 41.5s -> ~8s for dedup_clusters at sf0.1)
-    )
-    # parallel floor on the materialized edge set (round 6): AQE often
-    # coalesces the distinct's output to ~1 partition for small-byte
-    # graphs, and the checkpoint freezes that — every round's neighbor
-    # join then probes on one core. Exact facts (partition count, then a
-    # count on the already-materialized frame) drive the re-spread; a
-    # genuinely large graph keeps its >= cores partitions.
-    sc = edges.sparkSession.sparkContext
-    if sym.rdd.getNumPartitions() < sc.defaultParallelism:
-        if sym.count() * 48 < sc.defaultParallelism * 128 * 1024**2:
-            respread = ck.checkpoint(
-                sym.repartition(2 * sc.defaultParallelism, "b"))
-            ck.release(sym)
-            sym = respread
-    labels = ck.checkpoint(
-        sym.select(F.col("a").alias("node"))
-        .distinct()
-        .withColumn("component", F.col("node"))
-    )
-    # node count (near-free — labels just materialized): drives the
-    # broadcast-vs-shuffle choice for every round's three state joins;
-    # with unknown ExistingRDD stats the planner otherwise sort-merges,
-    # re-shuffling the edge set AND both label tables per round.
-    n_nodes = labels.count()
+    with pin_scope():
+        sym = cut(
+            edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+            .unionByName(
+                edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
+            .filter(F.col("a") != F.col("b"))
+            .distinct()
+            # materialize ONCE before iterating: sym is joined every round,
+            # and without the cut each round would replay the whole
+            # upstream edge plan (for dedup clustering that's the full
+            # shingle-join pair generation — measured 41.5s -> ~8s for
+            # dedup_clusters at sf0.1)
+        )
+        # parallel floor on the materialized edge set: AQE often coalesces
+        # the distinct's output to ~1 partition for small-byte graphs, and
+        # the cut freezes that — every round's neighbor join then probes
+        # on one core. Exact facts (partition count, then a count on the
+        # already-materialized frame) drive the re-spread; a genuinely
+        # large graph keeps its >= cores partitions.
+        sc = edges.sparkSession.sparkContext
+        if sym.rdd.getNumPartitions() < sc.defaultParallelism:
+            if sym.count() * 48 < sc.defaultParallelism * 128 * 1024**2:
+                respread = cut(
+                    sym.repartition(2 * sc.defaultParallelism, "b"))
+                release(sym)
+                sym = respread
+        labels = cut(
+            sym.select(F.col("a").alias("node"))
+            .distinct()
+            .withColumn("component", F.col("node"))
+        )
+        # node count (near-free — labels just materialized): drives the
+        # broadcast-vs-shuffle choice for every round's three state joins;
+        # with unknown ExistingRDD stats the planner otherwise
+        # sort-merges, re-shuffling the edge set AND both label tables per
+        # round.
+        n_nodes = labels.count()
 
-    # labels_ck is the checkpointed frame backing the (node, component)
-    # view in `labels` — TrackedCheckpoints bookkeeping is by frame
-    # identity, and from round 1 on the checkpoint carries a `_chg`
-    # convergence flag the view drops.
-    labels_ck = labels
-    for _ in range(max_iter):
-        # Round fused with its own convergence check (round 6): labels
-        # only ever DECREASE under min-propagation, so carrying the old
-        # label through the round and flagging `_chg = new != old` inside
-        # the checkpointed plan replaces the former separate
-        # new-vs-old join action (one full label-table join per round)
-        # with a near-free filter over the just-materialized blocks.
-        # `least(old, min-over-neighbors)` over a left join is the same
-        # math as the former union+groupBy-min (least skips the null of
-        # neighborless nodes), and it no longer pushes the n_nodes label
-        # rows through the groupBy exchange alongside the edge rows.
-        neighbor_min = (
-            sym.join(maybe_broadcast(labels, n_nodes, row_bytes=48),
-                     sym["b"] == labels["node"])
-            .select(F.col("a").alias("node"), "component")
-            .groupBy("node")
-            .agg(F.min("component").alias("_n_comp"))
-        )
-        propagated = (
-            labels.join(maybe_broadcast(neighbor_min, n_nodes,
-                                        row_bytes=48), "node", "left")
-            .select(
-                "node",
-                F.least("component", "_n_comp").alias("component"),
-                F.col("component").alias("_old"),
+        def step(state: DataFrame) -> DataFrame:
+            # The round carries its own convergence flag: labels only ever
+            # DECREASE under min-propagation, so carrying the old label
+            # through the round and flagging `_chg = new != old` inside the
+            # cut plan replaces a separate new-vs-old join action (one
+            # full label-table join per round) with a near-free filter
+            # over the just-materialized blocks. `least(old,
+            # min-over-neighbors)` over a left join is the same math as a
+            # union+groupBy-min (least skips the null of neighborless
+            # nodes), without pushing the n_nodes label rows through the
+            # groupBy exchange alongside the edge rows.
+            labels = state.select("node", "component")
+            neighbor_min = (
+                sym.join(maybe_broadcast(labels, n_nodes, row_bytes=48),
+                         sym["b"] == labels["node"])
+                .select(F.col("a").alias("node"), "component")
+                .groupBy("node")
+                .agg(F.min("component").alias("_n_comp"))
             )
-        )
-        # pointer jumping (path halving): a label is itself a node id, so
-        # one self-join replaces each label with its label's label —
-        # comp(comp(x)) <= comp(x) stays inside x's component, and the
-        # reachable-minimum distance doubles per round
-        lbl_map = propagated.select(
-            F.col("node").alias("_m_node"), F.col("component").alias("_m_comp")
-        )
-        final_comp = F.coalesce("_m_comp", "component")
-        new_ck = ck.checkpoint(
-            propagated
-            .join(maybe_broadcast(lbl_map, n_nodes, row_bytes=48),
-                  propagated["component"] == lbl_map["_m_node"], "left")
-            .select(
-                "node",
-                final_comp.alias("component"),
-                (final_comp != F.col("_old")).alias("_chg"),
+            propagated = (
+                labels.join(maybe_broadcast(neighbor_min, n_nodes,
+                                            row_bytes=48), "node", "left")
+                .select(
+                    "node",
+                    F.least("component", "_n_comp").alias("component"),
+                    F.col("component").alias("_old"),
+                )
             )
-        )
-        changed = new_ck.filter(F.col("_chg")).limit(1).count()
-        # the previous round's labels are dead once the new round is
-        # materialized — release its blocks so storage holds TWO label
-        # tables at any time, not one per round (25 rounds x a 10^9-node
-        # label table would evict the rest of the job's cached state)
-        ck.release(labels_ck)
-        labels_ck = new_ck
-        labels = new_ck.select("node", "component")
-        if changed == 0:
-            break
-    ck.release_all_except(labels_ck)
-    return labels
+            # pointer jumping (path halving): a label is itself a node id,
+            # so one self-join replaces each label with its label's label —
+            # comp(comp(x)) <= comp(x) stays inside x's component, and the
+            # reachable-minimum distance doubles per round
+            lbl_map = propagated.select(
+                F.col("node").alias("_m_node"),
+                F.col("component").alias("_m_comp"))
+            final_comp = F.coalesce("_m_comp", "component")
+            return (
+                propagated
+                .join(maybe_broadcast(lbl_map, n_nodes, row_bytes=48),
+                      propagated["component"] == lbl_map["_m_node"], "left")
+                .select(
+                    "node",
+                    final_comp.alias("component"),
+                    (final_comp != F.col("_old")).alias("_chg"),
+                )
+            )
+
+        labels = fixpoint(
+            labels, step, max_iter,
+            lambda new, _old: new.filter(F.col("_chg")).limit(1).count() == 0)
+        keep(labels)
+    return labels.select("node", "component")
 
 
 def incremental_components(

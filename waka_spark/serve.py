@@ -43,10 +43,10 @@ class KGService:
     def __init__(self, spark: SparkSession, pipeline: KGPipeline):
         self.spark = spark
         self.pipeline = pipeline
-        # one pipeline run at a time: the targeted storage release below
-        # snapshots the persistent-RDD set around the run, which is only
-        # attributable when runs don't interleave (demo endpoint — batch
-        # throughput goes through scripts/submit_job.py, not HTTP)
+        # one pipeline run at a time: plans/pins.cut attributes the
+        # persistent RDDs a run creates by diffing the session-wide set,
+        # which is exact only when runs don't interleave (demo endpoint —
+        # batch throughput goes through scripts/submit_job.py, not HTTP)
         self._run_lock = threading.Lock()
 
     def construct(self, text: str, conv_id: str = "request") -> dict:
@@ -59,20 +59,11 @@ class KGService:
         transcripts = self.spark.createDataFrame(
             [(conv_id, 0, "user", text, None, None)], schemas.TRANSCRIPTS
         )
-        # Per-request storage release, two layers (round-3, per ADVICE +
-        # review — the old spark.catalog.clearCache() nuked every cached
-        # frame in the shared session, including other workloads'):
-        #
-        # 1. pin_scope: the pipeline's DataFrame.persist() stages (fusion
-        #    index, conflict frames) register per-request-unique entries
-        #    in the session CacheManager; only DataFrame.unpersist()
-        #    removes those driver-side entries, so the operators register
-        #    their pins with this scope and the scope releases them —
-        #    blocks AND CacheManager entries.
-        # 2. RDD-set snapshot: the run's localCheckpoint blocks are
-        #    RDD-level pins with no DataFrame handle surviving the run;
-        #    release exactly the ids this run added.
-        persisted_before = self._persistent_rdd_ids()
+        # Per-request storage release: the scope frees every frame the run
+        # pinned (blocks AND session CacheManager entries — per-request
+        # plans never deduplicate, so a leaked entry is a leak per request)
+        # and every stage cut, while bystander caches in the shared
+        # session survive.
         with pin_scope():
             out = self.pipeline.run(transcripts)
             triples = [
@@ -92,17 +83,7 @@ class KGService:
                 for r in out["final_entities"]
                 .select("url", "label", "score").collect()
             ]
-        for rdd_id, jrdd in self._persistent_rdds():
-            if rdd_id not in persisted_before:
-                jrdd.unpersist()
         return {"conv_id": conv_id, "triples": triples, "entities": entities}
-
-    def _persistent_rdds(self):
-        jmap = self.spark.sparkContext._jsc.getPersistentRDDs()
-        return [(int(k), jmap[k]) for k in jmap.keySet().toArray()]
-
-    def _persistent_rdd_ids(self) -> set:
-        return {rdd_id for rdd_id, _ in self._persistent_rdds()}
 
 
 def _make_handler(service: KGService):

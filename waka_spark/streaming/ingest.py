@@ -16,7 +16,9 @@ module gives the engine a streaming front end with the same table contract:
 
 The downstream batch pipeline consumes the checkpointed micro-batch output
 (foreachBatch → the checkpoint runner), so batch and streaming share every
-operator implementation.
+operator implementation. Each foreachBatch bridge runs its micro-batch
+inside one ``plans/pins.pin_scope``, so the batch's pins and stage cuts
+are freed once its write or commit returns, not at session end.
 """
 
 from __future__ import annotations
@@ -25,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from waka_spark import schemas
+from waka_spark.plans.pins import pin_scope
 
 
 def stream_transcripts(spark: SparkSession, path: str,
@@ -291,15 +294,16 @@ def run_stream_merge_edges(
             if (m.get("batch_id") == batch_id
                     and m.get("checkpoint") == checkpoint_path):
                 return  # at-least-once replay of an already-committed batch
-        out = pipeline.run(batch_df)
-        delta = edges_from_triples(out["triples"])
-        merged = (
-            delta if cur is None
-            else merge_edges(table.read(spark, cur), delta)
-        )
-        table.commit(
-            merged,
-            meta={"batch_id": batch_id, "checkpoint": checkpoint_path})
+        with pin_scope():
+            out = pipeline.run(batch_df)
+            delta = edges_from_triples(out["triples"])
+            merged = (
+                delta if cur is None
+                else merge_edges(table.read(spark, cur), delta)
+            )
+            table.commit(
+                merged,
+                meta={"batch_id": batch_id, "checkpoint": checkpoint_path})
 
     stream = stream_transcripts(spark, input_path)
     writer = (
@@ -324,12 +328,13 @@ def run_stream_to_graph(
     parity by construction."""
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        out = pipeline.run(batch_df)
-        (
-            out["triples"]
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append").parquet(f"{output_path}/edges")
-        )
+        with pin_scope():
+            out = pipeline.run(batch_df)
+            (
+                out["triples"]
+                .withColumn("batch_id", F.lit(batch_id))
+                .write.mode("append").parquet(f"{output_path}/edges")
+            )
 
     stream = stream_transcripts(spark, input_path)
     writer = (
@@ -377,14 +382,15 @@ def run_stream_fact_history(
             if (m.get("batch_id") == batch_id
                     and m.get("checkpoint") == checkpoint_path):
                 return  # at-least-once replay of an already-committed batch
-        facts = facts_fn(batch_df)
-        merged = (
-            fact_history(facts) if cur is None
-            else merge_fact_history(table.read(spark, cur), facts)
-        )
-        table.commit(
-            merged,
-            meta={"batch_id": batch_id, "checkpoint": checkpoint_path})
+        with pin_scope():
+            facts = facts_fn(batch_df)
+            merged = (
+                fact_history(facts) if cur is None
+                else merge_fact_history(table.read(spark, cur), facts)
+            )
+            table.commit(
+                merged,
+                meta={"batch_id": batch_id, "checkpoint": checkpoint_path})
 
     stream = stream_transcripts(spark, input_path)
     writer = (
