@@ -989,7 +989,7 @@ def q_kg_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Graph materialization stats: node degree (in/out/total) over the
     rule-closure triples — the nodes-table side of the nodes/edges
     materialization (sinks.py analog of kg.py:142-183). Sources triples
-    from the Aho-Corasick rule extractor (identical output to the full
+    from the rule extractor (identical output to the full
     e2e pipeline here — non-overlapping surfaces make fusion the
     identity) so the suite doesn't pay the whole fusion pipeline twice."""
     t = _rule_triples(spark, sf_dir)
@@ -1149,11 +1149,11 @@ def _rule_triples_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     (same cheap source as kg_degree; score varies by conv so max-merge is
     meaningful and SQL-derivable)."""
     from waka_spark import schemas
-    from waka_spark.operators.relations import aho_relation_extraction
+    from waka_spark.operators.relations import rule_relation_extraction
 
     docs = q_kg_assembly(spark, sf_dir)
     rules = spark.createDataFrame(RULES, schemas.RELATION_RULES)
-    raw = aho_relation_extraction(docs, rules)
+    raw = rule_relation_extraction(docs, rules)
     return raw.select(
         "conv_id",
         F.concat(F.lit("http://example.org/Q_"), "subj_text").alias("subj_url"),
@@ -1484,16 +1484,16 @@ def q_events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _rule_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct (conv_id, subj_url, pred_url, obj_url) via the Aho-Corasick
-    rule extractor over assembled documents — the cheap exact stand-in for
+    """Distinct (conv_id, subj_url, pred_url, obj_url) via the rule
+    extractor over assembled documents — the cheap exact stand-in for
     the full fusion pipeline's triples (identical output here; see
     q_kg_degree)."""
     from waka_spark import schemas
-    from waka_spark.operators.relations import aho_relation_extraction
+    from waka_spark.operators.relations import rule_relation_extraction
 
     docs = q_kg_assembly(spark, sf_dir)
     rules = spark.createDataFrame(RULES, schemas.RELATION_RULES)
-    raw = aho_relation_extraction(docs, rules)
+    raw = rule_relation_extraction(docs, rules)
     return raw.select(
         "conv_id",
         F.concat(F.lit("http://example.org/Q_"), "subj_text").alias("subj_url"),

@@ -193,13 +193,11 @@ def test_transformer_re_fake_generate(spark):
 
 
 def test_aho_rule_extraction_matches_contains_join(spark):
-    """aho_relation_extraction == rule_relation_extraction output on the
-    in-repo sample text and on a doc set with overlapping/repeated
+    """scan_documents' raw triples == rule_relation_extraction output on
+    the in-repo sample text and on a doc set with overlapping/repeated
     surfaces."""
-    from waka_spark.operators.relations import (
-        aho_relation_extraction,
-        rule_relation_extraction,
-    )
+    from waka_spark.operators.ner import scan_documents
+    from waka_spark.operators.relations import rule_relation_extraction
 
     pipe = bauhaus_pipeline(spark)
     docs = pipe.documents(
@@ -208,44 +206,39 @@ def test_aho_rule_extraction_matches_contains_join(spark):
 
     key = lambda r: (r.conv_id, r.subj_text, r.pred_text, r.obj_text)  # noqa: E731
     sql_out = sorted(map(key, rule_relation_extraction(docs, rules).collect()))
-    aho_out = sorted(map(key, aho_relation_extraction(docs, rules).collect()))
-    assert sql_out == aho_out and sql_out
+    scan_out = sorted(map(
+        key, scan_documents(docs, (), fx.BAUHAUS_RULES)[1].collect()))
+    assert sql_out == scan_out and sql_out
 
     tricky = spark.createDataFrame(
         [("t1", "aa aab ab b"), ("t2", "nothing"), ("t3", "ab aa ab aa ab")],
         "conv_id string, text string",
     )
+    tricky_list = [("aa", "p1", "ab"), ("aab", "p2", "b"), ("zz", "p3", "aa")]
     tricky_rules = spark.createDataFrame(
-        [("aa", "p1", "ab"), ("aab", "p2", "b"), ("zz", "p3", "aa")],
+        tricky_list,
         "subj_surface string, pred_text string, obj_surface string",
     )
     sql_out = sorted(map(key, rule_relation_extraction(tricky, tricky_rules).collect()))
-    aho_out = sorted(map(key, aho_relation_extraction(tricky, tricky_rules).collect()))
-    assert sql_out == aho_out and len(sql_out) == 3
+    scan_out = sorted(map(
+        key, scan_documents(tricky, (), tricky_list)[1].collect()))
+    assert sql_out == scan_out and len(sql_out) == 3
 
 
 def test_aho_cache_key_pipe_surfaces_do_not_collide(spark):
     """Two rule tables whose surface sets would collide under a
     '|'.join cache key ({'a|b','c'} vs {'a','b','c'} -> 'a|b|c') must
-    each get their own automaton: run the pipe-containing table first so
+    each get their own scanner: run the pipe-containing table first so
     a shared-key bug would hand its scanner to the second table."""
-    from waka_spark.operators.relations import aho_relation_extraction
+    from waka_spark.operators.ner import scan_documents
 
     docs = spark.createDataFrame(
         [("d1", "x a|b y c"), ("d2", "a b c")],
         "conv_id string, text string",
     )
-    piped = spark.createDataFrame(
-        [("a|b", "p", "c")],
-        "subj_surface string, pred_text string, obj_surface string",
-    )
-    plain = spark.createDataFrame(
-        [("a", "q", "b")],
-        "subj_surface string, pred_text string, obj_surface string",
-    )
-    first = aho_relation_extraction(docs, piped).collect()
+    first = scan_documents(docs, (), [("a|b", "p", "c")])[1].collect()
     assert {(r.conv_id, r.pred_text) for r in first} == {("d1", "p")}
-    second = aho_relation_extraction(docs, plain).collect()
+    second = scan_documents(docs, (), [("a", "q", "b")])[1].collect()
     # 'a' and 'b' both occur in d2 (and inside d1's 'a|b'): rule q fires
     assert {(r.conv_id, r.pred_text) for r in second} == {
         ("d1", "q"), ("d2", "q")}

@@ -10,8 +10,12 @@ from waka_spark.operators.ner import (
     gazetteer_ner,
     merge_token_runs,
     regex_literal_ner,
+    scan_documents,
     union_mentions,
 )
+from waka_spark.operators.relations import rule_relation_extraction
+from waka_spark.plans.pipeline import KGPipeline
+from waka_spark.sources import fixtures as fx
 
 
 def _docs(spark, rows):
@@ -169,24 +173,126 @@ def test_rerank_shapes_agree_and_guard_missing_sentence(spark):
     assert ns[("c1", 0, 6, "Q1")] == 0.5
 
 
-def test_fused_ner_identical_to_union_composition(spark):
-    """deterministic_ner_fused must be bit-identical to the two-backend
-    union it replaces in the pipeline hot path."""
-    from waka_spark.operators.ner import deterministic_ner_fused
-    from waka_spark.sources import fixtures as fx
+# Adversarial corpus for the corpus scan: NULL and empty text, a document
+# with no hits, word-boundary misses, nested surfaces, a gazetteer surface
+# that collides span-for-span with a literal, pipe-containing surfaces, and
+# rule surfaces that are substrings of other rule surfaces.
+SCAN_DOCS = [
+    ("c1", fx.sample_text()),
+    ("c2", "In 1919 it had 4000 students and 27% growth."),
+    ("c3", "Weimar and Weimarer and xWeimar in 1919."),
+    ("c4", ""),
+    ("c5", None),
+    ("c6", "no surfaces here at all"),
+    ("c7", "New York City is not York; New York is."),
+    ("c8", "x a|b y c and aa aab ab b"),
+    ("c9", "ab aa ab aa ab a b c"),
+    ("c10", "spark join spark 1984 window 27% plain 3.5"),
+]
+# ("1919", "ORG") collides with the regex DATE mention of the same span:
+# the gazetteer row wins, as in union_mentions
+SCAN_GAZ = list(fx.BAUHAUS_GAZETTEER) + [
+    ("Weimar", "GPE"), ("1919", "ORG"), ("New York", "GPE"),
+    ("New York City", "GPE"), ("York", "GPE"), ("a|b", "MISC"),
+]
+SCAN_RULES = list(fx.BAUHAUS_RULES) + [
+    ("a|b", "p", "c"), ("a", "q", "b"), ("aa", "p1", "ab"),
+    ("aab", "p2", "b"), ("zz", "p3", "aa"), ("New York", "in", "York"),
+]
 
-    docs = _docs(spark, [
-        ("c1", fx.sample_text()),
-        ("c2", "In 1919 it had 4000 students and 27% growth."),
-        ("c3", "Weimar and Weimarer and xWeimar in 1919."),
-        ("c4", ""),
-    ])
-    # ("1919", "ORG") collides span-for-span with the regex DATE mention —
-    # the fused pass must keep the gazetteer row, like union_mentions does
-    gaz = list(fx.BAUHAUS_GAZETTEER) + [("Weimar", "GPE"), ("1919", "ORG")]
-    fused = deterministic_ner_fused(docs, gaz)
-    composed = union_mentions(gazetteer_ner(docs, gaz), regex_literal_ner(docs))
-    key = lambda r: (r["conv_id"], r["start_idx"], r["end_idx"])
-    f_rows = sorted(map(tuple, fused.collect()))
-    c_rows = sorted(map(tuple, composed.collect()))
-    assert f_rows == c_rows and len(f_rows) > 20
+
+def _rules_df(spark, rules):
+    return spark.createDataFrame(
+        rules, "subj_surface string, pred_text string, obj_surface string")
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_fused_ner_identical_to_union_composition(spark):
+    """scan_documents' mentions, with and without rules, equal the
+    gazetteer + literal union (rows and schema)."""
+    docs = _docs(spark, SCAN_DOCS)
+    expected = union_mentions(
+        gazetteer_ner(docs, SCAN_GAZ), regex_literal_ner(docs))
+    want = _rows(expected)
+    assert len(want) > 20
+    for rules in ((), SCAN_RULES):
+        mentions, _ = scan_documents(docs, SCAN_GAZ, rules)
+        assert _rows(mentions) == want
+        assert mentions.schema == expected.schema
+    # empty gazetteer: the literal backend alone
+    mentions, _ = scan_documents(docs, (), SCAN_RULES)
+    assert _rows(mentions) == _rows(regex_literal_ner(docs))
+
+
+def test_scan_triples_match_rule_relation_extraction(spark):
+    """scan_documents' raw triples equal the contains-join reference (rows
+    and schema), with and without a gazetteer."""
+    docs = _docs(spark, SCAN_DOCS)
+    expected = rule_relation_extraction(docs, _rules_df(spark, SCAN_RULES))
+    want = _rows(expected)
+    assert {r[0] for r in want} >= {"c1", "c7", "c8", "c9"}
+    for gaz in ((), SCAN_GAZ):
+        _, raw = scan_documents(docs, gaz, SCAN_RULES)
+        assert _rows(raw) == want
+        assert raw.schema == expected.schema
+    _, raw = scan_documents(docs, SCAN_GAZ, ())
+    assert raw.collect() == []
+
+
+def _scan_pipeline(spark, cls=KGPipeline):
+    aliases = spark.createDataFrame(
+        [("spark", "http://x/Q1", "spark", "d", 10)],
+        "alias_key string, url string, label string, description string, "
+        "frequency long",
+    )
+    return cls(
+        aliases=aliases, properties=aliases, gazetteer=SCAN_GAZ,
+        rules=_rules_df(spark, SCAN_RULES), use_scorers=False,
+        use_rerank=False,
+    )
+
+
+def test_pipeline_scan_products_match_separate_stages(spark):
+    """The default pipeline's one scan equals its two single stages (the
+    kernel without rules, and the contains join) and the union reference."""
+    docs = _docs(spark, SCAN_DOCS)
+    pipe = _scan_pipeline(spark)
+    mentions, raw = pipe.scan_products(docs)
+    assert _rows(mentions) == _rows(pipe.mentions(docs))
+    assert _rows(mentions) == _rows(union_mentions(
+        gazetteer_ner(docs, SCAN_GAZ), regex_literal_ner(docs)))
+    assert _rows(raw) == _rows(pipe.raw_triples(docs))
+
+
+def test_custom_mention_backend_keeps_separate_stages(spark):
+    class CustomNER(KGPipeline):
+        def mentions(self, documents):
+            return gazetteer_ner(documents, self.gazetteer)
+
+    docs = _docs(spark, SCAN_DOCS)
+    pipe = _scan_pipeline(spark, CustomNER)
+    mentions, raw = pipe.scan_products(docs)
+    # falls back to the overridden mentions() and the separate rule pass
+    assert _rows(mentions) == _rows(gazetteer_ner(docs, SCAN_GAZ))
+    assert _rows(raw) == _rows(pipe.raw_triples(docs))
+
+
+def test_scan_scanner_cache_outlives_the_task():
+    """Scanners are cached in a module-level dict reached through a
+    module-level function, which cloudpickle ships by reference: every task
+    a Python worker runs finds the same dict (a cache in the UDF's closure
+    would be unpickled afresh per task). Keys are per pattern list, so
+    '|'-joined collisions get distinct scanners."""
+    from pyspark import cloudpickle
+
+    from waka_spark.operators import ner
+
+    assert cloudpickle.loads(cloudpickle.dumps(ner._scanner)) is ner._scanner
+    piped, plain = ["a|b", "c"], ["a", "b", "c"]
+    k1, k2 = ner._digest(piped), ner._digest(plain)
+    assert k1 != k2
+    assert ner._scanner(k1, piped) is ner._scanner(k1, piped)
+    assert ner._scanner(k2, plain).present("a b") == {"a", "b"}

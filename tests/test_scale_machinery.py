@@ -367,3 +367,17 @@ def test_parallel_floor_fails_safe_when_stats_probe_throws(spark):
     narrow = _NoStatsFrame(spark, n_parts=1)
     parallel_floor(narrow, "k")
     assert narrow.repartitioned
+
+
+def test_maybe_broadcast_sizes_rows_by_schema(spark):
+    """The broadcast budget is sized from the frame's schema: 2M rows of
+    three strings (60 B/row, 120 MB) exceed the 64 MB budget and get no
+    hint; 2M rows of one long (8 B/row, 16 MB) still get one."""
+    from waka_spark.plans.parallel import maybe_broadcast
+
+    strings = spark.createDataFrame([], "a string, b string, c string")
+    assert maybe_broadcast(strings, 2_000_000) is strings
+    longs = spark.createDataFrame([], "id long")
+    hinted = maybe_broadcast(longs, 2_000_000)
+    assert "broadcast" in hinted._jdf.queryExecution().analyzed().toString()
+    assert maybe_broadcast(longs, None) is longs

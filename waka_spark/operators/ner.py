@@ -6,8 +6,8 @@ identity (kg.py:34-35). We reproduce the *dataflow*: N pluggable mention
 sources → ``union_mentions`` (priority-ordered span dedup). Backends:
 
 - ``gazetteer_ner`` — deterministic surface scan (Arrow-batched
-  ``mapInPandas``; one compiled alternation regex per executor, all
-  word-boundary occurrences). The CPU test/bench backend.
+  ``mapInPandas``; one multi-string scanner per task, all word-boundary
+  occurrences).
 - ``regex_literal_ner`` — numbers / percents / years → typed-literal
   mentions (the P7 literal-encoding path, entity_recognition.py:84-97).
 - ``merge_token_runs`` — the relational equivalent of spaCy's contiguous
@@ -17,6 +17,13 @@ sources → ``union_mentions`` (priority-ordered span dedup). Backends:
   ``mapInPandas`` shape with per-executor model caches; gated behind
   import guards since the models aren't in this environment.
 
+``scan_documents`` is the pipeline's deterministic corpus scan: the
+gazetteer + literal union AND the rule relation extraction
+(relations.py) in one Arrow pass per document. ``gazetteer_ner``,
+``regex_literal_ner``, ``union_mentions`` and
+``relations.rule_relation_extraction`` are its reference implementations
+in the tests.
+
 Scale notes: each backend is a narrow map over documents (no shuffle);
 the union is a unionByName + one ``row_number`` per span — a single shuffle
 on (doc key, span), partition-pruned by the documents' conv_id partitioning.
@@ -24,6 +31,7 @@ on (doc key, span), partition-pruned by the documents' conv_id partitioning.
 
 from __future__ import annotations
 
+import hashlib
 import re
 from typing import Iterable, Iterator, Sequence
 
@@ -34,6 +42,7 @@ from pyspark.sql import functions as F
 from waka_spark.config import DATE_TYPES, DECIMAL_TYPES
 from waka_spark.functions.aho import make_scanner, word_bounded
 from waka_spark.functions.literals import encode_literal
+from waka_spark.plans.pins import pin
 
 MENTION_COLS = "conv_id string, start_idx int, end_idx int, text string, e_type string, url string"
 _EMPTY_MENTIONS = pd.DataFrame(
@@ -48,16 +57,17 @@ def gazetteer_ner(
 
     The gazetteer is closed over (driver-side list, shipped with the
     serialized UDF) — it is a *dictionary*, small by construction; the
-    documents side streams through Arrow batches. One Aho–Corasick pass per
+    documents side streams through Arrow batches. One scanner pass per
     document finds all overlapping occurrences of every surface; the
-    automaton is built lazily once per executor process.
+    scanner lives in the UDF's closure, which every task unpickles afresh,
+    so it is built once per task.
     """
     type_of = {s: t for s, t in gazetteer}
     surfaces = list(type_of)
     automaton_cell: list = []
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if not automaton_cell:  # per-executor lazy build
+        if not automaton_cell:  # per-task lazy build
             automaton_cell.append(make_scanner(surfaces))
         ac = automaton_cell[0]
         for pdf in batches:
@@ -79,97 +89,6 @@ def gazetteer_ner(
             yield pd.DataFrame(out) if out["conv_id"] else _EMPTY_MENTIONS
 
     return documents.select("conv_id", "text").mapInPandas(scan, MENTION_COLS)
-
-
-SCAN_PRODUCT_COLS = (
-    "conv_id string, kind string, start_idx int, end_idx int, text string, "
-    "e_type string, url string, subj_text string, pred_text string, "
-    "obj_text string"
-)
-_SCAN_PRODUCT_NAMES = [
-    "conv_id", "kind", "start_idx", "end_idx", "text", "e_type", "url",
-    "subj_text", "pred_text", "obj_text",
-]
-
-
-def deterministic_ner_and_rules(
-    documents: DataFrame,
-    gazetteer: Sequence[tuple[str, str]],
-    rule_list: Sequence[tuple[str, str, str]],
-) -> DataFrame:
-    """The corpus scan products of the deterministic pipeline — fused-NER
-    mentions (rows with ``kind='m'``) AND Aho rule-RE raw triples
-    (``kind='r'``) — in ONE Arrow pass over the document text.
-
-    Document text is the bulk of the corpus bytes; the split mention/
-    extraction stages each shipped the full text to Python separately, so
-    a pipeline run paid two corpus→Arrow→Python passes for two scans of
-    the same strings. Here both automatons (gazetteer NER and rule-surface
-    presence) run per document inside one ``mapInPandas``, and the two
-    products come back in a shared schema the caller splits by ``kind``
-    (pin the combined frame — both splits are consumers). Per-kind rows
-    are bit-identical to :func:`deterministic_ner_fused` and
-    ``relations.aho_relation_extraction`` (pinned by
-    tests/test_round6_scan_fusion.py); transformer backends keep the
-    separate stages.
-    """
-    type_of = {s: t for s, t in gazetteer}
-    surfaces = list(type_of)
-    rules = list(rule_list)
-    rule_surfaces = sorted(
-        {s for s, _, o in rules} | {o for _, _, o in rules})
-    cells: list = []
-
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if not cells:
-            cells.append(make_scanner(surfaces))
-            cells.append(make_scanner(rule_surfaces))
-        gaz_ac, rule_ac = cells
-        for pdf in batches:
-            out = {k: [] for k in _SCAN_PRODUCT_NAMES}
-
-            def emit(conv_id, kind, start=None, end=None, text=None,
-                     e_type=None, url=None, subj=None, pred=None, obj=None):
-                out["conv_id"].append(conv_id)
-                out["kind"].append(kind)
-                out["start_idx"].append(start)
-                out["end_idx"].append(end)
-                out["text"].append(text)
-                out["e_type"].append(e_type)
-                out["url"].append(url)
-                out["subj_text"].append(subj)
-                out["pred_text"].append(pred)
-                out["obj_text"].append(obj)
-
-            for conv_id, text in zip(pdf["conv_id"], pdf["text"]):
-                if not text:
-                    continue
-                # --- mentions: identical logic to deterministic_ner_fused
-                spans: dict[tuple[int, int], tuple[str, str]] = {}
-                for start, end, surface in gaz_ac.finditer(text):
-                    if word_bounded(text, start, end):
-                        spans[(start, end)] = (surface, type_of[surface])
-                for m in _YEAR_RE.finditer(text):
-                    spans.setdefault(
-                        (m.start(), m.end()), (m.group(0), "DATE"))
-                for m in _NUMBER_RE.finditer(text):
-                    key = (m.start(), m.end())
-                    if key not in spans:
-                        e_type = ("PERCENT" if m.group(0).endswith("%")
-                                  else "CARDINAL")
-                        spans[key] = (m.group(0), e_type)
-                for (s, e), (surface, e_type) in spans.items():
-                    emit(conv_id, "m", start=s, end=e, text=surface,
-                         e_type=e_type, url=encode_literal(surface, e_type))
-                # --- raw triples: identical logic to aho_relation_extraction
-                present = rule_ac.present(text)
-                for subj, pred, obj in rules:
-                    if subj in present and obj in present:
-                        emit(conv_id, "r", subj=subj, pred=pred, obj=obj)
-            yield pd.DataFrame(out, columns=_SCAN_PRODUCT_NAMES)
-
-    return documents.select("conv_id", "text").mapInPandas(
-        scan, SCAN_PRODUCT_COLS)
 
 
 # trailing guard blocks decimal/percent continuations ("3.14"→whole match
@@ -288,41 +207,92 @@ def merge_token_runs(
     return singles.unionByName(prefixes)
 
 
-def deterministic_ner_fused(
-    documents: DataFrame, gazetteer: Sequence[tuple[str, str]]
-) -> DataFrame:
-    """``union_mentions(gazetteer_ner(d, g), regex_literal_ner(d))`` in ONE
-    Arrow pass — bit-identical output, pinned by tests/test_ner_linking.py.
+# pattern-list digest -> scanner. ``_scanner`` is a module-level function,
+# so cloudpickle ships it by reference and a reused Python worker keeps
+# this dict across tasks; a cache held in a UDF's closure is unpickled
+# afresh, and rebuilt, by every task.
+_SCANNERS: dict[str, object] = {}
 
-    Why it exists: document text is the bulk of the bytes, and the
-    two-backend composition ships it to Python *twice* and then pays a
-    full-corpus ``row_number`` shuffle just to dedup exact-span collisions.
-    Both backends emit unique spans per document (the automaton yields each
-    (start, end) once; the regex scanner dedups in a dict), so the
-    priority-ordered union is equivalent to an in-UDF dict insert —
-    gazetteer first, literals only into vacant spans — and needs no
-    shuffle at all. At 10^12 turns this removes one full pass of the
-    corpus through Arrow plus one all-mentions exchange.
 
-    The generic ``union_mentions`` stays for heterogeneous ensembles
-    (transformer backends can emit overlapping duplicates across workers).
+def _scanner(key: str, patterns: Sequence[str]):
+    scanner = _SCANNERS.get(key)
+    if scanner is None:
+        if len(_SCANNERS) >= 8:  # bound worker memory across jobs
+            _SCANNERS.clear()
+        scanner = _SCANNERS[key] = make_scanner(patterns)
+    return scanner
+
+
+def _digest(patterns: Sequence[str]) -> str:
+    # repr, not a joined string: '|'.join maps {'a|b','c'} and
+    # {'a','b','c'} to one key and would hand one table another's scanner
+    return hashlib.md5(repr(list(patterns)).encode()).hexdigest()
+
+
+_SCAN_NAMES = ["conv_id", "kind", "start_idx", "end_idx", "text", "e_type",
+               "url", "subj_text", "pred_text", "obj_text"]
+_SCAN_COLS = (
+    "conv_id string, kind string, start_idx int, end_idx int, text string, "
+    "e_type string, url string, subj_text string, pred_text string, "
+    "obj_text string"
+)
+
+
+def scan_documents(
+    documents: DataFrame,
+    gazetteer: Sequence[tuple[str, str]],
+    rules: Sequence[tuple[str, str, str]],
+) -> tuple[DataFrame, DataFrame]:
+    """The deterministic corpus scan: ``(mentions, raw_triples)`` from ONE
+    Arrow pass over the document text.
+
+    - ``mentions`` equals ``union_mentions(gazetteer_ner(d, gazetteer),
+      regex_literal_ner(d))``. Both backends emit each span once per
+      document, so the priority-ordered union is a per-document dict
+      insert — gazetteer first, literals only into vacant spans — and
+      needs no dedup shuffle.
+    - ``raw_triples`` equals ``relations.rule_relation_extraction`` over
+      the same rules: a (subj_surface, pred_text, obj_surface) rule fires
+      when both surfaces occur in the document. One scanner pass per
+      document finds every rule surface, whatever the rule count.
+
+    Document text is the bulk of the corpus bytes, so it crosses to Python
+    once for both products. They come back in one shared schema, split by
+    ``kind``; the combined frame is pinned because both splits read it.
+    ``gazetteer`` and ``rules`` are driver-side dictionaries shipped with
+    the UDF; each scanner is built once per Python worker (``_scanner``).
+    Pass ``rules=()`` for mentions only.
     """
     type_of = {s: t for s, t in gazetteer}
     surfaces = list(type_of)
-    automaton_cell: list = []
+    rules = [tuple(r) for r in rules]
+    rule_surfaces = sorted({s for s, _, o in rules} | {o for _, _, o in rules})
+    gaz_key, rule_key = _digest(surfaces), _digest(rule_surfaces)
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if not automaton_cell:
-            automaton_cell.append(make_scanner(surfaces))
-        ac = automaton_cell[0]
+        gaz_ac = _scanner(gaz_key, surfaces)
+        rule_ac = _scanner(rule_key, rule_surfaces)
         for pdf in batches:
-            out = {k: [] for k in
-                   ("conv_id", "start_idx", "end_idx", "text", "e_type", "url")}
+            out = {k: [] for k in _SCAN_NAMES}
+
+            def emit(conv_id, kind, start=None, end=None, text=None,
+                     e_type=None, url=None, subj=None, pred=None, obj=None):
+                out["conv_id"].append(conv_id)
+                out["kind"].append(kind)
+                out["start_idx"].append(start)
+                out["end_idx"].append(end)
+                out["text"].append(text)
+                out["e_type"].append(e_type)
+                out["url"].append(url)
+                out["subj_text"].append(subj)
+                out["pred_text"].append(pred)
+                out["obj_text"].append(obj)
+
             for conv_id, text in zip(pdf["conv_id"], pdf["text"]):
                 if not text:
                     continue
                 spans: dict[tuple[int, int], tuple[str, str]] = {}
-                for start, end, surface in ac.finditer(text):
+                for start, end, surface in gaz_ac.finditer(text):
                     if word_bounded(text, start, end):
                         spans[(start, end)] = (surface, type_of[surface])
                 for m in _YEAR_RE.finditer(text):
@@ -335,12 +305,24 @@ def deterministic_ner_fused(
                                   else "CARDINAL")
                         spans[key] = (m.group(0), e_type)
                 for (s, e), (surface, e_type) in spans.items():
-                    out["conv_id"].append(conv_id)
-                    out["start_idx"].append(s)
-                    out["end_idx"].append(e)
-                    out["text"].append(surface)
-                    out["e_type"].append(e_type)
-                    out["url"].append(encode_literal(surface, e_type))
-            yield pd.DataFrame(out) if out["conv_id"] else _EMPTY_MENTIONS
+                    emit(conv_id, "m", start=s, end=e, text=surface,
+                         e_type=e_type, url=encode_literal(surface, e_type))
+                present = rule_ac.present(text)
+                for subj, pred, obj in rules:
+                    if subj in present and obj in present:
+                        emit(conv_id, "r", subj=subj, pred=pred, obj=obj)
+            yield pd.DataFrame(out, columns=_SCAN_NAMES)
 
-    return documents.select("conv_id", "text").mapInPandas(scan, MENTION_COLS)
+    combined = pin(documents.select("conv_id", "text").mapInPandas(
+        scan, _SCAN_COLS))
+    mentions = combined.filter(F.col("kind") == "m").select(
+        "conv_id", "start_idx", "end_idx", "text", "e_type", "url")
+    raw = combined.filter(F.col("kind") == "r").select(
+        "conv_id",
+        "subj_text",
+        F.lit(None).cast("string").alias("subj_type"),
+        "pred_text",
+        "obj_text",
+        F.lit(None).cast("string").alias("obj_type"),
+    ).dropDuplicates(["conv_id", "subj_text", "pred_text", "obj_text"])
+    return mentions, raw

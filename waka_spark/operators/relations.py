@@ -14,7 +14,10 @@ Backends here:
 - ``rule_relation_extraction`` — deterministic CPU backend: a broadcast
   rules table (subj_surface, pred_text, obj_surface) fires when both
   surfaces occur in the document. Pure DataFrame ops (containment theta-join
-  against a broadcast side), no UDF — the test/bench backend.
+  against a broadcast side), no UDF. The pipeline's default runs the same
+  rules inside ``ner.scan_documents``' one corpus pass (one scanner pass per
+  document whatever the rule count); this join is its test reference and
+  the single-backend stage.
 - ``decode_mrebel_tags`` / ``decode_rebel_tags`` — the tag grammars as pure
   Python functions (golden-tested), used by the transformer backend's
   mapInPandas and reusable for replaying stored model generations.
@@ -28,7 +31,6 @@ relation_extraction.py:143-148.
 
 from __future__ import annotations
 
-import hashlib
 from typing import Iterator, Sequence
 
 import pandas as pd
@@ -64,66 +66,6 @@ def rule_relation_extraction(documents: DataFrame, rules: DataFrame) -> DataFram
             F.col("r.obj_surface").alias("obj_text"),
             F.lit(None).cast("string").alias("obj_type"),
         )
-        .dropDuplicates(["conv_id", "subj_text", "pred_text", "obj_text"])
-    )
-
-
-_AHO_CACHE: dict[str, object] = {}
-
-
-def aho_relation_extraction(documents: DataFrame, rules: DataFrame) -> DataFrame:
-    """``rule_relation_extraction`` semantics at scan cost independent of
-    the rule count: one Aho–Corasick pass per document finds every rule
-    surface present (functions/aho.py — the same automaton the gazetteer
-    NER uses), then rules whose subject AND object surfaces both occur
-    fire. Identical output to the double-``contains`` theta join (pinned by
-    test), but the per-document work is O(len(text) + matches) instead of
-    O(len(text) * n_rules) string scans — the right shape when the rule
-    table grows past a few dozen entries.
-
-    The rules table is collected at plan build (it is a broadcast-sized
-    dictionary, like the reference's in-process rule set); the automaton
-    builds once per executor worker via a module-level cache.
-    """
-    rule_list = [
-        (r["subj_surface"], r["pred_text"], r["obj_surface"])
-        for r in rules.collect()
-    ]
-    surfaces = sorted({s for s, _, o in rule_list} | {o for _, _, o in rule_list})
-    # unambiguous key: a joined-string key collides when a surface itself
-    # contains the separator ({'a|b'} vs {'a','b'}) and would hand this
-    # rule table another table's automaton
-    cache_key = hashlib.md5(repr(surfaces).encode()).hexdigest()
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from waka_spark.functions.aho import make_scanner
-
-        if cache_key not in _AHO_CACHE:  # once per executor worker
-            if len(_AHO_CACHE) >= 8:  # bound worker memory across jobs
-                _AHO_CACHE.clear()
-            _AHO_CACHE[cache_key] = make_scanner(surfaces)
-        auto = _AHO_CACHE[cache_key]
-
-        for pdf in batches:
-            rows = []
-            for conv_id, text in zip(pdf["conv_id"], pdf["text"]):
-                present = auto.present(text or "")
-                for subj, pred, obj in rule_list:
-                    if subj in present and obj in present:
-                        rows.append({
-                            "conv_id": conv_id,
-                            "subj_text": subj, "subj_type": None,
-                            "pred_text": pred,
-                            "obj_text": obj, "obj_type": None,
-                        })
-            yield pd.DataFrame(
-                rows,
-                columns=["conv_id", "subj_text", "subj_type",
-                         "pred_text", "obj_text", "obj_type"],
-            )
-
-    return (
-        documents.select("conv_id", "text").mapInPandas(extract, RAW_TRIPLE_COLS)
         .dropDuplicates(["conv_id", "subj_text", "pred_text", "obj_text"])
     )
 

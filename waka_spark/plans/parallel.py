@@ -22,16 +22,18 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def maybe_broadcast(df: DataFrame, n_rows: int | None,
-                    row_bytes: int = 24) -> DataFrame:
+def maybe_broadcast(df: DataFrame, n_rows: int | None) -> DataFrame:
     """Broadcast-hint ``df`` when a KNOWN row count proves it fits in the
     session's 64 MB broadcast budget; identity otherwise. For iterative
     operators whose per-round state is a checkpointed ExistingRDD with
     unknown stats, the planner otherwise falls back to sort-merge and
     re-shuffles + re-sorts the big side every round — the caller usually
     has (or can count, near-free on a materialized frame) the exact state
-    size, which makes this decision precise where stats cannot be."""
-    if n_rows is not None and n_rows * row_bytes <= 64 * 1024 * 1024:
+    size, which makes this decision precise where stats cannot be. The
+    row width is the schema's default size (Catalyst's own per-type
+    estimate: 20 B per string, 8 B per long or double)."""
+    if n_rows is not None and (
+            n_rows * df._jdf.schema().defaultSize() <= 64 * 1024 * 1024):
         return F.broadcast(df)
     return df
 

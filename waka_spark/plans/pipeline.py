@@ -2,14 +2,15 @@
 ``KGConstructor.construct``, kg_construction.py:232-282).
 
 The reference runs two OS-process pipelines per document and fuses in-process
-(SURVEY.md §3.1). Here the whole thing is one DataFrame DAG with two
-independent branches that Spark schedules concurrently:
+(SURVEY.md §3.1). Here the whole thing is one DataFrame DAG. Its two
+branches start from one corpus scan (``ner.scan_documents``: mentions and
+rule triples in a single Arrow pass over the document text):
 
-    transcripts ──P1──► documents ──┬─► NER ─► link ─► rerank ─► cluster ─┐
-                                    └─► extract ─► link predicates ───────┤
-                                                                          ▼
-                                 fusion (P16-P22) ─► conflicts (P23-P24) ─►
-                                 nodes / edges (+ optional union-find pass)
+    transcripts ─P1─► docs ─► scan ─┬─► mentions ─► link ─► rerank ─► cluster ─┐
+                                    └─► raw triples ─► link predicates ────────┤
+                                                                               ▼
+                        fusion (P16-P22) ─► conflicts (P23-P24) ─►
+                        nodes / edges (+ optional union-find pass)
 
 ``KGPipeline.run`` is the one composition of the nine named stages. Each
 stage boundary is materialized one of two ways: an eager
@@ -36,17 +37,17 @@ from waka_spark.operators.assembly import assemble_documents
 from waka_spark.operators.clustering import cluster_entities
 from waka_spark.operators.fusion import fuse_triples
 from waka_spark.operators.linking import link_entities
-from waka_spark.operators.ner import deterministic_ner_fused
+from waka_spark.operators.ner import scan_documents
 from waka_spark.operators.rel_linking import link_predicates
-from waka_spark.operators.relations import aho_relation_extraction
+from waka_spark.operators.relations import rule_relation_extraction
 from waka_spark.operators.rerank import rerank_candidates, split_sentences
-from waka_spark.plans.pins import cut, pin
+from waka_spark.plans.pins import cut
 
 if TYPE_CHECKING:
     from waka_spark.plans.checkpoint import CheckpointManager
 
 # stages a local run leaves uncut: raw_triples is a filter of the pinned
-# fused scan, and the conflict pair shares one pinned per-conv fixpoint
+# corpus scan, and the conflict pair shares one pinned per-conv fixpoint
 _LOCAL_UNCUT = frozenset({"raw_triples", "triples", "final_entities"})
 
 
@@ -90,13 +91,10 @@ class KGPipeline:
         return assemble_documents(transcripts)
 
     def mentions(self, documents: DataFrame) -> DataFrame:
-        # deterministic ensemble as ONE Arrow pass: bit-identical to
-        # union_mentions(gazetteer_ner, regex_literal_ner) (pinned by
-        # tests/test_ner_linking.py) but ships the corpus text to Python
-        # once and skips the exact-span dedup shuffle. Heterogeneous
-        # ensembles (transformer backends) override this method with
+        # the corpus scan without rules. Heterogeneous ensembles
+        # (transformer backends) override this method with
         # union_mentions(...); priority order = arg order (P6).
-        return deterministic_ner_fused(documents, self.gazetteer)
+        return scan_documents(documents, self.gazetteer, ())[0]
 
     def candidates(self, documents: DataFrame, mentions: DataFrame) -> DataFrame:
         cands = link_entities(
@@ -122,19 +120,19 @@ class KGPipeline:
         return cluster_entities(candidates)
 
     def raw_triples(self, documents: DataFrame) -> DataFrame:
-        # Aho-Corasick: one O(text) automaton pass per document regardless
-        # of rule count; identical to the rule_relation_extraction theta
-        # join (equivalence-pinned in tests/test_decoders.py)
-        return aho_relation_extraction(documents, self.rules)
+        return rule_relation_extraction(documents, self.rules)
 
     def scan_products(
         self, documents: DataFrame
     ) -> tuple[DataFrame, DataFrame]:
-        """(mentions, raw_triples) — via ONE fused corpus Arrow pass when
-        both stages are the deterministic defaults (document text crosses
-        the JVM→Python boundary once instead of twice; identical per-stage
-        output, pinned by tests/test_round6_scan_fusion.py). Subclassed
-        backends keep the separate stages.
+        """(mentions, raw_triples) — from ONE corpus scan
+        (``ner.scan_documents``) when both stages are the defaults, so the
+        document text crosses to Python once. A subclass that overrides
+        either stage gets the two stages run separately.
+
+        The rules table is collected to the driver and shipped with the
+        scan's UDF: like the gazetteer, it is a dictionary of surfaces,
+        sized for the driver, not a corpus-scale relation.
         """
         uses_default_scans = (
             type(self).mentions is KGPipeline.mentions
@@ -142,26 +140,9 @@ class KGPipeline:
         )
         if not uses_default_scans:
             return self.mentions(documents), self.raw_triples(documents)
-
-        from waka_spark.operators.ner import deterministic_ner_and_rules
-
-        rule_list = [
-            (r["subj_surface"], r["pred_text"], r["obj_surface"])
-            for r in self.rules.collect()
-        ]
-        combined = pin(deterministic_ner_and_rules(
-            documents, self.gazetteer, rule_list))
-        mentions = combined.filter(F.col("kind") == "m").select(
-            "conv_id", "start_idx", "end_idx", "text", "e_type", "url")
-        raw = combined.filter(F.col("kind") == "r").select(
-            "conv_id",
-            "subj_text",
-            F.lit(None).cast("string").alias("subj_type"),
-            "pred_text",
-            "obj_text",
-            F.lit(None).cast("string").alias("obj_type"),
-        ).dropDuplicates(["conv_id", "subj_text", "pred_text", "obj_text"])
-        return mentions, raw
+        rules = self.rules.select(
+            "subj_surface", "pred_text", "obj_surface").collect()
+        return scan_documents(documents, self.gazetteer, rules)
 
     def linked_triples(self, raw_triples: DataFrame) -> DataFrame:
         return link_predicates(
@@ -225,8 +206,8 @@ class KGPipeline:
         n_doc_parts = max(2 * sc.defaultParallelism, 8)
         docs = stage("documents", lambda: self.documents(transcripts)
                      .repartition(n_doc_parts, "conv_id"))
-        # mentions and raw_triples come from one fused corpus scan, built
-        # by whichever of the two stages is not yet committed
+        # mentions and raw_triples come from one corpus scan, built by
+        # whichever of the two stages is not yet committed
         scan_mentions, scan_raw = _memo_pair(lambda: self.scan_products(docs))
         mentions = stage("mentions", scan_mentions)
         cands = stage("candidates", lambda: self.candidates(docs, mentions))

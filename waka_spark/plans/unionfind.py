@@ -95,15 +95,15 @@ def connected_components(
             # groupBy exchange alongside the edge rows.
             labels = state.select("node", "component")
             neighbor_min = (
-                sym.join(maybe_broadcast(labels, n_nodes, row_bytes=48),
+                sym.join(maybe_broadcast(labels, n_nodes),
                          sym["b"] == labels["node"])
                 .select(F.col("a").alias("node"), "component")
                 .groupBy("node")
                 .agg(F.min("component").alias("_n_comp"))
             )
             propagated = (
-                labels.join(maybe_broadcast(neighbor_min, n_nodes,
-                                            row_bytes=48), "node", "left")
+                labels.join(maybe_broadcast(neighbor_min, n_nodes),
+                            "node", "left")
                 .select(
                     "node",
                     F.least("component", "_n_comp").alias("component"),
@@ -120,7 +120,7 @@ def connected_components(
             final_comp = F.coalesce("_m_comp", "component")
             return (
                 propagated
-                .join(maybe_broadcast(lbl_map, n_nodes, row_bytes=48),
+                .join(maybe_broadcast(lbl_map, n_nodes),
                       propagated["component"] == lbl_map["_m_node"], "left")
                 .select(
                     "node",
