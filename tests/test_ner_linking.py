@@ -227,6 +227,19 @@ def test_fused_ner_identical_to_union_composition(spark):
     assert _rows(mentions) == _rows(regex_literal_ner(docs))
 
 
+def test_scan_mention_split_matches_mention_only_scan(spark):
+    """With rules, the kernel's mention split equals the same kernel run
+    for mentions alone (rows and schema): rule matching never adds, drops
+    or reorders a mention."""
+    docs = _docs(spark, SCAN_DOCS)
+    alone, _ = scan_documents(docs, SCAN_GAZ, ())
+    want = _rows(alone)
+    assert len(want) > 20
+    mentions, _ = scan_documents(docs, SCAN_GAZ, SCAN_RULES)
+    assert _rows(mentions) == want
+    assert mentions.schema == alone.schema
+
+
 def test_scan_triples_match_rule_relation_extraction(spark):
     """scan_documents' raw triples equal the contains-join reference (rows
     and schema), with and without a gazetteer."""
