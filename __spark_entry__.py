@@ -371,14 +371,9 @@ def q_kg_conflict_p23(spark: SparkSession, sf_dir: str) -> DataFrame:
             ))
         ).alias("mentions")
     )
-    resolved = resolve_conflicts(entities)
-    mention_schema = (
-        "array<struct<start_idx:int,end_idx:int,text:string,e_type:string,"
-        "label:string,description:string,score:double>>"
-    )
     return (
-        resolved
-        .withColumn("m", F.explode(F.from_json("mentions_json", mention_schema)))
+        resolve_conflicts(entities)
+        .withColumn("m", F.explode("mentions"))
         .select(
             "conv_id", "url",
             F.col("m")["start_idx"].alias("start_idx"),
@@ -3345,7 +3340,7 @@ def q_kg_prepare_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # triples feeds three consumers (the edge set + both component joins);
     # unpinned, each re-runs the conflict-resolution tail of the e2e
-    # pipeline (two Python grouped-map passes per consumer)
+    # pipeline (a Python grouped-map pass per consumer)
     triples = pin(q_kg_e2e_triples(spark, sf_dir))
     g = triples.select(
         F.col("subj_url").alias("src"), F.col("obj_url").alias("dst"))

@@ -1,6 +1,8 @@
 """Fusion (P16-P22) and conflict resolution (P23-P24) semantics."""
 
+import pyarrow as pa
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from waka_spark import schemas
 from waka_spark.config import FusionConfig
@@ -153,22 +155,20 @@ def test_overlap_inclusive():
 def test_conflict_resolution_intra_entity(spark):
     """P23: within one entity, overlapping mentions keep the one closer to
     the label (kg_construction.py:119-140)."""
-    import json
-
-    import pandas as pd
-
-    pdf = pd.DataFrame([{
-        "conv_id": "c1", "url": "Q1", "label": "Weimar",
-        "mentions_json": json.dumps([
+    table = pa.Table.from_pylist([{
+        "conv_id": "c1", "url": "Q1", "label": "Weimar", "description": None,
+        "score": 0.9, "e_type": "entity",
+        "mentions": [
             {"start_idx": 0, "end_idx": 6, "text": "Weimar", "e_type": "GPE",
              "label": "Weimar", "description": None, "score": 0.9},
             {"start_idx": 0, "end_idx": 26, "text": "Bauhaus-Universität Weimar",
              "e_type": "ORG", "label": "Weimar", "description": None,
              "score": 0.8},
-        ]),
-    }])
-    out = _resolve_group(pdf)
-    mentions = json.loads(out.iloc[0]["mentions_json"])
+        ],
+    }], schema=to_arrow_schema(schemas.ENTITIES))
+    out = _resolve_group(table)
+    assert out.schema == table.schema
+    mentions = out.to_pylist()[0]["mentions"]
     assert len(mentions) == 1 and mentions[0]["text"] == "Weimar"
 
 
@@ -199,6 +199,69 @@ def test_conflict_resolution_cross_entity(spark):
     assert kept == {"i1"}  # Q2 lost its only mention → t2 dies
     urls = {r.url for r in entities_out.collect()}
     assert urls == {"Q1", "Q3"}
+
+
+def test_conflict_resolution_native_pass_adversarial(spark):
+    """One grouped Arrow map over every participating conversation: the
+    entities' schema comes back, a clean conversation's rows come back
+    unchanged, a dirty one's rows are what ``_resolve_group`` gives on the
+    driver, and triples die with an endpoint that lost every mention.
+    Covers NULL label/description, a NULL start_idx, a non-Latin surface,
+    an entity pruned to nothing and a self-loop triple."""
+    ents = _entities(spark, [
+        # clean: no overlapping spans; NULL label and description, CJK text
+        ("clean", "Q10", None, None, 0.7, "entity",
+         [_mention(0, 2, "東京", 0.7)]),
+        ("clean", "Q11", "Москва", "city", 0.6, "entity",
+         [_mention(5, 11, "Москва", 0.6, label="Москва")]),
+        # dirty: P23 inside Q1 (both spans overlap) and P24 against Q2,
+        # whose only mention overlaps Q1's and loses; the NULL-start
+        # mention never overlaps anything and survives
+        ("dirty", "Q1", "Bauhaus-Universität Weimar", None, 0.9, "entity",
+         [_mention(0, 26, "Bauhaus-Universität Weimar", 0.9),
+          _mention(0, 7, "Bauhaus", 0.5),
+          _mention(None, 40, "Weimar", 0.4)]),
+        ("dirty", "Q2", "Weimar", "town", 0.3, "entity",
+         [_mention(20, 26, "Weimar", 0.3)]),
+        # in no triple: does not participate
+        ("dirty", "Q9", "Jena", None, 0.5, "entity",
+         [_mention(50, 54, "Jena", 0.5)]),
+    ])
+    fused = spark.createDataFrame(
+        [
+            ("clean", "t1", "i1", "Q10", "P1", "Q11", 0.8),
+            ("dirty", "t2", "i2", "Q1", "P1", "Q2", 0.7),
+            ("dirty", "t3", "i3", "Q1", "P2", "Q1", 0.6),  # self-loop
+        ],
+        "conv_id string, ts_id string, id_ string, subj_url string, "
+        "pred_url string, obj_url string, score double",
+    )
+    triples_out, entities_out = apply_conflict_resolution(fused, ents)
+
+    def fields(df):
+        return [(f.name, f.dataType) for f in df.schema.fields]
+
+    def by_url(rows):
+        return sorted((r.asDict(recursive=True) for r in rows),
+                      key=lambda r: r["url"])
+
+    assert fields(entities_out) == fields(ents)
+    out = entities_out.collect()
+
+    clean_in = [r for r in ents.collect() if r.conv_id == "clean"]
+    assert by_url(r for r in out if r.conv_id == "clean") == by_url(clean_in)
+
+    dirty_in = ents.filter(
+        (F.col("conv_id") == "dirty") & F.col("url").isin("Q1", "Q2")
+    ).toArrow()
+    expected = sorted(_resolve_group(dirty_in).to_pylist(),
+                      key=lambda r: r["url"])
+    assert by_url(r for r in out if r.conv_id == "dirty") == expected
+    assert [r["url"] for r in expected] == ["Q1"]
+    assert [m["text"] for m in expected[0]["mentions"]] == [
+        "Bauhaus-Universität Weimar", "Weimar"]
+
+    assert {r.id_ for r in triples_out.collect()} == {"i1", "i3"}
 
 
 def test_p24_incremental_matches_rescan():

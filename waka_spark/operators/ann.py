@@ -28,6 +28,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from waka_spark.plans.parallel import parallel_floor
+from waka_spark.plans.pins import pin
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -278,8 +279,6 @@ def embedding_cosine_pairs(
     deferred — near-identical vectors still meet in other bands unless hot
     everywhere). Use ``lsh_bucket_stats`` to see what a cap drops before
     committing to one. Default None = every bucket participates."""
-    from waka_spark.plans.pins import pin
-
     comps = _collected_planes(embeddings, vec_col, n_bands * band_planes)
     # the tagged frame feeds both self-join sides (plus the occupancy
     # guard when capped) — pin it, or every consumer re-runs the
@@ -839,7 +838,7 @@ def semantic_dedup(
     cents_df = kmeans_fit(embeddings, k, n_iters, id_col, vec_col)
     # assigned feeds three plan branches (both self-join sides + the final
     # flag join) — persist, or each branch replays the k-means assign scan.
-    assigned = kmeans_assign(embeddings, cents_df, id_col, vec_col).persist()
+    assigned = pin(kmeans_assign(embeddings, cents_df, id_col, vec_col))
 
     a = assigned.select(
         F.col("vec_id").alias("id_a"), F.col("embedding").alias("vec_a"),
@@ -1065,14 +1064,13 @@ def covariance_matrix(
     # mean_j) — persist it or each consumer replays the corpus GEMM scan;
     # it is dim(dim+3)/2 rows regardless of corpus size
     embeddings = parallel_floor(embeddings, vec_col)
-    sums = (
+    sums = pin(
         embeddings.select(
             F.transform(F.col(vec_col), lambda x: x.cast("double"))
             .alias("_vec"))
         .mapInPandas(partials, "i int, j int, s double, cnt long")
         .groupBy("i", "j")
         .agg(F.sum("s").alias("s"), F.sum("cnt").alias("cnt"))
-        .persist()
     )
     # j = -1 rows are the per-coordinate sums (and carry the row count)
     means = sums.filter(F.col("j") == -1).select(

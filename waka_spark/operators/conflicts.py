@@ -15,12 +15,13 @@ entities appearing in triples get their mention lists arbitrated:
   die, and mention-less entities are pruned (kg_construction.py:151-155).
 
 This is inherently iterative with data-dependent order — per *conversation*
-the data is tiny, so it runs as an ``applyInPandas`` grouped map (exact
-Python semantics, Arrow-batched, one task per conv partition). The
-reference's two nondeterminisms — ``set``-ordered conflict lists and
-``list(set())`` entity order — are replaced by explicit tie-breaks
-(documented in SURVEY.md §4): entities ordered by url; conflicts ordered by
-(score, url, start_idx, end_idx).
+the data is tiny, so every participating conversation goes through one
+``applyInArrow`` grouped map over the native ``mentions array<struct>``
+column: one Python crossing, exact Python semantics, the entities' schema
+in and out. The reference's two nondeterminisms — ``set``-ordered conflict
+lists and ``list(set())`` entity order — are replaced by explicit
+tie-breaks (documented in SURVEY.md §4): entities ordered by url; conflicts
+ordered by (score, url, start_idx, end_idx).
 
 Cross-conversation entity resolution at whole-graph scale is the separate
 union-find pass (plans/unionfind.py).
@@ -29,14 +30,13 @@ union-find pass (plans/unionfind.py).
 from __future__ import annotations
 
 import heapq
-import json
 from collections import defaultdict
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-RESOLVED_SCHEMA = "conv_id string, url string, label string, mentions_json string"
+from waka_spark.plans.pins import pin
 
 
 def _levenshtein(a: str, b: str) -> int:
@@ -206,22 +206,19 @@ def _resolve_p24(live: list[dict]) -> None:
             adj[nb].discard(nid)
 
 
-def _resolve_group(pdf: pd.DataFrame) -> pd.DataFrame:
-    entities = []
-    for _, row in pdf.sort_values("url").iterrows():
-        entities.append({
-            "conv_id": row["conv_id"],
-            "url": row["url"],
-            "label": row["label"] if pd.notna(row["label"]) else None,
-            "mentions": json.loads(row["mentions_json"]),
-        })
+def _resolve_group(table: pa.Table) -> pa.Table:
+    """One conversation's entities in, its surviving entities out (same
+    schema); only ``mentions`` changes, every other column passes through."""
+    entities = sorted(
+        table.to_pylist(), key=lambda e: (e["url"] is None, e["url"] or "")
+    )
 
     # ---- P23: intra-entity overlap pruning over a snapshot ----------------
     # the sweep finds the overlapping-pair set; processing the pairs in
     # (i, j) snapshot order reproduces the reference's nested-loop order
     # exactly (kg_construction.py:119-140)
     for entity in entities:
-        snapshot = entity["mentions"][:]
+        snapshot = list(entity["mentions"] or ())
         items = [
             (m["start_idx"], m["end_idx"], i, i)
             for i, m in enumerate(snapshot)
@@ -254,56 +251,15 @@ def _resolve_group(pdf: pd.DataFrame) -> pd.DataFrame:
     live = [e for e in entities if e["mentions"]]
     _resolve_p24(live)
 
-    out = [
-        {
-            "conv_id": e["conv_id"],
-            "url": e["url"],
-            "label": e["label"],
-            "mentions_json": json.dumps(e["mentions"], sort_keys=True),
-        }
-        for e in entities
-        if e["mentions"]
-    ]
-    return pd.DataFrame(
-        out, columns=["conv_id", "url", "label", "mentions_json"]
-    )
+    survivors = [e for e in entities if e["mentions"]]
+    return pa.Table.from_pylist(survivors, schema=table.schema)
 
 
-def resolve_conflicts(entities_with_mentions: DataFrame) -> DataFrame:
-    """entities(conv_id, url, label, mentions array<struct>) → surviving
-    entities with pruned mention lists (as JSON, exploded by the caller)."""
-    prepared = entities_with_mentions.select(
-        "conv_id", "url", "label", F.to_json("mentions").alias("mentions_json")
-    )
-    return prepared.groupBy("conv_id").applyInPandas(
-        _resolve_group, RESOLVED_SCHEMA
-    )
-
-
-def conflicted_conversations(participating: DataFrame) -> DataFrame:
-    """conv_ids containing at least one overlapping mention pair, found with
-    a single window pass: in per-conv start-order, an overlap exists iff
-    some mention's start_idx <= the running max end_idx of its predecessors
-    (inclusive overlap, kg.py:90-91). One shuffle, no pair materialization."""
-    from pyspark.sql import Window
-
-    spans = participating.select(
-        "conv_id", F.explode("mentions").alias("m")
-    ).select(
-        "conv_id",
-        F.col("m")["start_idx"].alias("start_idx"),
-        F.col("m")["end_idx"].alias("end_idx"),
-    ).filter(F.col("start_idx").isNotNull() & F.col("end_idx").isNotNull())
-    w = (
-        Window.partitionBy("conv_id")
-        .orderBy("start_idx", "end_idx")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    return (
-        spans.withColumn("_prev_max_end", F.max("end_idx").over(w))
-        .filter(F.col("start_idx") <= F.col("_prev_max_end"))
-        .select("conv_id")
-        .distinct()
+def resolve_conflicts(entities: DataFrame) -> DataFrame:
+    """entities(conv_id, url, ..., mentions array<struct>) → the surviving
+    entities with pruned mention lists, in the input's schema."""
+    return entities.groupBy("conv_id").applyInArrow(
+        _resolve_group, entities.schema
     )
 
 
@@ -313,53 +269,22 @@ def apply_conflict_resolution(
     """Run conflict resolution over the entities referenced by the fused
     triples; return (surviving triples, surviving entities-with-mentions).
 
-    Scale design: the exact per-conv Python algorithm only runs for
-    conversations that actually contain an overlapping mention pair
-    (window-detected); conflict-free conversations — the overwhelming
-    majority at corpus scale — pass through untouched (the algorithm is the
-    identity on them, so the output is bit-identical).
-
     Triples survive iff both endpoints kept at least one mention
-    (kg_construction.py:151-155) — realized as two semi joins.
+    (kg_construction.py:151-155) — realized as two semi joins on the
+    resolved entities, which are pinned so the grouped map runs once for
+    both outputs.
     """
     used_urls = (
         fused_triples.select("conv_id", F.col("subj_url").alias("url"))
         .unionByName(fused_triples.select("conv_id", F.col("obj_url").alias("url")))
         .distinct()
     )
-    from waka_spark.plans.pins import pin
-
-    participating = pin(entities.join(
+    participating = entities.join(
         used_urls, on=["conv_id", "url"], how="left_semi"
-    ))
-
-    conflicted = conflicted_conversations(participating)
-    clean = participating.join(conflicted, "conv_id", "left_anti")
-    dirty = participating.join(conflicted, "conv_id", "left_semi")
-
-    # multiple consumers (semi joins + entities_out): persist, or the
-    # per-conv Python grouped map runs repeatedly
-    resolved_dirty = pin(resolve_conflicts(dirty))
-
-    mention_schema = (
-        "array<struct<start_idx:int,end_idx:int,text:string,e_type:string,"
-        "label:string,description:string,score:double>>"
     )
-    dirty_entities = (
-        resolved_dirty
-        .join(
-            entities.select("conv_id", "url", "description", "score", "e_type"),
-            on=["conv_id", "url"], how="left",
-        )
-        .withColumn("mentions", F.from_json("mentions_json", mention_schema))
-        .drop("mentions_json")
-    )
-    entities_out = clean.unionByName(dirty_entities)
+    entities_out = pin(resolve_conflicts(participating))
 
-    surviving_urls = (
-        clean.select("conv_id", "url")
-        .unionByName(resolved_dirty.select("conv_id", "url"))
-    )
+    surviving_urls = entities_out.select("conv_id", "url")
     triples_out = (
         fused_triples
         .join(

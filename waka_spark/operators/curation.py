@@ -28,6 +28,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from waka_spark.plans.parallel import parallel_floor
+from waka_spark.plans.pins import pin
 
 from waka_spark.operators.dedup import normalize_text
 
@@ -614,11 +615,11 @@ def dsir_importance(
     # the bigram explode runs twice — but the B-row counts table must be
     # persisted or the weight lineage (weights ⋅ totals) replays the
     # corpus explode a third and fourth time
-    counts = feats.groupBy("bucket").agg(
+    counts = pin(feats.groupBy("bucket").agg(
         F.sum(F.when(F.col("_is_target"), 1).otherwise(0))
         .cast("long").alias("t_cnt"),
         F.count("*").cast("long").alias("r_cnt"),
-    ).persist()
+    ))
     totals = counts.agg(
         F.sum("t_cnt").alias("t_tot"), F.sum("r_cnt").alias("r_tot"))
     ab = F.lit(alpha * n_buckets)

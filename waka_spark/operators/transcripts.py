@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from waka_spark.plans.pins import cut, pin
+
 
 def _n_tokens(text_col: str):
     words = F.split(
@@ -451,8 +453,6 @@ def conv_near_dups(
     # the corpus): the consumers are sibling branches of ONE action, and a
     # lazy persist makes them race to populate the cold cache, each
     # replaying the corpus scan + md5 pass (see graph.random_walks).
-    from waka_spark.plans.pins import cut
-
     turns = cut(
         transcripts.select(
             F.col(conv_col).alias("conv_id"),
@@ -657,26 +657,23 @@ def prepare_sft(
     # the gate frames derive from `transcripts` itself, so their conv_id
     # attributes alias the left side's — rename each to a fresh name to
     # keep the join conditions unambiguous
-    ok = (
+    ok = pin(
         structure_check(transcripts, **cols)
         .filter(F.col("valid"))
         .select(F.col("conv_id").alias("_ok_conv"))
-        .persist()
     )
-    canon = (
+    canon = pin(
         conv_exact_dups(
             transcripts, conv_col=conv_col, turn_col=turn_col,
             text_col=text_col)
         .filter(~F.col("is_dup"))
         .select(F.col("conv_id").alias("_canon_conv"))
-        .persist()
     )
-    loopy = (
+    loopy = pin(
         assistant_loops(
             transcripts, min_repeats=min_loop_repeats, **cols)
         .select(F.col("conv_id").alias("_loop_conv"))
         .distinct()
-        .persist()
     )
     kept = (
         transcripts.join(

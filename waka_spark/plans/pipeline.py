@@ -218,7 +218,7 @@ class KGPipeline:
         # Resolve ONCE for both outputs (the reference's fusion likewise
         # emits triples and entities from one pass, kg_construction.py:
         # 102-109): the pair shares the pinned per-conv fixpoint, so the
-        # grouped applyInPandas executes once per fresh run.
+        # grouped applyInArrow executes once per fresh run.
         resolved_triples, resolved_entities = _memo_pair(
             lambda: conflicts.apply_conflict_resolution(fused, ents))
         triples = stage("triples", resolved_triples)

@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from waka_spark.plans.pins import pin
+
 # RED-FM line shape (red_fm.py:30-89): entities have surfaceform/boundaries/
 # uri; relations have subject/predicate/object sub-objects
 _ENTITY = T.StructType([
@@ -135,7 +137,7 @@ def read_transcripts_jsonl(
         T.StructField("ts", T.TimestampType()),
         T.StructField("_corrupt", T.StringType()),
     ])
-    raw = (
+    raw = pin(
         spark.read.schema(schema)
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt")
@@ -145,7 +147,6 @@ def read_transcripts_jsonl(
         # the parsed frame is the documented fix. At ingest scale the
         # equivalent is landing the parsed batch to staging parquet and
         # splitting from there — same materialization, durable.
-        .persist()
     )
     good = raw.filter(F.col("_corrupt").isNull())
     bad = raw.filter(F.col("_corrupt").isNotNull())
