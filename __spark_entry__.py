@@ -384,10 +384,9 @@ def q_kg_conflict_p23(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_kg_unionfind(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """North-rule canonicalization: distributed connected components
-    (plans/unionfind.py, iterative min-label propagation) over the
-    customer→nation→region membership graph; oracle = DuckDB recursive
-    CTE transitive closure."""
+    """North-rule canonicalization: connected components
+    (plans/unionfind.py) over the customer→nation→region membership
+    graph; oracle = DuckDB recursive CTE transitive closure."""
     from waka_spark.plans.unionfind import connected_components
 
     c = _t(spark, sf_dir, "customer").select(

@@ -157,12 +157,125 @@ def test_checkpoint_partial_resume(spark, synth_small, tmp_path):
     assert got == want
 
 
-def test_unionfind_long_chain_converges_fast(spark):
+def _count_jobs(spark, fn):
+    """``(fn(), Spark jobs fn ran)``, from statusTracker under a job group
+    of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _not_recomputed():
+    raise AssertionError("a committed stage must resume, not recompute")
+
+
+def test_checkpoint_commit_is_one_job_and_resume_none(spark, tmp_path):
+    """statusTracker pin: a stage commit runs exactly its write job — the
+    row count is observed by the write, the per-file counters come from
+    the Parquet footers and the read-back uses the committed schema — and
+    a resume runs no job at all."""
+    from pyspark.sql import functions as F
+
+    df = spark.range(0, 1000, numPartitions=4).select(
+        "id", (F.col("id") % 7).alias("k"), F.lit("x").alias("tag"))
+    mgr = CheckpointManager(spark, str(tmp_path), "jobs")
+    out, n_commit = _count_jobs(spark, lambda: mgr.stage("s", lambda: df))
+    assert n_commit == 1
+    resumed = CheckpointManager(spark, str(tmp_path), "jobs")
+    back, n_resume = _count_jobs(
+        spark, lambda: resumed.stage("s", _not_recomputed))
+    assert n_resume == 0
+    assert resumed.stages_resumed == ["s"]
+    inferred = spark.read.parquet(mgr.manifest("s")["output_path"])
+    assert out.schema == back.schema == inferred.schema
+    assert _rows(back) == _rows(df)
+
+
+def test_checkpoint_counters_are_the_written_files(spark, tmp_path):
+    """``rows_out`` (observed during the write) equals the sum of the
+    footer row counts in ``partitions``: one entry per written file."""
+    df = spark.range(0, 1000, numPartitions=4).filter("id % 3 = 0")
+    mgr = CheckpointManager(spark, str(tmp_path), "counters")
+    mgr.stage("s", lambda: df)
+    m = mgr.manifest("s")
+    assert m["rows_out"] == 334
+    assert sum(p["rows"] for p in m["partitions"]) == m["rows_out"]
+    data_files = sorted(f for f in Path(m["output_path"]).iterdir()
+                        if f.suffix == ".parquet")
+    assert [p["file"] for p in m["partitions"]] == [f.name for f in data_files]
+    assert len(data_files) == 4
+
+
+@pytest.mark.parametrize("make_empty", [
+    lambda spark: spark.range(10).filter("id < 0").selectExpr(
+        "id", "cast(id as string) AS s"),
+    lambda spark: spark.createDataFrame(
+        spark.sparkContext.emptyRDD(), "id bigint, s string"),
+], ids=["filtered", "no-partitions"])
+def test_checkpoint_empty_stage(spark, tmp_path, make_empty):
+    """A 0-row stage commits ``rows_out == 0`` without blocking on the
+    write's observation, and resumes as 0 rows with the same schema."""
+    import threading
+
+    mgr = CheckpointManager(spark, str(tmp_path), "empty")
+    done = {}
+    worker = threading.Thread(
+        target=lambda: done.setdefault(
+            "out", mgr.stage("s", lambda: make_empty(spark))),
+        daemon=True)
+    worker.start()
+    worker.join(timeout=120)
+    assert "out" in done, "empty-stage commit did not return"
+    assert mgr.manifest("s")["rows_out"] == 0
+    resumed = CheckpointManager(spark, str(tmp_path), "empty")
+    back = resumed.stage("s", _not_recomputed)
+    assert back.count() == 0
+    assert back.schema == done["out"].schema
+
+
+def test_checkpoint_resumes_manifest_without_schema(spark, tmp_path):
+    """A manifest written before ``schema`` was recorded still resumes,
+    by schema inference, to the same frame."""
+    from pyspark.sql import functions as F
+
+    df = spark.range(0, 50, numPartitions=2).select(
+        "id", F.array("id").alias("ids"))
+    out = CheckpointManager(spark, str(tmp_path), "legacy").stage(
+        "s", lambda: df)
+    path = tmp_path / "legacy" / "s" / "manifest.json"
+    manifest = json.loads(path.read_text())
+    del manifest["schema"]
+    path.write_text(json.dumps(manifest))
+    back = CheckpointManager(spark, str(tmp_path), "legacy").stage(
+        "s", _not_recomputed)
+    assert back.schema == out.schema
+    assert _rows(back) == _rows(df)
+
+
+def _distributed_only(monkeypatch):
+    """Force connected_components onto its distributed rounds: a zero
+    broadcast budget leaves no graph small enough for the driver path."""
+    from waka_spark.plans import unionfind
+
+    monkeypatch.setattr(unionfind, "broadcast_rows", lambda df: 0)
+
+
+def test_unionfind_long_chain_converges_fast(spark, monkeypatch):
     """A 300-node chain converges under a 20-round budget: pointer jumping
     makes rounds O(log diameter), where plain min-propagation would need
     ~300 rounds."""
     from waka_spark.plans.unionfind import connected_components
 
+    _distributed_only(monkeypatch)
     edges = spark.createDataFrame(
         [(f"n{i:04d}", f"n{i + 1:04d}") for i in range(300)],
         "src string, dst string",
@@ -170,6 +283,90 @@ def test_unionfind_long_chain_converges_fast(spark):
     got = connected_components(edges, max_iter=20).collect()
     assert len(got) == 301
     assert {r.component for r in got} == {"n0000"}
+
+
+def _random_edges(seed, n_nodes=60, n_edges=70):
+    """A random sparse graph with self-loops, duplicate edges and rows
+    with a NULL endpoint mixed in."""
+    import random
+
+    rnd = random.Random(seed)
+    pairs = [(rnd.randrange(n_nodes), rnd.randrange(n_nodes))
+             for _ in range(n_edges)]
+    pairs += [(5, 5), (n_nodes + 1, n_nodes + 1)]   # self-loops
+    pairs += pairs[:10] + [(b, a) for a, b in pairs[10:20]]  # duplicates
+    pairs += [(None, 3), (7, None), (None, n_nodes + 2)]  # NULL endpoints
+    return pairs
+
+
+def _chain(n=300):
+    return [(i, i + 1) for i in range(n)]
+
+
+def _both_paths(spark, monkeypatch, pairs, id_type):
+    """connected_components of ``pairs`` on the driver path, then on the
+    distributed path: (rows, [(name, dataType)]) for each, and whether
+    each call solved on the driver."""
+    from waka_spark.plans import unionfind
+
+    if id_type == "string":
+        pairs = [tuple(None if x is None else f"n{x:04d}" for x in p)
+                 for p in pairs]
+    edges = spark.createDataFrame(pairs, f"src {id_type}, dst {id_type}")
+    solved = []
+    orig = unionfind._driver_components
+
+    def spy(*args):
+        solved.append(True)
+        return orig(*args)
+
+    monkeypatch.setattr(unionfind, "_driver_components", spy)
+    out = []
+    for force_distributed in (False, True):
+        with monkeypatch.context() as m:
+            if force_distributed:
+                m.setattr(unionfind, "broadcast_rows", lambda df: 0)
+            n_solved = len(solved)
+            cc = unionfind.connected_components(edges)
+            out.append((
+                _rows(cc), [(f.name, f.dataType) for f in cc.schema.fields],
+                len(solved) > n_solved))
+    return out
+
+
+@pytest.mark.parametrize("id_type,graph", [
+    ("string", lambda: _random_edges(0)),
+    ("string", lambda: _random_edges(1)),
+    ("bigint", lambda: _random_edges(2)),
+    ("int", lambda: _random_edges(3)),
+    ("string", _chain),
+    ("bigint", _chain),
+], ids=["string-random0", "string-random1", "long-random", "int-random",
+        "string-chain", "long-chain"])
+def test_unionfind_driver_and_distributed_paths_agree(
+        spark, monkeypatch, id_type, graph):
+    """Below the broadcast budget connected_components solves on the
+    driver; forced onto the distributed rounds, the same input must give
+    identical rows and an identical (name, dataType) schema. The graphs
+    carry self-loops, duplicate edges and NULL endpoints."""
+    pairs = graph()
+    (d_rows, d_schema, on_driver), (x_rows, x_schema, off_driver) = (
+        _both_paths(spark, monkeypatch, pairs, id_type))
+    assert on_driver and not off_driver
+    assert d_rows == x_rows and d_rows
+    assert d_schema == x_schema
+    # every node is labelled with its component's minimum node id
+    assert all(comp <= node for node, comp in d_rows)
+
+
+def test_unionfind_double_ids_stay_distributed(spark, monkeypatch):
+    """Python orders NaN unlike Spark, so double ids never take the
+    driver path, whatever the graph's size."""
+    [(rows, schema, on_driver), _] = _both_paths(
+        spark, monkeypatch, [(1.0, 2.0), (2.0, 3.0), (7.0, 8.0)], "double")
+    assert not on_driver
+    assert rows == [(1.0, 1.0), (2.0, 1.0), (3.0, 1.0), (7.0, 7.0),
+                    (8.0, 7.0)]
 
 
 def test_bucketed_join_is_exchange_and_sort_free(spark, tmp_path):
@@ -214,13 +411,14 @@ def test_bucketed_join_is_exchange_and_sort_free(spark, tmp_path):
         spark.sql(f"DROP TABLE IF EXISTS {edges_t}")
 
 
-def test_iterative_ops_release_superseded_round_state(spark):
+def test_iterative_ops_release_superseded_round_state(spark, monkeypatch):
     """Iterative algorithms must not accumulate one checkpoint per round:
     after each returns, executor storage may hold ONLY the returned
     frame's blocks (plus any caller-owned persists from other tests) —
     at 10^9-node scale a 25-round leak evicts the rest of the job's
     cached state. plans/iterate.fixpoint and the plans/pins scopes are
-    the mechanism."""
+    the mechanism. Union-find runs its distributed rounds here, and its
+    driver path too."""
     from pyspark.sql import functions as F
 
     from waka_spark.operators.ann import mmr_topk
@@ -251,8 +449,14 @@ def test_iterative_ops_release_superseded_round_state(spark):
         [(100, [1.0, 0.0]), (101, [0.0, 1.0])],
         "q_id long, q_vec array<double>")
 
+    def distributed_components():
+        with monkeypatch.context() as m:
+            _distributed_only(m)
+            return connected_components(edges)
+
     for fn in (
         lambda: connected_components(edges),
+        distributed_components,
         lambda: pagerank(edges, n_iter=5),
         lambda: bfs_distances(edges, seeds, n_iter=4),
         lambda: label_propagation(edges, n_iter=4),

@@ -365,15 +365,16 @@ def dedup_clusters(
     """Keep-one-copy step: near-dup pairs → clusters → canonical doc.
 
     ``pairs(doc_a, doc_b)`` from any candidate generator in this module
-    become equivalence edges; connected components (plans/unionfind.py,
-    pointer-jumping min-label propagation) give every member the minimum
-    doc id of its cluster, and docs in no pair stay singleton clusters.
+    become equivalence edges; connected components (plans/unionfind.py)
+    give every member the minimum doc id of its cluster, and docs in no
+    pair stay singleton clusters.
     Output: one row per input doc — ``(id_col, canonical_id, cluster_size,
     is_canonical)``; filtering ``is_canonical`` materializes the
     deduplicated corpus.
 
-    Scale: components converge in O(log diameter) rounds over the
-    (typically tiny relative to the corpus) pair set; the full-corpus cost
+    Scale: the pair set is typically tiny relative to the corpus — within
+    the broadcast budget it is solved on the driver, above it components
+    converge in O(log diameter) rounds; the full-corpus cost
     is one left join on the id plus one shuffle on ``canonical_id`` for the
     size count.
     """

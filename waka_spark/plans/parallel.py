@@ -22,18 +22,31 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def row_bytes(df: DataFrame) -> int:
+    """Estimated bytes per row of ``df``: the schema's default size
+    (Catalyst's own per-type estimate: 20 B per string, 8 B per long or
+    double)."""
+    return df._jdf.schema().defaultSize()
+
+
+def broadcast_rows(df: DataFrame) -> int:
+    """Rows of ``df``'s schema that fit the 64 MB broadcast budget.
+    :func:`maybe_broadcast` hints frames under it, and
+    ``plans/unionfind.connected_components`` solves edge sets under it on
+    the driver."""
+    return 64 * 1024 * 1024 // row_bytes(df)
+
+
 def maybe_broadcast(df: DataFrame, n_rows: int | None) -> DataFrame:
     """Broadcast-hint ``df`` when a KNOWN row count proves it fits in the
-    session's 64 MB broadcast budget; identity otherwise. For iterative
-    operators whose per-round state is a checkpointed ExistingRDD with
-    unknown stats, the planner otherwise falls back to sort-merge and
-    re-shuffles + re-sorts the big side every round — the caller usually
-    has (or can count, near-free on a materialized frame) the exact state
-    size, which makes this decision precise where stats cannot be. The
-    row width is the schema's default size (Catalyst's own per-type
-    estimate: 20 B per string, 8 B per long or double)."""
-    if n_rows is not None and (
-            n_rows * df._jdf.schema().defaultSize() <= 64 * 1024 * 1024):
+    session's broadcast budget (:func:`broadcast_rows`); identity
+    otherwise. For iterative operators whose per-round state is a
+    checkpointed ExistingRDD with unknown stats, the planner otherwise
+    falls back to sort-merge and re-shuffles + re-sorts the big side every
+    round — the caller usually has (or can count, near-free on a
+    materialized frame) the exact state size, which makes this decision
+    precise where stats cannot be."""
+    if n_rows is not None and n_rows <= broadcast_rows(df):
         return F.broadcast(df)
     return df
 

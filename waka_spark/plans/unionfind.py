@@ -6,16 +6,30 @@ isolated KG (kg_construction.py:267-282). At 10^12-turn scale the same
 real-world entity surfaces in millions of conversations; canonicalization
 groups equivalent node URLs and rewrites edges to canonical endpoints.
 
-Algorithm: iterative min-label propagation with pointer jumping — each
-round every node adopts the minimum component label among itself and its
-neighbors (one join + one agg), then follows the label *of its label* (one
-more join — path halving). Labels are node ids, so the halving step
-compresses two hops per round: chains converge in O(log diameter) rounds
-instead of O(diameter), the same contraction idea as large-star/small-star
-(Kiveris et al., "Connected Components in MapReduce and Beyond",
-SoCC'14). Same-as cliques still converge in 1-2 rounds. Each round is
-``localCheckpoint``-ed to cut lineage growth (SURVEY.md §4); a 300-node
-chain is pinned under a 20-round budget in tests/test_scale_machinery.py.
+Two paths, one function. The symmetric edge set is cut once; then:
+
+- Below the broadcast budget (``plans/parallel.broadcast_rows``: the
+  edge rows that fit 64 MB) and for string or integral ids, one bounded
+  collect brings the edges to the driver, and union-find with path
+  halving and min-root union labels every node. The SparkER entity
+  resolution pipeline (EDBT 2019) clusters matches with the same step.
+  Every round of the distributed path costs several Spark jobs whose fixed
+  overhead, not data, dominates a small graph.
+- Above it, iterative min-label propagation with pointer jumping — each
+  round every node adopts the minimum component label among itself and
+  its neighbors (one join + one agg), then follows the label *of its
+  label* (one more join — path halving). Labels are node ids, so the
+  halving step compresses two hops per round: chains converge in
+  O(log diameter) rounds instead of O(diameter), the same contraction
+  idea as large-star/small-star (Kiveris et al., "Connected Components in
+  MapReduce and Beyond", SoCC'14). Same-as cliques still converge in 1-2
+  rounds. Each round is ``localCheckpoint``-ed to cut lineage growth
+  (SURVEY.md §4); a 300-node chain is pinned under a 20-round budget in
+  tests/test_scale_machinery.py.
+
+Both label a node with the minimum node id of its component, so they
+return the same rows and schema (tests/test_scale_machinery.py runs both
+on the same graphs).
 
 Equivalence edges come from ``same_as_edges``: explicit owl:sameAs-style
 pairs (e.g. from the alias dictionary mapping multiple URLs to one QID), or
@@ -24,8 +38,46 @@ any caller-supplied relation (e.g. embedding-similarity matches).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    DataType, IntegralType, StringType, StructField, StructType)
+
+from waka_spark.plans.parallel import broadcast_rows, maybe_broadcast, row_bytes
+
+
+def _driver_components(
+    spark: SparkSession, pairs: pa.Table, id_type: DataType,
+) -> DataFrame:
+    """(node, component) of the symmetric edge table ``pairs(a, b)`` by
+    union-find on the driver: path halving, and each union hangs the
+    larger root under the smaller, so every root is its set's minimum id
+    — the label the distributed rounds converge to."""
+    parent: dict = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in zip(pairs.column("a").to_pylist(),
+                    pairs.column("b").to_pylist()):
+        ra = find(parent.setdefault(a, a))
+        rb = find(parent.setdefault(b, b))
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    nodes = list(parent)
+    arrow_type = pairs.schema.field("a").type
+    out = pa.table({
+        "node": pa.array(nodes, arrow_type),
+        "component": pa.array([find(n) for n in nodes], arrow_type),
+    })
+    return spark.createDataFrame(out, StructType([
+        StructField("node", id_type),
+        StructField("component", id_type),
+    ]))
 
 
 def connected_components(
@@ -38,10 +90,10 @@ def connected_components(
     (string or numeric ordering) of the node's connected component.
 
     Isolated nodes absent from ``edges`` are their own components (callers
-    left-join and coalesce to the node id).
+    left-join and coalesce to the node id). Edges with a NULL endpoint and
+    self-loops contribute no node.
     """
     from waka_spark.plans.iterate import fixpoint
-    from waka_spark.plans.parallel import maybe_broadcast
     from waka_spark.plans.pins import cut, keep, pin_scope, release
 
     with pin_scope():
@@ -57,6 +109,20 @@ def connected_components(
             # shingle-join pair generation — measured 41.5s -> ~8s for
             # dedup_clusters at sf0.1)
         )
+        # an edge set inside the broadcast budget is solved on the driver:
+        # one bounded collect instead of several jobs per round. Only for
+        # ids whose Python ordering is Spark's (binary-collated strings,
+        # integral types); a double's NaN orders differently. The
+        # coalesce(1) makes the collect one task that reads the cut's
+        # blocks in order and stops at budget + 1 rows, so probing a huge
+        # edge set costs at most the budget; a bare limit would first
+        # take budget + 1 rows from EVERY partition.
+        id_type = sym.schema["a"].dataType
+        if id_type == StringType() or isinstance(id_type, IntegralType):
+            budget = broadcast_rows(sym)
+            pairs = sym.coalesce(1).limit(budget + 1).toArrow()
+            if pairs.num_rows <= budget:
+                return _driver_components(edges.sparkSession, pairs, id_type)
         # parallel floor on the materialized edge set: AQE often coalesces
         # the distinct's output to ~1 partition for small-byte graphs, and
         # the cut freezes that — every round's neighbor join then probes
@@ -65,7 +131,8 @@ def connected_components(
         # large graph keeps its >= cores partitions.
         sc = edges.sparkSession.sparkContext
         if sym.rdd.getNumPartitions() < sc.defaultParallelism:
-            if sym.count() * 48 < sc.defaultParallelism * 128 * 1024**2:
+            if (sym.count() * row_bytes(sym)
+                    < sc.defaultParallelism * 128 * 1024**2):
                 respread = cut(
                     sym.repartition(2 * sc.defaultParallelism, "b"))
                 release(sym)

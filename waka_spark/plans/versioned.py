@@ -30,6 +30,8 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
+from waka_spark.plans.checkpoint import counted_write
+
 
 class VersionedTable:
     """A parquet table with Iceberg-like snapshot semantics.
@@ -79,13 +81,14 @@ class VersionedTable:
         ``meta`` entries are recorded in the manifest — e.g. the streaming
         bridge stamps ``batch_id`` so an at-least-once foreachBatch replay
         can recognize an already-applied batch (Iceberg's
-        write-ahead-commit-property idiom)."""
+        write-ahead-commit-property idiom). The manifest's ``rows`` is
+        observed by the write job itself
+        (``plans/checkpoint.counted_write``), not read back."""
         cur = self.current_version()
         version = 0 if cur is None else cur + 1
         out = df.coalesce(n_files) if n_files else df
         vdir = os.path.join(self.path, f"v{version}")
-        out.write.mode("overwrite").parquet(vdir)
-        n_rows = df.sparkSession.read.parquet(vdir).count()
+        n_rows = counted_write(out, vdir)
         files = [f for f in os.listdir(vdir) if f.endswith(".parquet")]
         manifest = {
             "version": version,
