@@ -655,8 +655,8 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup pairs by 3-gram shingle Jaccard >= 0.8 (shingle-join
-    candidate generation, operators/dedup.py)."""
+    """Near-dup pairs by 3-gram shingle Jaccard >= 0.8 (prefix-filter
+    shingle-join candidate generation, operators/dedup.py)."""
     from waka_spark.operators.dedup import ngram_jaccard_pairs
 
     return ngram_jaccard_pairs(
@@ -664,11 +664,12 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_dedup_ngram_jaccard_guarded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Skew-guarded near-dup pairs: shingles appearing in >20 docs are
-    dropped *before* the candidate equi-join (the 100-TB guard against
-    stopword-shingle fan-out — a shingle in f docs contributes f^2 join
-    rows; Jaccard is recomputed over the surviving shingle sets on both
-    engines, so the guard itself is oracle-checked)."""
+    """Frequency-filtered near-dup pairs: shingles appearing in >20 docs
+    are dropped *before* the candidate join. The prefix-filter join does
+    not need this to stay linear in a frequent shingle (it sorts those
+    last and rarely joins on them); the filter is semantic: Jaccard is
+    recomputed over the surviving shingle sets on both engines, so the
+    filter itself is oracle-checked."""
     from waka_spark.operators.dedup import ngram_jaccard_pairs
 
     return ngram_jaccard_pairs(

@@ -116,27 +116,3 @@ def test_mixture_plan_surfaces_missing_target_domain(spark):
     # supplied domains keep real rates (en target 50 over 6 tokens)
     assert plan["en"].n_epochs == pytest.approx(50 / 6, abs=1e-4)
     assert plan["en"].sampling_rate == 1.0
-
-
-def test_minhash_recall_sample_fraction(spark):
-    """VERDICT #8: the sampling contract — recall measured on a
-    deterministic Bernoulli corpus sample; fraction 1.0 equals the exact
-    measurement, and a real fraction cuts the doc set it considers."""
-    from waka_spark.operators.dedup import minhash_recall
-
-    docs = spark.createDataFrame(
-        [(i, "the quick brown fox jumps over the lazy dog " + ("x" * (i % 3)))
-         for i in range(30)],
-        "doc_id long, text string",
-    )
-    exact = minhash_recall(docs, threshold=0.5).collect()[0]
-    full = minhash_recall(docs, threshold=0.5, sample_fraction=1.0).collect()[0]
-    assert (exact.n_true_pairs, exact.n_caught) == (
-        full.n_true_pairs, full.n_caught)
-    assert exact.n_true_pairs > 0
-    sampled = minhash_recall(
-        docs, threshold=0.5, sample_fraction=0.4, seed=11).collect()[0]
-    assert sampled.n_true_pairs < exact.n_true_pairs
-    # recall stays a valid probability (NULL only when nothing to measure)
-    if sampled.n_true_pairs:
-        assert 0.0 <= sampled.recall <= 1.0

@@ -263,6 +263,176 @@ def test_dedup_clusters(spark):
     assert [rows[i].is_canonical for i in range(4)] == [True, False, False, True]
 
 
+def _reference_overlap(docs, n=3, max_shingle_freq=None):
+    """The all-shingle self-join the prefix join replaced, kept here as
+    the reference: (doc_a, doc_b, n_common, n_a, n_b) over the distinct
+    (doc_id, shingle) rows, for every pair sharing a shingle."""
+    from waka_spark.operators.dedup import word_shingles
+
+    s = (
+        docs.select("doc_id",
+                    F.explode(word_shingles(F.col("text"), n)).alias("shingle"))
+        .filter(F.col("shingle") != "")
+        .distinct()
+    )
+    if max_shingle_freq is not None:
+        keep = (s.groupBy("shingle").count()
+                .filter(F.col("count") <= max_shingle_freq).select("shingle"))
+        s = s.join(keep, "shingle")
+    sizes = s.groupBy("doc_id").agg(F.count("*").alias("n"))
+    inter = (
+        s.select(F.col("doc_id").alias("doc_a"), "shingle")
+        .join(s.select(F.col("doc_id").alias("doc_b"), "shingle"), "shingle")
+        .filter(F.col("doc_a") < F.col("doc_b"))
+        .groupBy("doc_a", "doc_b")
+        .agg(F.count("*").alias("n_common"))
+    )
+    return (
+        inter
+        .join(sizes.select(F.col("doc_id").alias("doc_a"),
+                           F.col("n").alias("n_a")), "doc_a")
+        .join(sizes.select(F.col("doc_id").alias("doc_b"),
+                           F.col("n").alias("n_b")), "doc_b")
+    )
+
+
+def _reference_jaccard(docs, threshold, max_shingle_freq=None):
+    return (
+        _reference_overlap(docs, max_shingle_freq=max_shingle_freq)
+        .withColumn("jaccard", F.round(
+            F.col("n_common")
+            / (F.col("n_a") + F.col("n_b") - F.col("n_common")), 6))
+        .filter(F.col("jaccard") >= threshold)
+        .select("doc_a", "doc_b", "n_common", "jaccard")
+    )
+
+
+def _reference_containment(docs, threshold, max_shingle_freq=None):
+    return (
+        _reference_overlap(docs, max_shingle_freq=max_shingle_freq)
+        .withColumn("cont_a", F.round(F.col("n_common") / F.col("n_a"), 6))
+        .withColumn("cont_b", F.round(F.col("n_common") / F.col("n_b"), 6))
+        .filter((F.col("cont_a") >= threshold)
+                | (F.col("cont_b") >= threshold))
+        .select("doc_a", "doc_b", "n_common", "cont_a", "cont_b")
+    )
+
+
+def _adversarial_docs(spark):
+    """The NULL-doc_id row and every document from 5 on share the shingle
+    "shared boiler plate"; the rest covers the prefix filter's edges."""
+    import random
+
+    rng = random.Random(7)
+    vocab = ["ab", "cd", "ef", "gh", "ij", "kl"]
+    head = "Shared  boiler plate"
+    rows = [
+        (None, f"{head} a b c d"),         # NULL doc_id
+        (1, None),                          # NULL text
+        (2, ""),                            # empty text
+        (3, "   "),
+        (4, "hi there"),                    # shorter than n words
+        (5, f"{head} a b c"),              # 4 shingles ...
+        (6, f"{head} a b c d"),            # ... of 6's 5: Jaccard 4/5
+        (7, f"{head} q"),                  # 2 shingles ...
+        (7, f"{head} q r s"),              # ... doc 7 spans two rows
+        (8, f"{head} q r s"),              # 8 equals 7's union: Jaccard 1
+        (9, f"{head} Q  R S"),
+        (10, f"{head} q"),                 # 10 in 8: Jaccard 2/4
+    ]
+    for i in range(11, 41):
+        words = [rng.choice(vocab) for _ in range(rng.randint(1, 7))]
+        rows.append((i, " ".join([head] + words)))
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def _same(got, want):
+    assert [(f.name, f.dataType) for f in got.schema.fields] == [
+        (f.name, f.dataType) for f in want.schema.fields]
+    assert sorted(got.collect()) == sorted(want.collect())
+
+
+def test_prefix_join_identical_to_all_shingle_self_join(spark):
+    """The prefix-filter join returns the all-shingle self-join's rows and
+    schema at the threshold edges, with and without the frequency filter."""
+    from waka_spark.operators.dedup import containment_pairs, ngram_jaccard_pairs
+
+    docs = _adversarial_docs(spark).cache()
+    for max_freq in (None, 5):
+        for t in (0.0, 0.5, 0.8, 1.0):
+            got = ngram_jaccard_pairs(docs, threshold=t,
+                                      max_shingle_freq=max_freq)
+            want = _reference_jaccard(docs, t, max_freq)
+            _same(got, want)
+            if t == 0.8 and max_freq is None:
+                # the exact-threshold pair survives
+                assert (5, 6, 4, 0.8) in [tuple(r) for r in got.collect()]
+            _same(containment_pairs(docs, threshold=t,
+                                    max_shingle_freq=max_freq),
+                  _reference_containment(docs, t, max_freq))
+    docs.unpersist()
+
+
+def test_prefix_join_is_linear_in_a_hot_shingle(spark):
+    """k documents sharing one shingle and nothing else: the prefix join
+    emits rows linear in k, where the all-shingle self-join emits k²."""
+    from waka_spark.operators.dedup import (
+        _candidates, _ranked_shingles, ngram_jaccard_pairs)
+
+    def docs(k):
+        return spark.createDataFrame(
+            [(i, f"hot shared phrase u{i}a u{i}b u{i}c u{i}d")
+             for i in range(k)], "doc_id long, text string")
+
+    def join_rows(k):
+        ranked = _ranked_shingles(docs(k), "doc_id", "text", 3, None)
+        return _candidates(ranked, 0.8).count()
+
+    assert join_rows(200) == 4 * join_rows(50)
+    assert _reference_overlap(docs(200)).count() == 200 * 199 // 2
+    assert ngram_jaccard_pairs(docs(200), threshold=0.8).count() == 0
+
+
+def test_jaccard_threshold_curve_matches_reference_join(spark):
+    """The curve builds its pairs once at min(thresholds); each cut's
+    counts equal the reference join's at that threshold."""
+    from waka_spark.operators.dedup import jaccard_threshold_curve
+
+    docs = _adversarial_docs(spark).cache()
+    curve = {r.threshold: (r.n_pairs, r.n_docs)
+             for r in jaccard_threshold_curve(docs, (0.5, 0.7, 0.9)).collect()}
+    for t in (0.5, 0.7, 0.9):
+        pairs = _reference_jaccard(docs, t).collect()
+        n_docs = len({r.doc_a for r in pairs} | {r.doc_b for r in pairs})
+        assert curve[t] == (len(pairs), n_docs)
+    assert curve[0.5][0] > curve[0.9][0] > 0
+    docs.unpersist()
+
+
+def test_minhash_recall_sample_fraction(spark):
+    """The sampling contract: recall measured on a deterministic
+    Bernoulli corpus sample; fraction 1.0 equals the exact measurement,
+    and a real fraction cuts the doc set it considers."""
+    from waka_spark.operators.dedup import minhash_recall
+
+    docs = spark.createDataFrame(
+        [(i, "the quick brown fox jumps over the lazy dog " + ("x" * (i % 3)))
+         for i in range(30)],
+        "doc_id long, text string",
+    )
+    exact = minhash_recall(docs, threshold=0.5).collect()[0]
+    full = minhash_recall(docs, threshold=0.5, sample_fraction=1.0).collect()[0]
+    assert (exact.n_true_pairs, exact.n_caught) == (
+        full.n_true_pairs, full.n_caught)
+    assert exact.n_true_pairs > 0
+    sampled = minhash_recall(
+        docs, threshold=0.5, sample_fraction=0.4, seed=11).collect()[0]
+    assert sampled.n_true_pairs < exact.n_true_pairs
+    # recall stays a valid probability (NULL only when nothing to measure)
+    if sampled.n_true_pairs:
+        assert 0.0 <= sampled.recall <= 1.0
+
+
 def test_dedup_pipeline_two_tier(spark):
     """Exact copies collapse BEFORE near-dup signatures, and exact-dup
     members inherit their keeper's near-dup component."""

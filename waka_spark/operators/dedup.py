@@ -5,17 +5,21 @@ Beyond the reference's per-document ``set()`` dedups (P6/P10/P22), a
 shuffle-bounded compositions of built-in ops (no UDFs in the hot path):
 
 - exact:       one hash-agg on md5(text)
-- n-gram Jaccard: shingle-explode → equi-join on shingle (candidate pairs
-  share ≥1 shingle) → one agg; an optional blocking key caps the pair space
+- n-gram Jaccard: shingle-explode → exact prefix-filter join on each
+  document's rarest shingles (a qualifying pair shares one there) →
+  in-row verification of the distinct candidates
 - MinHash+LSH: per-band min-hash signatures → bucket join (pairs collide in
   ≥1 band) → verify with exact Jaccard on the candidates only
 - SimHash:     per-word 16-bit hashes → bit-majority fingerprint, one agg
 
 Hashes are md5-derived so results are engine-portable (the DuckDB oracle
-computes the identical values). At scale: the shingle join is the standard
-skew hazard — stopword-like shingles fan out; ``max_shingle_freq`` drops
-super-frequent shingles (they carry no dedup signal), the same trick
-MinHashLSH uses implicitly via banding.
+computes the identical values). At scale: stopword-like shingles are the
+standard skew hazard of a shingle join — one in k documents emits k² rows.
+The Jaccard join sorts each document's shingles rarest first and joins
+only on a prefix of them (prefix filtering), so frequent shingles rarely
+join at all and the result is unchanged. ``max_shingle_freq`` drops
+super-frequent shingles as a semantic filter (it changes which pairs
+qualify), not as the Jaccard join's skew guard.
 """
 
 from __future__ import annotations
@@ -66,14 +70,72 @@ def _parallel_floor(df: DataFrame, id_col: str) -> DataFrame:
 def _doc_shingles(
     df: DataFrame, id_col: str, text_col: str, n: int
 ) -> DataFrame:
-    # word_shingles is array_distinct per doc, so the exploded rows are
-    # already unique — no dedup shuffle needed here
+    # word_shingles is array_distinct per row; rows sharing a doc_id may
+    # repeat a shingle, which _ranked_shingles' per-document set unions
     return (
         _parallel_floor(df, id_col)
         .select(F.col(id_col).alias("doc_id"),
                 F.explode(word_shingles(F.col(text_col), n)).alias("shingle"))
         .filter(F.col("shingle") != "")
     )
+
+
+def _ranked_shingles(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    n: int,
+    max_shingle_freq: int | None,
+) -> DataFrame:
+    """(doc_id, sh): one row per document holding its distinct shingles
+    sorted rarest first by (document frequency, shingle) — the one global
+    order every prefix filter below relies on. Rows sharing a doc_id are
+    unioned, as the set of distinct (doc_id, shingle) is.
+
+    Document frequency is ONE exchange on shingle: ``dense_rank`` over the
+    doc ids counts every document once, even one spread over several
+    rows. ``max_shingle_freq`` then drops shingles in more documents than
+    that (a semantic filter: it changes which pairs qualify)."""
+    by_shingle = Window.partitionBy("shingle")
+    ranked = (
+        _doc_shingles(df, id_col, text_col, n)
+        .withColumn("_r", F.dense_rank().over(by_shingle.orderBy("doc_id")))
+        .withColumn("_df", F.max("_r").over(by_shingle))
+    )
+    if max_shingle_freq is not None:
+        ranked = ranked.filter(F.col("_df") <= max_shingle_freq)
+    return ranked.groupBy("doc_id").agg(
+        F.transform(
+            F.array_sort(F.collect_set(F.struct("_df", "shingle"))),
+            lambda x: x["shingle"],
+        ).alias("sh")
+    )
+
+
+def _candidates(docs: DataFrame, threshold: float) -> DataFrame:
+    """(shingle, doc_a, n_a, p_a, doc_b, n_b, p_b) rows of the prefix
+    self-join over :func:`_ranked_shingles`: each document's first p of
+    its n shingles against every other's. Self matches and repeated pairs
+    are left to the caller.
+
+    A pair with overlap ≥ ⌈t·|x|⌉ shares a shingle within x's first
+    |x| − ⌈t·|x|⌉ + 1 shingles of the global order, so no qualifying pair
+    is lost. The prefix is sized from t − 1e-6: scores are rounded to 6
+    places before ``>= threshold``, and the margin also absorbs the float
+    ``ceil``. A longer prefix only adds candidates; a shorter one loses
+    pairs. The most frequent shingles sort last, so a shingle shared by k
+    documents joins only where it falls within a prefix, not k² times."""
+    size = F.size("sh")
+    p = F.least(size, F.greatest(
+        size - F.ceil(F.lit(threshold - 1e-6) * size) + 1, F.lit(0)
+    )).cast("int")
+
+    def side(s):
+        return docs.select(F.col("doc_id").alias(f"doc_{s}"),
+                           size.alias(f"n_{s}"), p.alias(f"p_{s}"),
+                           F.explode(F.slice("sh", 1, p)).alias("shingle"))
+
+    return side("a").join(side("b"), "shingle")
 
 
 def ngram_jaccard_pairs(
@@ -86,52 +148,43 @@ def ngram_jaccard_pairs(
 ) -> DataFrame:
     """Candidate pairs (doc_a < doc_b) with n-gram Jaccard ≥ threshold.
 
-    Pairs sharing zero shingles have Jaccard 0 and are never materialized —
-    the shingle equi-join *is* the candidate generation. ``max_shingle_freq``
-    drops shingles appearing in more than that many docs (skew guard).
+    Exact prefix-filter join: documents join only on the shingles in
+    their prefixes under the rarest-first order (:func:`_candidates`),
+    the candidate pairs that can still qualify are verified with
+    ``size(array_intersect)``, and the result equals the all-shingle
+    equi-join's — pairs sharing zero shingles never materialize either
+    way. A shingle in every document sorts last in each of them, so it
+    joins only where a document's prefix reaches its last shingle.
+    ``max_shingle_freq`` drops shingles appearing in more than that many
+    docs before the join; it changes the result, and the prefix join does
+    not need it to keep hot shingles out of the join.
     """
-    # The shingle frame feeds three subtrees below (sizes, both self-join
-    # sides) — but do NOT pin it (round-6 measured: pinning regressed the
-    # unguarded operator 0.99s -> 7.43s at sf0.1). Recompute is the right
-    # trade at every size: small corpora recompute the narrow explode in
-    # parallel for less than the cost of materializing + re-reading the
-    # cached string rows (and the accurate InMemoryRelation stats flip
-    # the self-join from broadcast to sort-merge), while at corpus scale
-    # the self-join is sort-merge anyway and both sides hash-partition on
-    # shingle through ONE exchange that Spark de-duplicates
-    # (ReusedExchange) — the explode executes once there regardless.
-    shingles = _doc_shingles(df, id_col, text_col, n)
-    if max_shingle_freq is not None:
-        # document-frequency guard as ONE window over the shared shingle
-        # partitioning (no further exchange), not a groupBy+self-join
-        w_df = Window.partitionBy("shingle")
-        shingles = (
-            shingles.withColumn("_df", F.count("*").over(w_df))
-            .filter(F.col("_df") <= max_shingle_freq)
-            .drop("_df")
-        )
-
-    # two join consumers below — not pinned either (round-6 measured:
-    # even this one-row-per-doc pin regressed the operator 0.95s ->
-    # 6.0s at sf0.1; at scale the two branches' agg subtrees are
-    # identical — same exchange by doc_id — so ReusedExchange computes
-    # the aggregate once regardless)
-    sizes = shingles.groupBy("doc_id").agg(F.count("*").alias("n_shingles"))
-
-    a = shingles.select(F.col("doc_id").alias("doc_a"), "shingle")
-    b = shingles.select(F.col("doc_id").alias("doc_b"), "shingle")
-    inter = (
-        a.join(b, "shingle")
+    docs = _ranked_shingles(df, id_col, text_col, n, max_shingle_freq)
+    # Before the in-row verification, drop pairs whose overlap cannot reach
+    # the threshold. Shared shingles missed by the prefix join all lie past
+    # the prefix of the document whose prefix ends first in the global
+    # order, so overlap ≤ (shared prefix shingles) + max(n − p) and
+    # ≤ min(n); J ≥ t′ needs overlap·(1 + t′) > t′·(n_a + n_b).
+    t = threshold - 1e-6
+    a_n, b_n = F.col("n_a"), F.col("n_b")
+    bound = F.least(
+        F.col("count") + F.greatest(a_n - F.col("p_a"), b_n - F.col("p_b")),
+        a_n, b_n)
+    pairs = (
+        _candidates(docs, threshold)
         .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("n_common"))
+        .groupBy("doc_a", "n_a", "p_a", "doc_b", "n_b", "p_b").count()
+        .filter(bound * (1 + t) > (a_n + b_n) * t)
     )
+
+    def sets(s):
+        return docs.select(F.col("doc_id").alias(f"doc_{s}"),
+                           F.col("sh").alias(f"sh_{s}"))
+
     return (
-        inter
-        .join(sizes.withColumnRenamed("doc_id", "doc_a")
-              .withColumnRenamed("n_shingles", "n_a"), "doc_a")
-        .join(sizes.withColumnRenamed("doc_id", "doc_b")
-              .withColumnRenamed("n_shingles", "n_b"), "doc_b")
+        pairs.join(sets("a"), "doc_a").join(sets("b"), "doc_b")
+        .withColumn("n_common",
+                    F.size(F.array_intersect("sh_a", "sh_b")).cast("long"))
         .withColumn(
             "jaccard",
             F.round(
@@ -622,38 +675,31 @@ def containment_pairs(
     containment for exactly this case).
 
     Emits one row per unordered pair with BOTH directions' containment;
-    kept if either direction ≥ ``threshold``. Same scale shape as
-    :func:`ngram_jaccard_pairs`: the shingle equi-join IS the candidate
-    generation (zero-overlap pairs never materialize) and
-    ``max_shingle_freq`` is the same document-frequency skew guard.
+    kept if either direction ≥ ``threshold``. The shingle equi-join IS the
+    candidate generation (zero-overlap pairs never materialize), over the
+    same distinct per-document shingle sets and semantic
+    ``max_shingle_freq`` filter as :func:`ngram_jaccard_pairs`. It joins on
+    every shingle, so a shingle in k documents still emits k² rows: the
+    one-sided prefix filter containment admits (a shared shingle lies in
+    A's prefix, nothing bounds B's) keeps most of each document at usual
+    thresholds and would verify nearly every sharing pair one by one.
 
     Output: (doc_a, doc_b, n_common, cont_a, cont_b) with doc_a < doc_b;
     cont_a = containment of A in B, cont_b = containment of B in A.
     """
-    shingles = _doc_shingles(df, id_col, text_col, n)
-    if max_shingle_freq is not None:
-        w_df = Window.partitionBy("shingle")
-        shingles = (
-            shingles.withColumn("_df", F.count("*").over(w_df))
-            .filter(F.col("_df") <= max_shingle_freq)
-            .drop("_df")
-        )
+    shingles = _ranked_shingles(
+        df, id_col, text_col, n, max_shingle_freq
+    ).select("doc_id", F.size("sh").alias("n"), F.explode("sh").alias("shingle"))
 
-    sizes = shingles.groupBy("doc_id").agg(F.count("*").alias("n_shingles"))
-    a = shingles.select(F.col("doc_id").alias("doc_a"), "shingle")
-    b = shingles.select(F.col("doc_id").alias("doc_b"), "shingle")
-    inter = (
-        a.join(b, "shingle")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").cast("long").alias("n_common"))
-    )
+    def side(s):
+        return shingles.select(F.col("doc_id").alias(f"doc_{s}"),
+                               F.col("n").alias(f"n_{s}"), "shingle")
+
     return (
-        inter
-        .join(sizes.withColumnRenamed("doc_id", "doc_a")
-              .withColumnRenamed("n_shingles", "n_a"), "doc_a")
-        .join(sizes.withColumnRenamed("doc_id", "doc_b")
-              .withColumnRenamed("n_shingles", "n_b"), "doc_b")
+        side("a").join(side("b"), "shingle")
+        .filter(F.col("doc_a") < F.col("doc_b"))
+        .groupBy("doc_a", "n_a", "doc_b", "n_b")
+        .agg(F.count("*").alias("n_common"))
         .withColumn("cont_a", F.round(F.col("n_common") / F.col("n_a"), 6))
         .withColumn("cont_b", F.round(F.col("n_common") / F.col("n_b"), 6))
         .filter(
@@ -730,9 +776,9 @@ def jaccard_threshold_curve(
     leaves templated near-dups in; this table shows the elbow). Same
     spirit as the ANN recall curves: measure the knob, don't guess it.
 
-    The pair table is computed ONCE at the loosest threshold (the same
-    shingle-equi-join candidate generation as
-    :func:`ngram_jaccard_pairs`), then fanned out ×|thresholds| by an
+    The pair table is computed ONCE at the loosest threshold (by
+    :func:`ngram_jaccard_pairs`, whose prefix sized from that threshold
+    loses no pair of a stricter cut), then fanned out ×|thresholds| by an
     in-row literal explode — per-θ work is two hash-aggs over the
     (already tiny) pair set, never a re-scan of the corpus.
 
@@ -794,7 +840,7 @@ def minhash_recall(
     from the S-curve formula (which assumes independent uniform hashes
     the 32-bit md5-slice minhash only approximates).
 
-    Truth side = the shingle-equi-join exact pairs (never all-pairs);
+    Truth side = the prefix-filter join's exact pairs (never all-pairs);
     candidate side = the banded signature join; both are bucketed joins,
     and the final comparison is one left join on the (tiny) true-pair set
     + a single-row aggregate.
