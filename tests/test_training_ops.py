@@ -28,6 +28,29 @@ def test_ngram_jaccard(spark):
     assert got[0].jaccard > 0.8
 
 
+def test_word_shingles_split_once(spark):
+    """The text is split once per row, not once per shingle, and the
+    shingles are the distinct sliding windows of the normalized words."""
+    import re
+
+    from waka_spark.operators.dedup import word_shingles
+
+    assert str(word_shingles(F.col("text"), 3)).count("split(") == 1
+
+    def windows(t):
+        if t is None:
+            return [None]
+        w = re.sub(r"\s+", " ", t.strip().lower()).split(" ")
+        out = [" ".join(w[i:i + 3]) for i in range(max(len(w) - 3, 0) + 1)]
+        return list(dict.fromkeys(out))
+
+    texts = [None, "", "   ", "one", "one two", "a b c", " A  b c a b c d",
+             "x y x y x y"]
+    got = [r.sh for r in _docs(spark, texts).orderBy("doc_id").select(
+        word_shingles(F.col("text"), 3).alias("sh")).collect()]
+    assert got == [windows(t) for t in texts]
+
+
 def test_minhash_lsh_catches_neardups(spark):
     from waka_spark.operators.dedup import minhash_lsh_pairs
 
@@ -377,7 +400,7 @@ def test_prefix_join_is_linear_in_a_hot_shingle(spark):
     """k documents sharing one shingle and nothing else: the prefix join
     emits rows linear in k, where the all-shingle self-join emits k²."""
     from waka_spark.operators.dedup import (
-        _candidates, _ranked_shingles, ngram_jaccard_pairs)
+        _candidates, _shingle_sets, ngram_jaccard_pairs)
 
     def docs(k):
         return spark.createDataFrame(
@@ -385,10 +408,14 @@ def test_prefix_join_is_linear_in_a_hot_shingle(spark):
              for i in range(k)], "doc_id long, text string")
 
     def join_rows(k):
-        ranked = _ranked_shingles(docs(k), "doc_id", "text", 3, None)
+        ranked = _shingle_sets(docs(k), "doc_id", "text", 3, None,
+                               rarest_first=True)
         return _candidates(ranked, 0.8).count()
 
-    assert join_rows(200) == 4 * join_rows(50)
+    # n = 5 shingles, prefix 2 at 0.8: the two rarest are each document's
+    # own, so every prefix row joins only itself — 2k rows, not k²
+    assert join_rows(50) == 100
+    assert join_rows(200) == 400
     assert _reference_overlap(docs(200)).count() == 200 * 199 // 2
     assert ngram_jaccard_pairs(docs(200), threshold=0.8).count() == 0
 

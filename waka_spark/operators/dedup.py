@@ -47,14 +47,21 @@ def exact_dedup(
 
 
 def word_shingles(text: Column, n: int = 3) -> Column:
-    """Sliding n-gram word shingles as array<string> (distinct)."""
-    words = F.split(normalize_text(text), " ")
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(0), F.greatest(F.size(words) - n, F.lit(0))),
-            lambda i: F.array_join(F.slice(words, i + 1, n), " "),
+    """Sliding n-gram word shingles as array<string> (distinct).
+
+    The word array is bound once as a lambda argument (a one-element
+    ``transform``): written inline in the per-shingle lambda, Spark
+    re-splits the whole text for every shingle, quadratic in its words."""
+    def shingles(words: Column) -> Column:
+        return F.array_distinct(
+            F.transform(
+                F.sequence(F.lit(0), F.greatest(F.size(words) - n, F.lit(0))),
+                lambda i: F.array_join(F.slice(words, i + 1, n), " "),
+            )
         )
-    )
+
+    return F.transform(
+        F.array(F.split(normalize_text(text), " ")), shingles)[0]
 
 
 def _parallel_floor(df: DataFrame, id_col: str) -> DataFrame:
@@ -71,7 +78,7 @@ def _doc_shingles(
     df: DataFrame, id_col: str, text_col: str, n: int
 ) -> DataFrame:
     # word_shingles is array_distinct per row; rows sharing a doc_id may
-    # repeat a shingle, which _ranked_shingles' per-document set unions
+    # repeat a shingle, which _shingle_sets' per-document set unions
     return (
         _parallel_floor(df, id_col)
         .select(F.col(id_col).alias("doc_id"),
@@ -80,31 +87,37 @@ def _doc_shingles(
     )
 
 
-def _ranked_shingles(
+def _shingle_sets(
     df: DataFrame,
     id_col: str,
     text_col: str,
     n: int,
     max_shingle_freq: int | None,
+    rarest_first: bool,
 ) -> DataFrame:
-    """(doc_id, sh): one row per document holding its distinct shingles
-    sorted rarest first by (document frequency, shingle) — the one global
-    order every prefix filter below relies on. Rows sharing a doc_id are
-    unioned, as the set of distinct (doc_id, shingle) is.
+    """(doc_id, sh): one row per document holding its distinct shingles.
+    Rows sharing a doc_id are unioned, as the set of distinct (doc_id,
+    shingle) is. With ``rarest_first`` they are sorted by (document
+    frequency, shingle) — the one global order every prefix filter below
+    relies on; without it the set is unordered.
 
     Document frequency is ONE exchange on shingle: ``dense_rank`` over the
     doc ids counts every document once, even one spread over several
     rows. ``max_shingle_freq`` then drops shingles in more documents than
-    that (a semantic filter: it changes which pairs qualify)."""
-    by_shingle = Window.partitionBy("shingle")
-    ranked = (
-        _doc_shingles(df, id_col, text_col, n)
-        .withColumn("_r", F.dense_rank().over(by_shingle.orderBy("doc_id")))
-        .withColumn("_df", F.max("_r").over(by_shingle))
-    )
-    if max_shingle_freq is not None:
-        ranked = ranked.filter(F.col("_df") <= max_shingle_freq)
-    return ranked.groupBy("doc_id").agg(
+    that (a semantic filter: it changes which pairs qualify). Without the
+    order and the filter the window is skipped."""
+    rows = _doc_shingles(df, id_col, text_col, n)
+    if rarest_first or max_shingle_freq is not None:
+        by_shingle = Window.partitionBy("shingle")
+        rows = (
+            rows.withColumn("_r", F.dense_rank().over(by_shingle.orderBy("doc_id")))
+            .withColumn("_df", F.max("_r").over(by_shingle))
+        )
+        if max_shingle_freq is not None:
+            rows = rows.filter(F.col("_df") <= max_shingle_freq)
+    if not rarest_first:
+        return rows.groupBy("doc_id").agg(F.collect_set("shingle").alias("sh"))
+    return rows.groupBy("doc_id").agg(
         F.transform(
             F.array_sort(F.collect_set(F.struct("_df", "shingle"))),
             lambda x: x["shingle"],
@@ -114,7 +127,7 @@ def _ranked_shingles(
 
 def _candidates(docs: DataFrame, threshold: float) -> DataFrame:
     """(shingle, doc_a, n_a, p_a, doc_b, n_b, p_b) rows of the prefix
-    self-join over :func:`_ranked_shingles`: each document's first p of
+    self-join over :func:`_shingle_sets`: each document's first p of
     its n shingles against every other's. Self matches and repeated pairs
     are left to the caller.
 
@@ -159,7 +172,8 @@ def ngram_jaccard_pairs(
     docs before the join; it changes the result, and the prefix join does
     not need it to keep hot shingles out of the join.
     """
-    docs = _ranked_shingles(df, id_col, text_col, n, max_shingle_freq)
+    docs = _shingle_sets(df, id_col, text_col, n, max_shingle_freq,
+                         rarest_first=True)
     # Before the in-row verification, drop pairs whose overlap cannot reach
     # the threshold. Shared shingles missed by the prefix join all lie past
     # the prefix of the document whose prefix ends first in the global
@@ -687,8 +701,8 @@ def containment_pairs(
     Output: (doc_a, doc_b, n_common, cont_a, cont_b) with doc_a < doc_b;
     cont_a = containment of A in B, cont_b = containment of B in A.
     """
-    shingles = _ranked_shingles(
-        df, id_col, text_col, n, max_shingle_freq
+    shingles = _shingle_sets(
+        df, id_col, text_col, n, max_shingle_freq, rarest_first=False
     ).select("doc_id", F.size("sh").alias("n"), F.explode("sh").alias("shingle"))
 
     def side(s):
