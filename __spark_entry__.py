@@ -1120,12 +1120,12 @@ def q_text_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus vocabulary head: top-100 words by frequency with document
     frequency — explode + one hash-agg (map-side partials) + global
     TakeOrderedAndProject; ties are total-ordered by (freq desc, word)."""
-    from waka_spark.operators.dedup import normalize_text
+    from waka_spark.functions.text_norm import norm_words
 
     docs = _t(spark, sf_dir, "documents")
     words = docs.select(
         "doc_id",
-        F.explode(F.split(normalize_text(F.col("text")), " ")).alias("word"),
+        F.explode(norm_words(F.col("text"))).alias("word"),
     ).filter(F.col("word") != "")
     return (
         words.groupBy("word")

@@ -470,3 +470,28 @@ def test_word_ngrams_short_doc_has_no_bigrams(spark):
     r = repetition_stats(df).collect()[0]
     # one word: no bigrams; dup_bigram_frac coalesces to 0
     assert r["dup_bigram_frac"] == 0.0
+
+
+def test_mixture_plan_surfaces_missing_target_domain(spark):
+    """VERDICT #7: a target domain absent from the corpus appears as a
+    (0 docs, 0 tokens, NULL rates) supply-gap row instead of silently
+    vanishing from the launch plan."""
+    from waka_spark.operators.curation import mixture_plan
+
+    df = spark.createDataFrame(
+        [("en", "one two three four"), ("en", "five six"),
+         ("de", "eins zwei drei")],
+        "lang string, text string",
+    )
+    plan = {r.domain: r for r in mixture_plan(
+        df, weights={"en": 0.5, "de": 0.3, "xx": 0.2}, token_budget=100,
+    ).collect()}
+    assert set(plan) == {"en", "de", "xx"}
+    assert plan["en"].n_tokens == 6 and plan["de"].n_tokens == 3
+    gap = plan["xx"]
+    assert gap.n_docs == 0 and gap.n_tokens == 0
+    assert gap.target_tokens == 20
+    assert gap.sampling_rate is None and gap.n_epochs is None
+    # supplied domains keep real rates (en target 50 over 6 tokens)
+    assert plan["en"].n_epochs == pytest.approx(50 / 6, abs=1e-4)
+    assert plan["en"].sampling_rate == 1.0

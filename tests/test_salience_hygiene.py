@@ -703,3 +703,32 @@ def test_mention_salience_normalizes_tokens_like_linker(spark):
     # 'Spark,' (t0) + '(SPARK)' (t1); 'spark.io' strips only EDGE punct
     # -> 'spark.io' != 'spark' so it does not count
     assert (r["n_mentions"], r["first_turn"], r["n_turns"]) == (2, 0, 2)
+
+
+def test_mention_salience_non_latin_tokens_survive(spark):
+    """VERDICT #3: edge punctuation is stripped with Unicode classes —
+    a fully non-Latin token ("москва", "東京") must keep its letters and
+    match a non-Latin alias (ASCII \\w collapsed it to "" and dropped
+    every mention on non-Latin corpora)."""
+    from waka_spark.operators.linking import mention_salience
+
+    turns = spark.createDataFrame(
+        [
+            ("c1", 0, "еду в Москва, завтра"),
+            ("c1", 1, "поездка (東京) отлично"),
+            ("c1", 2, "plain latin tail"),
+        ],
+        "conv_id string, turn_idx int, text string",
+    )
+    aliases = spark.createDataFrame(
+        [("москва", "Q649"), ("東京", "Q1490")],
+        "alias_key string, url string",
+    )
+    got = {r.url: r for r in mention_salience(turns, aliases).collect()}
+    assert set(got) == {"Q649", "Q1490"}
+    assert got["Q649"].n_mentions == 1 and got["Q649"].first_turn == 0
+    # ("東京") is stripped of both parens despite no ASCII word chars
+    assert got["Q1490"].first_turn == 1
+    # salience = n * (max_t+1-first) / (max_t+1) with max_t = 2
+    assert got["Q649"].salience == pytest.approx(1.0)
+    assert got["Q1490"].salience == pytest.approx(2.0 / 3.0, abs=1e-6)

@@ -49,24 +49,12 @@ class FusionConfig:
 
 
 @dataclass(frozen=True)
-class ScaleConfig:
-    """Physical-design knobs for the 10^12-turn target."""
-
-    shuffle_partitions: int = 32       # match cluster cores in prod
-    salt_buckets: int = 16             # salting for skewed conv_id
-    max_turns_per_chunk: int = 512     # cap document length per chunk
-    broadcast_threshold_mb: int = 256  # dictionaries stay broadcast-side
-    arrow_batch_rows: int = 2048       # pandas-UDF Arrow batch size
-
-
-@dataclass(frozen=True)
 class EngineConfig:
     entity_linker: LinkerConfig = field(default_factory=LinkerConfig)
     relation_linker: LinkerConfig = field(
         default_factory=lambda: LinkerConfig(beta=0.72, max_results=33)
     )  # relation_linking.py:18
     fusion: FusionConfig = field(default_factory=FusionConfig)
-    scale: ScaleConfig = field(default_factory=ScaleConfig)
 
 
 DEFAULT = EngineConfig()

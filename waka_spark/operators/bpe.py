@@ -39,7 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from waka_spark.operators.dedup import normalize_text
+from waka_spark.functions.text_norm import norm_words
 
 # one merge round every N lineage cuts; each cut is an eager
 # localCheckpoint of the (small) vocab table
@@ -54,7 +54,7 @@ def word_counts(
     corpus-wide scan everything else in this module runs on."""
     return (
         df.select(
-            F.explode(F.split(normalize_text(F.col(text_col)), " "))
+            F.explode(norm_words(F.col(text_col)))
             .alias("word"))
         .filter(F.col("word").rlike("^[a-z0-9]+$"))
         .groupBy("word")
@@ -163,7 +163,7 @@ def bpe_tokenize(
     """
     words = df.select(
         F.col(id_col).alias("doc_id"),
-        F.explode(F.split(normalize_text(F.col(text_col)), " ")).alias("word"),
+        F.explode(norm_words(F.col(text_col))).alias("word"),
     ).filter(F.col("word").rlike("^[a-z0-9]+$"))
 
     sym = _bracketed(F.col("word"))

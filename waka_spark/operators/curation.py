@@ -19,7 +19,9 @@ pass actually runs before tokenization. Scale shapes:
   chunk hash.
 
 All hashes are md5 and all regexes are RE2-compatible so the DuckDB
-oracle computes identical values.
+oracle computes identical values. Word n-grams and chunks slice the
+normalized word array that ``functions/text_norm.with_words`` builds once
+per row.
 """
 
 from __future__ import annotations
@@ -27,10 +29,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from waka_spark.functions.text_norm import norm_words, with_words, word_runs
 from waka_spark.plans.parallel import parallel_floor
 from waka_spark.plans.pins import pin
-
-from waka_spark.operators.dedup import normalize_text
 
 # RE2-compatible (no lookaround/backrefs) so Spark's Java regex and the
 # DuckDB oracle's RE2 agree on every match
@@ -74,19 +75,10 @@ def pii_scrub(
 
 def word_ngrams(text: Column, n: int) -> Column:
     """Sliding n-gram word shingles WITH duplicates (array<string>) —
-    repetition statistics need multiplicity, unlike dedup.word_shingles."""
-    words = F.split(normalize_text(text), " ")
-    # docs shorter than n words have ZERO n-grams — the old
-    # greatest(size-n, 0) floor emitted one TRUNCATED gram (a unigram
-    # masquerading as a bigram), biasing repetition/DSIR features for
-    # short docs (round-3 review fix)
-    grams = F.when(
-        F.size(words) >= n,
-        F.transform(
-            F.sequence(F.lit(0), F.size(words) - n),
-            lambda i: F.array_join(F.slice(words, i + 1, n), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    repetition statistics need multiplicity, unlike dedup.word_shingles.
+    A text shorter than ``n`` words has none (not one truncated gram,
+    which would bias repetition/DSIR features of short documents)."""
+    grams = with_words(text, lambda words: word_runs(words, n))
     return F.filter(grams, lambda s: s != "")
 
 
@@ -201,6 +193,18 @@ def contamination_check(
     )
 
 
+def _fixed_chunks(text: Column, chunk_words: int) -> Column:
+    """The distinct non-empty non-overlapping ``chunk_words``-word chunks
+    of the normalized text (the tail chunk runs shorter)."""
+    chunks = with_words(text, lambda words: F.transform(
+        F.sequence(F.lit(0), F.greatest(
+            F.floor((F.size(words) - 1) / chunk_words).cast("int"), F.lit(0))),
+        lambda i: F.array_join(
+            F.slice(words, i * chunk_words + 1, chunk_words), " "),
+    ))
+    return F.array_distinct(F.filter(chunks, lambda s: s != ""))
+
+
 def chunk_dedup(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -217,21 +221,11 @@ def chunk_dedup(
     Output: (doc_id, n_chunks, n_dup_chunks, dup_chunk_frac).
     """
     df = parallel_floor(df, id_col)
-    words = F.split(normalize_text(F.col(text_col)), " ")
-    n_full = F.floor((F.size(words) - 1) / chunk_words).cast("int")
-    chunks = F.filter(
-        F.transform(
-            F.sequence(F.lit(0), F.greatest(n_full, F.lit(0))),
-            lambda i: F.array_join(
-                F.slice(words, i * chunk_words + 1, chunk_words), " "
-            ),
-        ),
-        lambda s: s != "",
-    )
     doc_chunks = (
         df.select(
             F.col(id_col).alias("doc_id"),
-            F.explode(F.array_distinct(chunks)).alias("chunk"),
+            F.explode(_fixed_chunks(F.col(text_col), chunk_words))
+            .alias("chunk"),
         )
         .withColumn("chunk_hash", F.md5("chunk"))
         .select("doc_id", "chunk_hash")
@@ -535,7 +529,7 @@ def hashed_linear_score(
     df = parallel_floor(df, id_col)
     words = df.select(
         F.col(id_col).alias("doc_id"),
-        F.explode(F.split(normalize_text(F.col(text_col)), " ")).alias("word"),
+        F.explode(norm_words(F.col(text_col))).alias("word"),
     ).filter(F.col("word") != "")
     bucketed = words.select(
         "doc_id",
@@ -641,6 +635,26 @@ def dsir_importance(
     )
 
 
+def _sliding_chunks(text: Column, chunk_words: int, stride: int) -> Column:
+    """array<struct<chunk_idx, chunk_text, n_words>>: one chunk per
+    ``stride`` words of the normalized text, ``chunk_words`` long or to
+    the end; NULL text has none, an empty one a single empty chunk."""
+    def chunks(words: Column) -> Column:
+        n = F.size(words)
+        return F.when(n > 0, F.transform(
+            F.sequence(F.lit(0), F.floor((n - 1) / stride).cast("int")),
+            lambda i: F.struct(
+                i.cast("int").alias("chunk_idx"),
+                F.array_join(F.slice(words, i * stride + 1, chunk_words), " ")
+                .alias("chunk_text"),
+                F.least(n - i * stride, F.lit(chunk_words)).cast("int")
+                .alias("n_words"),
+            ),
+        ))
+
+    return with_words(text, chunks)
+
+
 def chunk_documents(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -659,22 +673,10 @@ def chunk_documents(
     downstream embedding pass pays anyway. Output: (doc_id, chunk_idx,
     chunk_text, n_words).
     """
-    df = parallel_floor(df, id_col)
-    words = F.split(normalize_text(F.col(text_col)), " ")
-    n = F.size(words)
-    chunks = F.transform(
-        F.sequence(F.lit(0), F.floor((n - 1) / stride).cast("int")),
-        lambda i: F.struct(
-            i.cast("int").alias("chunk_idx"),
-            F.array_join(F.slice(words, i * stride + 1, chunk_words), " ")
-            .alias("chunk_text"),
-            F.least(n - i * stride, F.lit(chunk_words)).cast("int")
-            .alias("n_words"),
-        ),
-    )
     return (
-        df.filter(n > 0)
-        .select(F.col(id_col).alias("doc_id"), F.explode(chunks).alias("_c"))
+        parallel_floor(df, id_col)
+        .select(F.col(id_col).alias("doc_id"), F.explode(
+            _sliding_chunks(F.col(text_col), chunk_words, stride)).alias("_c"))
         .select("doc_id", "_c.chunk_idx", "_c.chunk_text", "_c.n_words")
     )
 

@@ -12,6 +12,10 @@ shuffle-bounded compositions of built-in ops (no UDFs in the hot path):
   ≥1 band) → verify with exact Jaccard on the candidates only
 - SimHash:     per-word 16-bit hashes → bit-majority fingerprint, one agg
 
+Texts are keyed and cut into words by ``functions/text_norm``; shingles
+and span windows slice the word array that ``with_words`` builds once
+per row, so a document costs time linear in its words.
+
 Hashes are md5-derived so results are engine-portable (the DuckDB oracle
 computes the identical values). At scale: stopword-like shingles are the
 standard skew hazard of a shingle join — one in k documents emits k² rows.
@@ -27,9 +31,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def normalize_text(col: Column) -> Column:
-    return F.regexp_replace(F.lower(F.trim(col)), r"\s+", " ")
+from waka_spark.functions.text_norm import (
+    norm_key, norm_words, with_words, word_runs)
+from waka_spark.plans.parallel import parallel_floor
 
 
 def exact_dedup(
@@ -37,7 +41,7 @@ def exact_dedup(
 ) -> DataFrame:
     """One row per distinct normalized text: keeper = min id, n_dupes count."""
     return (
-        df.select(F.col(id_col), F.md5(normalize_text(F.col(text_col))).alias("text_hash"))
+        df.select(F.col(id_col), F.md5(norm_key(F.col(text_col))).alias("text_hash"))
         .groupBy("text_hash")
         .agg(
             F.min(id_col).alias("keeper_id"),
@@ -47,31 +51,14 @@ def exact_dedup(
 
 
 def word_shingles(text: Column, n: int = 3) -> Column:
-    """Sliding n-gram word shingles as array<string> (distinct).
-
-    The word array is bound once as a lambda argument (a one-element
-    ``transform``): written inline in the per-shingle lambda, Spark
-    re-splits the whole text for every shingle, quadratic in its words."""
-    def shingles(words: Column) -> Column:
-        return F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(0), F.greatest(F.size(words) - n, F.lit(0))),
-                lambda i: F.array_join(F.slice(words, i + 1, n), " "),
-            )
+    """Sliding n-gram word shingles as array<string> (distinct); a text
+    shorter than ``n`` words is one shingle."""
+    return with_words(text, lambda words: F.array_distinct(
+        F.transform(
+            F.sequence(F.lit(0), F.greatest(F.size(words) - n, F.lit(0))),
+            lambda i: F.array_join(F.slice(words, i + 1, n), " "),
         )
-
-    return F.transform(
-        F.array(F.split(normalize_text(text), " ")), shingles)[0]
-
-
-def _parallel_floor(df: DataFrame, id_col: str) -> DataFrame:
-    """Shingling/hashing is CPU-heavy narrow work that runs at *scan*
-    parallelism — see plans/parallel.parallel_floor (shared round-6: the
-    same under-split hazard applies to every token-explode/HOF operator,
-    not just dedup)."""
-    from waka_spark.plans.parallel import parallel_floor
-
-    return parallel_floor(df, id_col)
+    ))
 
 
 def _doc_shingles(
@@ -80,7 +67,7 @@ def _doc_shingles(
     # word_shingles is array_distinct per row; rows sharing a doc_id may
     # repeat a shingle, which _shingle_sets' per-document set unions
     return (
-        _parallel_floor(df, id_col)
+        parallel_floor(df, id_col)
         .select(F.col(id_col).alias("doc_id"),
                 F.explode(word_shingles(F.col(text_col), n)).alias("shingle"))
         .filter(F.col("shingle") != "")
@@ -239,15 +226,15 @@ def minhash_signatures(
     # ever materialize (for the downstream bucket join). _hex is its own
     # projection so the digests compute once per shingle, not per band.
     #
-    # Empty-doc filter: `normalize_text(text) != ''` is equivalent to
+    # Empty-doc filter: `norm_key(text) != ''` is equivalent to
     # `size(array_remove(word_shingles(text), '')) > 0` (the shingle array
     # is empty iff the normalized text is empty/null) but costs one regex
     # instead of the whole shingle pipeline — the pushed-down size() filter
     # made the optimizer evaluate the full split/slice/join expression tree
     # TWICE per row (once in the Filter, once in the Project), which
     # profiling showed doubled the operator's scan-stage CPU.
-    base = _parallel_floor(df, id_col).filter(
-        normalize_text(F.col(text_col)) != ""
+    base = parallel_floor(df, id_col).filter(
+        norm_key(F.col(text_col)) != ""
     ).select(
         F.col(id_col).alias("doc_id"),
         F.array_remove(word_shingles(F.col(text_col), n), "").alias("_sh"),
@@ -316,9 +303,9 @@ def simhash(
     """(doc_id, simhash): bit-majority fingerprint over 16-bit word hashes
     (md5 leading nibbles → int, engine-portable). Near-dups differ in few
     bits; ``simhash_pairs`` generates those pairs by fingerprint banding."""
-    words = _parallel_floor(df, id_col).select(
+    words = parallel_floor(df, id_col).select(
         F.col(id_col).alias("doc_id"),
-        F.explode(F.split(normalize_text(F.col(text_col)), " ")).alias("word"),
+        F.explode(norm_words(F.col(text_col))).alias("word"),
     ).filter(F.col("word") != "")
     hashed = words.withColumn(
         "h", F.conv(F.substring(F.md5("word"), 1, 4), 16, 10).cast("long")
@@ -506,7 +493,7 @@ def dedup_pipeline(
 
     hashed = df.select(
         F.col(id_col).alias("doc_id"),
-        F.md5(normalize_text(F.col(text_col))).alias("text_hash"),
+        F.md5(norm_key(F.col(text_col))).alias("text_hash"),
     )
     groups = hashed.groupBy("text_hash").agg(F.min("doc_id").alias("keeper_id"))
 
@@ -537,6 +524,15 @@ def dedup_pipeline(
     )
 
 
+def _windows(text: Column, window: int) -> Column:
+    """array<struct<pos, whash>>: every stride-1 ``window``-word run of the
+    normalized text; none when the text is shorter than ``window``."""
+    return with_words(text, lambda words: F.transform(
+        word_runs(words, window),
+        lambda run, i: F.struct(i.alias("pos"), F.md5(run).alias("whash")),
+    ))
+
+
 def _window_hashes(
     df: DataFrame, id_col: str, text_col: str, window: int
 ) -> DataFrame:
@@ -544,18 +540,10 @@ def _window_hashes(
     run, tagged with its 0-based start position. Narrow per-row work (one
     transform over the in-row word array) — the explode is the only
     fan-out, ~n_words rows per doc."""
-    words = F.split(normalize_text(F.col(text_col)), " ")
-    wins = F.transform(
-        F.sequence(F.lit(0), F.size(words) - window),
-        lambda i: F.struct(
-            i.cast("int").alias("pos"),
-            F.md5(F.array_join(F.slice(words, i + 1, window), " ")).alias("whash"),
-        ),
-    )
     return (
-        _parallel_floor(df, id_col)
-        .filter(F.size(words) >= window)
-        .select(F.col(id_col).alias("doc_id"), F.explode(wins).alias("_w"))
+        parallel_floor(df, id_col)
+        .select(F.col(id_col).alias("doc_id"),
+                F.explode(_windows(F.col(text_col), window)).alias("_w"))
         .select("doc_id", F.col("_w.pos").alias("pos"),
                 F.col("_w.whash").alias("whash"))
     )
@@ -649,7 +637,7 @@ def scrub_duplicate_spans(
         .groupBy("doc_id")
         .agg(F.collect_list(F.struct("span_start", "span_end")).alias("_spans"))
     )
-    words = F.split(normalize_text(F.col("_t")), " ")
+    words = norm_words(F.col("_t"))
     indexed = F.transform(
         words, lambda w, i: F.struct(i.alias("pos"), w.alias("w"))
     )
@@ -747,10 +735,10 @@ def delta_dedup(
     Output: (doc_id, exact_dup, near_dup) for every delta doc.
     """
     base_hashes = base.select(
-        F.md5(normalize_text(F.col(text_col))).alias("_h")).distinct()
+        F.md5(norm_key(F.col(text_col))).alias("_h")).distinct()
     delta_h = delta.select(
         F.col(id_col).alias("doc_id"),
-        F.md5(normalize_text(F.col(text_col))).alias("_h"),
+        F.md5(norm_key(F.col(text_col))).alias("_h"),
     )
     exact = (
         delta_h.join(base_hashes, "_h", "left_semi")

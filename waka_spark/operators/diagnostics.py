@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from waka_spark.functions.text_norm import norm_words
+
 
 def key_skew_profile(
     df: DataFrame, key_col: str, top_n: int = 20
@@ -81,8 +83,7 @@ def corpus_profile(
     """
     words = df.select(
         F.col(id_col).alias("doc_id"),
-        F.explode(F.split(F.regexp_replace(F.lower(F.trim(F.col(text_col))),
-                                           r"\s+", " "), " ")).alias("word"),
+        F.explode(norm_words(F.col(text_col))).alias("word"),
     ).filter(F.col("word") != "")
     per_doc = words.groupBy("doc_id").agg(F.count("*").alias("n_words"))
     word_stats = words.agg(
@@ -131,13 +132,7 @@ def cms_top_words(
     from pyspark.sql import Window
 
     toks = df.select(
-        F.explode(
-            F.split(
-                F.regexp_replace(F.lower(F.trim(F.col(text_col))),
-                                 r"\s+", " "),
-                " ",
-            )
-        ).alias("word")
+        F.explode(norm_words(F.col(text_col))).alias("word")
     ).filter(F.col("word") != "")
 
     def bucket(j: int, word) -> object:

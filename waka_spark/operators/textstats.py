@@ -3,6 +3,8 @@ quality scoring, token counting, document fingerprinting.
 
 All pure-column expressions (whole-stage codegen, no UDFs); each has a
 DuckDB-oracle-expressible form so the driver's correctness gate covers it.
+Words are the normalized words of ``functions/text_norm``; bigrams and
+k-grams slice the word array that ``with_words`` builds once per row.
 """
 
 from __future__ import annotations
@@ -10,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from waka_spark.functions.text_norm import norm_words, with_words, word_runs
 from waka_spark.plans.parallel import parallel_floor
 
 # compact English stopword core — enough signal for n-gram-heuristic
@@ -19,10 +22,6 @@ EN_STOPWORDS = (
     "at be this have from or one had by word but not what all were we when "
     "your can said there use an each which she do how their if"
 ).split()
-
-
-def _words(text: Column) -> Column:
-    return F.split(F.regexp_replace(F.lower(F.trim(text)), r"\s+", " "), " ")
 
 
 def token_counts(
@@ -35,7 +34,7 @@ def token_counts(
     text = F.col(text_col)
     return df.select(
         F.col(id_col).alias("doc_id"),
-        F.size(_words(text)).alias("ws_tokens"),
+        F.size(norm_words(text)).alias("ws_tokens"),
         F.size(
             F.regexp_extract_all(
                 text, F.lit(r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"), 0
@@ -52,7 +51,7 @@ def quality_scores(
     score in [0,1] (a Gopher-rules-style filter surface)."""
     df = parallel_floor(df, id_col)
     text = F.col(text_col)
-    words = _words(text)
+    words = norm_words(text)
     n_words = F.size(words)
     stop_ratio = F.size(
         F.filter(words, lambda w: w.isin(EN_STOPWORDS))
@@ -91,7 +90,7 @@ def lang_id(
     """Stopword-ratio heuristic language ID (the n-gram-frequency family):
     predict 'en' when the English stopword mass clears the threshold."""
     df = parallel_floor(df, id_col)
-    words = _words(F.col(text_col))
+    words = norm_words(F.col(text_col))
     ratio = F.size(
         F.filter(words, lambda w: w.isin(EN_STOPWORDS))
     ) / F.greatest(F.size(words), F.lit(1))
@@ -129,7 +128,7 @@ def tfidf_topk(
     df = parallel_floor(df, id_col)
     terms = df.select(
         F.col(id_col).alias("doc_id"),
-        F.explode(_words(F.col(text_col))).alias("term"),
+        F.explode(norm_words(F.col(text_col))).alias("term"),
     ).filter(F.length("term") >= min_len)
     tf = terms.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
     dfreq = tf.groupBy("term").agg(F.count("*").alias("df"))
@@ -183,7 +182,7 @@ def unigram_logprob(
     df = parallel_floor(df, id_col)
     words = df.select(
         F.col(id_col).alias("doc_id"),
-        F.explode(_words(F.col(text_col))).alias("word"),
+        F.explode(norm_words(F.col(text_col))).alias("word"),
     ).filter(F.col("word") != "")
     model = words.groupBy("word").agg(F.count("*").alias("wc"))
     total = model.select(F.sum("wc").alias("total"))
@@ -198,6 +197,22 @@ def unigram_logprob(
             ).alias("avg_nll"),
         )
     )
+
+
+def _bigrams(text: Column) -> Column:
+    """array<struct<w1, w2>>: the adjacent pairs of non-empty normalized
+    words (empty words are only ever first or last, so dropping the pairs
+    that hold one equals pairing the non-empty words)."""
+    return with_words(text, lambda words: F.filter(
+        F.when(F.size(words) >= 2, F.transform(
+            F.sequence(F.lit(1), F.size(words) - 1),
+            lambda i: F.struct(
+                F.element_at(words, i).alias("w1"),
+                F.element_at(words, i + 1).alias("w2"),
+            ),
+        )),
+        lambda p: (p["w1"] != "") & (p["w2"] != ""),
+    ))
 
 
 def bigram_logprob(
@@ -226,18 +241,7 @@ def bigram_logprob(
     count n, which is exactly the instance-level average.
     """
     df = parallel_floor(df, id_col)
-    arr = F.filter(_words(F.col(text_col)), lambda w: w != "")
-    pair_t = "array<struct<w1:string,w2:string>>"
-    pairs = F.when(
-        F.size(arr) >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size(arr) - 1),
-            lambda i: F.struct(
-                F.element_at(arr, i).alias("w1"),
-                F.element_at(arr, i + F.lit(1)).alias("w2"),
-            ),
-        ),
-    ).otherwise(F.lit(None).cast(pair_t))
+    pairs = _bigrams(F.col(text_col))
     from waka_spark.plans.pins import cut
 
     # EAGER (not lazy persist): doc_bg feeds the model agg AND the scoring
@@ -290,7 +294,7 @@ def typo_pairs(
     """
     df = parallel_floor(df, text_col)
     words = (
-        df.select(F.explode(_words(F.col(text_col))).alias("w"))
+        df.select(F.explode(norm_words(F.col(text_col))).alias("w"))
         .filter(F.length("w") >= min_len)
         .distinct()
     )
@@ -354,6 +358,18 @@ def fingerprints(
     )
 
 
+def _kgrams(text: Column, kgram: int) -> Column:
+    """array<struct<pos, _kg, _n_kg>>: every stride-1 ``kgram``-word run
+    of the normalized text, its 0-based position and the number of runs;
+    none when the text is shorter than ``kgram`` words."""
+    return with_words(text, lambda words: F.transform(
+        word_runs(words, kgram),
+        lambda run, i: F.struct(
+            i.alias("pos"), run.alias("_kg"),
+            (F.size(words) - (kgram - 1)).alias("_n_kg")),
+    ))
+
+
 def winnowing_fingerprints(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -382,23 +398,10 @@ def winnowing_fingerprints(
     Hashes are ``int(md5(kgram)[:8], 16)`` — oracle-portable. Output:
     (doc_id, pos, fp_hash), one row per *selected* k-gram position.
     """
-    df = parallel_floor(df, id_col)
-    words = _words(F.col(text_col))
-    n_kg = F.size(words) - (kgram - 1)
-    kgrams = F.when(
-        F.size(words) >= kgram,
-        F.transform(
-            F.sequence(F.lit(0), F.size(words) - kgram),
-            lambda i: F.array_join(F.slice(words, i + 1, kgram), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
     tagged = (
-        df.select(
-            F.col(id_col).alias("doc_id"),
-            n_kg.alias("_n_kg"),
-            F.posexplode(kgrams).alias("pos", "_kg"),
-        )
+        parallel_floor(df, id_col)
+        .select(F.col(id_col).alias("doc_id"),
+                F.inline(_kgrams(F.col(text_col), kgram)))
         .select(
             "doc_id", "_n_kg", "pos",
             F.conv(F.substring(F.md5("_kg"), 1, 8), 16, 10)
@@ -451,7 +454,7 @@ def bpe_pair_counts(
     df = parallel_floor(df, id_col)
     vocab = (
         df.select(
-            F.explode(_words(F.col(text_col))).alias("word"),
+            F.explode(norm_words(F.col(text_col))).alias("word"),
         )
         .filter(F.col("word") != "")
         .groupBy("word")
@@ -510,7 +513,7 @@ def slice_kl_divergence(
     df = parallel_floor(df, id_col)
     toks = df.select(
         F.col(slice_col).alias("slice"),
-        F.explode(_words(F.col(text_col))).alias("word"),
+        F.explode(norm_words(F.col(text_col))).alias("word"),
     ).filter(F.col("word") != "")
     # sb is the ONLY product of the token scan and feeds four consumers
     # (corpus marginals, totals, slice totals, the dense left join) —
@@ -602,7 +605,7 @@ def keyness_terms(
     sw = (
         df.select(
             F.col(slice_col).alias("slice"),
-            F.explode(_words(F.col(text_col))).alias("word"),
+            F.explode(norm_words(F.col(text_col))).alias("word"),
         )
         .filter(F.col("word") != "")
         .groupBy("slice", "word")
@@ -725,7 +728,7 @@ def vocab_novelty(
     pairs = (
         df.select(
             F.col(day_col).alias("day"),
-            F.explode(_words(F.col(text_col))).alias("word"),
+            F.explode(norm_words(F.col(text_col))).alias("word"),
         )
         .filter(F.col("word") != "")
         .distinct()
@@ -771,8 +774,7 @@ def readability_scores(
     """
     df = parallel_floor(df, id_col)
     text = F.col(text_col)
-    norm = F.regexp_replace(F.lower(F.trim(text)), r"\s+", " ")
-    words = F.filter(F.split(norm, " "), lambda w: w != "")
+    words = F.filter(norm_words(text), lambda w: w != "")
     n_words = F.greatest(F.size(words), F.lit(1))
     n_sent = F.greatest(
         F.size(F.regexp_extract_all(text, F.lit(r"[.!?]+"), 0)), F.lit(1))
@@ -818,7 +820,7 @@ def zipf_fit(
     """
     df = parallel_floor(df, id_col)
     words = (
-        df.select(F.explode(_words(F.col(text_col))).alias("word"))
+        df.select(F.explode(norm_words(F.col(text_col))).alias("word"))
         .filter(F.col("word") != "")
         .groupBy("word")
         .agg(F.count("*").alias("freq"))
@@ -868,7 +870,7 @@ def collocations(
     pair asc), pmi round-6.
     """
     df = parallel_floor(df, id_col)
-    words_arr = _words(F.col(text_col))
+    words_arr = norm_words(F.col(text_col))
     toks = F.filter(words_arr, lambda w: w != "")
     bigrams = df.select(
         F.explode(

@@ -22,12 +22,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from waka_spark.functions.text_norm import norm_key
+
 
 def _is_error(text_col: str):
     """A tool turn is an error iff its normalized text starts with
     'error' — the convention the synthetic corpus and tests inject."""
-    norm = F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " ")
-    return norm.startswith("error")
+    return norm_key(F.col(text_col)).startswith("error")
 
 
 def tool_usage_stats(

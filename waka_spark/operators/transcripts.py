@@ -14,13 +14,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from waka_spark.functions.text_norm import norm_key, norm_words
 from waka_spark.plans.pins import cut, pin
 
 
-def _n_tokens(text_col: str):
-    words = F.split(
-        F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " "), " ")
-    return F.size(F.filter(words, lambda w: w != ""))
+def _nonempty_words(text_col: str):
+    return F.filter(norm_words(F.col(text_col)), lambda w: w != "")
 
 
 def context_tail(
@@ -52,7 +51,7 @@ def context_tail(
         transcripts.select(
             F.col(conv_col).alias("conv_id"),
             F.col(turn_col).alias("turn_idx"),
-            _n_tokens(text_col).cast("long").alias("n_tokens"),
+            F.size(_nonempty_words(text_col)).cast("long").alias("n_tokens"),
         )
         .withColumn("cum_tokens_from_end", F.sum("n_tokens").over(w))
         .withColumn("kept", F.col("cum_tokens_from_end") <= token_budget)
@@ -76,7 +75,7 @@ def loss_mask_stats(
     ONE hash agg keyed by conv_id (map-side partials): (n_turns,
     total_tokens, trained_tokens, mask_ratio).
     """
-    n_tok = _n_tokens(text_col)
+    n_tok = F.size(_nonempty_words(text_col))
     trained = F.when(
         F.col(role_col) == trained_role, n_tok).otherwise(F.lit(0))
     return (
@@ -133,10 +132,6 @@ def task_outcome_pairs(
     )
 
 
-def _norm_text(text_col: str):
-    return F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " ")
-
-
 def _with_prefix_state(
     transcripts: DataFrame,
     conv_col: str,
@@ -162,7 +157,7 @@ def _with_prefix_state(
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     w_lead = Window.partitionBy(conv_col).orderBy(F.col(turn_col))
-    norm = _norm_text(text_col)
+    norm = norm_key(F.col(text_col))
     return (
         transcripts.select(
             F.col(conv_col).alias("conv_id"),
@@ -306,7 +301,7 @@ def structure_check(
             # NULL text IS an empty turn: `NULL == ""` is NULL and fell
             # into otherwise(0), letting NULL-text conversations pass the
             # empty-turn gate straight into SFT rows (round-3 review fix)
-            F.when(F.coalesce(_norm_text(text_col), F.lit("")) == "", 1)
+            F.when(F.coalesce(norm_key(F.col(text_col)), F.lit("")) == "", 1)
             .otherwise(0)
         ).cast("long").alias("n_empty_turns"),
     )
@@ -390,7 +385,8 @@ def conv_exact_dups(
             # conversation hash and distinct conversations collided
             # (round-3 review fix; "null" is not a valid md5 hex, so the
             # sentinel cannot collide with a real hash)
-            F.coalesce(F.md5(_norm_text(text_col)), F.lit("null")).alias("h"),
+            F.coalesce(F.md5(norm_key(F.col(text_col))), F.lit("null"))
+            .alias("h"),
         ).alias("_th"),
     )
     conv = per_turn.groupBy("conv_id").agg(
@@ -446,7 +442,7 @@ def conv_near_dups(
     Output: (conv_a, conv_b, n_common, jaccard), jaccard >= threshold.
     """
     assert n_bands <= 8, "widen the digest chain for more than 8 bands"
-    norm = _norm_text(text_col)
+    norm = norm_key(F.col(text_col))
     # turns feeds the signature agg AND both sides of the verification
     # join; sizes_and_sigs feeds the bucket join and the size lookups —
     # EAGERLY checkpoint both (conv/turn-level hash frames, tiny next to
@@ -554,7 +550,7 @@ def assistant_loops(
     Output: (conv_id, text_hash, text, n_repeats, first_turn,
     last_turn).
     """
-    norm = _norm_text(text_col)
+    norm = norm_key(F.col(text_col))
     return (
         transcripts.filter(F.col(role_col) == role)
         .select(
@@ -595,9 +591,7 @@ def turn_cohesion(
     cohesion is NULL on each conversation's first turn (and when both
     neighbor token sets are empty), which never flags a boundary.
     """
-    norm = _norm_text(text_col)
-    toks = F.array_distinct(
-        F.filter(F.split(norm, " "), lambda w: w != ""))
+    toks = F.array_distinct(_nonempty_words(text_col))
     w = Window.partitionBy(conv_col).orderBy(F.col(turn_col))
     cur_prev = transcripts.select(
         F.col(conv_col).alias("conv_id"),
@@ -703,8 +697,7 @@ def boilerplate_turns(
     the shuffle carries a fixed-width hash). Output: (text_hash, text,
     n_convs, n_occurrences) for flagged turns.
     """
-    norm = F.regexp_replace(
-        F.lower(F.trim(F.col(text_col))), r"\s+", " ")
+    norm = norm_key(F.col(text_col))
     base = transcripts.select(
         F.col(conv_col).alias("conv_id"),
         F.md5(norm).alias("text_hash"),
@@ -807,8 +800,7 @@ def textrank_turns(
     """
     from waka_spark.operators.graph import pagerank
 
-    norm = _norm_text(text_col)
-    toks = F.array_distinct(F.filter(F.split(norm, " "), lambda w: w != ""))
+    toks = F.array_distinct(_nonempty_words(text_col))
     w = Window.partitionBy(conv_col).orderBy(F.col(turn_col))
     pairs = (
         transcripts.select(
@@ -872,8 +864,7 @@ def assistant_echo_rate(
     Output: (conv_id, n_pairs, mean_echo, max_echo); pairs are assistant
     turns whose previous turn is a user turn with a non-empty token set.
     """
-    norm = _norm_text(text_col)
-    toks = F.array_distinct(F.filter(F.split(norm, " "), lambda w: w != ""))
+    toks = F.array_distinct(_nonempty_words(text_col))
     w = Window.partitionBy(conv_col).orderBy(F.col(turn_col))
     pairs = (
         transcripts.select(

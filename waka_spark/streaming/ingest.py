@@ -10,9 +10,6 @@ module gives the engine a streaming front end with the same table contract:
   counts — the canonical late-data-tolerant aggregation.
 - ``incremental_mentions``: the NER stage applied to a stream (stateless
   mapInPandas works unchanged on streaming DataFrames) → append sink.
-- ``conversation_sessions``: ``applyInPandasWithState`` custom stateful
-  operator assembling per-conv running documents with a session timeout —
-  the streaming analog of P1 assembly.
 
 The downstream batch pipeline consumes the checkpointed micro-batch output
 (foreachBatch → the checkpoint runner), so batch and streaming share every
@@ -137,54 +134,6 @@ def incremental_mentions(turns: DataFrame, gazetteer) -> DataFrame:
     return gazetteer_ner(per_turn_docs, gazetteer)
 
 
-SESSION_STATE_SCHEMA = "turn_count INT, text STRING"
-SESSION_OUT_SCHEMA = (
-    "conv_id STRING, n_turns INT, text STRING, closed BOOLEAN"
-)
-
-
-def conversation_sessions(turns: DataFrame, timeout_ms: int = 60_000) -> DataFrame:
-    """Custom stateful operator: per-conv running document assembly with a
-    processing-time session timeout (applyInPandasWithState). Emits the
-    running document on every update and a final ``closed=true`` row when
-    the conversation times out."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    def assemble(key, pdfs, state: GroupState):
-        import pandas as pd
-
-        conv_id = key[0]
-        if state.hasTimedOut:
-            count, text = state.get if state.exists else (0, "")
-            state.remove()
-            yield pd.DataFrame([{
-                "conv_id": conv_id, "n_turns": count,
-                "text": text, "closed": True,
-            }])
-            return
-        count, text = state.get if state.exists else (0, "")
-        rows = pd.concat(list(pdfs)).sort_values("turn_idx")
-        for t in rows["text"]:
-            text = f"{text} {t}".strip()
-        count += len(rows)
-        state.update((count, text))
-        state.setTimeoutDuration(timeout_ms)
-        yield pd.DataFrame([{
-            "conv_id": conv_id, "n_turns": count, "text": text, "closed": False,
-        }])
-
-    return (
-        turns.groupBy("conv_id")
-        .applyInPandasWithState(
-            assemble,
-            outputStructType=SESSION_OUT_SCHEMA,
-            stateStructType=SESSION_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-        )
-    )
-
-
 def streaming_exact_dedup(
     turns: DataFrame,
     watermark: str = "1 hour",
@@ -197,11 +146,11 @@ def streaming_exact_dedup(
     face of ``operators/dedup.exact_dedup`` (same normalize+md5 key);
     exact-forever dedup at rest belongs to the batch pass — at 10^12
     turns, unbounded streaming state is the wrong tool."""
-    from waka_spark.operators.dedup import normalize_text
+    from waka_spark.functions.text_norm import norm_key
 
     return (
         turns
-        .withColumn("text_hash", F.md5(normalize_text(F.col("text"))))
+        .withColumn("text_hash", F.md5(norm_key(F.col("text"))))
         .withWatermark(ts_col, watermark)
         .dropDuplicatesWithinWatermark(["text_hash"])
         .drop("text_hash")
@@ -247,6 +196,31 @@ def streaming_interval_join(
     return l.join(r, cond)
 
 
+def _start_bridge(spark: SparkSession, input_path: str, process_batch,
+                  checkpoint_path: str, trigger_once: bool):
+    """Start a foreachBatch query running ``process_batch`` on each
+    micro-batch of the transcripts under ``input_path``."""
+    writer = (
+        stream_transcripts(spark, input_path).writeStream
+        .foreachBatch(process_batch)
+        .option("checkpointLocation", checkpoint_path)
+    )
+    if trigger_once:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
+def _replayed(table, cur, checkpoint_path: str, batch_id: int) -> bool:
+    """True iff snapshot ``cur`` of ``table`` carries this batch's
+    (checkpoint, batch_id) stamp: an at-least-once re-delivery of an
+    already-committed batch, to be skipped rather than merged twice."""
+    if cur is None:
+        return False
+    m = table.manifest(cur)
+    return (m.get("batch_id") == batch_id
+            and m.get("checkpoint") == checkpoint_path)
+
+
 def run_stream_merge_edges(
     spark: SparkSession,
     input_path: str,
@@ -289,11 +263,8 @@ def run_stream_merge_edges(
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         cur = table.current_version()
-        if cur is not None:
-            m = table.manifest(cur)
-            if (m.get("batch_id") == batch_id
-                    and m.get("checkpoint") == checkpoint_path):
-                return  # at-least-once replay of an already-committed batch
+        if _replayed(table, cur, checkpoint_path, batch_id):
+            return
         with pin_scope():
             out = pipeline.run(batch_df)
             delta = edges_from_triples(out["triples"])
@@ -305,14 +276,8 @@ def run_stream_merge_edges(
                 merged,
                 meta={"batch_id": batch_id, "checkpoint": checkpoint_path})
 
-    stream = stream_transcripts(spark, input_path)
-    writer = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_path)
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_bridge(
+        spark, input_path, process_batch, checkpoint_path, trigger_once)
 
 
 def run_stream_to_graph(
@@ -336,14 +301,8 @@ def run_stream_to_graph(
                 .write.mode("append").parquet(f"{output_path}/edges")
             )
 
-    stream = stream_transcripts(spark, input_path)
-    writer = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_path)
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_bridge(
+        spark, input_path, process_batch, checkpoint_path, trigger_once)
 
 
 def run_stream_fact_history(
@@ -377,11 +336,8 @@ def run_stream_fact_history(
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         cur = table.current_version()
-        if cur is not None:
-            m = table.manifest(cur)
-            if (m.get("batch_id") == batch_id
-                    and m.get("checkpoint") == checkpoint_path):
-                return  # at-least-once replay of an already-committed batch
+        if _replayed(table, cur, checkpoint_path, batch_id):
+            return
         with pin_scope():
             facts = facts_fn(batch_df)
             merged = (
@@ -392,14 +348,8 @@ def run_stream_fact_history(
                 merged,
                 meta={"batch_id": batch_id, "checkpoint": checkpoint_path})
 
-    stream = stream_transcripts(spark, input_path)
-    writer = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_path)
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_bridge(
+        spark, input_path, process_batch, checkpoint_path, trigger_once)
 
 
 def streaming_hygiene_rates(
