@@ -33,6 +33,27 @@ def test_ngram_jaccard(spark):
     assert got[0].jaccard > 0.8
 
 
+def test_word_shingles_split_once(spark):
+    """The text is split once per row, not once per shingle, and the
+    shingles are the distinct sliding windows of the normalized words."""
+    from waka_spark.operators.dedup import word_shingles
+
+    assert str(word_shingles(F.col("text"), 3)).count("split(") == 1
+
+    def windows(t):
+        if t is None:
+            return [None]
+        w = re.sub(r"\s+", " ", t.strip().lower()).split(" ")
+        out = [" ".join(w[i:i + 3]) for i in range(max(len(w) - 3, 0) + 1)]
+        return list(dict.fromkeys(out))
+
+    texts = [None, "", "   ", "one", "one two", "a b c", " A  b c a b c d",
+             "x y x y x y"]
+    got = [r.sh for r in _docs(spark, texts).orderBy("doc_id").select(
+        word_shingles(F.col("text"), 3).alias("sh")).collect()]
+    assert got == [windows(t) for t in texts]
+
+
 def _py_words(t):
     # Spark's trim strips spaces only; Java's \s is [ \t\n\x0B\f\r]
     return re.sub(r"[ \t\n\x0b\f\r]+", " ", t.lower().strip(" ")).split(" ")
