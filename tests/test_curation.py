@@ -231,6 +231,35 @@ def test_scrub_removes_exactly_the_spans(span_docs):
         assert r["n_words"] == kept + r["n_removed"]
 
 
+def test_scrub_builds_word_array_once(spark):
+    """The rebuild projection splits each text once: the optimized plan
+    holds three splits (two in duplicate_spans' window scans, one in the
+    rebuild), and the rows keep their values on NULL, empty and
+    tab-separated texts."""
+    from waka_spark.operators.dedup import scrub_duplicate_spans
+
+    rows = [
+        (10, "x1 x2 a b c d e f g h x3 x4"),
+        (11, "Y1  a b c d\te f g h y2 y3 y4 y5"),
+        (12, "u1 u2 u3 u4 u5 u6 u7 u8 u9 u10"),
+        (13, "s1 s2 s3"),
+        (14, ""),
+        (15, None),
+    ]
+    out = scrub_duplicate_spans(
+        spark.createDataFrame(rows, "doc_id long, text string"), window=6)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("split(") == 3
+    assert sorted(tuple(r) for r in out.collect()) == [
+        (10, "x1 x2 x3 x4", 12, 8),
+        (11, "y1 y2 y3 y4 y5", 13, 8),
+        (12, "u1 u2 u3 u4 u5 u6 u7 u8 u9 u10", 10, 0),
+        (13, "s1 s2 s3", 3, 0),
+        (14, "", 1, 0),
+        (15, None, None, None),
+    ]
+
+
 def test_hashed_linear_score_deterministic_and_bounded(span_docs):
     from waka_spark.operators.curation import hashed_linear_score
 

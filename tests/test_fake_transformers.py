@@ -14,6 +14,7 @@ behind one key would silently share the first-loaded model.
 """
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -106,6 +107,51 @@ def test_sbert_scorer_swaps_into_rerank(spark):
 
     assert abs(got["u1"] - cos("the cat sat on the mat.", "cat", "small animal")) < 1e-9
     assert abs(got["u2"] - cos("dogs bark loudly.", "dog", "loud animal")) < 1e-9
+
+
+def test_sbert_scorer_encodes_distinct_texts_once(spark):
+    """Each distinct text of a batch reaches ``encode`` once; a row without
+    a sentence never does and scores NULL, so the rerank pass keeps its
+    score."""
+    from waka_spark.operators.rerank import rerank_candidates, split_sentences
+
+    calls = []
+
+    def recording_loader():
+        encode = fake_encode_loader()
+
+        def recording(texts):
+            calls.append(list(texts))
+            return encode(texts)
+
+        return recording
+
+    sim = sbert_similarity_scorer(model_dir="fake-sbert-recording",
+                                  model_loader=recording_loader, batch_size=2)
+    got = sim(pd.Series(["the cat sat", None, "the cat sat", "dogs bark"]),
+              pd.Series(["cat", "cat", "cat", "dog"]),
+              pd.Series(["pet", "pet", "pet", "pet"]))
+    encoded = [t for c in calls for t in c]
+    assert sorted(encoded) == sorted(
+        {"the cat sat", "dogs bark", "cat is a pet", "dog is a pet"})
+    assert all(len(c) <= 2 for c in calls)
+    assert np.isnan(got[1]) and got[0] == got[2]
+
+    docs = spark.createDataFrame(
+        [("c1", "the cat sat. dogs bark.")], "conv_id string, text string")
+    cands = spark.createDataFrame(
+        [("c1", 4, 17, "u1", "cat", "pet", 0.7)],   # crosses a boundary
+        "conv_id string, start_idx int, end_idx int, url string, "
+        "label string, description string, score double",
+    )
+    udf = F.pandas_udf(
+        sbert_similarity_scorer(model_dir="fake-sbert",
+                                model_loader=fake_encode_loader),
+        "double",
+    )
+    [row] = rerank_candidates(cands, split_sentences(docs), threshold=0.0,
+                              sim_udf=udf).collect()
+    assert row.score == 0.7
 
 
 def _fused_pair(spark, scorer):

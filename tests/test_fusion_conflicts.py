@@ -60,12 +60,15 @@ def test_resolve_endpoints_exact_then_longest_containment(spark):
 
 def test_resolve_endpoints_fallback_multi_url_surface(spark):
     """The winning surface's *entire* url set comes back (the surface-dedup
-    containment join must not drop sibling entities of the best surface)."""
+    containment join must not drop sibling entities of the best surface),
+    and every miss query of a conversation enters the containment join."""
     ents = _entities(spark, [
         ("c1", "Q1", "Bauhaus University", "d", 0.8, "entity",
          [_mention(0, 18, "Bauhaus University", 0.8)]),
         ("c1", "Q9", "Bauhaus University", "d", 0.6, "entity",
          [_mention(0, 18, "Bauhaus University", 0.6)]),
+        ("c2", "Q1", "alpha beta gamma", "d", 0.8, "entity",
+         [_mention(0, 16, "alpha beta gamma", 0.8)]),
     ])
     index = mention_entity_index(ents)
     queries = spark.createDataFrame(
@@ -73,25 +76,12 @@ def test_resolve_endpoints_fallback_multi_url_surface(spark):
     got = {r.url for r in resolve_endpoints(queries, index).collect()}
     assert got == {"Q1", "Q9"}
 
-
-def test_resolve_endpoints_fallback_cap(spark):
-    """max_fallback_queries_per_conv bounds the containment join: only the
-    shortest-first capped miss set resolves; overflow queries drop."""
-    ents = _entities(spark, [
-        ("c1", "Q1", "alpha beta gamma", "d", 0.8, "entity",
-         [_mention(0, 16, "alpha beta gamma", 0.8)]),
-    ])
-    index = mention_entity_index(ents)
     queries = spark.createDataFrame(
-        [("c1", "alpha"), ("c1", "beta"), ("c1", "gamma")],
+        [("c2", "alpha"), ("c2", "beta"), ("c2", "gamma")],
         "conv_id string, q_text string",
     )
-    uncapped = resolve_endpoints(queries, index)
-    assert {r.q_text for r in uncapped.collect()} == {"alpha", "beta", "gamma"}
-
-    capped = resolve_endpoints(queries, index, max_fallback_queries_per_conv=2)
-    # shortest-first deterministic order: beta (4) < alpha (5) < gamma (5)
-    assert {r.q_text for r in capped.collect()} == {"beta", "alpha"}
+    got = resolve_endpoints(queries, index)
+    assert {r.q_text for r in got.collect()} == {"alpha", "beta", "gamma"}
 
 
 def _linked_triples(spark, rows):

@@ -139,38 +139,63 @@ def test_clustering_literal_flag_and_head(spark):
 
 
 def test_rerank_shapes_agree_and_guard_missing_sentence(spark):
-    """The narrow (default) and dedup-pairs rerank shapes must produce
-    identical rows; candidates without a containing sentence keep their
-    score; the threshold filter applies to every row."""
-    from waka_spark.operators.rerank import rerank_candidates, split_sentences
+    """The native rerank pass equals a per-row ``lexical_containment_sim``
+    reference on adversarial rows: case and Unicode lowercasing, digits,
+    punctuation-only and repeated tokens, NULL label/description, spans
+    crossing a sentence boundary and candidates with no sentence (both
+    keep their score). The threshold filter applies to every row."""
+    from waka_spark.operators.rerank import (
+        lexical_containment_sim,
+        rerank_candidates,
+        split_sentences,
+    )
 
-    docs = spark.createDataFrame(
-        [("c1", "Weimar is a city. The school moved away.")],
-        "conv_id string, text string",
-    )
-    # "moved" at 22..27 lies inside sentence 2; the 10..30 span crosses the
-    # sentence boundary so no sentence contains it (score kept); the low
-    # candidate is dropped by the threshold
-    cands = spark.createDataFrame(
-        [
-            ("c1", 0, 6, "Weimar", "GPE", "Q1", "Weimar", "city", 0.5),
-            ("c1", 10, 30, "crosser", "ORG", "Q2", "school", "org", 0.4),
-            ("c1", 22, 27, "moved", "MISC", "Q3", "nothing", "absent", 0.5),
-            ("c1", 0, 6, "Weimar", "GPE", "Q4", "tiny", "tiny", 0.01),
-        ],
-        schemas.CANDIDATES,
-    )
-    sents = split_sentences(docs)
-    narrow = rerank_candidates(cands, sents, threshold=0.05)
-    dedup = rerank_candidates(cands, sents, threshold=0.05, dedup_pairs=True)
-    key = lambda r: (r["conv_id"], r["start_idx"], r["end_idx"], r["url"])  # noqa: E731
-    ns = {key(r): round(r["score"], 9) for r in narrow.collect()}
-    ds = {key(r): round(r["score"], 9) for r in dedup.collect()}
-    assert ns == ds
-    assert ("c1", 10, 30, "Q2") in ns and ns[("c1", 10, 30, "Q2")] == 0.4
-    assert ("c1", 0, 6, "Q4") not in ns          # thresholded out
-    # "Weimar is a city." contains both tokens of "Weimar city" -> sim 1.0
-    assert ns[("c1", 0, 6, "Q1")] == 0.5
+    text = ("Weimar \u0130s a CITY near \u212aelvin-town, since 1919. "
+            "Die Stra\u00dfe hat 27 H\u00e4user! ??? end end end.")
+    docs = spark.createDataFrame([("c1", text)], "conv_id string, text string")
+
+    def cand(url, surface, label, desc, score, conv="c1", end=None):
+        start = text.index(surface)
+        return (conv, start, end or start + len(surface), surface, "MISC",
+                url, label, desc, score)
+
+    rows = [
+        cand("mixed", "Weimar", "WEIMAR", "City", 0.5),
+        cand("dotted_i", "\u0130s", "\u0130s", None, 0.5),
+        cand("kelvin", "\u212aelvin", "kelvin", "town", 0.5),
+        cand("sharp_s", "Stra\u00dfe", "strasse", "Stra\u00dfe", 0.5),
+        cand("digits", "1919", "1919", "year 27", 0.5),
+        cand("punct", "???", "???", None, 0.5),
+        cand("null_label", "CITY", None, "city", 0.5),
+        cand("null_desc", "near", "near", None, 0.5),
+        cand("null_both", "Weimar", None, None, 0.5),
+        cand("crosser", "1919", "weimar", "x", 0.4,
+             end=text.index("Stra\u00dfe") + 3),
+        cand("no_sentence", "Weimar", "weimar", "city", 0.5, conv="c2"),
+        cand("repeated", "end end", "end end", "END", 0.5),
+        cand("half", "end end", "moon moon", "end", 0.5),
+        cand("low_sim", "Weimar", "zzz", None, 0.1),
+        cand("low_score", "Weimar", "Weimar", "city", 0.01),
+    ]
+    cands = spark.createDataFrame(rows, schemas.CANDIDATES)
+    sents = split_sentences(docs).collect()
+
+    def expected(r):
+        conv, start, end, _, _, url, label, desc, score = r
+        inside = [s.sent_text for s in sents if s.conv_id == conv
+                  and s.sent_start <= start and end <= s.sent_end]
+        if inside and (label is not None or desc is not None):
+            score *= lexical_containment_sim(inside[0], label, desc)
+        return score
+
+    want = {r[5]: s for r in rows if (s := expected(r)) >= 0.05}
+    got = {r.url: r.score for r in rerank_candidates(
+        cands, split_sentences(docs), threshold=0.05).collect()}
+    assert got == want
+    assert got["crosser"] == 0.4 and got["no_sentence"] == 0.5
+    assert got["null_both"] == 0.5 and got["mixed"] == 0.5
+    assert got["half"] == 0.5 * (0.3 + 0.7 * (1 / 2))
+    assert "low_sim" not in got and "low_score" not in got
 
 
 # Adversarial corpus for the corpus scan: NULL and empty text, a document

@@ -14,10 +14,10 @@ from waka_spark.plans.checkpoint import CheckpointManager, run_checkpointed
 from waka_spark.plans.pipeline import KGPipeline
 
 # Spark jobs for one local run plus one collect of its triples, on the
-# corpus of test_local_run_job_count (local[4]): the most the pre-merge
-# local runner spent over 15 runs (66-69; how many jobs AQE submits
-# varies with timing, by the same spread before and after the merge)
-LOCAL_RUN_JOBS = 69
+# corpus of test_local_run_job_count (local[4]): the most seen over 15
+# runs with the one-pass rerank (49-51; how many jobs AQE submits varies
+# with timing)
+LOCAL_RUN_JOBS = 51
 
 
 @pytest.fixture(scope="module")

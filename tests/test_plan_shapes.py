@@ -5,13 +5,21 @@ results. Each assertion pins a scale-critical plan property:
 - global top-k compiles to TakeOrderedAndProject (per-partition heaps),
   never a single-partition window,
 - filters reach the parquet scan (PushedFilters),
-- column pruning reaches the scan (ReadSchema carries only what's used).
+- column pruning reaches the scan (ReadSchema carries only what's used),
+- a pinned stage's consumers are not re-derived (one Python scan, one
+  ranking exchange per stage),
+- the late operator additions (salience, temporal-KG SCD-2 family,
+  hygiene, MMR candidates, Adamic-Adar) keep the properties that make
+  them scale.
 
-These run on sf0.001 — plan shape is data-size independent here because the
-broadcast side is a literal dictionary and the rest are structural.
+The query tests run on sf0.001 — plan shape is data-size independent here
+because the broadcast side is a literal dictionary and the rest are
+structural. The operator tests build small in-memory frames.
 """
 
 from __future__ import annotations
+
+import datetime as dt
 
 import pytest
 from pyspark.sql import functions as F
@@ -25,6 +33,10 @@ def plan_of(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
     )
+
+
+def executed_plan_of(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
 
 
 @pytest.fixture(scope="module")
@@ -201,3 +213,124 @@ def test_collocations_topk_is_take_ordered(spark):
     is the rank assignment over the already-limited k rows."""
     plan = plan_of(entry.q_text_collocations(spark, SF))
     assert "TakeOrderedAndProject" in plan
+
+
+def test_rerank_candidates_one_pass(spark):
+    """KGPipeline.candidates over pinned documents and mentions, as the
+    pipeline runs it: the final executed plan holds one Python map (the
+    sentence split), no Python UDF and one ranking exchange. Rerank
+    aligns every candidate once, so nothing below it is computed twice."""
+    from waka_spark import synth
+    from waka_spark.plans.pins import cut, pin_scope
+    from waka_spark.plans.pipeline import KGPipeline
+
+    kb = synth.build_kb(n_entities=40)
+    pipe = KGPipeline(
+        aliases=synth.aliases_df(spark, kb),
+        properties=synth.properties_df(spark),
+        gazetteer=synth.gazetteer(kb),
+        rules=synth.rules_df(spark, kb),
+    )
+    tx = synth.synth_transcripts(spark, kb, n_convs=16, hot_every=8,
+                                 hot_turns=12, base_turns=6)
+    with pin_scope():
+        docs = cut(pipe.documents(tx))
+        cands = pipe.candidates(docs, cut(pipe.mentions(docs)))
+        assert cands.collect()
+        lines = (cands._jdf.queryExecution().executedPlan().executedPlan()
+                 .toString().splitlines())
+    assert sum("MapInPandas split" in ln for ln in lines) == 1
+    assert sum("MapInPandas" in ln for ln in lines) == 1
+    assert not any("ArrowEvalPython" in ln for ln in lines)
+    assert sum("REPARTITION_BY_COL" in ln for ln in lines) == 1
+
+
+def test_mention_salience_alias_dim_broadcasts(spark):
+    """Round-3 shape: the alias dictionary joins exploded tokens via a
+    broadcast EQUI-join (BroadcastHashJoin) — O(corpus tokens) work,
+    independent of dictionary size. The previous turns x aliases
+    BroadcastNestedLoopJoin fan-out (round-2 shape) must never come
+    back: it multiplied the corpus scan by the dictionary row count."""
+    from waka_spark.operators.linking import mention_salience
+
+    turns = spark.createDataFrame(
+        [("c", i, "spark join x") for i in range(8)],
+        "conv_id string, turn_idx int, text string")
+    aliases = spark.createDataFrame(
+        [("spark", "Q1"), ("join", "Q2")], "alias_key string, url string")
+    plan = executed_plan_of(mention_salience(turns, aliases))
+    assert "BroadcastHashJoin" in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert "CartesianProduct" not in plan
+
+
+def test_fact_history_single_exchange(spark):
+    """lag + lead share ONE (subj, pred) x ts sort: exactly one exchange
+    in the whole plan, no join."""
+    from waka_spark.operators.temporal import fact_history
+
+    facts = spark.createDataFrame(
+        [("e", "p", f"v{i % 3}", dt.datetime(2024, 1, 1, i)) for i in range(8)],
+        "subj_url string, pred_url string, obj_url string, ts timestamp")
+    plan = executed_plan_of(fact_history(facts))
+    assert plan.count("Exchange") == 1
+    assert "Join" not in plan
+
+
+def test_as_of_snapshot_predicates_reach_parquet_scan(spark, tmp_path):
+    """Snapshot probes over a MATERIALIZED history must push both
+    interval predicates into the parquet scan."""
+    from waka_spark.operators.temporal import as_of_snapshot, fact_history
+
+    facts = spark.createDataFrame(
+        [("e", "p", f"v{i % 3}", dt.datetime(2024, 1, 1, i)) for i in range(8)],
+        "subj_url string, pred_url string, obj_url string, ts timestamp")
+    path = str(tmp_path / "hist")
+    fact_history(facts).write.parquet(path)
+    plan = executed_plan_of(as_of_snapshot(
+        spark.read.parquet(path), dt.datetime(2024, 1, 1, 5)))
+    assert "PushedFilters: [" in plan
+    assert "IsNotNull(valid_from)" in plan or "LessThanOrEqual" in plan
+
+
+def test_assistant_hygiene_no_join_no_window(spark):
+    """Flags are in-row, the rollup is one hash agg: no joins, no window
+    exchanges beyond the single groupBy shuffle."""
+    from waka_spark.operators.transcripts import assistant_hygiene
+
+    t = spark.createDataFrame(
+        [("c", i, "assistant", "ok") for i in range(6)],
+        "conv_id string, turn_idx int, role string, text string")
+    plan = executed_plan_of(assistant_hygiene(t))
+    assert "Join" not in plan and "Window" not in plan
+    assert plan.count("Exchange") == 1
+
+
+def test_mmr_candidate_stage_is_broadcast_scan(spark):
+    """MMR's stage-1 candidate generation must keep the corpus un-
+    shuffled pre-window: queries broadcast, no sort-merge join. Row
+    i=0 is deliberately the ZERO vector — cosine() must degrade it to
+    NULL relevance (ranked last), not throw ANSI DIVIDE_BY_ZERO and
+    kill the job."""
+    from waka_spark.operators.ann import mmr_topk
+
+    emb = spark.createDataFrame(
+        [(i, [float(i % 3), float(i % 5)]) for i in range(12)],
+        "vec_id long, embedding array<double>")
+    queries = spark.createDataFrame(
+        [(100, [1.0, 0.0])], "q_id long, q_vec array<double>")
+    plan = executed_plan_of(mmr_topk(emb, queries, k=2, n_candidates=4))
+    assert "SortMergeJoin" not in plan
+
+
+def test_adamic_adar_attaches_degree_before_pair_agg(spark):
+    """The wedge enumeration reads the eagerly checkpointed edge RDD (no
+    re-derivation per branch) and never falls into a nested-loop join."""
+    from waka_spark.operators.graph import adamic_adar, symmetrize
+
+    edges = symmetrize(spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("a", "c"), ("c", "d")],
+        "doc_a string, doc_b string"))
+    plan = executed_plan_of(adamic_adar(edges, min_common=1))
+    assert "Scan ExistingRDD" in plan
+    assert "BroadcastNestedLoopJoin" not in plan

@@ -43,9 +43,6 @@ class FusionConfig:
     best_threshold: float = 0.1        # kg_construction.py:94
     rerank_threshold: float = 0.05     # semantics.py:221
     known_triple_boost: float = 3.0    # semantics.py:75
-    # scale guard: cap containment-fallback queries per conversation
-    # (None = exact reference semantics; set on Zipf-hot corpora)
-    max_fallback_queries_per_conv: int | None = None
 
 
 @dataclass(frozen=True)

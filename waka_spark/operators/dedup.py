@@ -637,27 +637,30 @@ def scrub_duplicate_spans(
         .groupBy("doc_id")
         .agg(F.collect_list(F.struct("span_start", "span_end")).alias("_spans"))
     )
-    words = norm_words(F.col("_t"))
-    indexed = F.transform(
-        words, lambda w, i: F.struct(i.alias("pos"), w.alias("w"))
-    )
     covered = lambda pos: F.exists(  # noqa: E731
         F.col("_spans"),
         lambda s: (s["span_start"] <= pos) & (pos < s["span_end"]),
     )
-    kept = F.when(F.col("_spans").isNull(), indexed).otherwise(
-        F.filter(indexed, lambda x: ~covered(x["pos"]))
-    )
-    return (
-        df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("_t"))
-        .join(spans, "doc_id", "left")
-        .select(
-            "doc_id",
+
+    def rebuild(words: Column) -> Column:
+        indexed = F.transform(
+            words, lambda w, i: F.struct(i.alias("pos"), w.alias("w"))
+        )
+        kept = F.when(F.col("_spans").isNull(), indexed).otherwise(
+            F.filter(indexed, lambda x: ~covered(x["pos"]))
+        )
+        return F.struct(
             F.array_join(F.transform(kept, lambda x: x["w"]), " ")
             .alias("clean_text"),
             F.size(words).cast("long").alias("n_words"),
             (F.size(words) - F.size(kept)).cast("long").alias("n_removed"),
         )
+
+    return (
+        df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("_t"))
+        .join(spans, "doc_id", "left")
+        .select("doc_id", with_words(F.col("_t"), rebuild).alias("_r"))
+        .select("doc_id", "_r.clean_text", "_r.n_words", "_r.n_removed")
     )
 
 

@@ -63,10 +63,7 @@ def mention_entity_index(entities: DataFrame) -> DataFrame:
     )
 
 
-def resolve_endpoints(
-    endpoint_texts: DataFrame, index: DataFrame,
-    max_fallback_queries_per_conv: int | None = None,
-) -> DataFrame:
+def resolve_endpoints(endpoint_texts: DataFrame, index: DataFrame) -> DataFrame:
     """P16 lookup: endpoint_texts(conv_id, q_text) → candidate entities.
 
     Exact surface match first; otherwise all entities of the single
@@ -75,15 +72,9 @@ def resolve_endpoints(
     to nothing (kg_construction.py:218-219).
 
     Scale shape of the fallback: the containment theta-join is inherently
-    per-conv quadratic, so (a) its right side is the *distinct surface*
-    list per conv (usually far smaller than the full (surface, url) index;
-    the winning surface's entities are fetched by equi-join afterwards),
-    and (b) ``max_fallback_queries_per_conv`` optionally caps the number of
-    miss-queries entering the join per conversation (deterministic
-    shortest-first order — short queries are likeliest to be substrings),
-    bounding a Zipf-hot conversation at the cost of dropping candidates
-    for the overflow (they resolve to nothing, exactly as if unmatched).
-    Default None = exact reference semantics.
+    per-conv quadratic, so its right side is the *distinct surface* list
+    per conv (usually far smaller than the full (surface, url) index; the
+    winning surface's entities are fetched by equi-join afterwards).
     """
     queries = endpoint_texts.filter(F.col("q_text").isNotNull() & (F.col("q_text") != ""))
 
@@ -108,17 +99,6 @@ def resolve_endpoints(
 
     misses = looked_up.filter(F.col("_hit").isNull()).select(
         queries["conv_id"], "q_text")
-
-    if max_fallback_queries_per_conv is not None:
-        w_cap = Window.partitionBy("conv_id").orderBy(
-            F.length("q_text").asc(), F.col("q_text").asc()
-        )
-        misses = (
-            misses
-            .withColumn("_q_rank", F.row_number().over(w_cap))
-            .filter(F.col("_q_rank") <= max_fallback_queries_per_conv)
-            .drop("_q_rank")
-        )
 
     # fresh alias: `index` already appears in misses' lineage via the left
     # join above, so an unaliased second reference would be an ambiguous
@@ -208,10 +188,7 @@ def fuse_triples(
         .unionByName(triples.select("conv_id", F.col("obj_text").alias("q_text")))
         .distinct()
     )
-    resolved = pin(resolve_endpoints(
-        endpoints, index,
-        max_fallback_queries_per_conv=cfg.max_fallback_queries_per_conv,
-    ))
+    resolved = pin(resolve_endpoints(endpoints, index))
 
     subj_c = resolved.select(
         F.col("conv_id").alias("s_conv"), F.col("q_text").alias("s_text"),

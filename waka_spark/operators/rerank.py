@@ -10,18 +10,20 @@ rescored but *are* subject to the final filter (they pass at score 1.0).
 Dataflow here:
 1. sentence split — Arrow-batched mapInPandas (regex splitter standing in
    for Punkt; same span semantics: (start, end) character offsets);
-2. candidate→sentence alignment — a range-containment join per conv_id;
-3. similarity on **distinct** (sentence, label, description) pairs — the
-   reference's label-dedup common-subexpression elimination (semantics.py:
-   155-167 analog) — then joined back;
-4. multiply + threshold filter.
+2. candidate→sentence alignment — one left range-containment join per
+   conv_id; each sentence's token array is computed once, before the join;
+3. similarity on every aligned row, in place — no distinct, no join-back;
+4. multiply (rows without a containing sentence keep their score) +
+   threshold filter.
 
 The similarity backend is pluggable. The deterministic CPU backend is
 lexical containment — |tokens(label∪description) ∩ tokens(sentence)| /
 |tokens(label∪description)| — affinely calibrated to the SBERT cos-sim range
-(sim = 0.3 + 0.7·containment), monotone in lexical agreement. A transformer
-backend drops in by replacing ``_sim_udf`` with an SBERT pandas UDF with a
-per-executor model cache.
+(sim = 0.3 + 0.7·containment), monotone in lexical agreement, evaluated as a
+native column (``lexical_sim_col``; ``lexical_containment_sim`` is its
+Python reference). A transformer backend drops in through
+``rerank_candidates(sim_udf=...)``: an SBERT pandas UDF with a per-executor
+model cache.
 """
 
 from __future__ import annotations
@@ -30,9 +32,8 @@ import re
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 _SENT_RE = re.compile(r"[^.!?]*[.!?]+(?:\s+|$)|[^.!?]+$")
 
@@ -76,14 +77,6 @@ def lexical_containment_sim(sent: str, label: str, description: str) -> float:
     return 0.3 + 0.7 * (overlap / len(cand))
 
 
-@F.pandas_udf(T.DoubleType())
-def _sim_udf(sent: pd.Series, label: pd.Series, desc: pd.Series) -> pd.Series:
-    return pd.Series([
-        lexical_containment_sim(s, l, d)
-        for s, l, d in zip(sent, label, desc)
-    ])
-
-
 def _token_arr(col):
     """JVM analog of ``_tokens``: distinct [a-z0-9]+ runs, lowercased."""
     return F.array_remove(
@@ -93,19 +86,21 @@ def _token_arr(col):
     )
 
 
-def lexical_sim_col(sent, label, desc):
-    """``lexical_containment_sim`` as a native column expression — identical
-    values, but whole-stage-codegen JVM arithmetic instead of a Python UDF.
-    At corpus scale the UDF variant is memory-bandwidth-bound (every
-    aligned row ships its sentence string through Arrow); this one never
-    leaves the JVM."""
+def lexical_sim_col(sent_tokens, label, desc):
+    """``lexical_containment_sim`` as a native column expression over the
+    sentence's precomputed ``_token_arr`` — identical values, but
+    whole-stage-codegen JVM arithmetic instead of a Python UDF. NULL where
+    ``sent_tokens`` is NULL (no containing sentence)."""
     cand = _token_arr(F.concat_ws(" ", F.coalesce(label, F.lit("")),
                                   F.coalesce(desc, F.lit(""))))
-    overlap = F.size(F.array_intersect(cand, _token_arr(sent)))
-    # parenthesization mirrors the Python backend bit-for-bit:
+    overlap = F.size(F.array_intersect(cand, sent_tokens))
+    # parenthesization mirrors the Python reference bit-for-bit:
     # 0.3 + 0.7 * (overlap / len)
-    return F.when(F.size(cand) == 0, F.lit(1.0)).otherwise(
-        F.lit(0.3) + F.lit(0.7) * (overlap / F.size(cand))
+    return F.when(
+        sent_tokens.isNotNull(),
+        F.when(F.size(cand) == 0, F.lit(1.0)).otherwise(
+            F.lit(0.3) + F.lit(0.7) * (overlap / F.size(cand))
+        ),
     )
 
 
@@ -113,43 +108,26 @@ def rerank_candidates(
     candidates: DataFrame,
     sentences: DataFrame,
     threshold: float = 0.05,
-    dedup_pairs: bool = False,
     sim_udf=None,
 ) -> DataFrame:
     """Multiply candidate scores by sentence-context similarity, then filter
     at ``threshold`` (semantics.py:215-221).
 
-    ``sim_udf`` swaps the similarity backend: a pandas UDF with signature
-    (sent, label, description) -> double — e.g.
-    ``F.pandas_udf(sbert_similarity_scorer(...), "double")`` for the P11
-    SBERT production scorer (semantics.py:210-217). Model backends always
-    run through the distinct-pair CSE shape (``dedup_pairs`` is forced on:
-    one inference per duplicate pair dwarfs the join-back cost, and the
-    distinct already filters the null-sentence rows a model can't take).
+    One narrow pass: every candidate is left-joined once to the sentence
+    containing its span, and the similarity is evaluated on the aligned
+    row. Only candidates with a label or description can match a sentence
+    (pre-linked literals are not rescored); a candidate without a
+    containing sentence keeps its score (semantics.py:205-206).
 
-    ``dedup_pairs`` picks the physical shape of the similarity stage:
-
-    - ``False`` (default) — score every aligned row directly in one narrow
-      Arrow pass. Right for cheap similarity backends (the lexical CPU
-      one): zero extra shuffles.
-    - ``True`` — score each distinct (sentence, label, description) pair
-      once and hash-join the sims back (the reference's label-dedup CSE,
-      semantics.py:155-167). Right for model backends (SBERT) where one
-      inference per duplicate pair dwarfs the two shuffles this costs.
-
-    Both shapes produce identical values (the sim is a pure function of the
-    pair), so correctness is shape-independent.
+    ``sim_udf`` swaps the similarity backend (default: the native
+    ``lexical_sim_col``): a pandas UDF (sent, label, description) -> double,
+    e.g. ``F.pandas_udf(sbert_similarity_scorer(...), "double")`` for the
+    P11 SBERT production scorer (semantics.py:210-217). It sees every
+    candidate row, so it must return NULL where ``sent`` is NULL; the score
+    is kept there (``coalesce(sim, 1.0)``). Repeated (sentence, label,
+    description) pairs are not deduplicated here: a model scorer encodes
+    each distinct text of its batch once itself.
     """
-    if sim_udf is not None:
-        dedup_pairs = True
-
-    scorable = candidates.filter(
-        F.col("label").isNotNull() | F.col("description").isNotNull()
-    )
-    passthrough = candidates.filter(
-        F.col("label").isNull() & F.col("description").isNull()
-    )
-
     # sentence containing the candidate span (range-containment join);
     # candidates spanning sentence boundaries keep their score, matching the
     # reference's skip behavior (semantics.py:205-206).
@@ -164,7 +142,10 @@ def rerank_candidates(
     # containing sentence necessarily overlaps that chunk, so the match set
     # is identical; sentences are disjoint so each span still matches <= 1.
     CHUNK = 512
-    sent_binned = sentences.withColumn(
+    sent_binned = sentences.select(
+        "conv_id", "sent_start", "sent_end", "sent_text",
+        _token_arr(F.col("sent_text")).alias("_sent_tokens"),
+    ).withColumn(
         "_s_chunk",
         F.explode(
             F.sequence(
@@ -173,66 +154,29 @@ def rerank_candidates(
             )
         ),
     )
-    binned = scorable.withColumn(
+    binned = candidates.withColumn(
         "_chunk", (F.col("start_idx") / CHUNK).cast("long")
     )
     aligned = binned.join(
         sent_binned,
         on=[
+            binned["label"].isNotNull() | binned["description"].isNotNull(),
             binned["conv_id"] == sent_binned["conv_id"],
             binned["_chunk"] == sent_binned["_s_chunk"],
             binned["start_idx"] >= sent_binned["sent_start"],
             binned["end_idx"] <= sent_binned["sent_end"],
         ],
         how="left",
-    ).drop(sent_binned["conv_id"]).drop("_s_chunk", "_chunk")
-
-    if dedup_pairs:
-        # score each distinct (sentence, label, description) once, join back
-        # on an 8-byte hash key — shuffling 15M-row frames on long sentence
-        # strings costs more than the model call at corpus scale. Sentences
-        # from the splitter are disjoint, so each span matches at most one
-        # sentence and no post-join dedup is needed.
-        pair_key = F.xxhash64("sent_text", "label", "description")
-        distinct_pairs = (
-            aligned
-            .filter(F.col("sent_text").isNotNull())
-            .select("sent_text", "label", "description")
-            .distinct()
-            .select(
-                pair_key.alias("_pair_key"),
-                (sim_udf or _sim_udf)("sent_text", "label", "description")
-                .alias("sim"),
-            )
-        )
-        rescored = (
-            aligned
-            .withColumn("_pair_key", pair_key)
-            .drop("sent_text", "sent_idx", "sent_start", "sent_end")
-            .join(distinct_pairs, on="_pair_key", how="left")
-            .withColumn("score", F.col("score") * F.coalesce("sim", F.lit(1.0)))
-            .select(*candidates.columns)
-        )
-    else:
-        # narrow path: the sim is a native JVM column expression evaluated
-        # on every aligned row in place — no distinct, no join-back, no
-        # Python/Arrow hop. Rows without a containing sentence keep their
-        # score (the when-guard, semantics.py:205-206).
-        rescored = (
-            aligned
-            .withColumn(
-                "score",
-                F.col("score")
-                * F.when(
-                    F.col("sent_text").isNotNull(),
-                    lexical_sim_col(F.col("sent_text"), F.col("label"),
-                                    F.col("description")),
-                ).otherwise(F.lit(1.0)),
-            )
-            .select(*candidates.columns)
-        )
-
+    ).drop(sent_binned["conv_id"])
+    sim = (
+        sim_udf(F.col("sent_text"), F.col("label"), F.col("description"))
+        if sim_udf is not None
+        else lexical_sim_col(F.col("_sent_tokens"), F.col("label"),
+                             F.col("description"))
+    )
     return (
-        rescored.unionByName(passthrough)
+        aligned
+        .withColumn("score", F.col("score") * F.coalesce(sim, F.lit(1.0)))
+        .select(*candidates.columns)
         .filter(F.col("score") >= threshold)
     )

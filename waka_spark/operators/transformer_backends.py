@@ -120,11 +120,16 @@ def sbert_similarity_scorer(
     """P11 production scorer: returns a pandas-UDF-compatible function
     sim(sentences, labels, descriptions) -> scores, computing
     cos-sim(encode(sentence), encode(f"{label} is a {description}"))
-    (semantics.py:210-217). Swap for rerank._sim_udf via
-    ``F.pandas_udf(sbert_similarity_scorer(), "double")``.
+    (semantics.py:210-217). Plug it in with
+    ``rerank_candidates(sim_udf=F.pandas_udf(sbert_similarity_scorer(),
+    "double"))``.
 
-    The loader returns an ``encode(texts) -> (n, dim) ndarray``; cosine is
-    computed here in numpy, so fake encoders run the identical code path.
+    Each distinct text of a batch (sentence or candidate text) is encoded
+    once. A row whose sentence is NULL (no containing sentence) is not
+    encoded and scores NULL, which the rerank pass reads as "keep the
+    score". The loader returns an ``encode(texts) -> (n, dim) ndarray``;
+    cosine is computed here in numpy, so fake encoders run the identical
+    code path.
     """
 
     def default_loader():
@@ -142,14 +147,22 @@ def sbert_similarity_scorer(
     def sim(sent: pd.Series, label: pd.Series, desc: pd.Series) -> pd.Series:
         encode = _get_model(f"sbert:{model_dir}", loader)
 
-        cand_texts = [f"{l} is a {d}" for l, d in zip(label, desc)]
-        scores: list[float] = []
-        for i in range(0, len(sent), batch_size):
-            se = np.asarray(encode(list(sent[i:i + batch_size])), dtype=float)
-            ce = np.asarray(encode(cand_texts[i:i + batch_size]), dtype=float)
+        has_sent = sent.notna().to_numpy()
+        sents = list(sent[has_sent])
+        cands = [f"{l} is a {d}"
+                 for l, d in zip(label[has_sent], desc[has_sent])]
+        texts = list(dict.fromkeys(sents + cands))
+        vecs: dict[str, np.ndarray] = {}
+        for i in range(0, len(texts), batch_size):
+            chunk = texts[i:i + batch_size]
+            vecs.update(zip(chunk, np.asarray(encode(chunk), dtype=float)))
+        scores = np.full(len(sent), np.nan)
+        if sents:
+            se = np.stack([vecs[t] for t in sents])
+            ce = np.stack([vecs[t] for t in cands])
             num = (se * ce).sum(axis=1)
             den = np.linalg.norm(se, axis=1) * np.linalg.norm(ce, axis=1)
-            scores.extend((num / np.where(den == 0, 1.0, den)).tolist())
+            scores[has_sent] = num / np.where(den == 0, 1.0, den)
         return pd.Series(scores)
 
     return sim

@@ -105,15 +105,9 @@ class KGPipeline:
                 F.col("score") >= self.cfg.fusion.rerank_threshold
             )
         sentences = split_sentences(documents)
-        # dedup_pairs: real corpora repeat (sentence, label, description)
-        # pairs heavily (hot conversations, common entities), so scoring
-        # each distinct pair once and hash-joining back beats re-evaluating
-        # the sim per aligned row — measured 37s vs 43s best-of at local[8]
-        # on the 20k-conv Zipf corpus, and it is the reference's own CSE
-        # (semantics.py:155-167)
+        # one narrow pass: the native lexical sim on each aligned row
         return rerank_candidates(
-            cands, sentences, self.cfg.fusion.rerank_threshold,
-            dedup_pairs=True,
+            cands, sentences, self.cfg.fusion.rerank_threshold
         )
 
     def entities(self, candidates: DataFrame) -> DataFrame:
