@@ -1,6 +1,11 @@
 """Local replica of the driver's correctness gate: run every queries()
 entry on Spark at sf0.01 and compare with the DuckDB oracle_sql() —
-row count, column-name set, and order-insensitive value equality."""
+row count, column-name set, and order-insensitive value equality.
+
+Usage: python scripts/check_oracle.py [<query> ...]
+
+With query names, only those queries run (an unknown name is an error),
+and the closing ``N/M OK`` line counts the queries that ran."""
 
 import math
 import sys
@@ -41,7 +46,12 @@ def canon(df_pandas):
 
 
 def main():
-    only = sys.argv[1:] or None
+    qs = entrymod.queries()
+    only = sys.argv[1:]
+    unknown = [q for q in only if q not in qs]
+    if unknown:
+        sys.exit(f"unknown queries: {', '.join(unknown)}")
+    names = [n for n in qs if n in only] if only else list(qs)
     # local[SPARK_GRAFT_CPUS] with as many shuffle partitions, as Tier-1
     # runs; a result that changes with the parallelism is a bug
     spark = get_spark("oracle_check")
@@ -49,15 +59,12 @@ def main():
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
 
-    qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = []
-    for name, fn in qs.items():
-        if only and name not in only:
-            continue
+    for name in names:
         t0 = time.time()
         try:
-            spark_pdf = fn(spark, SF_DIR).toPandas()
+            spark_pdf = qs[name](spark, SF_DIR).toPandas()
         except Exception as e:
             failures.append(name)
             print(f"{name}: SPARK ERROR {type(e).__name__}: {str(e)[:200]}")
@@ -97,7 +104,7 @@ def main():
         # otherwise accumulate all of them in storage memory
         spark.catalog.clearCache()
 
-    print(f"\n{len(qs) - len(failures)}/{len(qs)} OK")
+    print(f"\n{len(names) - len(failures)}/{len(names)} OK")
     if failures:
         print("FAILED:", failures)
         sys.exit(1)

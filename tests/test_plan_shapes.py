@@ -10,7 +10,13 @@ results. Each assertion pins a scale-critical plan property:
   ranking exchange per stage),
 - the late operator additions (salience, temporal-KG SCD-2 family,
   hygiene, MMR candidates, Adamic-Adar) keep the properties that make
-  them scale.
+  them scale,
+- the ANN, curation and transcript operators (k-means assignment, DSIR,
+  slice KL, covariance, context tail, score AUC, hard negatives, branch
+  points, SFT examples, conversation dups, tool usage, turn cohesion)
+  keep their broadcasts, single shuffles and single window passes: a
+  lost broadcast hint or a surprise sort-merge join is invisible to
+  value tests but 100x at corpus scale.
 
 The query tests run on sf0.001 — plan shape is data-size independent here
 because the broadcast side is a literal dictionary and the rest are
@@ -334,3 +340,184 @@ def test_adamic_adar_attaches_degree_before_pair_agg(spark):
     plan = executed_plan_of(adamic_adar(edges, min_common=1))
     assert "Scan ExistingRDD" in plan
     assert "BroadcastNestedLoopJoin" not in plan
+
+
+def _emb(spark, n=12, dim=4):
+    return spark.createDataFrame(
+        [(i, [float((i * 5 + j) % 7) for j in range(dim)]) for i in range(n)],
+        "vec_id long, embedding array<double>")
+
+
+def test_kmeans_assignment_is_narrow(spark):
+    """Codebook assignment must be join-free (the codebook is a plan
+    literal, not a join side). Round 6 adds ONE deliberate exchange — the
+    size-guarded parallel floor (plans/parallel.py) that spreads a
+    single-partition scan across cores — so the pin is now: no join, and
+    no exchange other than the explicit REPARTITION_BY_NUM floor."""
+    from waka_spark.operators.ann import ivf_centroids, ivf_assign
+
+    emb = _emb(spark)
+    cents = ivf_centroids(emb, n_cells=2)
+    plan = executed_plan_of(ivf_assign(emb, cents))
+    assert "Join" not in plan
+    exchanges = [ln for ln in plan.splitlines() if "Exchange" in ln]
+    assert all("REPARTITION_BY_NUM" in ln for ln in exchanges), exchanges
+
+
+def test_dsir_weight_join_is_broadcast(spark):
+    """The B-row weight table must broadcast back onto the exploded
+    features — a sort-merge join here would shuffle the token stream."""
+    from waka_spark.operators.curation import dsir_importance
+
+    docs = spark.createDataFrame(
+        [(i, f"w{i} w{i+1} w{i+2}", i % 2 == 0) for i in range(10)],
+        "doc_id long, text string, t boolean")
+    plan = executed_plan_of(dsir_importance(docs, target=F.col("t"), n_buckets=16))
+    assert "BroadcastHashJoin" in plan
+    assert "SortMergeJoin" not in plan
+
+
+def test_slice_kl_joins_stay_on_aggregated_tables(spark):
+    """The token stream is aggregated to (slice, bucket) before any join;
+    no join may touch the exploded token rows."""
+    from waka_spark.operators.textstats import slice_kl_divergence
+
+    docs = spark.createDataFrame(
+        [(i, "x y z", "en" if i % 2 else "de") for i in range(8)],
+        "doc_id long, text string, lang string")
+    plan = executed_plan_of(slice_kl_divergence(docs, n_buckets=8))
+    # the (slice, bucket) aggregate is eagerly checkpointed, so every one
+    # of its four consumers reads the materialized RDD instead of
+    # replaying the token explode, and the joins above it are broadcast
+    assert "Scan ExistingRDD" in plan
+    assert "SortMergeJoin" not in plan
+
+
+def test_covariance_single_shuffle(spark):
+    """Gram partials fold in ONE hash-agg exchange; the corpus itself is
+    never shuffled or pair-exploded."""
+    from waka_spark.operators.ann import covariance_matrix
+
+    plan = executed_plan_of(covariance_matrix(_emb(spark), dim=4))
+    # the folded partials table is persisted: all three consumers read the
+    # cache instead of replaying the GEMM scan, and no pairwise explode
+    # or corpus-wide join exists anywhere
+    assert "InMemoryTableScan" in plan
+    assert "SortMergeJoin" not in plan
+    assert "CartesianProduct" not in plan and "posexplode" not in plan
+
+
+def test_context_tail_single_shuffle(spark):
+    from waka_spark.operators.transcripts import context_tail
+
+    t = spark.createDataFrame(
+        [("c", i, "user", "a b") for i in range(4)],
+        "conv_id string, turn_idx int, role string, text string")
+    plan = executed_plan_of(context_tail(t))
+    assert plan.count("Exchange hashpartitioning") == 1
+
+
+def test_score_auc_window_runs_on_aggregated_scores(spark):
+    """The unpartitioned running-sum window must consume the per-score
+    aggregate, not corpus rows: the plan's single-partition exchange
+    feeds from a HashAggregate output."""
+    from waka_spark.operators.curation import score_auc
+
+    df = spark.createDataFrame(
+        [(i / 10.0, i % 2 == 0) for i in range(10)],
+        "score double, label boolean")
+    plan = executed_plan_of(score_auc(df))
+    assert "Exchange SinglePartition" in plan
+    # corpus rows reach the single-partition window only via the
+    # (score -> p, n) aggregate: the plan prints root-first, so BELOW the
+    # SinglePartition exchange there must still be a HashAggregate (the
+    # per-score rollup) between it and the scan
+    idx_sp = plan.index("Exchange SinglePartition")
+    assert "HashAggregate" in plan[idx_sp:]
+
+
+def test_hard_negatives_broadcasts_queries(spark):
+    from waka_spark.operators.ann import hard_negatives
+
+    emb = spark.createDataFrame(
+        [(i, [float(i), 1.0], i % 3) for i in range(9)],
+        "vec_id long, embedding array<double>, label int")
+    q = emb.filter("vec_id < 2").selectExpr(
+        "vec_id as q_id", "embedding as q_vec", "label as q_label")
+    plan = executed_plan_of(hard_negatives(emb, q, k=2))
+    assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
+    assert "SortMergeJoin" not in plan
+
+
+def _transcripts(spark, n=12):
+    rows = [("c%d" % (i % 3), i // 3, "user" if i % 2 else "assistant",
+             "turn text %d" % i) for i in range(n)]
+    return spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string, text string")
+
+
+def test_branch_points_windows_share_one_sort(spark):
+    """The running prefix-hash window and the lead() window must share
+    partitioning AND ordering: one Sort in the whole plan, no joins."""
+    from waka_spark.operators.transcripts import branch_points
+
+    plan = executed_plan_of(branch_points(_transcripts(spark)))
+    assert plan.count("Sort [") == 1
+    assert "Join" not in plan
+
+
+def test_sft_examples_is_one_window_pass(spark):
+    """Prompt attachment is a single running window — exactly one
+    exchange, no self-join back onto the transcript."""
+    from waka_spark.operators.transcripts import sft_examples
+
+    plan = executed_plan_of(sft_examples(_transcripts(spark)))
+    assert plan.count("Exchange") == 1
+    assert "Join" not in plan
+
+
+def test_conv_exact_dups_no_joins(spark):
+    """Identity agg + canonical window only: the conversation corpus is
+    never joined against itself."""
+    from waka_spark.operators.transcripts import conv_exact_dups
+
+    plan = executed_plan_of(conv_exact_dups(_transcripts(spark)))
+    assert "Join" not in plan
+    assert plan.count("Sort [") == 1  # only the conv_hash window sorts
+
+
+def test_conv_near_dups_reuses_cached_hash_frames(spark):
+    """The turn-hash and signature frames each feed 2-3 consumers: both
+    must come from the eager checkpoint (Scan ExistingRDD), never a
+    corpus re-scan, and candidate generation must be an equi-join (no
+    nested loop)."""
+    from waka_spark.operators.transcripts import conv_near_dups
+
+    plan = executed_plan_of(conv_near_dups(_transcripts(spark)))
+    assert "Scan ExistingRDD" in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert "CartesianProduct" not in plan
+
+
+def test_tool_usage_stats_single_window_single_agg(spark):
+    """Latency lag + per-tool agg: two exchanges (conv window, tool
+    agg), no joins, no extra sorts."""
+    from waka_spark.operators.tools import tool_usage_stats
+
+    rows = [("c", i, "tool", "ok", "search", None) for i in range(4)]
+    df = spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string, text string, "
+              "tool string, ts timestamp")
+    plan = executed_plan_of(tool_usage_stats(df))
+    assert "Join" not in plan
+    assert plan.count("Sort [") == 1
+
+
+def test_turn_cohesion_token_sets_stay_in_row(spark):
+    """Cohesion is one lag window over in-row token arrays: a single
+    exchange, no explode of the token stream."""
+    from waka_spark.operators.transcripts import turn_cohesion
+
+    plan = executed_plan_of(turn_cohesion(_transcripts(spark)))
+    assert plan.count("Exchange") == 1
+    assert "Generate" not in plan  # no explode

@@ -411,6 +411,60 @@ def test_common_neighbors_hub_cap(spark):
     assert not any(a == 0 for a, _ in uncapped)
 
 
+def _random_graph(spark, n_nodes=30, n_edges=90, seed=7):
+    """A random directed graph with self-loops, duplicate edges, both
+    orientations of some pairs, a dangling node and a weight column."""
+    import random
+
+    rng = random.Random(seed)
+    rows = [(f"v{rng.randrange(n_nodes)}", f"v{rng.randrange(n_nodes)}",
+             float(rng.randint(1, 5))) for _ in range(n_edges)]
+    rows += [("v0", "v0", 2.0), ("v3", "v3", 1.0)]  # self-loops
+    rows += [("v1", "sink", 1.0)]                    # a dangling node
+    rows += rows[:10]                                # duplicate edges
+    rows += [(b, a, w) for a, b, w in rows[10:20]]   # reverse orientations
+    return spark.createDataFrame(rows, "src string, dst string, w double")
+
+
+def test_pagerank_is_personalized_pagerank_seeded_with_every_node(spark):
+    """PageRank is personalized PageRank with every node a seed: both run
+    one power-iteration kernel, and only the restart term differs in
+    rounding ((1-d)/N vs (1-d)·(1/N)). Unweighted and weighted, on a
+    graph with self-loops, duplicate edges and a dangling node."""
+    from waka_spark.operators.graph import pagerank, personalized_pagerank
+
+    edges = _random_graph(spark)
+    seeds = (edges.select(F.col("src").alias("node"))
+             .union(edges.select(F.col("dst").alias("node"))))
+    for weight_col in (None, "w"):
+        pr = {r["node"]: r["rank"] for r in pagerank(
+            edges, n_iter=6, weight_col=weight_col).collect()}
+        ppr = {r["node"]: r["rank"] for r in personalized_pagerank(
+            edges, seeds, n_iter=6, weight_col=weight_col).collect()}
+        assert len(pr) > 20
+        assert ppr == pytest.approx(pr, rel=1e-12, abs=1e-15)
+
+
+def test_common_neighbors_is_adamic_adar_without_the_score(spark):
+    """common_neighbors equals adamic_adar's (node_a, node_b, n_common),
+    with and without the hub cap, on a graph with self-loops and
+    duplicate edges, and on an empty graph."""
+    from waka_spark.operators.graph import adamic_adar, common_neighbors
+
+    edges = _random_graph(spark)
+    empty = spark.createDataFrame([], "src string, dst string")
+    for e, min_common, cap in ((edges, 1, None), (edges, 2, None),
+                               (edges, 1, 5), (empty, 1, None),
+                               (empty, 1, 2)):
+        cn = common_neighbors(e, min_common=min_common, max_hub_degree=cap)
+        aa = adamic_adar(e, min_common=min_common, max_hub_degree=cap)
+        assert cn.columns == ["node_a", "node_b", "n_common"]
+        got = sorted(tuple(r) for r in cn.collect())
+        want = sorted(tuple(r)[:3] for r in aa.collect())
+        assert got == want
+        assert (len(got) > 0) == (e is edges)
+
+
 def test_triangle_count_skewed_star(spark):
     """Hub star + one triangle hanging off it: degree-ordered orientation
     must count exactly the closed triangles (hub-leaf wedges never close).
@@ -687,14 +741,19 @@ def test_ktruss_converged_round_reuses_support(spark):
 
 def test_pagerank_and_hits_empty_graph(spark):
     """Round-3 (review): an empty edge list returns empty frames with
-    the right schema, not a driver ZeroDivisionError."""
-    from waka_spark.operators.graph import hits, pagerank
+    the right schema, not a driver ZeroDivisionError. Personalized
+    PageRank, which shares PageRank's kernel, raises instead: no seed can
+    be a node of an empty graph."""
+    from waka_spark.operators.graph import hits, pagerank, personalized_pagerank
 
     empty = spark.createDataFrame([], "src string, dst string")
     pr = pagerank(empty, n_iter=2)
     assert pr.columns == ["node", "rank"] and pr.count() == 0
     h = hits(empty, n_iter=2)
     assert h.columns == ["node", "hub", "authority"] and h.count() == 0
+    seeds = spark.createDataFrame([("a",)], "node string")
+    with pytest.raises(ValueError, match="no seed"):
+        personalized_pagerank(empty, seeds, n_iter=2)
 
 
 def test_kcore_nonconverged_degrees_are_subgraph_true(spark):

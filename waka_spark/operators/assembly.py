@@ -10,19 +10,17 @@ Scale notes (10^12 turns):
   ``chunked_documents`` bounds the per-group size so no single conversation
   creates an unsplittable hot task (the analog of mREBEL's 512-token
   sentence batching, relation_extraction.py:133).
-- ``sort_array`` over collected (turn_idx, text) structs instead of a
+- ``array_sort`` over collected (turn_idx, text) structs instead of a
   window-sort keeps it to a single shuffle (no pre-sort + re-agg).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def salted_repartition(
-    transcripts: DataFrame, buckets: int = 16, partitions: int | None = None
-) -> DataFrame:
+def salted_repartition(transcripts: DataFrame, buckets: int = 16) -> DataFrame:
     """Skew-absorbing ingest repartition (SURVEY.md §4): distribute each
     conversation's turns over ``buckets`` salted keys so one 10^6-turn
     conversation spreads across executors instead of pinning one. The
@@ -31,30 +29,32 @@ def salted_repartition(
     salt = F.concat_ws(
         "_", F.col("conv_id"), F.pmod(F.xxhash64("turn_idx"), F.lit(buckets))
     )
-    if partitions:
-        return transcripts.repartition(partitions, salt)
     return transcripts.repartition(salt)
+
+
+def _ordered_texts() -> Column:
+    """Aggregate: the group's turn texts in ``turn_idx`` order.
+    ``collect_list`` order is unspecified, so it collects
+    ``struct(turn_idx, text)`` and ``array_sort`` orders the structs
+    (field-order lexicographic ⇒ turn_idx first)."""
+    return F.transform(
+        F.array_sort(F.collect_list(F.struct("turn_idx", "text"))),
+        lambda s: s["text"],
+    )
 
 
 def assemble_documents(transcripts: DataFrame, sep: str = " ") -> DataFrame:
     """turns → documents(conv_id, text, n_turns).
 
-    The concat is deterministic: ``collect_list`` order is unspecified, so we
-    collect ``struct(turn_idx, text)`` and ``sort_array`` by ``turn_idx``
-    (struct ordering is field-order lexicographic ⇒ turn_idx first), then
-    join the texts. turn_idx is dense and unique per conv (input invariant).
+    The concat is deterministic: the texts are joined in ``turn_idx``
+    order (:func:`_ordered_texts`). turn_idx is dense and unique per conv
+    (input invariant).
     """
     return (
         transcripts
         .groupBy("conv_id")
         .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("turn_idx", "text"))),
-                    lambda s: s["text"],
-                ),
-                sep,
-            ).alias("text"),
+            F.array_join(_ordered_texts(), sep).alias("text"),
             F.count(F.lit(1)).cast("int").alias("n_turns"),
         )
     )
@@ -75,13 +75,7 @@ def chunked_documents(
         chunked
         .groupBy("conv_id", "chunk_idx")
         .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("turn_idx", "text"))),
-                    lambda s: s["text"],
-                ),
-                sep,
-            ).alias("text"),
+            F.array_join(_ordered_texts(), sep).alias("text"),
             F.count(F.lit(1)).cast("int").alias("n_turns"),
         )
         .withColumn("doc_id", F.concat_ws("#", "conv_id", "chunk_idx"))
@@ -95,12 +89,7 @@ def assemble_with_turns(transcripts: DataFrame, sep: str = " ") -> DataFrame:
     return (
         transcripts
         .groupBy("conv_id")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("turn_idx", "text"))),
-                lambda s: s["text"],
-            ).alias("turn_texts"),
-        )
+        .agg(_ordered_texts().alias("turn_texts"))
         .select(
             "conv_id",
             F.array_join("turn_texts", sep).alias("text"),

@@ -37,7 +37,7 @@ Scale shapes (pure DataFrame ops, no UDFs):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from waka_spark.plans.iterate import fixpoint
@@ -66,6 +66,83 @@ def symmetrize(
     return out if assume_unique else out.distinct()
 
 
+def _node_set(e: DataFrame) -> DataFrame:
+    """(node): the distinct endpoints of an (src, dst) edge frame."""
+    return (
+        e.select(F.col("src").alias("node"))
+        .unionByName(e.select(F.col("dst").alias("node")))
+        .distinct()
+    )
+
+
+def _rank_edges(
+    edges: DataFrame, src: str, dst: str, weight_col: str | None,
+) -> tuple[DataFrame, DataFrame]:
+    """Edge side of the power iteration → ``(e, out_edges)``: ``e`` is the
+    cut (src, dst, _w) edge frame and ``out_edges`` the pinned e ⋈ outdeg,
+    where outdeg is the out-edge count (unweighted) or the out-weight sum.
+    Both register with the caller's pin scope."""
+    w_expr = (
+        F.lit(1.0) if weight_col is None
+        else F.col(weight_col).cast("double")
+    )
+    # EAGER: the node set scans e twice (union branches) in one job; a
+    # lazy persist makes those sibling stages race to populate the cold
+    # cache and each recompute the upstream edge build (see random_walks)
+    e = cut(
+        parallel_floor(edges, src).select(
+            F.col(src).alias("src"), F.col(dst).alias("dst"),
+            w_expr.alias("_w")))
+    deg = e.groupBy("src").agg(
+        F.count("*").cast("double").alias("outdeg")
+        if weight_col is None else F.sum("_w").alias("outdeg"))
+    return e, pin(e.join(deg, "src"))
+
+
+def _power_iteration(
+    out_edges: DataFrame,
+    nodes: DataFrame,
+    ranks: DataFrame,
+    n: int,
+    restart: Column,
+    damping: float,
+    n_iter: int,
+) -> DataFrame:
+    """The PageRank / personalized-PageRank kernel: ``n_iter`` rounds of
+    rank'(v) = restart(v) + d·Σ_{u→v} rank(u)·w(u,v)/wdeg(u), from the
+    initial (node, rank) frame ``ranks``. ``restart`` is evaluated over
+    ``nodes`` (every graph node, plus any restart columns it carries);
+    ``n`` is the exact node count, which drives the broadcast choice of
+    each round's two joins. One join + one agg per round over (node, rank)
+    pairs, run by ``plans/iterate.fixpoint``."""
+
+    def step(ranks: DataFrame) -> DataFrame:
+        contribs = (
+            out_edges.join(
+                maybe_broadcast(ranks, n),
+                out_edges["src"] == ranks["node"])
+            .select(
+                F.col("dst").alias("node"),
+                (F.col("rank") * F.col("_w") / F.col("outdeg"))
+                .alias("c"),
+            )
+            .groupBy("node")
+            .agg(F.sum("c").alias("contrib"))
+        )
+        return (
+            nodes.join(maybe_broadcast(contribs, n), "node", "left")
+            .select(
+                "node",
+                (
+                    restart
+                    + F.lit(damping) * F.coalesce("contrib", F.lit(0.0))
+                ).alias("rank"),
+            )
+        )
+
+    return fixpoint(ranks, step, n_iter)
+
+
 def pagerank(
     edges: DataFrame,
     n_iter: int = 10,
@@ -89,32 +166,14 @@ def pagerank(
     EMNLP'04) — each node splits its rank among out-neighbors
     proportionally to edge weight. Edges with non-positive weight should
     be filtered by the caller (a zero-weight-only node would divide by
-    zero; this operator treats presence of an edge as w > 0). One join +
-    one agg per round over (node, rank) pairs only, run by
-    ``plans/iterate.fixpoint``.
+    zero; this operator treats presence of an edge as w > 0). This is
+    :func:`personalized_pagerank` with every node a seed: both run
+    :func:`_power_iteration`, here with the uniform restart (1-d)/N and
+    uniform initial ranks.
     """
-    w_expr = (
-        F.lit(1.0) if weight_col is None
-        else F.col(weight_col).cast("double")
-    )
     with pin_scope():
-        # EAGER: nodes below scans e twice (union branches) in one job; a
-        # lazy persist makes those sibling stages race to populate the
-        # cold cache and each recompute the upstream edge build (see
-        # random_walks)
-        e = cut(
-            parallel_floor(edges, src).select(
-                F.col(src).alias("src"), F.col(dst).alias("dst"),
-                w_expr.alias("_w")))
-        deg = e.groupBy("src").agg(
-            F.count("*").cast("double").alias("outdeg")
-            if weight_col is None else F.sum("_w").alias("outdeg"))
-        out_edges = pin(e.join(deg, "src"))
-        nodes = pin(
-            e.select(F.col("src").alias("node"))
-            .unionByName(e.select(F.col("dst").alias("node")))
-            .distinct()
-        )
+        e, out_edges = _rank_edges(edges, src, dst, weight_col)
+        nodes = pin(_node_set(e))
         n = nodes.count()
         if n == 0:
             # empty edge list (e.g. an upstream similarity threshold left
@@ -122,35 +181,9 @@ def pagerank(
             # schema instead of a driver-side ZeroDivisionError
             keep(e)
             return nodes.select("node", F.lit(0.0).alias("rank"))
-
-        base = (1.0 - damping) / n
-
-        def step(ranks: DataFrame) -> DataFrame:
-            contribs = (
-                out_edges.join(
-                    maybe_broadcast(ranks, n),
-                    out_edges["src"] == ranks["node"])
-                .select(
-                    F.col("dst").alias("node"),
-                    (F.col("rank") * F.col("_w") / F.col("outdeg"))
-                    .alias("c"),
-                )
-                .groupBy("node")
-                .agg(F.sum("c").alias("contrib"))
-            )
-            return (
-                nodes.join(maybe_broadcast(contribs, n), "node", "left")
-                .select(
-                    "node",
-                    (
-                        F.lit(base)
-                        + F.lit(damping) * F.coalesce("contrib", F.lit(0.0))
-                    ).alias("rank"),
-                )
-            )
-
-        ranks = fixpoint(
-            cut(nodes.withColumn("rank", F.lit(1.0 / n))), step, n_iter)
+        ranks = _power_iteration(
+            out_edges, nodes, cut(nodes.withColumn("rank", F.lit(1.0 / n))),
+            n, F.lit((1.0 - damping) / n), damping, n_iter)
         keep(ranks)
     return ranks
 
@@ -182,16 +215,12 @@ def hits(
     """
     with pin_scope():
         # EAGER: nodes below scans e twice (union branches) in one job —
-        # same lazy-persist race as pagerank's edge build
+        # same lazy-persist race as _rank_edges' edge build
         e = cut(
             parallel_floor(edges, src).select(
                 F.col(src).alias("src"), F.col(dst).alias("dst"))
             .distinct())
-        nodes = pin(
-            e.select(F.col("src").alias("node"))
-            .unionByName(e.select(F.col("dst").alias("node")))
-            .distinct()
-        )
+        nodes = pin(_node_set(e))
         n = nodes.count()
         if n == 0:
             keep(e)
@@ -485,56 +514,37 @@ def common_neighbors(
 
     The standard first-pass KG-completion / entity-consolidation signal:
     two entities sharing many neighbors but no edge are merge or
-    link-prediction candidates.
-
-    Scale shape: one two-path self-join through the mid node — unlike
-    triangle_count, the PAIR set itself is the answer here, so wedge work
-    through a degree-d hub is irreducibly O(d^2). ``max_hub_degree`` is
-    the scale knob: mid nodes above the cap are excluded from wedge
-    generation (a node adjacent to everything carries no link-prediction
-    signal — the standard hub-suppression heuristic; IDF-weighted
-    variants like Adamic-Adar discount the same nodes smoothly). Default
-    None keeps exact semantics (and the DuckDB oracle). Then one count
-    agg on the pair and one left-anti join against the existing edge set;
-    ``min_common`` prunes the long tail of 1-wedge pairs before the
-    anti-join.
+    link-prediction candidates. This is :func:`adamic_adar` without the
+    score — its wedge pass projected to (node_a, node_b, n_common), with
+    the same ``min_common`` and ``max_hub_degree`` semantics (see there
+    for the scale shape).
     """
-    # EAGER: e feeds the wedge self-join's two sides plus the adjacency
-    # anti-join — sibling branches of one action (lazy-persist race, see
-    # random_walks)
-    e = cut(
+    return adamic_adar(edges, min_common, src, dst, max_hub_degree).select(
+        "node_a", "node_b", "n_common")
+
+
+def _canonical_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """The canonical undirected edge set → (a, b), ``a < b``: each edge
+    ordered least → greatest, self-loops dropped, duplicates removed.
+    Lazy: a caller whose plan reads it from several branches cuts it."""
+    return (
         parallel_floor(edges, src).select(
-        F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
+            F.least(F.col(src), F.col(dst)).alias("a"),
+            F.greatest(F.col(src), F.col(dst)).alias("b"),
+        )
+        .filter(F.col("a") != F.col("b"))
         .distinct()
     )
-    # hub cap narrows WEDGE GENERATION only; the adjacency anti-join below
-    # still sees every edge, so capped output never re-proposes a pair
-    # that is already linked through a hub
-    mids = e
-    if max_hub_degree is not None:
-        mid_deg = e.groupBy("dst").agg(F.count("*").alias("_d"))
-        mids = (
-            e.join(mid_deg.filter(F.col("_d") <= max_hub_degree)
-                   .select("dst"), "dst", "left_semi")
-        )
-    # wedges a—y—b with a<b: every unordered pair counted once per shared y
-    left = mids.select(F.col("dst").alias("y"), F.col("src").alias("a"))
-    right = mids.select(F.col("dst").alias("y"), F.col("src").alias("b"))
-    pairs = (
-        left.join(right, "y")
-        .filter(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count("*").cast("long").alias("n_common"))
-        .filter(F.col("n_common") >= min_common)
-    )
-    existing = e.select(
-        F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-    ).distinct()
+
+
+def _undirected_degrees(canon: DataFrame, name: str) -> DataFrame:
+    """(node, ``name``): each node's degree over a canonical (a, b) edge
+    set, as a long."""
     return (
-        pairs.join(existing, ["a", "b"], "left_anti")
-        .select(F.col("a").alias("node_a"), F.col("b").alias("node_b"),
-                "n_common")
+        canon.select(F.col("a").alias("node"))
+        .unionByName(canon.select(F.col("b").alias("node")))
+        .groupBy("node")
+        .agg(F.count("*").cast("long").alias(name))
     )
 
 
@@ -585,25 +595,13 @@ def _oriented_intersections(
     if assume_canonical:
         canon = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     else:
-        canon = cut(
-            parallel_floor(edges, src).select(
-                F.least(F.col(src), F.col(dst)).alias("a"),
-                F.greatest(F.col(src), F.col(dst)).alias("b"),
-            )
-            .filter(F.col("a") != F.col("b"))
-            .distinct()
-        )
+        canon = cut(_canonical_edges(edges, src, dst))
     # deg is node-sized — materialize it (one tiny job) so its exact row
     # count can drive a broadcast for the two degree-attach joins below;
     # with unknown ExistingRDD stats the planner otherwise sort-merges,
     # shuffling AND sorting the full edge list twice per enumeration
     # (k_truss pays that per round) (round 6)
-    deg = cut(
-        canon.select(F.col("a").alias("node"))
-        .unionByName(canon.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").cast("long").alias("deg"))
-    )
+    deg = cut(_undirected_degrees(canon, "deg"))
     n_deg = deg.count()
     with_deg = (
         canon.join(maybe_broadcast(
@@ -789,12 +787,8 @@ def random_walks(
     e = cut(
         parallel_floor(edges, src).select(
         F.col(src).alias("src"), F.col(dst).alias("dst")))
-    frontier = cut(
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .select(F.col("node").alias("walk_id"), F.col("node").alias("cur"))
-    )
+    frontier = cut(_node_set(e).select(
+        F.col("node").alias("walk_id"), F.col("node").alias("cur")))
     # walk count, exact and cheap (frontier just materialized): the
     # frontier only shrinks (sink walks end), so one count bounds every
     # step's broadcast decision (maybe_broadcast — without it the
@@ -984,13 +978,19 @@ def adamic_adar(
     cut, and the stronger default ranking for entity-consolidation
     candidates on Zipf-skewed KGs.
 
-    Same scale shape as ``common_neighbors`` — wedge self-join through
-    the mid node (irreducibly O(d²) per mid; ``max_hub_degree`` excludes
-    pathological hubs from wedge generation, and a capped-out mid would
-    have contributed only 1/ln(d) ≈ 0 anyway), plus ONE extra broadcast-
-    sized join attaching deg(mid) before the pair agg. deg(mid) ≥ 2 for
-    any wedge mid (two distinct neighbors), so ln(deg) ≥ ln 2 > 0 —
-    no division guard needed.
+    Scale shape: one two-path self-join through the mid node — unlike
+    triangle_count, the PAIR set itself is the answer here, so wedge work
+    through a degree-d hub is irreducibly O(d²). deg(mid) is attached by
+    one broadcast-sized join before the wedge join. ``max_hub_degree`` is
+    the scale knob: mid nodes above the cap are excluded from wedge
+    generation (a node adjacent to everything carries no link-prediction
+    signal — the standard hub-suppression heuristic — and would have
+    contributed only 1/ln(d) ≈ 0 anyway). Default None keeps exact
+    semantics (and the DuckDB oracle). Then one agg on the pair and one
+    left-anti join against the existing edge set; ``min_common`` prunes
+    the long tail of 1-wedge pairs before the anti-join. deg(mid) ≥ 2 for
+    any wedge mid (two distinct neighbors), so ln(deg) ≥ ln 2 > 0 — no
+    division guard needed.
 
     Output: (node_a, node_b, n_common, aa_score), node_a < node_b,
     pairs with ≥ ``min_common`` shared neighbors, score rounded 6.
@@ -1005,6 +1005,9 @@ def adamic_adar(
     )
     deg = e.groupBy("dst").agg(F.count("*").cast("long").alias("_d"))
     mids = e.join(deg, "dst")
+    # the hub cap narrows WEDGE GENERATION only; the adjacency anti-join
+    # below still sees every edge, so capped output never re-proposes a
+    # pair that is already linked through a hub
     if max_hub_degree is not None:
         mids = mids.filter(F.col("_d") <= max_hub_degree)
     left = mids.select(
@@ -1054,33 +1057,17 @@ def personalized_pagerank(
     sums to 1. Rank init = s, so round counts compare to power-iteration
     convergence from the restart distribution.
 
-    Scale shape per round: identical to :func:`pagerank` — one
-    co-partitioned join + one hash agg over (node, rank) pairs, run by
-    ``plans/iterate.fixpoint``; the seed vector is one extra (node, s)
-    column carried on the pinned nodes frame. The
-    seed count is a single O(1) driver action.
+    Scale shape per round: :func:`_power_iteration`, the kernel
+    :func:`pagerank` runs — one co-partitioned join + one hash agg over
+    (node, rank) pairs; the seed vector is one extra (node, s) column
+    carried on the pinned nodes frame. The seed count is a single O(1)
+    driver action.
 
     Output: (node, rank).
     """
-    w_expr = (
-        F.lit(1.0) if weight_col is None
-        else F.col(weight_col).cast("double")
-    )
     with pin_scope():
-        e = cut(
-            parallel_floor(edges, src).select(
-                F.col(src).alias("src"), F.col(dst).alias("dst"),
-                w_expr.alias("_w")))
-        deg = e.groupBy("src").agg(
-            F.count("*").cast("double").alias("outdeg")
-            if weight_col is None else F.sum("_w").alias("outdeg"))
-        out_edges = pin(e.join(deg, "src"))
-
-        all_nodes = (
-            e.select(F.col("src").alias("node"))
-            .unionByName(e.select(F.col("dst").alias("node")))
-            .distinct()
-        )
+        e, out_edges = _rank_edges(edges, src, dst, weight_col)
+        all_nodes = _node_set(e)
         seed_nodes = pin(all_nodes.join(
             seeds.select(F.col(seed_col).alias("node")), "node", "left_semi"
         ))
@@ -1097,33 +1084,9 @@ def personalized_pagerank(
         # exact node count (cheap — ranks is already materialized): drives
         # the broadcast-vs-shuffle choice for every round's state join
         n = ranks.count()
-        restart = F.lit(1.0 - damping) * F.col("_sv")
-
-        def step(ranks: DataFrame) -> DataFrame:
-            contribs = (
-                out_edges.join(
-                    maybe_broadcast(ranks, n),
-                    out_edges["src"] == ranks["node"])
-                .select(
-                    F.col("dst").alias("node"),
-                    (F.col("rank") * F.col("_w") / F.col("outdeg"))
-                    .alias("c"),
-                )
-                .groupBy("node")
-                .agg(F.sum("c").alias("contrib"))
-            )
-            return (
-                nodes.join(maybe_broadcast(contribs, n), "node", "left")
-                .select(
-                    "node",
-                    (
-                        restart
-                        + F.lit(damping) * F.coalesce("contrib", F.lit(0.0))
-                    ).alias("rank"),
-                )
-            )
-
-        ranks = fixpoint(ranks, step, n_iter)
+        ranks = _power_iteration(
+            out_edges, nodes, ranks, n,
+            F.lit(1.0 - damping) * F.col("_sv"), damping, n_iter)
         keep(ranks)
     return ranks
 
@@ -1186,14 +1149,7 @@ def k_truss(
             F.sum("c").cast("long").alias("support"))
 
     with pin_scope():
-        canon = cut(
-            parallel_floor(edges, src).select(
-                F.least(F.col(src), F.col(dst)).alias("a"),
-                F.greatest(F.col(src), F.col(dst)).alias("b"),
-            )
-            .filter(F.col("a") != F.col("b"))
-            .distinct()
-        )
+        canon = cut(_canonical_edges(edges, src, dst))
         # Peeling joins LEFT with coalesce(support, 0): an edge in no
         # triangle has support 0, which still satisfies k-2 <= 0 — an
         # inner join would drop triangle-free edges even for k <= 2.
@@ -1285,20 +1241,8 @@ def degree_distribution(
     Output: (degree_bin, min_degree, n_nodes) where degree_bin =
     floor(log2(degree)) and min_degree = 2^bin.
     """
-    canon = (
-        parallel_floor(edges, src).select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    deg = (
-        canon.select(F.col("a").alias("node"))
-        .unionByName(canon.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").alias("degree"))
-    )
+    canon = _canonical_edges(edges, src, dst)
+    deg = _undirected_degrees(canon, "degree")
     binned = deg.withColumn(
         "degree_bin", F.floor(F.log2("degree")).cast("int"))
     return (
@@ -1334,20 +1278,8 @@ def degree_assortativity(
     Output: one row (n_edges, assortativity), NULL when the variance of
     either side is 0 (regular graphs — correlation undefined).
     """
-    canon = (
-        parallel_floor(edges, src).select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    deg = (
-        canon.select(F.col("a").alias("node"))
-        .unionByName(canon.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").cast("long").alias("d"))
-    )
+    canon = _canonical_edges(edges, src, dst)
+    deg = _undirected_degrees(canon, "d")
     # symmetrized: each undirected edge contributes (da,db) and (db,da),
     # the standard convention that makes Σx == Σy by construction
     sym = canon.unionByName(

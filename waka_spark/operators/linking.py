@@ -30,11 +30,27 @@ same buckets — both sides hash-partitioned once, no repeated shuffle).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from waka_spark.config import LinkerConfig
 from waka_spark.functions.text_norm import expansion_variants, norm_key
+
+
+def raw_score(key: Column, cfg: LinkerConfig) -> Column:
+    """The ES-score surrogate of one dictionary hit (module docstring),
+    shared by entity and predicate linking: ``alpha`` when the query
+    ``key`` equals the hit's normalized ``label``, else 1, times
+    ``base_gain · beta · log1p(frequency)`` (NULL frequency counts as 1).
+    """
+    return (
+        F.when(key == norm_key(F.col("label")), F.lit(cfg.alpha))
+        .otherwise(F.lit(1.0))
+        * F.lit(cfg.base_gain)
+        * F.lit(cfg.beta)
+        * F.log1p(F.coalesce(F.col("frequency"), F.lit(1)).cast("double"))
+    )
+
 
 CANDIDATE_COLS = [
     "conv_id", "start_idx", "end_idx", "text", "e_type", "url",
@@ -99,14 +115,7 @@ def link_entities(
             F.col("label").isNull()
             | ~F.lower(F.col("label")).startswith("category:")
         )
-        .withColumn(
-            "raw_score",
-            F.when(F.col("variant_key") == norm_key(F.col("label")), F.lit(cfg.alpha))
-            .otherwise(F.lit(1.0))
-            * F.lit(cfg.base_gain)
-            * F.lit(cfg.beta)
-            * F.log1p(F.coalesce(F.col("frequency"), F.lit(1)).cast("double")),
-        )
+        .withColumn("raw_score", raw_score(F.col("variant_key"), cfg))
         .filter(F.col("raw_score") >= cfg.min_score)
     )
 

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from waka_spark.config import LinkerConfig
 from waka_spark.functions.text_norm import norm_key
+from waka_spark.operators.linking import raw_score
 
 
 def link_predicates(
@@ -27,22 +28,16 @@ def link_predicates(
 ) -> DataFrame:
     """raw triples → linked triples (+pred_url, pred_label, pred_description).
 
-    Rank surrogate matches the entity linker's (monotone in label-match and
-    log1p(frequency), relation_linking.py:34-56); only the argmax survives.
+    Rank surrogate is the entity linker's ``linking.raw_score`` (monotone
+    in label-match and log1p(frequency), relation_linking.py:34-56); only
+    the argmax survives.
     """
     distinct_preds = raw_triples.select("pred_text").distinct()
     hits = (
         distinct_preds
         .withColumn("pred_key", norm_key(F.col("pred_text")))
         .join(F.broadcast(properties), F.col("pred_key") == F.col("alias_key"))
-        .withColumn(
-            "raw_score",
-            F.when(F.col("pred_key") == norm_key(F.col("label")), F.lit(cfg.alpha))
-            .otherwise(F.lit(1.0))
-            * F.lit(cfg.base_gain)
-            * F.lit(cfg.beta)
-            * F.log1p(F.coalesce(F.col("frequency"), F.lit(1)).cast("double")),
-        )
+        .withColumn("raw_score", raw_score(F.col("pred_key"), cfg))
         .filter(F.col("raw_score") >= cfg.min_score)
     )
     w = Window.partitionBy("pred_text").orderBy(

@@ -37,7 +37,6 @@ def write_bucketed(
     table: str,
     key: str | list[str],
     n_buckets: int = 32,
-    sort: bool = True,
     mode: str = "overwrite",
 ) -> None:
     """Materialize ``df`` as a bucketed (and per-bucket sorted) table.
@@ -52,13 +51,12 @@ def write_bucketed(
     # under which the reader's per-bucket sort order is trusted and the
     # downstream merge join skips its Sort — with multiple files per
     # bucket Spark must re-sort even though the exchange is still elided
-    w = (
+    (
         df.repartition(n_buckets, *[df[k] for k in keys])
         .write.format("parquet").mode(mode).bucketBy(n_buckets, *keys)
+        .sortBy(*keys)
+        .saveAsTable(table)
     )
-    if sort:
-        w = w.sortBy(*keys)
-    w.saveAsTable(table)
 
 
 def bucketed_join(

@@ -71,8 +71,10 @@ def _memo_pair(make: Callable[[], tuple[DataFrame, DataFrame]]):
 @dataclass
 class KGPipeline:
     """Deterministic-backend pipeline. The transformer backends swap in by
-    replacing ``ner_backends`` / ``extract`` with their mapInPandas
-    counterparts — the dataflow downstream is identical."""
+    overriding :meth:`mentions` (and, for model-extracted triples,
+    :meth:`raw_triples`) with their mapInPandas counterparts;
+    :meth:`scan_products` then runs the overridden stages instead of the
+    fused corpus scan, and the dataflow downstream is identical."""
 
     aliases: DataFrame
     properties: DataFrame
