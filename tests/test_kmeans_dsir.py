@@ -67,6 +67,36 @@ def test_semantic_dedup_marks_larger_id_of_near_identical(spark):
     assert got == {0: False, 1: True, 2: False, 3: False, 4: True}
 
 
+def test_kmeans_zero_vector_moves_no_centroid(spark):
+    """A zero vector has no cell (its cosines are NULL). When it is not
+    among the k init ids, it must neither fail the Lloyd loop nor move a
+    centroid: the codebook and the cell counts equal the corpus alone's,
+    and the operators that train through the loop complete."""
+    from waka_spark.operators.ann import (
+        kmeans_assign, kmeans_fit, semantic_dedup, simplified_silhouette)
+
+    rows = [
+        (0, [1.0, 0.0, 0.05]), (1, [0.9, 0.1, 0.0]), (2, [1.0, 0.05, 0.1]),
+        (3, [0.0, 1.0, 0.05]), (4, [0.1, 0.9, 0.0]), (5, [0.0, 1.0, 0.1]),
+    ]
+    with_zero = _emb(spark, rows + [(6, [0.0, 0.0, 0.0])])
+    for n_iters in (1, 2):
+        want = sorted(kmeans_fit(_emb(spark, rows), k=2, n_iters=n_iters)
+                      .collect())
+        got = kmeans_fit(with_zero, k=2, n_iters=n_iters)
+        assert sorted(got.collect()) == want
+    cells = {r["vec_id"]: r["cell"]
+             for r in kmeans_assign(with_zero, got).collect()}
+    assert cells[6] is None
+    dups = {r["vec_id"]: (r["cell"], r["is_dup"])
+            for r in semantic_dedup(
+                with_zero, k=2, n_iters=2, threshold=0.999).collect()}
+    assert dups[6] == (None, False) and len(dups) == 7
+    sil = {r["cell"]: r["n_vecs"]
+           for r in simplified_silhouette(with_zero, k=2).collect()}
+    assert sil[None] == 1 and sum(sil.values()) == 7
+
+
 def test_dsir_upweights_target_like_documents(spark):
     from waka_spark.operators.curation import dsir_importance
 

@@ -38,6 +38,40 @@ def test_hard_negatives_excludes_same_label(spark):
     assert all(r["neg_label"] != 0 for r in rows)
 
 
+def test_hard_negatives_is_cosine_topk_without_query_label(spark):
+    """hard_negatives == cosine_topk over the corpus minus each query's
+    label, rank for rank, on random vectors with exact duplicates (cos
+    ties across labels, broken by vec_id)."""
+    import random
+
+    from waka_spark.operators.ann import cosine_topk, hard_negatives
+
+    rnd = random.Random(5)
+    rows = [(i, [rnd.uniform(-1, 1) for _ in range(6)], i % 3)
+            for i in range(60)]
+    rows += [(60 + j, list(rows[0][1]), j % 3) for j in range(5)]
+    emb = spark.createDataFrame(
+        rows, "vec_id long, embedding array<double>, label int"
+    ).repartition(5)
+    q = emb.filter("vec_id < 3").selectExpr(
+        "vec_id as q_id", "embedding as q_vec", "label as q_label")
+    got = sorted(
+        (r["q_id"], r["rank"], r["vec_id"], r["cos"], r["neg_label"])
+        for r in hard_negatives(emb, q, k=6).collect())
+    labels = {i: lab for i, _, lab in rows}
+    want = []
+    for q_id in range(3):
+        corpus = emb.filter(emb.label != labels[q_id])
+        want += [
+            (r["q_id"], r["rank"], r["vec_id"], r["cos"], labels[r["vec_id"]])
+            for r in cosine_topk(
+                corpus, q.filter(q.q_id == q_id).select("q_id", "q_vec"),
+                k=6).collect()
+        ]
+    assert got == sorted(want)
+    assert len(got) == 18
+
+
 def test_slice_kl_zero_for_identical_slices_positive_for_skewed(spark):
     from waka_spark.operators.textstats import slice_kl_divergence
 

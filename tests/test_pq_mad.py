@@ -92,3 +92,79 @@ def test_pq_adc_matches_exact_on_separable_data(spark):
         mine = [r["vec_id"] for r in sorted(
             (r for r in got if r["q_id"] == q_id), key=lambda r: r["rank"])]
         assert mine == expect, q_id
+
+
+def test_pq_codebook_is_kmeans_fit_per_subspace(spark):
+    """Subspace s of a PQ build is kmeans_fit over the s-th slice: the
+    codes are kmeans_assign's cells against that codebook, and recon_mse
+    is the squared error to its centroids. Vectors 0 and 1 share their
+    first slice, so cell 1 of subspace 0 starts as a copy of cell 0 and
+    the first iteration leaves it empty (ties go to the lowest cell);
+    vector 2's second slice [1, 1] ties between the init centroids
+    [1, 0] and [0, 1]."""
+    from pyspark.sql import functions as F
+
+    from waka_spark.operators.ann import kmeans_assign, kmeans_fit, pq_encode
+
+    rows = [
+        (0, [1.0, 0.0, 1.0, 0.0]), (1, [1.0, 0.0, 0.0, 1.0]),
+        (2, [1.0, 1.0, 1.0, 1.0]), (3, [0.2, 1.0, 0.0, 1.0]),
+        (4, [1.0, 0.1, 0.3, 1.0]), (5, [0.5, 0.5, 2.0, 0.0]),
+        (6, [0.5, 0.5, 1.0, 1.0]),
+    ]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    for n_iters in (1, 3):
+        got = {r["vec_id"]: (list(r["code"]), r["recon_mse"])
+               for r in pq_encode(emb, m=2, k=2, n_iters=n_iters).collect()}
+        codes: dict[int, list[int]] = {i: [] for i, _ in rows}
+        err = {i: 0.0 for i, _ in rows}
+        for s in range(2):
+            piece = emb.select(
+                "vec_id", F.slice("embedding", 2 * s + 1, 2).alias("embedding"))
+            cents = kmeans_fit(piece, k=2, n_iters=n_iters)
+            book = {}
+            for r in cents.collect():
+                book.setdefault(r["cell"], [0.0, 0.0])[r["dim_idx"]] = (
+                    r["centroid_val"])
+            if s == 0 and n_iters == 1:
+                assert {r["cell"]: r["n_vecs"] for r in cents.collect()}[1] == 0
+            for r in kmeans_assign(piece, cents).collect():
+                codes[r["vec_id"]].append(r["cell"])
+                err[r["vec_id"]] += sum(
+                    (x - c) ** 2
+                    for x, c in zip(r["embedding"], book[r["cell"]]))
+        assert codes[2][1] == 0
+        assert {i: c for i, (c, _) in got.items()} == codes
+        for i, (_, mse) in got.items():
+            assert abs(mse - err[i] / 4) < 1.5e-6, (n_iters, i)
+
+
+def test_pq_zero_vector_moves_no_centroid(spark):
+    """A zero vector (not among the init ids) has no cell in either
+    subspace: the build completes, its code is NULL, and every other
+    vector codes exactly as without it. A zero sub-slice gets NULL in
+    that subspace only."""
+    from waka_spark.operators.ann import pq_adc_topk, pq_encode
+
+    rows = [(i, [float((i * 3) % 5), float((i + 1) % 7),
+                 float((i * 2 + 3) % 4), float(i % 3) + 1.0])
+            for i in range(12)]
+    schema = "vec_id long, embedding array<double>"
+
+    def codes(extra):
+        emb = spark.createDataFrame(rows + extra, schema)
+        return {r["vec_id"]: (r["code"], r["recon_mse"])
+                for r in pq_encode(emb, m=2, k=3, n_iters=2).collect()}
+
+    base = codes([])
+    got = codes([(99, [0.0] * 4)])
+    assert got.pop(99) == ([None, None], None)
+    assert got == base
+    got = codes([(98, [0.0, 0.0, 1.0, 2.0])])
+    assert got[98][0][0] is None and got[98][0][1] is not None
+
+    emb = spark.createDataFrame(rows + [(99, [0.0] * 4)], schema)
+    q = emb.filter("vec_id < 2").selectExpr(
+        "vec_id as q_id", "embedding as q_vec")
+    assert pq_adc_topk(emb, q, m=2, k=3, n_iters=2,
+                       n_candidates=6, topk=3).count() == 6

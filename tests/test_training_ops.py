@@ -619,7 +619,9 @@ def test_tfidf_topk_ranks_discriminative_terms(spark):
 def test_matmul_topk_matches_bruteforce(spark):
     """The GEMM path is a physical rewrite of cosine_topk — answers must be
     identical, including tie-breaks, across many partitions (per-batch
-    prune must not lose global winners)."""
+    prune must not lose global winners). The second input has a zero
+    corpus vector and a zero query: both paths give them cos NULL,
+    ranked last."""
     import random
 
     from waka_spark.operators.ann import cosine_topk, matmul_topk
@@ -628,21 +630,28 @@ def test_matmul_topk_matches_bruteforce(spark):
     rows = [(i, [rnd.uniform(-1, 1) for _ in range(8)]) for i in range(200)]
     # exact duplicates force cos=1.0 ties -> exercises the tie-break prune
     rows += [(200 + j, list(rows[0][1])) for j in range(6)]
-    emb = spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>"
-    ).repartition(16)
-    q = emb.filter("vec_id < 2").selectExpr(
-        "vec_id as q_id", "embedding as q_vec")
+    zero_rows = [(0, [1.0, 0.0]), (1, [0.0, 0.0]), (2, [0.6, 0.8]),
+                 (3, [0.0, 1.0])]
+    for rows, n_parts, k in ((rows, 16, 7), (zero_rows, 2, 3)):
+        emb = spark.createDataFrame(
+            rows, "vec_id long, embedding array<double>"
+        ).repartition(n_parts)
+        q = emb.filter("vec_id < 2").selectExpr(
+            "vec_id as q_id", "embedding as q_vec")
 
-    want = sorted(
-        (r["q_id"], r["rank"], r["vec_id"], r["cos"])
-        for r in cosine_topk(emb, q, k=7).collect()
-    )
-    got = sorted(
-        (r["q_id"], r["rank"], r["vec_id"], r["cos"])
-        for r in matmul_topk(emb, q, k=7).collect()
-    )
-    assert got == want
+        want = sorted(
+            (r["q_id"], r["rank"], r["vec_id"], r["cos"])
+            for r in cosine_topk(emb, q, k=k).collect()
+        )
+        got = sorted(
+            (r["q_id"], r["rank"], r["vec_id"], r["cos"])
+            for r in matmul_topk(emb, q, k=k).collect()
+        )
+        assert got == want
+    assert got == [
+        (0, 1, 2, 0.6), (0, 2, 3, 0.0), (0, 3, 1, None),
+        (1, 1, 0, None), (1, 2, 2, None), (1, 3, 3, None),
+    ]
 
 
 def test_unigram_logprob_ranks_rare_words_higher(spark):

@@ -1,25 +1,41 @@
 """Similarity search over embedding columns (array<float>).
 
-- ``cosine_topk`` — exact brute force: broadcast the (small) query set,
-  JVM-side ``zip_with``/``aggregate`` dot products, one ``row_number``
-  per query. The correctness baseline.
-- ``lsh_bucket_ann`` — the scale path: *banded* sign-of-projection LSH
-  (``n_bands`` bands × ``band_planes`` planes per band, exactly the
-  MinHash OR-of-ANDs banding one file over in dedup.py): a vector lands
-  in one bucket per band, candidates collide in ≥1 band, brute force only
-  within buckets. Banding is what makes this survive 10^9 vectors: recall
-  comes from more bands (OR), bucket size stays bounded by planes-per-band
-  (AND) — a single flat sign pattern would need either huge buckets (few
-  planes) or vanishing recall (many planes).
-- ``embedding_cosine_pairs`` — near-duplicate detection by cosine ≥ τ
-  within banded LSH buckets (the embedding-space analog of dedup.py),
-  with an optional ``max_bucket_size`` guard: buckets above the cap are
-  dropped from pair generation (a hot bucket is quadratic), and
-  ``lsh_bucket_stats`` reports exactly what a cap would drop.
+Operators: exact top-k (``cosine_topk``, its GEMM rewrite
+``matmul_topk``, ``hard_negatives``, ``mmr_topk``), banded LSH
+(``lsh_bucket_ann``, ``embedding_cosine_pairs``, ``lsh_bucket_stats``),
+IVF (``ivf_topk`` over ``ivf_centroids`` / ``ivf_assign``), k-means
+(``kmeans_fit``, ``kmeans_assign``, ``simplified_silhouette``,
+``semantic_dedup``), product quantization (``pq_encode``,
+``pq_adc_topk``) and embedding diagnostics (pooling, cohesion,
+covariance, int8 quantization, random projection, matryoshka recall).
 
-Hyperplane components are md5-derived in [-0.5, 0.5] so the DuckDB oracle
-reproduces them bit-for-bit — no RNG state to ship. Plane ``p`` globally
-is band ``p // band_planes``, bit ``p % band_planes``.
+Each algorithm family has one kernel, which its operators call:
+
+- ``_rank_per_query`` — the per-query top-k window (the caller's order
+  keys, ties → lowest ``vec_id``) that every ranking operator ends in;
+- ``_query_scan`` — corpus × broadcast queries, self-match dropped,
+  rounded cosine: the brute-force scan of ``cosine_topk``,
+  ``hard_negatives`` and ``mmr_topk``'s candidate stage;
+- ``_cell_sims`` / ``_argmax_cell`` — rounded cosine against a codebook
+  literal and its argmax cell, the assignment rule of IVF, k-means,
+  the silhouette and PQ;
+- ``_lloyd`` — the spherical k-means loop: ``kmeans_fit`` is its
+  one-subspace case, the PQ build its m-subspace case;
+- ``_pq_coder`` — PQ training, coding and the squared-L2 distance to a
+  code, for ``pq_encode`` and ``pq_adc_topk``;
+- ``_block_pairs`` — the blocked self-join (id_a < id_b, rounded cosine
+  ≥ τ) of ``embedding_cosine_pairs`` (LSH buckets) and
+  ``semantic_dedup`` (k-means cells).
+
+Banded LSH is the MinHash OR-of-ANDs banding one file over in dedup.py:
+``n_bands`` bands × ``band_planes`` sign-of-projection planes, a vector
+lands in one bucket per band, candidates collide in ≥1 band. Recall
+comes from more bands (OR), bucket size stays bounded by planes per band
+(AND) — a single flat sign pattern would need either huge buckets (few
+planes) or vanishing recall (many planes). Hyperplane components are
+md5-derived in [-0.5, 0.5] so the DuckDB oracle reproduces them
+bit-for-bit — no RNG state to ship. Plane ``p`` globally is band
+``p // band_planes``, bit ``p % band_planes``.
 """
 
 from __future__ import annotations
@@ -54,6 +70,53 @@ def cosine(a: Column, b: Column) -> Column:
     return F.try_divide(_dot(a, b), _norm(a) * _norm(b))
 
 
+def _sq_l2(a: Column, b: Column) -> Column:
+    """Squared Euclidean distance, folded in-row."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+
+
+def _rank_per_query(scored: DataFrame, k: int, *order: Column) -> DataFrame:
+    """Each query's first ``k`` rows by ``order``, ties broken by
+    ``vec_id`` ascending, numbered 1..k in ``rank`` — the one per-query
+    window every ranking operator here ends in."""
+    w = Window.partitionBy("q_id").orderBy(*order, F.col("vec_id").asc())
+    return scored.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= k)
+
+
+def _query_scan(
+    embeddings: DataFrame,
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+    q_id_col: str,
+    q_vec_col: str,
+    corpus_cols: tuple[Column, ...] = (),
+    query_cols: tuple[Column, ...] = (),
+) -> DataFrame:
+    """Brute-force scan: the corpus (vec_id, embedding, *corpus_cols)
+    crossed with the broadcast queries (q_id, q_vec, *query_cols), the
+    self-match dropped, ``cos`` = cosine rounded 1e-6. The corpus is
+    never shuffled; only the caller's per-query window is."""
+    return (
+        embeddings.select(
+            F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding"),
+            *corpus_cols,
+        )
+        .crossJoin(F.broadcast(queries.select(
+            F.col(q_id_col).alias("q_id"), F.col(q_vec_col).alias("q_vec"),
+            *query_cols,
+        )))
+        .filter(F.col("q_id") != F.col("vec_id"))
+        .withColumn(
+            "cos", F.round(cosine(F.col("embedding"), F.col("q_vec")), 6))
+    )
+
+
 def cosine_topk(
     embeddings: DataFrame,
     queries: DataFrame,
@@ -65,27 +128,11 @@ def cosine_topk(
 ) -> DataFrame:
     """Exact top-k by cosine for each query vector (broadcast queries ×
     scan corpus; no corpus shuffle — only the final per-query window)."""
-    embeddings = parallel_floor(embeddings, id_col)
-    joined = embeddings.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
-    ).crossJoin(
-        F.broadcast(
-            queries.select(
-                F.col(q_id_col).alias("q_id"), F.col(q_vec_col).alias("q_vec")
-            )
-        )
-    )
-    scored = joined.filter(F.col("q_id") != F.col("vec_id")).withColumn(
-        "cos", F.round(cosine(F.col("embedding"), F.col("q_vec")), 6)
-    )
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("cos").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "vec_id", "cos", "rank")
-    )
+    scored = _query_scan(
+        parallel_floor(embeddings, id_col), queries,
+        id_col, vec_col, q_id_col, q_vec_col)
+    return _rank_per_query(scored, k, F.col("cos").desc()).select(
+        "q_id", "vec_id", "cos", "rank")
 
 
 def hyperplanes(spark, dim: int, n_planes: int = 8) -> DataFrame:
@@ -142,6 +189,13 @@ def auto_band_planes(
     return max(min_planes, math.ceil(math.log2(n_vectors / target_bucket_size)))
 
 
+def _literal(vectors: list[list[float]]) -> Column:
+    """Vectors as an array<array<double>> plan literal — a codebook or a
+    plane set, a few KB collected once at plan build and shipped with
+    the plan instead of joined."""
+    return F.array(*[F.lit(list(v)).cast("array<double>") for v in vectors])
+
+
 def _collected_planes(embeddings: DataFrame, vec_col: str, n_planes: int) -> Column:
     """Hyperplane components as an array<array<double>> literal (6-30 tiny
     rows collected once at plan-build — a broadcast dictionary, not a data
@@ -149,10 +203,8 @@ def _collected_planes(embeddings: DataFrame, vec_col: str, n_planes: int) -> Col
     spark = embeddings.sparkSession
     dim = len(embeddings.select(vec_col).first()[0])
     planes = hyperplanes(spark, dim, n_planes)
-    return F.array(*[
-        F.lit(row["components"]).cast("array<double>")
-        for row in planes.orderBy("plane").collect()
-    ])
+    return _literal(
+        [row["components"] for row in planes.orderBy("plane").collect()])
 
 
 def banded_lsh_tags(
@@ -165,37 +217,24 @@ def banded_lsh_tags(
 ) -> DataFrame:
     """(id, embedding) → one (id, embedding, band, bucket) row per band.
 
-    All ``n_bands * band_planes`` sign bits are computed narrow in one
-    projection (each dot product evaluated once), then sliced into
-    per-band bucket ids — n_bands rows per vector, no shuffle."""
-    df = parallel_floor(df, id_col)
-    vec = F.col(vec_col)
-    bits = F.transform(
-        comps,
-        lambda plane: F.when(_dot(vec, plane) > 0, F.lit(1)).otherwise(F.lit(0)),
-    )
-    base = df.select(
-        F.col(id_col).alias("vec_id"),
-        vec.alias("embedding"),
-        bits.alias("_bits"),
-    )
-    bands = F.transform(
-        F.sequence(F.lit(0), F.lit(n_bands - 1)),
-        lambda b: F.struct(
-            b.cast("int").alias("band"),
-            F.aggregate(
-                F.zip_with(
-                    F.slice(F.col("_bits"), b * band_planes + 1, band_planes),
-                    F.sequence(F.lit(0), F.lit(band_planes - 1)),
-                    lambda bit, j: (
-                        bit.cast("double") * F.pow(F.lit(2.0), j.cast("double"))
-                    ).cast("int"),
-                ),
-                F.lit(0),
-                lambda acc, v: acc + v,
-            ).alias("bucket"),
-        ),
-    )
+    Band ``b``'s bucket is :func:`lsh_bucket` over that band's slice of
+    the plane literal (folded to a constant at plan build), so each dot
+    product is evaluated once per vector, in one projection before the
+    explode — n_bands rows per vector, no shuffle."""
+    # normalize names first: the bucket expressions must not reference
+    # an alias minted in the same select (lateral-alias refs can't sit
+    # under an explode)
+    base = parallel_floor(df, id_col).select(
+        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding"))
+    bands = F.array(*[
+        F.struct(
+            F.lit(b).alias("band"),
+            lsh_bucket(F.col("embedding"),
+                       F.slice(comps, b * band_planes + 1, band_planes))
+            .alias("bucket"),
+        )
+        for b in range(n_bands)
+    ])
     return base.select(
         "vec_id", "embedding", F.explode(bands).alias("_bb")
     ).select("vec_id", "embedding", F.col("_bb.band").alias("band"),
@@ -250,14 +289,8 @@ def lsh_bucket_ann(
         .groupBy("q_id", "vec_id")
         .agg(F.max("cos").alias("cos"))
     )
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("cos").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "vec_id", "cos", "rank")
-    )
+    return _rank_per_query(scored, k, F.col("cos").desc()).select(
+        "q_id", "vec_id", "cos", "rank")
 
 
 def embedding_cosine_pairs(
@@ -293,19 +326,31 @@ def embedding_cosine_pairs(
             .select("band", "bucket")
         )
         tagged = tagged.join(keep, ["band", "bucket"])
-    a = tagged.select(F.col("vec_id").alias("id_a"),
-                      F.col("embedding").alias("vec_a"), "band", "bucket")
-    b = tagged.select(F.col("vec_id").alias("id_b"),
-                      F.col("embedding").alias("vec_b"), "band", "bucket")
     return (
-        a.join(b, ["band", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("cos", F.round(cosine(F.col("vec_a"), F.col("vec_b")), 6))
-        .filter(F.col("cos") >= threshold)
+        _block_pairs(tagged, ["band", "bucket"], threshold)
         # threshold-then-dedup: cos is a pure pair function, so filtering
         # before the multi-band dedup shuffles only surviving scalar rows
         .groupBy("id_a", "id_b")
         .agg(F.max("cos").alias("cos"))
+    )
+
+
+def _block_pairs(
+    tagged: DataFrame, keys: list[str], threshold: float
+) -> DataFrame:
+    """The blocked self-join of near-duplicate search: (vec_id,
+    embedding, *keys) rows paired within equal ``keys`` (an LSH
+    (band, bucket) or a k-means cell), ``id_a < id_b``, kept where the
+    rounded cosine ``cos`` ≥ ``threshold``."""
+    a = tagged.select(F.col("vec_id").alias("id_a"),
+                      F.col("embedding").alias("vec_a"), *keys)
+    b = tagged.select(F.col("vec_id").alias("id_b"),
+                      F.col("embedding").alias("vec_b"), *keys)
+    return (
+        a.join(b, keys)
+        .filter(F.col("id_a") < F.col("id_b"))
+        .withColumn("cos", F.round(cosine(F.col("vec_a"), F.col("vec_b")), 6))
+        .filter(F.col("cos") >= threshold)
     )
 
 
@@ -336,7 +381,10 @@ def matmul_topk(
 
     Rounding is half-away-from-zero at 6 decimals inside the kernel —
     identical to Spark's ``F.round`` / DuckDB ``round`` — so the emitted
-    ``cos`` is already oracle-portable.
+    ``cos`` is already oracle-portable. A zero-norm vector or query
+    normalizes to NaN, which sorts last in the per-batch prune and
+    reaches Spark as NULL: the NULL ``cos`` that :func:`cosine` gives,
+    ranked last as there.
     """
     import numpy as np
 
@@ -347,7 +395,7 @@ def matmul_topk(
     q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
     qm = np.asarray([list(r[1]) for r in q_rows], dtype=np.float64)
     qn = np.linalg.norm(qm, axis=1, keepdims=True)
-    qm = qm / np.where(qn == 0, 1.0, qn)
+    qm = qm / np.where(qn == 0, np.nan, qn)
     kk = k + 1  # +1 slot: the query's own row is dropped post-shuffle
 
     def _round6(x: "np.ndarray") -> "np.ndarray":
@@ -362,11 +410,12 @@ def matmul_topk(
             ids = pdf["_id"].to_numpy(dtype=np.int64)
             m = np.asarray(pdf["_vec"].to_list(), dtype=np.float64)
             n = np.linalg.norm(m, axis=1, keepdims=True)
-            sims = _round6((m / np.where(n == 0, 1.0, n)) @ qm.T)
+            sims = _round6((m / np.where(n == 0, np.nan, n)) @ qm.T)
             take = min(kk, len(ids))
             out_q, out_v, out_c = [], [], []
             for j in range(sims.shape[1]):
-                # prefix by the GLOBAL ranking key (cos desc, vec_id asc)
+                # prefix by the GLOBAL ranking key (cos desc, vec_id asc);
+                # lexsort puts NaN (a zero vector) last, as NULL ranks
                 order = np.lexsort((ids, -sims[:, j]))[:take]
                 out_q.append(np.full(take, q_ids[j]))
                 out_v.append(ids[order])
@@ -382,16 +431,9 @@ def matmul_topk(
         F.col(id_col).alias("_id"),
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_vec"),
     ).mapInPandas(gen, "q_id long, vec_id long, cos double")
-
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("cos").desc(), F.col("vec_id").asc()
-    )
-    return (
-        cand.filter(F.col("q_id") != F.col("vec_id"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "vec_id", "cos", "rank")
-    )
+    return _rank_per_query(
+        cand.filter(F.col("q_id") != F.col("vec_id")), k, F.col("cos").desc()
+    ).select("q_id", "vec_id", "cos", "rank")
 
 
 def quantize_embeddings(
@@ -441,30 +483,18 @@ def centroid_cohesion(
     pass reads before trusting labels for stratification or ANN recall
     targets (low cohesion = noisy labels or a collapsed embedding space).
 
-    Scale shape: the centroid is ONE hash-agg producing n_labels × dim
-    cells — computed as ``dim`` per-dimension ``avg`` columns (wide agg,
-    map-side partials; dim is a few hundred, labels a few thousand, so
-    the result is driver-trivial) — then broadcast-joined back and the
-    cosine evaluated narrowly in-row with ``zip_with``/``aggregate``.
-    NO posexplode of the corpus: at 10^9 vectors an (id, i, x) explode
-    is dim× the corpus in shuffle bytes; this shape shuffles nothing but
-    the tiny centroid table. ``dim`` is read from one row (O(1) driver
-    action).
+    Scale shape: the centroid is the label's :func:`pool_vectors` mean
+    (ONE wide hash-agg of n_labels × dim cells, map-side partials; dim
+    is a few hundred, labels a few thousand, so the result is
+    driver-trivial), broadcast-joined back, and the cosine evaluated
+    narrowly in-row with ``zip_with``/``aggregate``. NO posexplode of
+    the corpus: at 10^9 vectors an (id, i, x) explode is dim× the corpus
+    in shuffle bytes; this shape shuffles nothing but the tiny centroid
+    table.
     """
     vec = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    dim = len(embeddings.select(vec_col).first()[0])
-    cent = (
-        embeddings.select(F.col(label_col).alias("label"), vec.alias("_v"))
-        .groupBy("label")
-        .agg(*[
-            F.avg(F.element_at("_v", i + 1)).alias(f"_c{i}")
-            for i in range(dim)
-        ])
-        .select(
-            "label",
-            F.array(*[F.col(f"_c{i}") for i in range(dim)]).alias("_cent"),
-        )
-    )
+    cent = pool_vectors(embeddings, label_col, vec_col).select(
+        F.col("group_id").alias("label"), F.col("pooled").alias("_cent"))
     joined = embeddings.select(
         F.col(label_col).alias("label"), F.col(id_col), vec.alias("_v")
     ).join(F.broadcast(cent), "label")
@@ -495,11 +525,11 @@ def pool_vectors(
     item → container pooling) that feeds every conversation-level ANN /
     SemDeDup / clustering pass.
 
-    Scale shape: same wide-agg trick as :func:`centroid_cohesion` — ONE
-    hash-agg producing ``dim`` per-dimension ``avg`` columns with map-side
-    partials, then the array reassembled in-row. The corpus is never
-    posexploded: at 10^12 turns an (id, i, x) explode shuffles dim× the
-    corpus; here shuffle bytes are exactly the output (n_groups × dim),
+    Scale shape: ONE hash-agg producing ``dim`` per-dimension ``avg``
+    columns with map-side partials, then the array reassembled in-row
+    (:func:`centroid_cohesion` takes its label centroids from here). The
+    corpus is never posexploded: at 10^12 turns an (id, i, x) explode
+    shuffles dim× the corpus; here shuffle bytes are exactly the output (n_groups × dim),
     the same volume any downstream consumer must hold anyway. ``dim`` is
     read from one row (O(1) driver action). ``normalize=True`` L2-scales
     the pooled vector in-row so consumers can dot instead of cosine.
@@ -554,16 +584,26 @@ def ivf_centroids(
     quantizer — no RNG/training loop to ship, and the DuckDB oracle
     recomputes it bit-for-bit; production swaps in k-means centroids
     trained by :func:`kmeans_fit` through the exact same plan (the
-    codebook is a broadcast
-    literal either way — n_cells rows collected once at plan build, like
-    ``_collected_planes``)."""
+    codebook is a broadcast literal either way — n_cells rows collected
+    once at plan build, like ``_collected_planes``)."""
     rows = (
         embeddings.select(F.col(id_col), F.col(vec_col))
         .orderBy(id_col).limit(n_cells).collect()
     )
-    return F.array(*[
-        F.lit(list(r[1])).cast("array<double>") for r in rows
-    ])
+    return _literal([r[1] for r in rows])
+
+
+def _cell_sims(vec: Column, cents: Column) -> Column:
+    """Cosine of ``vec`` to every centroid of the codebook literal
+    ``cents``, rounded 1e-6 so both engines quantize identically."""
+    return F.transform(cents, lambda c: F.round(cosine(vec, c), 6))
+
+
+def _argmax_cell(sims: Column) -> Column:
+    """The cell of the largest similarity. Ties go to the lowest cell
+    (``array_position`` returns the first match); a zero vector, whose
+    similarities are all NULL, gets NULL."""
+    return (F.array_position(sims, F.array_max(sims)) - 1).cast("int")
 
 
 def ivf_assign(
@@ -572,17 +612,14 @@ def ivf_assign(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """argmax-cosine cell assignment, computed narrow (one projection per
-    row, no shuffle). Ties on the rounded similarity go to the lowest cell
-    index (``array_position`` returns the first match)."""
+    """argmax-cosine cell assignment (:func:`_argmax_cell`), computed
+    narrow (one projection per row, no shuffle)."""
     df = parallel_floor(df, id_col)
     vec = F.col(vec_col)
-    sims = F.transform(cents, lambda c: F.round(cosine(vec, c), 6))
     return df.select(
         F.col(id_col).alias("vec_id"),
         vec.alias("embedding"),
-        (F.array_position(sims, F.array_max(sims)) - 1)
-        .cast("int").alias("cell"),
+        _argmax_cell(_cell_sims(vec, cents)).alias("cell"),
     )
 
 
@@ -619,7 +656,7 @@ def ivf_topk(
     q = queries.select(
         F.col(q_id_col).alias("q_id"), F.col(q_vec_col).alias("q_vec"))
     qvec = F.col("q_vec")
-    qsims = F.transform(cents, lambda c: F.round(cosine(qvec, c), 6))
+    qsims = _cell_sims(qvec, cents)
     # (sim desc, cell asc) probe order: sort struct<-sim, cell> ascending
     probe_structs = F.slice(
         F.array_sort(
@@ -645,14 +682,102 @@ def ivf_topk(
             "cos", F.round(cosine(F.col("embedding"), F.col("q_vec")), 6)
         )
     )
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("cos").desc(), F.col("vec_id").asc()
+    return _rank_per_query(scored, k, F.col("cos").desc()).select(
+        "q_id", "vec_id", "cos", "rank")
+
+
+def _lloyd(
+    corpus: DataFrame,
+    k: int,
+    n_iters: int,
+    id_col: str,
+    vec_col: str,
+    m: int = 1,
+) -> tuple[list[list[list[float]]], list[list[int]]]:
+    """Distributed spherical k-means (Lloyd), trained jointly over the
+    ``m`` equal subspaces of ``vec_col``: returns ``codebooks[s][cell]``
+    (a centroid of subspace ``s``) and ``counts[s][cell]`` (its
+    population in the assignment that produced it). :func:`kmeans_fit`
+    is the m = 1 case; a PQ build (:func:`_pq_coder`) trains its m
+    subspace codebooks here at once.
+
+    Deterministic throughout, so the DuckDB oracle replays it exactly:
+    init = the slices of the ``k`` lowest ids' vectors, rounded 1e-6;
+    each iteration assigns every (vector, subspace) slice to its
+    argmax-cosine centroid (:func:`_argmax_cell`: ties → lowest cell)
+    and recomputes centroids as the per-cell elementwise mean, rounded
+    1e-6 *before* the next assignment so both engines quantize
+    identically at every step. A cell no slice picks keeps its previous
+    centroid. A zero slice has no cell (NULL, as :func:`ivf_assign`
+    reports it) and moves no centroid — it must not fail the build.
+
+    Scale shape: assignment is a NARROW projection against the codebook
+    literals (no shuffle, no UDF); the update is ONE ``groupBy(s, cell)``
+    hash-agg per iteration producing m×k×(dim/m) cells (map-side
+    partials — the shuffle carries m·k rows per partition, not the
+    corpus); the per-iteration driver collect is the codebooks (a few
+    KB). Total cost = n_iters corpus scans + n_iters tiny shuffles and
+    ONE driver action per iteration for all m subspaces — the standard
+    layout vs per-pair clustering, and the loop FAISS/Spark-MLlib run
+    for IVF training. Slices keep ``vec_col``'s element type: an
+    array<float> vector's norm squares in float, as in
+    :func:`ivf_assign`.
+    """
+    init_rows = (
+        corpus.select(id_col, vec_col).orderBy(id_col).limit(k).collect()
     )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "vec_id", "cos", "rank")
-    )
+    dim = len(init_rows[0][1])
+    assert dim % m == 0, "dim must divide evenly into m subspaces"
+    sub = dim // m
+    codebooks = [
+        [
+            [round(float(x), 6) for x in r[1][s * sub:(s + 1) * sub]]
+            for r in init_rows
+        ]
+        for s in range(m)
+    ]
+    counts = [[0] * k for _ in range(m)]
+
+    corpus = parallel_floor(corpus, id_col)
+    vec = F.col(vec_col)
+    if m == 1:
+        # the vector is its own one slice: no explode, and s folds to a
+        # constant, so the codebook lookup below folds away
+        slices = corpus.select(F.lit(0).alias("s"), vec.alias("sv"))
+    else:
+        slices = corpus.select(F.posexplode(F.array(*[
+            F.slice(vec, s * sub + 1, sub) for s in range(m)
+        ])).alias("s", "sv"))
+
+    for _ in range(n_iters):
+        cents = F.element_at(
+            F.array(*[_literal(cb) for cb in codebooks]), F.col("s") + 1)
+        new_rows = (
+            slices.select(
+                "s", _argmax_cell(_cell_sims(F.col("sv"), cents)).alias("cell"),
+                "sv",
+            )
+            .groupBy("s", "cell")
+            .agg(
+                F.count("*").cast("long").alias("_n"),
+                *[
+                    F.round(F.avg(F.element_at("sv", i + 1)), 6)
+                    .alias(f"_c{i}")
+                    for i in range(sub)
+                ],
+            )
+            .collect()
+        )
+        counts = [[0] * k for _ in range(m)]
+        # the NULL-cell group (zero slices) is skipped here, not filtered
+        # in Spark: a filter on ``cell`` would be pushed below the
+        # projection and evaluate the k cosines of every slice twice
+        for r in new_rows:
+            if r["cell"] is None:
+                continue
+            counts[r["s"]][r["cell"]] = r["_n"]
+            codebooks[r["s"]][r["cell"]] = [r[f"_c{i}"] for i in range(sub)]
+    return codebooks, counts
 
 
 def kmeans_fit(
@@ -664,71 +789,31 @@ def kmeans_fit(
 ) -> DataFrame:
     """Distributed spherical k-means (Lloyd) — the trainer that produces
     the IVF codebook ``ivf_topk`` consumes (its docstring points here).
-
-    Deterministic throughout, so the DuckDB oracle replays it exactly:
-    init = the embeddings of the ``k`` lowest ids; each iteration assigns
-    every vector to its argmax-cosine centroid (ties → lowest cell, the
-    ``ivf_assign`` rule) and recomputes centroids as the per-cell
-    elementwise mean, rounded to 1e-6 *before* the next assignment so both
-    engines quantize identically at every step. Empty cells keep their
-    previous centroid.
-
-    Scale shape: assignment is a NARROW projection against the k×dim
-    codebook literal (no shuffle, no UDF); the update is ONE hash-agg per
-    iteration producing k×dim cells (map-side partials — the shuffle
-    carries k rows per partition, not the corpus); the per-iteration
-    driver collect is the k×dim codebook (a few KB). Total cost =
-    n_iters corpus scans + n_iters tiny shuffles — the standard
-    million-×-speedup layout vs per-pair clustering, and the exact loop
-    FAISS/Spark-MLlib run for IVF training.
+    The one-subspace case of :func:`_lloyd`, which documents the init,
+    tie, rounding and empty-cell rules and the scale shape.
 
     Output: one row per (cell, dim_idx) of the final codebook —
     (cell int, dim_idx int, centroid_val double, n_vecs long), n_vecs =
     the cell's population in the assignment that produced it.
     """
-    spark = embeddings.sparkSession
-    # one driver action covers both the dim probe and the init rows (the
-    # separate .first() was a whole extra Spark job per call — and kmeans_fit
-    # is called m times per PQ build)
-    init_rows = (
-        embeddings.select(id_col, vec_col).orderBy(id_col).limit(k).collect()
-    )
-    dim = len(init_rows[0][1])
-    codebook: list[list[float]] = [
-        [round(float(x), 6) for x in r[1]] for r in init_rows
-    ]
-    counts: list[int] = [0] * k
-
-    for _ in range(n_iters):
-        cents = F.array(*[
-            F.lit(c).cast("array<double>") for c in codebook
-        ])
-        assigned = ivf_assign(embeddings, cents, id_col, vec_col)
-        new_rows = (
-            assigned.groupBy("cell")
-            .agg(
-                F.count("*").cast("long").alias("_n"),
-                *[
-                    F.round(F.avg(F.element_at("embedding", i + 1)), 6)
-                    .alias(f"_c{i}")
-                    for i in range(dim)
-                ],
-            )
-            .collect()
-        )
-        counts = [0] * k
-        for r in new_rows:
-            counts[r["cell"]] = r["_n"]
-            codebook[r["cell"]] = [r[f"_c{i}"] for i in range(dim)]
-
+    (codebook,), (counts,) = _lloyd(embeddings, k, n_iters, id_col, vec_col)
     out = [
-        (cell, i, codebook[cell][i], counts[cell])
+        (cell, i, x, counts[cell])
         for cell in range(k)
-        for i in range(dim)
+        for i, x in enumerate(codebook[cell])
     ]
-    return spark.createDataFrame(
+    return embeddings.sparkSession.createDataFrame(
         out, "cell int, dim_idx int, centroid_val double, n_vecs long"
     )
+
+
+def _codebook_of(centroids: DataFrame) -> Column:
+    """A flattened :func:`kmeans_fit` codebook (cell, dim_idx,
+    centroid_val) as the k×dim plan literal :func:`ivf_assign` reads."""
+    by_cell: dict[int, list[float]] = {}
+    for r in centroids.orderBy("cell", "dim_idx").collect():
+        by_cell.setdefault(r["cell"], []).append(r["centroid_val"])
+    return _literal([by_cell[c] for c in sorted(by_cell)])
 
 
 def kmeans_assign(
@@ -740,14 +825,7 @@ def kmeans_assign(
     """Assign every vector to its argmax-cosine cell of a trained codebook
     (the flattened ``kmeans_fit`` output). The codebook is collected into
     a plan literal (k×dim, a few KB) and assignment stays narrow."""
-    rows = centroids.orderBy("cell", "dim_idx").collect()
-    by_cell: dict[int, list[float]] = {}
-    for r in rows:
-        by_cell.setdefault(r["cell"], []).append(r["centroid_val"])
-    cents = F.array(*[
-        F.lit(by_cell[c]).cast("array<double>") for c in sorted(by_cell)
-    ])
-    return ivf_assign(embeddings, cents, id_col, vec_col)
+    return ivf_assign(embeddings, _codebook_of(centroids), id_col, vec_col)
 
 
 def simplified_silhouette(
@@ -774,27 +852,14 @@ def simplified_silhouette(
     training-data curation signal for "is this SemDeDup/IVF clustering
     tight enough to trust its cells".
     """
-    cents_df = kmeans_fit(embeddings, k, n_iters, id_col, vec_col)
-    rows = cents_df.orderBy("cell", "dim_idx").collect()
-    by_cell: dict[int, list[float]] = {}
-    for r in rows:
-        by_cell.setdefault(r["cell"], []).append(r["centroid_val"])
-    cents = F.array(*[
-        F.lit(by_cell[c]).cast("array<double>") for c in sorted(by_cell)
-    ])
+    cents = _codebook_of(kmeans_fit(embeddings, k, n_iters, id_col, vec_col))
     embeddings = parallel_floor(embeddings, id_col)
-    vec = F.col(vec_col)
     sims = embeddings.select(
         F.col(id_col).alias("vec_id"),
-        F.transform(cents, lambda c: F.round(cosine(vec, c), 6))
-        .alias("_sims"),
+        _cell_sims(F.col(vec_col), cents).alias("_sims"),
     )
     tagged = sims.select(
-        "vec_id",
-        (F.array_position("_sims", F.array_max(F.col("_sims"))) - 1)
-        .cast("int").alias("cell"),
-        F.col("_sims"),
-    )
+        "vec_id", _argmax_cell(F.col("_sims")).alias("cell"), "_sims")
     own_sim = F.element_at("_sims", F.col("cell") + 1)
     other_sim = F.array_max(
         F.filter("_sims", lambda _, i: i != F.col("cell")))
@@ -840,18 +905,8 @@ def semantic_dedup(
     # flag join) — persist, or each branch replays the k-means assign scan.
     assigned = pin(kmeans_assign(embeddings, cents_df, id_col, vec_col))
 
-    a = assigned.select(
-        F.col("vec_id").alias("id_a"), F.col("embedding").alias("vec_a"),
-        "cell")
-    b = assigned.select(
-        F.col("vec_id").alias("id_b"), F.col("embedding").alias("vec_b"),
-        "cell")
     dup_ids = (
-        a.join(b, "cell")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn(
-            "cos", F.round(cosine(F.col("vec_a"), F.col("vec_b")), 6))
-        .filter(F.col("cos") >= threshold)
+        _block_pairs(assigned, ["cell"], threshold)
         .select(F.col("id_b").alias("vec_id"))
         .distinct()
         .withColumn("_dup", F.lit(True))
@@ -987,38 +1042,20 @@ def hard_negatives(
     query's — the near-miss negatives that make embedding training
     converge (easy random negatives carry no gradient signal at scale).
 
-    Same physical shape as :func:`cosine_topk` (broadcast queries × corpus
-    scan + per-query window); the label inequality is a pre-window filter,
-    so mislabeled near-duplicates never reach the ranking.
+    The :func:`cosine_topk` scan (broadcast queries × corpus, then the
+    per-query window); the label inequality is a pre-window filter, so
+    mislabeled near-duplicates never reach the ranking — the answer is
+    :func:`cosine_topk` over the corpus minus each query's label.
 
     Output: (q_id, vec_id, neg_label, cos, rank).
     """
-    joined = embeddings.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("embedding"),
-        F.col(label_col).alias("neg_label"),
-    ).crossJoin(
-        F.broadcast(
-            queries.select(
-                F.col(q_id_col).alias("q_id"),
-                F.col(q_vec_col).alias("q_vec"),
-                F.col(q_label_col).alias("q_label"),
-            )
-        )
-    )
-    scored = (
-        joined
-        .filter(F.col("neg_label") != F.col("q_label"))
-        .filter(F.col("q_id") != F.col("vec_id"))
-        .withColumn("cos", F.round(cosine(F.col("embedding"), F.col("q_vec")), 6))
-    )
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("cos").desc(), F.col("vec_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "vec_id", "neg_label", "cos", "rank")
-    )
+    scored = _query_scan(
+        embeddings, queries, id_col, vec_col, q_id_col, q_vec_col,
+        corpus_cols=(F.col(label_col).alias("neg_label"),),
+        query_cols=(F.col(q_label_col).alias("q_label"),),
+    ).filter(F.col("neg_label") != F.col("q_label"))
+    return _rank_per_query(scored, k, F.col("cos").desc()).select(
+        "q_id", "vec_id", "neg_label", "cos", "rank")
 
 
 def covariance_matrix(
@@ -1099,70 +1136,58 @@ def covariance_matrix(
     )
 
 
-def _pq_train_codebooks(
-    corpus: DataFrame, m: int, k: int, n_iters: int
-) -> list[list[list[float]]]:
-    """Train the ``m`` per-subspace k-means codebooks of a PQ build in ONE
-    driver loop: per iteration, every (vector, subspace) slice is assigned
-    narrow against its subspace's codebook literal and aggregated in a
-    single ``groupBy(subspace, cell)`` hash-agg — one Spark action per
-    iteration instead of one *per subspace per iteration* (the former
-    sequential ``m × kmeans_fit`` layout paid ~m·(n_iters+2) driver
-    actions; at bench scale the action latency, not the math, dominated
-    the PQ operators).
+def _pq_coder(
+    embeddings: DataFrame,
+    m: int,
+    k: int,
+    n_iters: int,
+    id_col: str,
+    vec_col: str,
+):
+    """The PQ coder of :func:`pq_encode` and :func:`pq_adc_topk`: train
+    the ``m`` subspace codebooks jointly (:func:`_lloyd` over the
+    vectors cast to array<double>), then code every vector NARROW in one
+    projection against the codebook literals — no per-subspace joins,
+    no per-subspace driver loops.
 
-    Numerically identical to ``kmeans_fit`` per subspace: same init (the
-    k lowest ids' slices, rounded 1e-6), same argmax-cosine assignment
-    (rounded 1e-6, ties → lowest cell), same per-cell mean rounded 1e-6
-    before the next iteration, empty cells keep their previous centroid.
-
-    ``corpus`` must carry (vec_id, _v array<double>); returns
-    ``codebooks[s][cell] = centroid vector`` (length dim//m each).
+    Returns ``(coded, dist)``: ``coded`` is (vec_id, _v, _c0.._c{m-1}),
+    ``_c{s}`` the vector's cell in subspace ``s``; ``dist(x)`` is the
+    squared L2 from ``x``'s subspace slices to the row's assigned
+    centroids, summed over subspaces in order — the reconstruction error
+    for ``x = _v``, the asymmetric distance for a query vector.
     """
-    init_rows = corpus.select("vec_id", "_v").orderBy("vec_id").limit(
-        k).collect()
-    dim = len(init_rows[0][1])
-    assert dim % m == 0, "dim must divide evenly into m subspaces"
-    sub = dim // m
-    codebooks: list[list[list[float]]] = [
-        [
-            [round(float(x), 6) for x in r[1][s * sub:(s + 1) * sub]]
-            for r in init_rows
-        ]
-        for s in range(m)
-    ]
+    corpus = embeddings.select(
+        F.col(id_col).alias("vec_id"),
+        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_v"),
+    )
+    trained, _ = _lloyd(corpus, k, n_iters, "vec_id", "_v", m)
+    sub = len(trained[0][0])
+    codebooks = [_literal(cb) for cb in trained]
 
-    corpus = parallel_floor(corpus, "vec_id")
-    sub_slices = F.array(*[
-        F.slice(F.col("_v"), s * sub + 1, sub) for s in range(m)
-    ])
-    exploded = corpus.select(F.posexplode(sub_slices).alias("s", "sv"))
+    def piece(x: Column, s: int) -> Column:
+        return F.slice(x, s * sub + 1, sub)
 
-    for _ in range(n_iters):
-        cbs = F.array(*[
-            F.array(*[F.lit(c).cast("array<double>") for c in codebooks[s]])
+    sims = corpus.select(
+        "vec_id", "_v",
+        *[
+            _cell_sims(piece(F.col("_v"), s), codebooks[s]).alias(f"_sims{s}")
             for s in range(m)
-        ])
-        cents_row = F.element_at(cbs, F.col("s") + 1)
-        sims = F.transform(
-            cents_row, lambda c: F.round(cosine(F.col("sv"), c), 6))
-        assigned = exploded.select(
-            "s",
-            (F.array_position(sims, F.array_max(sims)) - 1)
-            .cast("int").alias("cell"),
-            "sv",
-        )
-        new_rows = (
-            assigned.groupBy("s", "cell")
-            .agg(*[
-                F.round(F.avg(F.element_at("sv", i + 1)), 6).alias(f"_c{i}")
-                for i in range(sub)
-            ])
-            .collect()
-        )
-        for r in new_rows:
-            codebooks[r["s"]][r["cell"]] = [r[f"_c{i}"] for i in range(sub)]
-    return codebooks
+        ],
+    )
+    coded = sims.select(
+        "vec_id", "_v",
+        *[_argmax_cell(F.col(f"_sims{s}")).alias(f"_c{s}") for s in range(m)],
+    )
+
+    def dist(x: Column) -> Column:
+        terms = [
+            _sq_l2(piece(x, s),
+                   F.element_at(codebooks[s], F.col(f"_c{s}") + 1))
+            for s in range(m)
+        ]
+        return sum(terms[1:], terms[0])
+
+    return coded, dist
 
 
 def pq_encode(
@@ -1174,82 +1199,28 @@ def pq_encode(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Product quantization (Jégou et al. 2011): split each vector into
-    ``m`` subspaces, train an independent :func:`kmeans_fit` codebook per
-    subspace, and encode every vector as its m cell ids — the compression
-    that stores a 10^9-vector corpus as m bytes/vector (here 4 bytes for
-    a 64-dim float vector, 64×) while asymmetric-distance search stays
-    possible against the m×k codebooks.
+    ``m`` subspaces, train a k-means codebook per subspace, and encode
+    every vector as its m cell ids — the compression that stores a
+    10^9-vector corpus as m bytes/vector (here 4 bytes for a 64-dim
+    float vector, 64×) while asymmetric-distance search stays possible
+    against the m×k codebooks. Subspace ``s``'s codebook is
+    :func:`kmeans_fit` over the s-th slice of the vectors cast to
+    array<double>.
 
-    Scale shape: per subspace, the k-means loop (narrow assignment +
-    k×subdim hash-agg per iteration) then one narrow assignment pass —
-    m×(n_iters+1) corpus scans total, each touching 1/m of the columns;
-    the final code table is assembled by m equi-joins on vec_id, all
-    AQE-coalesced over the same key. Reconstruction error is computed
-    in-row against the (tiny, broadcast-literal) codebooks.
+    Scale shape (:func:`_pq_coder`): the m codebooks train jointly, one
+    narrow assignment pass + one ``groupBy(subspace, cell)`` hash-agg and
+    ONE driver action per iteration; then one narrow pass codes every
+    vector against the codebook literals and computes its reconstruction
+    error in-row — n_iters+1 corpus scans in all, no joins.
 
     Output: (vec_id, code array<int> length m, recon_mse) where recon_mse
     is the mean squared per-dimension reconstruction error, rounded 1e-6.
     """
-    corpus = embeddings.select(
-        F.col(id_col).alias("vec_id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_v"),
-    )
-    codebooks = _pq_train_codebooks(corpus, m, k, n_iters)
-    dim = len(codebooks[0][0]) * m
-    sub = dim // m
-
-    cb_lits = [
-        F.array(*[F.lit(c).cast("array<double>") for c in codebooks[s]])
-        for s in range(m)
-    ]
-    # all m assignments + errors computed NARROW in one pass over the
-    # corpus against the codebook literals — no per-subspace joins
-    def _sub_sims(s: int, cb: Column) -> Column:
-        # factory closure: a `lambda c, _s=s` default-arg trick would make
-        # the transform lambda binary, and PySpark passes the array INDEX
-        # as the second argument of a two-arg transform lambda
-        start = s * sub + 1
-        return F.transform(
-            cb,
-            lambda c: F.round(cosine(F.slice(F.col("_v"), start, sub), c), 6),
-        )
-
-    sims = corpus.select(
-        "vec_id", "_v",
-        *[_sub_sims(s, cb_lits[s]).alias(f"_sims{s}") for s in range(m)],
-    )
-    cells = sims.select(
-        "vec_id", "_v",
-        *[
-            (
-                F.array_position(
-                    F.col(f"_sims{s}"), F.array_max(F.col(f"_sims{s}"))
-                ) - 1
-            ).cast("int").alias(f"_c{s}")
-            for s in range(m)
-        ],
-    )
-    errs = cells.select(
-        "vec_id",
-        *[F.col(f"_c{s}") for s in range(m)],
-        *[
-            F.aggregate(
-                F.zip_with(
-                    F.slice(F.col("_v"), s * sub + 1, sub),
-                    F.element_at(cb_lits[s], F.col(f"_c{s}") + 1),
-                    lambda a, b: (a - b) * (a - b),
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            ).alias(f"_e{s}")
-            for s in range(m)
-        ],
-    )
-    total_err = sum((F.col(f"_e{s}") for s in range(1, m)), F.col("_e0"))
-    return errs.select(
+    coded, dist = _pq_coder(embeddings, m, k, n_iters, id_col, vec_col)
+    return coded.select(
         "vec_id",
         F.array(*[F.col(f"_c{s}") for s in range(m)]).alias("code"),
-        F.round(total_err / dim, 6).alias("recon_mse"),
+        F.round(dist(F.col("_v")) / F.size("_v"), 6).alias("recon_mse"),
     )
 
 
@@ -1285,92 +1256,24 @@ def pq_adc_topk(
     Output: (q_id, vec_id, dist, rank) — dist = exact squared L2,
     ascending.
     """
-    corpus = embeddings.select(
-        F.col(id_col).alias("vec_id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_v"),
-    )
+    coded, dist = _pq_coder(embeddings, m, k, n_iters, id_col, vec_col)
     qs = queries.select(
         F.col(q_id_col).alias("q_id"),
         F.transform(F.col(q_vec_col), lambda x: x.cast("double"))
         .alias("q_vec"),
     )
-
-    # per-subspace codebooks trained jointly (one action per iteration —
-    # see _pq_train_codebooks), then all m code columns computed NARROW
-    # in one projection against the codebook literals — no per-subspace
-    # joins, no per-subspace driver loops
-    trained = _pq_train_codebooks(corpus, m, k, n_iters)
-    dim = len(trained[0][0]) * m
-    sub = dim // m
-    codebooks: list = [
-        F.array(*[F.lit(c).cast("array<double>") for c in trained[s]])
-        for s in range(m)
-    ]
-    def _sub_sims(s: int, cb: Column) -> Column:
-        # factory closure (NOT a two-arg lambda: PySpark passes the array
-        # index as a transform lambda's second argument)
-        start = s * sub + 1
-        return F.transform(
-            cb,
-            lambda c: F.round(cosine(F.slice(F.col("_v"), start, sub), c), 6),
-        )
-
-    sims = corpus.select(
-        "vec_id", "_v",
-        *[_sub_sims(s, codebooks[s]).alias(f"_sims{s}") for s in range(m)],
-    )
-    coded = sims.select(
-        "vec_id", "_v",
-        *[
-            (
-                F.array_position(
-                    F.col(f"_sims{s}"), F.array_max(F.col(f"_sims{s}"))
-                ) - 1
-            ).cast("int").alias(f"_c{s}")
-            for s in range(m)
-        ],
-    )
-
-    def sq_dist(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0), lambda acc, v: acc + v)
-
-    approx = sum(
-        (
-            sq_dist(
-                F.slice(F.col("q_vec"), s * sub + 1, sub),
-                F.element_at(codebooks[s], F.col(f"_c{s}") + 1),
-            )
-            for s in range(1, m)
-        ),
-        sq_dist(
-            F.slice(F.col("q_vec"), 1, sub),
-            F.element_at(codebooks[0], F.col("_c0") + 1),
-        ),
-    )
     scored = (
         coded.crossJoin(F.broadcast(qs))
         .filter(F.col("q_id") != F.col("vec_id"))
-        .withColumn("_adc", F.round(approx, 6))
+        .withColumn("_adc", F.round(dist(F.col("q_vec")), 6))
     )
-    w_c = Window.partitionBy("q_id").orderBy(
-        F.col("_adc").asc(), F.col("vec_id").asc())
-    cands = (
-        scored.withColumn("_rn", F.row_number().over(w_c))
-        .filter(F.col("_rn") <= n_candidates)
-        .select("q_id", "vec_id", "_v")
-    )
+    cands = _rank_per_query(scored, n_candidates, F.col("_adc").asc()).select(
+        "q_id", "vec_id", "_v")
     exact = cands.join(
         F.broadcast(qs), "q_id"
-    ).withColumn("dist", F.round(sq_dist(F.col("_v"), F.col("q_vec")), 6))
-    w_k = Window.partitionBy("q_id").orderBy(
-        F.col("dist").asc(), F.col("vec_id").asc())
-    return (
-        exact.withColumn("rank", F.row_number().over(w_k))
-        .filter(F.col("rank") <= topk)
-        .select("q_id", "vec_id", "dist", "rank")
-    )
+    ).withColumn("dist", F.round(_sq_l2(F.col("_v"), F.col("q_vec")), 6))
+    return _rank_per_query(exact, topk, F.col("dist").asc()).select(
+        "q_id", "vec_id", "dist", "rank")
 
 
 def mmr_topk(
@@ -1418,26 +1321,17 @@ def mmr_topk(
     from waka_spark.plans.pins import cut, keep, pin_scope, release
 
     lam_num = int(round(lam * 10))
-    joined = embeddings.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("_v"),
-    ).crossJoin(
-        F.broadcast(queries.select(
-            F.col(q_id_col).alias("q_id"), F.col(q_vec_col).alias("_qv")))
-    ).filter(F.col("vec_id") != F.col("q_id"))
-    w_rel = Window.partitionBy("q_id").orderBy(
-        F.col("relevance").desc(), F.col("vec_id").asc())
     with pin_scope():
         cand = cut(
-            joined.withColumn(
-                "relevance", F.round(cosine(F.col("_v"), F.col("_qv")), 6))
-            .withColumn("_rn", F.row_number().over(w_rel))
-            .filter(F.col("_rn") <= n_candidates)
-            .select("q_id", "vec_id", "_v", "relevance")
+            _rank_per_query(
+                _query_scan(embeddings, queries,
+                            id_col, vec_col, q_id_col, q_vec_col),
+                n_candidates, F.col("cos").desc(),
+            ).select("q_id", "vec_id", F.col("embedding").alias("_v"),
+                     F.col("cos").alias("relevance"))
         )
 
         rel_u = F.round(F.col("relevance") * 1e6, 0).cast("long")
-        w_pick = Window.partitionBy("q_id").orderBy(
-            F.col("_score_u").desc(), F.col("vec_id").asc())
         selected = None
         for r in range(1, k + 1):
             if selected is None:
@@ -1467,8 +1361,7 @@ def mmr_topk(
                     F.lit(lam_num) * rel_u
                     - F.lit(10 - lam_num) * F.col("_pen_u"))
             win = (
-                scored.withColumn("_pick", F.row_number().over(w_pick))
-                .filter(F.col("_pick") == 1)
+                _rank_per_query(scored, 1, F.col("_score_u").desc())
                 .select("q_id", "vec_id", "_v", "relevance",
                         (F.col("_score_u") / F.lit(1e7)).alias("mmr_score"),
                         F.lit(r).alias("mmr_rank"))

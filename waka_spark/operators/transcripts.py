@@ -435,8 +435,8 @@ def conv_near_dups(
     a greeting) whose hash happens to be a conversation-set minimum
     would put every such conversation in ONE bucket and the self-join
     quadratic in it; buckets larger than ``max_bucket_size`` are dropped
-    before the join (same guard as ``dedup.minhash_lsh_pairs`` /
-    ``ann.lsh_bucket_ann``) — a dropped bucket's pairs can still surface
+    before the join (the guard ``ann.embedding_cosine_pairs`` applies
+    to its LSH buckets) — a dropped bucket's pairs can still surface
     through the other ``n_bands - 1`` bands.
 
     Output: (conv_a, conv_b, n_common, jaccard), jaccard >= threshold.
