@@ -125,6 +125,24 @@ def test_minhash_signatures_are_narrow(spark):
     assert "HashAggregate" not in plan and "SortAggregate" not in plan
 
 
+def test_corpus_dedup_plans_keep_their_shuffles(spark):
+    """The n-gram Jaccard pairs and their clusters (the path kgbench's
+    corpus_dedup times) keep their exchanges and joins: 13 exchanges and
+    3 joins for the pairs (shingle windows and sets, prefix join, pair
+    count, one verification join per side); 2 exchanges and 1 join for
+    the clusters (the id left join and the size window)."""
+    from waka_spark.operators.dedup import dedup_clusters, ngram_jaccard_pairs
+
+    docs = spark.createDataFrame(
+        [(1, "a b c d e"), (2, "a b c d f"), (3, "x y z")],
+        "doc_id long, text string")
+    pairs = ngram_jaccard_pairs(docs, threshold=0.5)
+    plan = executed_plan_of(pairs)
+    assert (plan.count("Exchange"), plan.count("Join")) == (13, 3)
+    plan = executed_plan_of(dedup_clusters(docs, pairs))
+    assert (plan.count("Exchange"), plan.count("Join")) == (2, 1)
+
+
 def test_tpch_q4_is_semi_join_with_pushdown(spark):
     """Q4's EXISTS compiles to a LeftSemi join (matched lineitems never
     materialize) and both filters reach the parquet scans."""

@@ -168,3 +168,14 @@ def test_pq_zero_vector_moves_no_centroid(spark):
         "vec_id as q_id", "embedding as q_vec")
     assert pq_adc_topk(emb, q, m=2, k=3, n_iters=2,
                        n_candidates=6, topk=3).count() == 6
+
+    # the zero vector's NULL ADC distance ranks last: it takes no
+    # candidate slot, so the search returns what it returns without it
+    def adc(extra):
+        emb = spark.createDataFrame(rows + extra, schema)
+        q = emb.filter("vec_id < 2").selectExpr(
+            "vec_id as q_id", "embedding as q_vec")
+        return sorted(tuple(r) for r in pq_adc_topk(
+            emb, q, m=2, k=3, n_iters=2, n_candidates=3, topk=3).collect())
+
+    assert adc([(99, [0.0] * 4)]) == adc([])

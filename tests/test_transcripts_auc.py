@@ -252,6 +252,20 @@ def test_conv_near_dups_bucket_cap_drops_hot_buckets(spark):
         _tr(spark, rows), max_bucket_size=6).count() == 15
 
 
+def test_conv_near_dups_null_or_empty_turn_counts_in_size(spark):
+    """A NULL-text turn counts toward its conversation's size but matches
+    no turn; an empty-text turn is a turn like any other. Either way
+    {x, "solo text a"} vs {"solo text a"} is Jaccard 1/2."""
+    from waka_spark.operators.transcripts import conv_near_dups
+
+    for extra in (None, ""):
+        rows = [("a", 0, "user", extra), ("a", 1, "user", "solo text a"),
+                ("b", 0, "user", "solo text a")]
+        got = [tuple(r) for r in
+               conv_near_dups(_tr(spark, rows), threshold=0.5).collect()]
+        assert got == [("a", "b", 1, 0.5)], extra
+
+
 def test_assistant_loops_flags_within_conv_repeats(spark):
     from waka_spark.operators.transcripts import assistant_loops
 

@@ -1267,8 +1267,11 @@ def pq_adc_topk(
         .filter(F.col("q_id") != F.col("vec_id"))
         .withColumn("_adc", F.round(dist(F.col("q_vec")), 6))
     )
-    cands = _rank_per_query(scored, n_candidates, F.col("_adc").asc()).select(
-        "q_id", "vec_id", "_v")
+    # a zero-norm vector has no code and a NULL _adc: it ranks last, not
+    # in one of every query's candidate slots
+    cands = _rank_per_query(
+        scored, n_candidates, F.col("_adc").asc_nulls_last()
+    ).select("q_id", "vec_id", "_v")
     exact = cands.join(
         F.broadcast(qs), "q_id"
     ).withColumn("dist", F.round(_sq_l2(F.col("_v"), F.col("q_vec")), 6))

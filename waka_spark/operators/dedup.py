@@ -12,6 +12,14 @@ shuffle-bounded compositions of built-in ops (no UDFs in the hot path):
   ≥1 band) → verify with exact Jaccard on the candidates only
 - SimHash:     per-word 16-bit hashes → bit-majority fingerprint, one agg
 
+Each near-duplicate step has one implementation here, which
+``transcripts.conv_near_dups`` composes over conversations as well:
+``_digest`` (two md5s per shingle or turn) and ``_band_signatures`` (the
+in-row per-band minimum), ``_bucket_pairs`` (the (band, sig) self-join),
+``_jaccard_check`` (set Jaccard of candidate pairs by
+``array_intersect``), and ``_canonical`` with ``_label`` (component id,
+cluster size and canonical flag).
+
 Texts are keyed and cut into words by ``functions/text_norm``; shingles
 and span windows slice the word array that ``with_words`` builds once
 per row, so a document costs time linear in its words.
@@ -176,26 +184,39 @@ def ngram_jaccard_pairs(
         .filter(F.col("doc_a") < F.col("doc_b"))
         .groupBy("doc_a", "n_a", "p_a", "doc_b", "n_b", "p_b").count()
         .filter(bound * (1 + t) > (a_n + b_n) * t)
+        .select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
     )
+    sets = docs.select(F.col("doc_id").alias("id"), F.size("sh").alias("n"),
+                       F.col("sh").alias("set"))
+    return _jaccard_check(pairs, sets, threshold).withColumnsRenamed(
+        {"a": "doc_a", "b": "doc_b"})
 
-    def sets(s):
-        return docs.select(F.col("doc_id").alias(f"doc_{s}"),
-                           F.col("sh").alias(f"sh_{s}"))
 
+def _jaccard_check(
+    pairs: DataFrame, sets: DataFrame, threshold: float
+) -> DataFrame:
+    """(a, b, n_common, jaccard): the candidate pairs ``(a, b)`` whose
+    sets share at least one element and have Jaccard ≥ ``threshold``.
+
+    ``sets`` holds one ``(id, n, set)`` row per id: ``n`` is the size the
+    Jaccard denominator uses, which may count an element ``set`` cannot
+    hold (a NULL turn). ``n_common = size(array_intersect)`` is computed
+    in-row after both sides are joined on; jaccard is rounded to 6 places
+    before the cut, so both engines compare the same value. A pair with
+    nothing in common (a 32-bit signature collision) has no score."""
+    def side(s):
+        return sets.select(F.col("id").alias(s), F.col("n").alias(f"n_{s}"),
+                           F.col("set").alias(f"set_{s}"))
+
+    n_common = F.col("n_common")
     return (
-        pairs.join(sets("a"), "doc_a").join(sets("b"), "doc_b")
+        pairs.join(side("a"), "a").join(side("b"), "b")
         .withColumn("n_common",
-                    F.size(F.array_intersect("sh_a", "sh_b")).cast("long"))
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_common")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_common")),
-                6,
-            ),
-        )
+                    F.size(F.array_intersect("set_a", "set_b")).cast("long"))
+        .withColumn("jaccard", F.when(n_common > 0, F.round(
+            n_common / (F.col("n_a") + F.col("n_b") - n_common), 6)))
         .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "n_common", "jaccard")
+        .select("a", "b", "n_common", "jaccard")
     )
 
 
@@ -219,13 +240,6 @@ def minhash_signatures(
     false-positive at corpus scale because mins concentrate near zero.
     Fixed-width lowercase hex compares lexicographically == numerically.
     """
-    assert n_bands <= 8, "widen the digest chain for more than 8 bands"
-    # the per-band min is computed NARROW with nested higher-order
-    # functions over the in-row shingle array — no (doc x shingle x band)
-    # explode, no groupBy shuffle; only n_bands signature rows per doc
-    # ever materialize (for the downstream bucket join). _hex is its own
-    # projection so the digests compute once per shingle, not per band.
-    #
     # Empty-doc filter: `norm_key(text) != ''` is equivalent to
     # `size(array_remove(word_shingles(text), '')) > 0` (the shingle array
     # is empty iff the normalized text is empty/null) but costs one regex
@@ -239,13 +253,30 @@ def minhash_signatures(
         F.col(id_col).alias("doc_id"),
         F.array_remove(word_shingles(F.col(text_col), n), "").alias("_sh"),
     )
-    hexes = base.select(
-        "doc_id",
-        F.transform(
-            F.col("_sh"),
-            lambda s: F.concat(F.md5(s), F.md5(F.concat(F.lit("#"), s))),
-        ).alias("_hex"),
-    )
+    # _hex is its own projection so the digests compute once per shingle,
+    # not once per band
+    hexes = base.select("doc_id", F.transform("_sh", _digest).alias("_hex"))
+    return _band_signatures(hexes, "doc_id", n_bands)
+
+
+def _digest(s: Column) -> Column:
+    """The MinHash digest of one shingle or turn: ``md5(s) || md5('#' ||
+    s)``, 64 hex chars, i.e. eight independent 32-bit band slices. NULL
+    for a NULL ``s``."""
+    return F.concat(F.md5(s), F.md5(F.concat(F.lit("#"), s)))
+
+
+def _band_signatures(df: DataFrame, key: str, n_bands: int) -> DataFrame:
+    """(key, band, sig) from ``df``'s ``(key, _hex)`` rows, ``_hex`` an
+    array of :func:`_digest` values: band b's signature is the minimum of
+    the digests' b-th 8-hex slice.
+
+    The per-band min is computed NARROW with nested higher-order
+    functions over the in-row digest array — no (row x digest x band)
+    explode, no groupBy shuffle; only ``n_bands`` signature rows per key
+    ever materialize (for the downstream bucket join). A row without a
+    digest gets NULL signatures, which join no bucket."""
+    assert n_bands <= 8, "widen the digest chain for more than 8 bands"
     band_sigs = F.transform(
         F.sequence(F.lit(0), F.lit(n_bands - 1)),
         lambda b: F.struct(
@@ -259,9 +290,24 @@ def minhash_signatures(
         ),
     )
     return (
-        hexes.select("doc_id", F.explode(band_sigs).alias("_bs"))
-        .select("doc_id", F.col("_bs.band").alias("band"),
+        df.select(key, F.explode(band_sigs).alias("_bs"))
+        .select(key, F.col("_bs.band").alias("band"),
                 F.col("_bs.sig").alias("sig"))
+    )
+
+
+def _bucket_pairs(sigs: DataFrame, key: str) -> DataFrame:
+    """(a, b, n_bands_hit): the pairs of ``key`` values (a < b) whose
+    ``(key, band, sig)`` rows share at least one (band, sig) bucket, with
+    the number of buckets they share."""
+    def side(s):
+        return sigs.select(F.col(key).alias(s), "band", "sig")
+
+    return (
+        side("a").join(side("b"), ["band", "sig"])
+        .filter(F.col("a") < F.col("b"))
+        .groupBy("a", "b")
+        .agg(F.count("*").alias("n_bands_hit"))
     )
 
 
@@ -284,14 +330,8 @@ def minhash_lsh_pairs(
     from waka_spark.plans.pins import pin
 
     sigs = pin(minhash_signatures(df, id_col, text_col, n, n_bands))
-    a = sigs.select(F.col("doc_id").alias("doc_a"), "band", "sig")
-    b = sigs.select(F.col("doc_id").alias("doc_b"), "band", "sig")
-    return (
-        a.join(b, ["band", "sig"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("n_bands_hit"))
-    )
+    return _bucket_pairs(sigs, "doc_id").withColumnsRenamed(
+        {"a": "doc_a", "b": "doc_b"})
 
 
 def simhash(
@@ -432,32 +472,36 @@ def dedup_clusters(
     is one left join on the id plus one shuffle on ``canonical_id`` for the
     size count.
     """
+    return _label(_canonical(df.select(id_col), id_col, pairs), id_col)
+
+
+def _canonical(ids: DataFrame, key: str, pairs: DataFrame) -> DataFrame:
+    """``ids`` plus ``canonical_id``: the minimum id of the connected
+    component of ``pairs(doc_a, doc_b)`` that holds ``key``, or ``key``
+    itself when no pair does (one left join on ``key``)."""
     from waka_spark.plans.unionfind import connected_components
 
-    comp = (
-        connected_components(
-            pairs.select(F.col("doc_a").alias("src"),
-                         F.col("doc_b").alias("dst"))
-        )
-        .withColumnRenamed("node", id_col)
+    comp = connected_components(
+        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+    ).withColumnRenamed("node", key)
+    return ids.join(comp, key, "left").select(
+        *ids.columns,
+        F.coalesce("component", F.col(key)).alias("canonical_id"),
     )
-    labeled = (
-        df.select(id_col)
-        .join(comp, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce("component", F.col(id_col)).alias("canonical_id"),
-        )
-    )
-    w = Window.partitionBy("canonical_id")
+
+
+def _label(labeled: DataFrame, key: str) -> DataFrame:
+    """Adds ``cluster_size`` (rows per ``canonical_id``, one shuffle on it)
+    and ``is_canonical`` (``key == canonical_id``) to ``labeled``."""
     return (
         labeled
-        .withColumn("cluster_size", F.count("*").over(w))
+        .withColumn("cluster_size",
+                    F.count("*").over(Window.partitionBy("canonical_id")))
         # int not boolean: engine-portable (value-hash oracles normalize
         # numpy vs Python bools differently)
         .withColumn(
             "is_canonical",
-            (F.col(id_col) == F.col("canonical_id")).cast("int"),
+            (F.col(key) == F.col("canonical_id")).cast("int"),
         )
     )
 
@@ -489,39 +533,20 @@ def dedup_pipeline(
     id of its merged (exact ∪ near-dup) cluster, and exact-dup members
     inherit their keeper's near-dup component.
     """
-    from waka_spark.plans.unionfind import connected_components
-
-    hashed = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.md5(norm_key(F.col(text_col))).alias("text_hash"),
-    )
-    groups = hashed.groupBy("text_hash").agg(F.min("doc_id").alias("keeper_id"))
-
+    groups = exact_dedup(df, id_col, text_col)
     keepers = df.join(
         groups.select(F.col("keeper_id").alias(id_col)), id_col, "left_semi"
     )
     pairs = minhash_lsh_pairs(keepers, id_col, text_col, n, n_bands)
-
-    comp = connected_components(
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    ).withColumnRenamed("node", "keeper_id")
-
-    keeper_canon = groups.join(comp, "keeper_id", "left").select(
-        "text_hash",
-        F.coalesce("component", F.col("keeper_id")).alias("canonical_id"),
+    keeper_canon = _canonical(groups, "keeper_id", pairs)
+    hashed = df.select(
+        F.col(id_col).alias("doc_id"),
+        F.md5(norm_key(F.col(text_col))).alias("text_hash"),
     )
-
-    w = Window.partitionBy("canonical_id")
-    return (
-        hashed.join(keeper_canon, "text_hash")
-        .select("doc_id", "canonical_id")
-        .withColumn("cluster_size", F.count("*").over(w))
-        .withColumn(
-            "is_canonical",
-            (F.col("doc_id") == F.col("canonical_id")).cast("int"),
-        )
-        .withColumnRenamed("doc_id", id_col)
-    )
+    return _label(
+        hashed.join(keeper_canon, "text_hash").select("doc_id", "canonical_id"),
+        "doc_id",
+    ).withColumnRenamed("doc_id", id_col)
 
 
 def _windows(text: Column, window: int) -> Column:

@@ -416,26 +416,30 @@ def validity_intervals(
     Output: (key, state, valid_from, valid_to), valid_to NULL while
     current.
     """
-    changes = (
+    return _segments(
         events.select(
             F.col(key_col).alias("key"),
             F.col(state_col).alias("state"),
             F.col(ts_col).alias("_ts"),
-        )
-        .withColumn(
-            "_prev",
-            F.lag("state").over(
-                Window.partitionBy("key").orderBy(
-                    F.col("_ts").asc(), F.col("state").asc())),
-        )
-        .filter(F.col("_prev").isNull() | (F.col("state") != F.col("_prev")))
+        ),
+        ["key"], "state",
     )
-    w_seg = Window.partitionBy("key").orderBy(
-        F.col("_ts").asc(), F.col("state").asc())
-    return changes.select(
-        "key", "state",
-        F.col("_ts").alias("valid_from"),
-        F.lead("_ts").over(w_seg).alias("valid_to"),
+
+
+def _segments(rows: DataFrame, keys: list[str], value: str) -> DataFrame:
+    """(*keys, value, valid_from, valid_to): the SCD-2 change-point
+    segmentation of ``rows(*keys, value, _ts)``. A ``lag`` over
+    (keys ORDER BY _ts, value) keeps the rows whose value differs from the
+    previous one, and a ``lead`` over the same window closes each
+    interval at the next change point (NULL while current). Both windows
+    share one exchange and one sort."""
+    w = Window.partitionBy(*keys).orderBy(
+        F.col("_ts").asc(), F.col(value).asc())
+    return (
+        rows.withColumn("_prev", F.lag(value).over(w))
+        .filter(F.col("_prev").isNull() | (F.col(value) != F.col("_prev")))
+        .select(*keys, value, F.col("_ts").alias("valid_from"),
+                F.lead("_ts").over(w).alias("valid_to"))
     )
 
 
@@ -624,27 +628,14 @@ def fact_history(
     Output: (subj, pred, obj, valid_from, valid_to), ``valid_to`` NULL
     while the assertion is current.
     """
-    changes = (
+    return _segments(
         triples.select(
             F.col(subj_col).alias("subj"),
             F.col(pred_col).alias("pred"),
             F.col(obj_col).alias("obj"),
             F.col(ts_col).alias("_ts"),
-        )
-        .withColumn(
-            "_prev",
-            F.lag("obj").over(
-                Window.partitionBy("subj", "pred").orderBy(
-                    F.col("_ts").asc(), F.col("obj").asc())),
-        )
-        .filter(F.col("_prev").isNull() | (F.col("obj") != F.col("_prev")))
-    )
-    w_seg = Window.partitionBy("subj", "pred").orderBy(
-        F.col("_ts").asc(), F.col("obj").asc())
-    return changes.select(
-        "subj", "pred", "obj",
-        F.col("_ts").alias("valid_from"),
-        F.lead("_ts").over(w_seg).alias("valid_to"),
+        ),
+        ["subj", "pred"], "obj",
     )
 
 

@@ -859,29 +859,22 @@ def collocations(
     and gazetteer candidates; ``min_count`` removes the
     low-count-high-PMI noise the raw statistic is notorious for.
 
-    Scale shape: bigrams built narrowly IN-ROW (transform over the word
-    array, no self-join), ONE explode feeding the bigram hash-agg; the
-    unigram marginals reuse the same word explode; two broadcast-sized
-    joins on the word keys against the (already aggregated) vocabulary;
-    global top-k via TakeOrderedAndProject — never a full sort. N is a
-    single-row broadcast.
+    Scale shape: bigrams built narrowly IN-ROW by :func:`_bigrams` (the
+    pairing ``bigram_logprob`` uses; no self-join), ONE explode feeding
+    the bigram hash-agg; the unigram marginals explode the same non-empty
+    words; two broadcast-sized joins on the word keys against the
+    (already aggregated) vocabulary; global top-k via
+    TakeOrderedAndProject — never a full sort. N is a single-row
+    broadcast.
 
     Output: (word_1, word_2, n_pair, pmi, rank), top_k by (pmi desc,
     pair asc), pmi round-6.
     """
     df = parallel_floor(df, id_col)
-    words_arr = norm_words(F.col(text_col))
-    toks = F.filter(words_arr, lambda w: w != "")
+    toks = F.filter(norm_words(F.col(text_col)), lambda w: w != "")
     bigrams = df.select(
-        F.explode(
-            F.zip_with(
-                toks,
-                F.slice(toks, 2, F.greatest(F.size(toks) - 1, F.lit(0))),
-                lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
-            )
-        ).alias("bg")
-    ).select(F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2")).filter(
-        F.col("w2").isNotNull())
+        F.explode(_bigrams(F.col(text_col))).alias("bg")
+    ).select(F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
     pair_counts = bigrams.groupBy("w1", "w2").agg(
         F.count("*").cast("long").alias("n_pair"))
     uni = (

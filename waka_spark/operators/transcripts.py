@@ -15,6 +15,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from waka_spark.functions.text_norm import norm_key, norm_words
+from waka_spark.operators.dedup import (
+    _band_signatures, _bucket_pairs, _digest, _jaccard_check)
 from waka_spark.plans.pins import cut, pin
 
 
@@ -423,13 +425,15 @@ def conv_near_dups(
     native grain — with each conversation reduced to its set of distinct
     turn md5s.
 
-    Scale shape mirrors ``dedup.minhash_signatures``: r=1, b=``n_bands``
-    MinHash built from 32-bit slices of a double-md5 per distinct turn
-    (two digests total per turn), all bands folded in ONE hash agg keyed
-    by conv_id (8 ``min`` columns — no per-band explode before the agg,
-    so the corpus shuffles once); candidate pairs come from an equi-join
-    on (band, sig) buckets — never all-pairs — and are verified with an
-    exact Jaccard count over the candidates only.
+    Built from the kernels of ``operators/dedup.py``: each distinct
+    turn's ``_digest`` (two md5s), collected into one digest set per
+    conversation by ONE hash agg keyed by conv_id (the corpus shuffles
+    once); ``_band_signatures`` takes r=1, b=``n_bands`` MinHash minima
+    in-row over that set; ``_bucket_pairs`` is the equi-join on (band,
+    sig) buckets — never all-pairs — and ``_jaccard_check`` verifies the
+    candidates only, by ``array_intersect`` of the two digest sets. A
+    NULL-text turn counts toward its conversation's size but matches no
+    turn.
 
     Skew guard: a boilerplate turn shared corpus-wide (a system prompt,
     a greeting) whose hash happens to be a conversation-set minimum
@@ -441,90 +445,34 @@ def conv_near_dups(
 
     Output: (conv_a, conv_b, n_common, jaccard), jaccard >= threshold.
     """
-    assert n_bands <= 8, "widen the digest chain for more than 8 bands"
-    norm = norm_key(F.col(text_col))
-    # turns feeds the signature agg AND both sides of the verification
-    # join; sizes_and_sigs feeds the bucket join and the size lookups —
-    # EAGERLY checkpoint both (conv/turn-level hash frames, tiny next to
-    # the corpus): the consumers are sibling branches of ONE action, and a
-    # lazy persist makes them race to populate the cold cache, each
-    # replaying the corpus scan + md5 pass (see graph.random_walks).
-    turns = cut(
+    # one row per conversation: its size (count(*) over the distinct
+    # digests counts a NULL turn, which collect_set drops) and its digest
+    # set. EAGERLY checkpointed (a conv-level frame, tiny next to the
+    # corpus): the signatures, the bucket sizes and both sides of the
+    # verification are sibling branches of ONE action, and a lazy persist
+    # makes them race to populate the cold cache, each replaying the
+    # corpus scan + md5 pass (see graph.random_walks).
+    sets = cut(
         transcripts.select(
-            F.col(conv_col).alias("conv_id"),
-            F.concat(
-                F.md5(norm), F.md5(F.concat(F.lit("#"), norm))
-            ).alias("_hex"),
+            F.col(conv_col).alias("id"),
+            _digest(norm_key(F.col(text_col))).alias("_hex"),
         )
         .distinct()
+        .groupBy("id")
+        .agg(F.count("*").cast("long").alias("n"),
+             F.collect_set("_hex").alias("_hex"))
     )
-    sizes_and_sigs = cut(turns.groupBy("conv_id").agg(
-        F.count("*").cast("long").alias("n_turns"),
-        *[
-            F.min(F.substring("_hex", b * 8 + 1, 8)).alias(f"_s{b}")
-            for b in range(n_bands)
-        ],
-    ))
-    sigs = sizes_and_sigs.select(
-        "conv_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).cast("int").alias("band"),
-                        F.col(f"_s{b}").alias("sig"),
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("_bs"),
-    ).select("conv_id", "_bs.band", "_bs.sig")
+    sigs = _band_signatures(sets, "id", n_bands)
     small_buckets = (
         sigs.groupBy("band", "sig")
         .agg(F.count("*").alias("_bn"))
         .filter(F.col("_bn") <= max_bucket_size)
         .select("band", "sig")
     )
-    bounded = sigs.join(small_buckets, ["band", "sig"])
-    cand = (
-        bounded.alias("a")
-        .join(bounded.alias("b"), ["band", "sig"])
-        .filter(F.col("a.conv_id") < F.col("b.conv_id"))
-        .select(
-            F.col("a.conv_id").alias("conv_a"),
-            F.col("b.conv_id").alias("conv_b"),
-        )
-        .distinct()
-    )
-    common = (
-        cand.join(turns.alias("ta"), F.col("conv_a") == F.col("ta.conv_id"))
-        .join(
-            turns.alias("tb"),
-            (F.col("conv_b") == F.col("tb.conv_id"))
-            & (F.col("ta._hex") == F.col("tb._hex")),
-        )
-        .groupBy("conv_a", "conv_b")
-        .agg(F.count("*").cast("long").alias("n_common"))
-    )
-    sizes = sizes_and_sigs.select("conv_id", "n_turns")
-    return (
-        common.join(
-            sizes.withColumnRenamed("conv_id", "conv_a")
-            .withColumnRenamed("n_turns", "_na"), "conv_a")
-        .join(
-            sizes.withColumnRenamed("conv_id", "conv_b")
-            .withColumnRenamed("n_turns", "_nb"), "conv_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_common")
-                / (F.col("_na") + F.col("_nb") - F.col("n_common")),
-                6,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("conv_a", "conv_b", "n_common", "jaccard")
-    )
+    cand = _bucket_pairs(sigs.join(small_buckets, ["band", "sig"]), "id")
+    return _jaccard_check(
+        cand, sets.withColumnRenamed("_hex", "set"), threshold
+    ).withColumnsRenamed({"a": "conv_a", "b": "conv_b"})
 
 
 def assistant_loops(
