@@ -1275,10 +1275,14 @@ def q_kg_nodes_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_graph_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Synchronous label-propagation communities, at most 5 rounds
     (operators/graph.py), over the SimHash similarity graph — deterministic
-    (count desc → label asc tie-break), one join + agg + per-node
-    ``min(struct(-cnt, label))`` argmax per round, localCheckpoint cutting
-    lineage between rounds; stops early on the first round that changes
-    no label, which the 5 chained CTEs of the oracle reproduce."""
+    (count desc → label asc tie-break); stops early on the first round
+    that changes no label, which the 5 chained CTEs of the oracle
+    reproduce. An edge set within the broadcast budget (the sf0.01 graph
+    is) is collected once through ``plans/parallel.driver_table``, the
+    gate connected components shares, and its rounds run on the driver;
+    above it each round is one join + agg + per-node
+    ``min(struct(-cnt, label))`` argmax, localCheckpoint cutting lineage
+    between rounds."""
     from waka_spark.operators.graph import label_propagation
 
     return label_propagation(_simhash_graph(spark, sf_dir), n_iter=5).select(
@@ -4361,16 +4365,19 @@ def _modularity_sql(n_iter: int = 5) -> str:
 def _kcore_sql(k: int = 3, n_iter: int = 5) -> str:
     """Fixed-round k-core peeling as chained CTEs — the SQL mirror of
     operators/graph.py:k_core (degrees over the symmetrized edge list,
-    survivors = degree >= k within the surviving subgraph)."""
-    ctes = ["a0 AS (SELECT node FROM g_nodes)"]
+    survivors = degree >= k within the surviving subgraph). Each round's
+    survivor set is read twice by the next round, so the round CTEs are
+    MATERIALIZED: inlined, DuckDB would recompute round 1 about 2^n_iter
+    times."""
+    ctes = ["a0 AS MATERIALIZED (SELECT node FROM g_nodes)"]
     for i in range(1, n_iter + 1):
-        ctes.append(f"""d{i} AS (
-  SELECT e.src AS node, CAST(count(*) AS BIGINT) AS degree
+        ctes.append(f"""a{i} AS MATERIALIZED (
+  SELECT e.src AS node
   FROM g_edges e
   JOIN a{i - 1} s ON e.src = s.node
   JOIN a{i - 1} t ON e.dst = t.node
   GROUP BY e.src HAVING count(*) >= {k}
-), a{i} AS (SELECT node FROM d{i})""")
+)""")
     # final degrees over the FINAL survivor set (mirrors the operator's
     # round-3 final recompute — identical on converged runs); round-4:
     # LEFT join back onto the survivor set so a zero-degree survivor of
@@ -4936,7 +4943,7 @@ def oracle_sql() -> dict[str, str]:
                    ) AS cluster_size,
                    CAST(n.doc_id = COALESCE(c.canonical, g.keeper_id) AS INT)
                      AS is_canonical
-            FROM norm n JOIN grp g USING (text_hash)
+            FROM norm n JOIN grp g ON n.text_hash IS NOT DISTINCT FROM g.text_hash
             LEFT JOIN canon c ON c.node = g.keeper_id
         """,
         "dedup_simhash": """

@@ -143,6 +143,30 @@ def test_corpus_dedup_plans_keep_their_shuffles(spark):
     assert (plan.count("Exchange"), plan.count("Join")) == (2, 1)
 
 
+def test_jaccard_check_computes_overlap_once(spark):
+    """The set-Jaccard verification computes ``size(array_intersect)``
+    once per candidate pair, in ngram_jaccard_pairs and conv_near_dups
+    alike: the Jaccard cut pushed into the join condition must not
+    repeat it once per use (it held 4 calls before the overlap was bound
+    in-row)."""
+    from waka_spark.operators.dedup import ngram_jaccard_pairs
+    from waka_spark.operators.transcripts import conv_near_dups
+
+    docs = spark.createDataFrame(
+        [(1, "a b c d e"), (2, "a b c d f"), (3, "x y z")],
+        "doc_id long, text string")
+    turns = spark.createDataFrame(
+        [("c1", 0, "hi"), ("c1", 1, "bye"), ("c2", 0, "hi"),
+         ("c2", 1, "bye"), ("c3", 0, "other")],
+        "conv_id string, turn_idx int, text string")
+    for df in (ngram_jaccard_pairs(docs, threshold=0.5),
+               conv_near_dups(turns, threshold=0.5)):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.count("array_intersect(") <= 1
+    assert [tuple(r) for r in ngram_jaccard_pairs(
+        docs, threshold=0.5).collect()] == [(1, 2, 2, 0.5)]
+
+
 def test_tpch_q4_is_semi_join_with_pushdown(spark):
     """Q4's EXISTS compiles to a LeftSemi join (matched lineitems never
     materialize) and both filters reach the parquet scans."""

@@ -262,11 +262,18 @@ def test_checkpoint_resumes_manifest_without_schema(spark, tmp_path):
 
 
 def _distributed_only(monkeypatch):
-    """Force connected_components onto its distributed rounds: a zero
-    broadcast budget leaves no graph small enough for the driver path."""
-    from waka_spark.plans import unionfind
+    """Force connected_components and label_propagation onto their
+    distributed rounds: the one gate they share declines every frame, and
+    either driver solver fails the test if it is reached."""
+    from waka_spark.operators import graph
+    from waka_spark.plans import parallel, unionfind
 
-    monkeypatch.setattr(unionfind, "broadcast_rows", lambda df: 0)
+    def driver_solver(*args):
+        raise AssertionError("the driver solver ran")
+
+    monkeypatch.setattr(parallel, "driver_table", lambda df: None)
+    monkeypatch.setattr(unionfind, "_driver_components", driver_solver)
+    monkeypatch.setattr(graph, "_driver_communities", driver_solver)
 
 
 def test_unionfind_long_chain_converges_fast(spark, monkeypatch):
@@ -303,10 +310,11 @@ def _chain(n=300):
     return [(i, i + 1) for i in range(n)]
 
 
-def _both_paths(spark, monkeypatch, pairs, id_type):
-    """connected_components of ``pairs`` on the driver path, then on the
-    distributed path: (rows, [(name, dataType)]) for each, and whether
-    each call solved on the driver."""
+def _both_paths(spark, monkeypatch, pairs, id_type, run=None):
+    """``run(edges)`` (connected_components by default) over ``pairs`` on
+    the driver path, then on the distributed path: (rows, [(name,
+    dataType)]) for each, and whether each call solved on the driver."""
+    from waka_spark.operators import graph
     from waka_spark.plans import unionfind
 
     if id_type == "string":
@@ -314,22 +322,27 @@ def _both_paths(spark, monkeypatch, pairs, id_type):
                  for p in pairs]
     edges = spark.createDataFrame(pairs, f"src {id_type}, dst {id_type}")
     solved = []
-    orig = unionfind._driver_components
 
-    def spy(*args):
-        solved.append(True)
-        return orig(*args)
+    def spy(module, name):
+        orig = getattr(module, name)
 
-    monkeypatch.setattr(unionfind, "_driver_components", spy)
+        def solver(*args):
+            solved.append(True)
+            return orig(*args)
+
+        monkeypatch.setattr(module, name, solver)
+
+    spy(unionfind, "_driver_components")
+    spy(graph, "_driver_communities")
     out = []
     for force_distributed in (False, True):
         with monkeypatch.context() as m:
             if force_distributed:
-                m.setattr(unionfind, "broadcast_rows", lambda df: 0)
+                _distributed_only(m)
             n_solved = len(solved)
-            cc = unionfind.connected_components(edges)
+            df = (run or unionfind.connected_components)(edges)
             out.append((
-                _rows(cc), [(f.name, f.dataType) for f in cc.schema.fields],
+                _rows(df), [(f.name, f.dataType) for f in df.schema.fields],
                 len(solved) > n_solved))
     return out
 
@@ -367,6 +380,58 @@ def test_unionfind_double_ids_stay_distributed(spark, monkeypatch):
     assert not on_driver
     assert rows == [(1.0, 1.0), (2.0, 1.0), (3.0, 1.0), (7.0, 7.0),
                     (8.0, 7.0)]
+
+
+def _source_only():
+    """A directed graph whose sources 0-3 have no in-edge (they keep
+    their own label) and whose sinks 20-22 have no out-edge."""
+    return [(0, 10), (1, 10), (2, 11), (3, 11), (3, 10), (10, 20),
+            (11, 20), (11, 21), (10, 22), (11, 22), (11, 22)]
+
+
+@pytest.mark.parametrize("id_type,graph", [
+    ("string", lambda: _random_edges(0)),
+    ("string", lambda: _random_edges(1)),
+    ("bigint", lambda: _random_edges(2)),
+    ("int", lambda: _random_edges(3)),
+    ("string", _source_only),
+    ("bigint", _source_only),
+], ids=["string-random0", "string-random1", "long-random", "int-random",
+        "string-source-only", "long-source-only"])
+@pytest.mark.parametrize("n_iter", [0, 50])
+def test_label_propagation_driver_and_distributed_paths_agree(
+        spark, monkeypatch, id_type, graph, n_iter):
+    """Below the broadcast budget label_propagation runs its rounds on the
+    driver; forced onto the distributed rounds, the same input must give
+    identical rows and an identical (name, dataType) schema. The random
+    graphs carry self-loops, duplicate edges and NULL endpoints and
+    mostly never settle, so 50 rounds run the full budget; the directed
+    graph settles early."""
+    from waka_spark.operators.graph import label_propagation
+
+    pairs = graph()
+    (d_rows, d_schema, on_driver), (x_rows, x_schema, off_driver) = (
+        _both_paths(spark, monkeypatch, pairs, id_type,
+                    lambda e: label_propagation(e, n_iter=n_iter)))
+    assert on_driver and not off_driver
+    assert d_rows == x_rows and d_rows
+    assert d_schema == x_schema
+    nodes = {x for p in pairs for x in p}
+    assert len(d_rows) == len(nodes)   # NULL endpoints: one (NULL, NULL)
+    if n_iter == 0:
+        assert all(node == comm for node, comm in d_rows)
+
+
+def test_label_propagation_double_ids_stay_distributed(spark, monkeypatch):
+    """Python orders NaN unlike Spark, so double ids never take the
+    driver path, whatever the graph's size."""
+    from waka_spark.operators.graph import label_propagation
+
+    [(rows, schema, on_driver), _] = _both_paths(
+        spark, monkeypatch, [(1.0, 2.0), (2.0, 1.0), (3.0, 2.0)], "double",
+        lambda e: label_propagation(e, n_iter=1))
+    assert not on_driver
+    assert rows == [(1.0, 2.0), (2.0, 1.0), (3.0, 3.0)]
 
 
 def test_bucketed_join_is_exchange_and_sort_free(spark, tmp_path):
@@ -417,8 +482,8 @@ def test_iterative_ops_release_superseded_round_state(spark, monkeypatch):
     frame's blocks (plus any caller-owned persists from other tests) —
     at 10^9-node scale a 25-round leak evicts the rest of the job's
     cached state. plans/iterate.fixpoint and the plans/pins scopes are
-    the mechanism. Union-find runs its distributed rounds here, and its
-    driver path too."""
+    the mechanism. Union-find and label propagation run their distributed
+    rounds here, and their driver paths too."""
     from pyspark.sql import functions as F
 
     from waka_spark.operators.ann import mmr_topk
@@ -449,17 +514,20 @@ def test_iterative_ops_release_superseded_round_state(spark, monkeypatch):
         [(100, [1.0, 0.0]), (101, [0.0, 1.0])],
         "q_id long, q_vec array<double>")
 
-    def distributed_components():
-        with monkeypatch.context() as m:
-            _distributed_only(m)
-            return connected_components(edges)
+    def distributed(fn):
+        def run():
+            with monkeypatch.context() as m:
+                _distributed_only(m)
+                return fn()
+        return run
 
     for fn in (
         lambda: connected_components(edges),
-        distributed_components,
+        distributed(lambda: connected_components(edges)),
         lambda: pagerank(edges, n_iter=5),
         lambda: bfs_distances(edges, seeds, n_iter=4),
         lambda: label_propagation(edges, n_iter=4),
+        distributed(lambda: label_propagation(edges, n_iter=4)),
         lambda: k_core(edges, k=2, n_iter=4),
         lambda: hits(edges, n_iter=3),
         lambda: personalized_pagerank(edges, seeds, n_iter=3),
@@ -487,7 +555,9 @@ def _cliques(spark, n_cliques=3, size=5, tail=0):
 
 
 def _rows(df):
-    return sorted(tuple(r) for r in df.collect())
+    """``df``'s rows as sorted tuples, NULLs last in each column."""
+    return sorted((tuple(r) for r in df.collect()),
+                  key=lambda t: [(x is None, x) for x in t])
 
 
 def test_iterative_ops_stop_early_exactly(spark, monkeypatch):
@@ -511,10 +581,15 @@ def test_iterative_ops_stop_early_exactly(spark, monkeypatch):
         cuts["n"] += 1
         return orig(self, *args, **kwargs)
 
-    monkeypatch.setattr(DataFrame, "localCheckpoint", counting)
-    label_propagation(cliques, n_iter=50).count()
-    monkeypatch.setattr(DataFrame, "localCheckpoint", orig)
+    with monkeypatch.context() as m:
+        m.setattr(DataFrame, "localCheckpoint", counting)
+        _distributed_only(m)
+        assert _rows(label_propagation(cliques, n_iter=50)) == lpa
     assert cuts["n"] == 2 + 3  # edges + initial labels, then 3 rounds
+    with monkeypatch.context() as m:
+        m.setattr(DataFrame, "localCheckpoint", counting)
+        label_propagation(cliques, n_iter=50).count()
+    assert cuts["n"] == 2 + 3 + 1  # the driver rounds cut the edges only
 
     # the tail peels one node per round (k=2): converged after round 3
     tailed = _cliques(spark, tail=3)

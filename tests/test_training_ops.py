@@ -536,6 +536,24 @@ def test_dedup_pipeline_two_tier(spark):
     assert [rows[i].is_canonical for i in range(4)] == [1, 0, 0, 1]
 
 
+def test_dedup_pipeline_keeps_null_text_docs(spark):
+    """Every input document gets a row: NULL texts hash to NULL, form one
+    exact group with the smallest of their ids as its keeper, and take
+    no part in the near-duplicate tier."""
+    from waka_spark.operators.dedup import dedup_pipeline
+
+    base = "the quick brown fox jumps over the lazy dog again and again"
+    docs = spark.createDataFrame(
+        [(0, base), (1, None), (2, base), (3, None), (4, "other words here"),
+         (5, None)],
+        "doc_id long, text string")
+    rows = {r.doc_id: r for r in dedup_pipeline(docs).collect()}
+    assert len(rows) == docs.count()
+    assert [rows[i].canonical_id for i in range(6)] == [0, 1, 0, 1, 4, 1]
+    assert [rows[i].cluster_size for i in range(6)] == [2, 3, 2, 3, 1, 3]
+    assert [rows[i].is_canonical for i in range(6)] == [1, 1, 0, 0, 1, 0]
+
+
 def test_sparknlp_backend_gated(spark):
     import pytest
 

@@ -201,7 +201,11 @@ def _jaccard_check(
     ``sets`` holds one ``(id, n, set)`` row per id: ``n`` is the size the
     Jaccard denominator uses, which may count an element ``set`` cannot
     hold (a NULL turn). ``n_common = size(array_intersect)`` is computed
-    in-row after both sides are joined on; jaccard is rounded to 6 places
+    in-row after both sides are joined on, once per pair: a one-element
+    explode binds it, and Spark keeps a filter on a generated column above
+    the generator. Written as a plain column, it is substituted into the
+    Jaccard cut that Spark pushes into the join condition, once per use
+    (4 calls per pair, not 1). jaccard is rounded to 6 places
     before the cut, so both engines compare the same value. A pair with
     nothing in common (a 32-bit signature collision) has no score."""
     def side(s):
@@ -211,8 +215,9 @@ def _jaccard_check(
     n_common = F.col("n_common")
     return (
         pairs.join(side("a"), "a").join(side("b"), "b")
-        .withColumn("n_common",
-                    F.size(F.array_intersect("set_a", "set_b")).cast("long"))
+        .select("a", "b", "n_a", "n_b", F.explode(F.array(
+            F.size(F.array_intersect("set_a", "set_b")).cast("long"),
+        )).alias("n_common"))
         .withColumn("jaccard", F.when(n_common > 0, F.round(
             n_common / (F.col("n_a") + F.col("n_b") - n_common), 6)))
         .filter(F.col("jaccard") >= threshold)
@@ -531,20 +536,25 @@ def dedup_pipeline(
     Cluster identity: exact-group keeper = min doc id; component canonical
     = min keeper id — so every doc's ``canonical_id`` is the global min doc
     id of its merged (exact ∪ near-dup) cluster, and exact-dup members
-    inherit their keeper's near-dup component.
+    inherit their keeper's near-dup component. Documents with a NULL text
+    form one exact group (their hash is NULL) and keep their rows.
     """
     groups = exact_dedup(df, id_col, text_col)
     keepers = df.join(
         groups.select(F.col("keeper_id").alias(id_col)), id_col, "left_semi"
     )
     pairs = minhash_lsh_pairs(keepers, id_col, text_col, n, n_bands)
-    keeper_canon = _canonical(groups, "keeper_id", pairs)
+    keeper_canon = _canonical(groups, "keeper_id", pairs).select(
+        F.col("text_hash").alias("_h"), "canonical_id")
     hashed = df.select(
         F.col(id_col).alias("doc_id"),
         F.md5(norm_key(F.col(text_col))).alias("text_hash"),
     )
+    # null-safe: NULL texts hash to NULL and form one exact group, whose
+    # members must find it
     return _label(
-        hashed.join(keeper_canon, "text_hash").select("doc_id", "canonical_id"),
+        hashed.join(keeper_canon, F.col("text_hash").eqNullSafe(F.col("_h")))
+        .select("doc_id", "canonical_id"),
         "doc_id",
     ).withColumnRenamed("doc_id", id_col)
 

@@ -28,18 +28,28 @@ Scale shapes (pure DataFrame ops, no UDFs):
   previous round's labels simultaneously) with a total-order tie-break
   (count desc → label asc), so the result is deterministic under any
   partitioning — unlike classic asynchronous LPA, whose output depends
-  on visit order. Per round: one join (edges ⋈ labels on src, the same
-  co-partitioned shuffle as pagerank), one count agg, one per-node
-  argmax as a ``min(struct(-cnt, label))`` hash-agg. The loop stops
-  early on the first round that changes no label (the next round would
-  repeat it forever).
+  on visit order. An edge set within the broadcast budget, with string
+  or integral ids, is collected once through ``plans/parallel.
+  driver_table`` (the gate ``plans/unionfind.connected_components``
+  uses too) and its rounds run on the driver with numpy: one Spark job
+  instead of several per round. Above it, per round: one join (edges ⋈
+  labels on src, the same co-partitioned shuffle as pagerank), one
+  count agg, one per-node argmax as a ``min(struct(-cnt, label))``
+  hash-agg. Either way the loop stops early on the first round that
+  changes no label (the next round would repeat it forever).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.types import StructField, StructType
 
+from waka_spark.plans import parallel
 from waka_spark.plans.iterate import fixpoint
 from waka_spark.plans.parallel import maybe_broadcast, parallel_floor
 from waka_spark.plans.pins import cut, keep, pin, pin_scope, release
@@ -338,6 +348,51 @@ def bfs_distances(
     return dist
 
 
+def _driver_communities(
+    spark: SparkSession, edges: pa.Table, node: StructField, n_iter: int,
+) -> DataFrame:
+    """(node, community) of :func:`label_propagation`'s rounds over the
+    collected ``edges(src, dst)``, run on the driver with numpy.
+
+    Ids are ranked once (Arrow sorts strings byte-wise, as Spark compares
+    them), so a label is a dense rank and the smallest label is the
+    smallest rank. Each round counts the distinct (dst, label of src)
+    pairs with one ``np.unique``, duplicate edges included, and a
+    lexsort on (node, −count, label) picks each node's winner. Nodes with
+    no in-edge keep their label; a NULL endpoint adds a (NULL, NULL) row
+    and no edge, as in the distributed rounds."""
+    t = to_arrow_type(node.dataType)
+    src = edges.column("src").cast(t)
+    dst = edges.column("dst").cast(t)
+    ids = pc.unique(pa.chunked_array(src.chunks + dst.chunks, t).drop_null())
+    ids = ids.take(pc.sort_indices(ids))
+    whole = pc.and_(pc.is_valid(src), pc.is_valid(dst))
+    s, d = (pc.index_in(c.filter(whole), value_set=ids).to_numpy()
+            .astype(np.int64) for c in (src, dst))
+    n = len(ids)
+    lab = np.arange(n)
+    for _ in range(n_iter):
+        keys, cnt = np.unique(d * n + lab[s], return_counts=True)
+        at, winner = np.divmod(keys, n)
+        order = np.lexsort((winner, -cnt, at))
+        at, winner = at[order], winner[order]
+        first = np.ones(len(at), bool)
+        first[1:] = at[1:] != at[:-1]
+        new = lab.copy()
+        new[at[first]] = winner[first]
+        if np.array_equal(new, lab):
+            break
+        lab = new
+    nodes, communities = ids, ids.take(pa.array(lab))
+    if src.null_count or dst.null_count:
+        nodes = pa.concat_arrays([nodes, pa.nulls(1, t)])
+        communities = pa.concat_arrays([communities, pa.nulls(1, t)])
+    return spark.createDataFrame(
+        pa.table({"node": nodes, "community": communities}),
+        StructType([node, StructField("community", node.dataType,
+                                      node.nullable)]))
+
+
 def label_propagation(
     edges: DataFrame,
     n_iter: int = 5,
@@ -349,24 +404,32 @@ def label_propagation(
 
     Initialization: every node is its own label. Each round, a node
     adopts the most frequent label among its in-neighbors' *previous*
-    labels, ties broken by smallest label — a deterministic, synchronous
-    variant (GraphX's LPA uses the same synchronous Pregel semantics;
-    asynchronous LPA is partition-order-dependent and therefore
-    unreproducible on a cluster). On a symmetrized edge list every node
-    has in-neighbors, so no keep-own-label fallback path is needed; for
-    general directed graphs, nodes without in-edges keep their label via
-    the left join.
+    labels (duplicate edges count), ties broken by smallest label — a
+    deterministic, synchronous variant (GraphX's LPA uses the same
+    synchronous Pregel semantics; asynchronous LPA is
+    partition-order-dependent and therefore unreproducible on a
+    cluster). On a symmetrized edge list every node has in-neighbors, so
+    no keep-own-label fallback path is needed; for general directed
+    graphs, nodes without in-edges keep their label via the left join.
+    A synchronous round is a pure function of the previous labels, so a
+    round that changes no label repeats forever: the loop stops on the
+    first unchanged round, and the result equals the full ``n_iter``
+    budget's, which the SQL mirror chains one CTE per round.
 
-    Scale shape per round: labels ⋈ edges on src (hash join, the edge
-    side cut once), groupBy (dst, label) with map-side partial counts,
-    then a per-node argmax via min(struct(-cnt, label)) — a hash-agg with
-    map-side partials, never a sort or a global window. State shuffled
-    per round is (node, label) only. A synchronous round is a pure
-    function of the previous labels, so a round that changes no label
-    repeats forever: each round carries a ``_chg`` flag into its cut and
-    the loop stops on the first unchanged round — the result equals the
-    full ``n_iter`` budget's, which the SQL mirror chains one CTE per
-    round.
+    Two paths, one function; the edge frame is cut once. Below the
+    broadcast budget, for string or integral ids, one bounded collect
+    (``plans/parallel.driver_table``, the gate
+    ``plans/unionfind.connected_components`` shares) brings the edges to
+    the driver, which runs the rounds with numpy
+    (:func:`_driver_communities`): one Spark job instead of several per
+    round. Above it, each round runs on the cluster: labels ⋈ edges on
+    src (hash join, the edge side cut once), groupBy (dst, label) with
+    map-side partial counts, then a per-node argmax via
+    min(struct(-cnt, label)) — a hash-agg with map-side partials, never
+    a sort or a global window. State shuffled per round is (node, label)
+    only; each round carries a ``_chg`` flag into its cut, which the
+    early stop reads. Both paths return the same rows and schema
+    (tests/test_scale_machinery.py runs both on the same graphs).
     """
     with pin_scope():
         # EAGER e: the nodes union scans it twice in one job (race — see
@@ -374,12 +437,15 @@ def label_propagation(
         e = cut(
             parallel_floor(edges, src).select(
                 F.col(src).alias("src"), F.col(dst).alias("dst")))
-        labels = cut(
+        nodes = (
             e.select(F.col("src").alias("node"))
             .unionByName(e.select(F.col("dst").alias("node")))
-            .distinct()
-            .withColumn("community", F.col("node"))
         )
+        rows = parallel.driver_table(e)
+        if rows is not None:
+            return _driver_communities(
+                edges.sparkSession, rows, nodes.schema["node"], n_iter)
+        labels = cut(nodes.distinct().withColumn("community", F.col("node")))
         # node count (cheap — labels just materialized) drives the
         # broadcast-vs-shuffle choice for every round's state join
         n = labels.count()
@@ -919,11 +985,12 @@ def modularity(
     """
     e = parallel_floor(edges, src).select(
         F.col(src).alias("src"), F.col(dst).alias("dst"))
-    # labels usually arrive as label_propagation's checkpointed output —
-    # unknown stats, so the two attach joins would sort-merge (and
-    # re-shuffle) the edge table. The label table is node-sized:
-    # materialize it once, count it (near-free), broadcast when it fits
-    # (round 6, maybe_broadcast).
+    # labels usually arrive as label_propagation's output: a local
+    # Arrow table from its driver rounds, or a checkpoint with unknown
+    # stats from its distributed rounds, where the two attach joins
+    # would sort-merge (and re-shuffle) the edge table. The label table
+    # is node-sized: materialize it once, count it (near-free), broadcast
+    # when it fits (maybe_broadcast).
     lab = cut(labels.select(
         F.col(node_col).alias("_n"), F.col(community_col).alias("_c")))
     n_lab = lab.count()

@@ -18,8 +18,10 @@ neither.)
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType, StringType
 
 
 def row_bytes(df: DataFrame) -> int:
@@ -31,10 +33,34 @@ def row_bytes(df: DataFrame) -> int:
 
 def broadcast_rows(df: DataFrame) -> int:
     """Rows of ``df``'s schema that fit the 64 MB broadcast budget.
-    :func:`maybe_broadcast` hints frames under it, and
-    ``plans/unionfind.connected_components`` solves edge sets under it on
-    the driver."""
+    :func:`maybe_broadcast` hints frames under it, and :func:`driver_table`
+    collects edge sets under it, so that
+    ``plans/unionfind.connected_components`` and
+    ``operators/graph.label_propagation`` solve them on the driver."""
     return 64 * 1024 * 1024 // row_bytes(df)
+
+
+def driver_table(df: DataFrame) -> pa.Table | None:
+    """All of ``df`` as one Arrow table when it holds at most
+    :func:`broadcast_rows` rows and every column is a string or integral
+    type; None otherwise.
+
+    The gate of the iterative graph passes that solve a small graph on
+    the driver: one bounded collect replaces several Spark jobs per round,
+    whose fixed overhead, not data, dominates a small graph. Only for
+    types whose Python and Arrow ordering is Spark's (binary-collated
+    strings, integers); a double's NaN orders differently. ``df`` should
+    be materialized (a cut): the coalesce(1) makes the collect one task
+    that reads its blocks in order and stops at budget + 1 rows, so
+    probing a huge frame costs at most the budget; a bare limit would
+    first take budget + 1 rows from EVERY partition."""
+    if not all(f.dataType == StringType()
+               or isinstance(f.dataType, IntegralType)
+               for f in df.schema.fields):
+        return None
+    budget = broadcast_rows(df)
+    rows = df.coalesce(1).limit(budget + 1).toArrow()
+    return rows if rows.num_rows <= budget else None
 
 
 def maybe_broadcast(df: DataFrame, n_rows: int | None) -> DataFrame:

@@ -10,11 +10,13 @@ Two paths, one function. The symmetric edge set is cut once; then:
 
 - Below the broadcast budget (``plans/parallel.broadcast_rows``: the
   edge rows that fit 64 MB) and for string or integral ids, one bounded
-  collect brings the edges to the driver, and union-find with path
-  halving and min-root union labels every node. The SparkER entity
-  resolution pipeline (EDBT 2019) clusters matches with the same step.
-  Every round of the distributed path costs several Spark jobs whose fixed
-  overhead, not data, dominates a small graph.
+  collect (``plans/parallel.driver_table``, the gate
+  ``operators/graph.label_propagation`` shares) brings the edges to the
+  driver, and union-find with path halving and min-root union labels
+  every node. The SparkER entity resolution pipeline (EDBT 2019)
+  clusters matches with the same step. Every round of the distributed
+  path costs several Spark jobs whose fixed overhead, not data,
+  dominates a small graph.
 - Above it, iterative min-label propagation with pointer jumping — each
   round every node adopts the minimum component label among itself and
   its neighbors (one join + one agg), then follows the label *of its
@@ -41,10 +43,10 @@ from __future__ import annotations
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    DataType, IntegralType, StringType, StructField, StructType)
+from pyspark.sql.types import DataType, StructField, StructType
 
-from waka_spark.plans.parallel import broadcast_rows, maybe_broadcast, row_bytes
+from waka_spark.plans import parallel
+from waka_spark.plans.parallel import maybe_broadcast, row_bytes
 
 
 def _driver_components(
@@ -110,19 +112,11 @@ def connected_components(
             # dedup_clusters at sf0.1)
         )
         # an edge set inside the broadcast budget is solved on the driver:
-        # one bounded collect instead of several jobs per round. Only for
-        # ids whose Python ordering is Spark's (binary-collated strings,
-        # integral types); a double's NaN orders differently. The
-        # coalesce(1) makes the collect one task that reads the cut's
-        # blocks in order and stops at budget + 1 rows, so probing a huge
-        # edge set costs at most the budget; a bare limit would first
-        # take budget + 1 rows from EVERY partition.
-        id_type = sym.schema["a"].dataType
-        if id_type == StringType() or isinstance(id_type, IntegralType):
-            budget = broadcast_rows(sym)
-            pairs = sym.coalesce(1).limit(budget + 1).toArrow()
-            if pairs.num_rows <= budget:
-                return _driver_components(edges.sparkSession, pairs, id_type)
+        # one bounded collect instead of several jobs per round
+        pairs = parallel.driver_table(sym)
+        if pairs is not None:
+            return _driver_components(
+                edges.sparkSession, pairs, sym.schema["a"].dataType)
         # parallel floor on the materialized edge set: AQE often coalesces
         # the distinct's output to ~1 partition for small-byte graphs, and
         # the cut freezes that — every round's neighbor join then probes
